@@ -10,45 +10,57 @@ Execution plan per run (SURVEY §4.3):
 
 1. **Job 0 (driver)** — schema-level checks (missing/superfluous/dtype) from
    ``df.schema``; recorded once per run with ``partition = '*'``.
-2. **pending = partitions ∉ checkpoint** — the verdict table is read back
-   and anti-joined (driver-side set difference; partition lists are small —
-   even 10^12 rows is ~10^4-10^5 date partitions).
+2. **pending = partitions ∉ checkpoint** — the verdict store is read once:
+   its (partition, run_id) pairs are collected (partition lists are small —
+   even 10^12 rows is ~10^4-10^5 date partitions) and the finished
+   partitions are filtered out of the scan.
 3. **Job 1** — ``df.filter(partition ∈ pending).groupBy(partition).agg(ALL
    check terms)``: one scan of only the pending partitions, one tiny shuffle
    row per partition.
-4. **Job 2** — global uniqueness with per-partition attribution: salted
-   ``groupBy(value, partition)`` pre-agg → global per-value totals → each
-   partition charged its own members of cross-partition duplicate groups.
-5. Verdicts + violations appended atomically per partition batch; a re-run
-   with the same checkpoint directory skips finished partitions (idempotent
-   resume).
+4. **Job 2** — global uniqueness with per-partition attribution:
+   ``groupBy(column, value, partition)`` local counts (the partials) → one
+   ``(column, key)`` window for the global totals → each partition charged
+   its own members of cross-partition duplicate groups by one
+   ``groupBy(partition, column)``.
+5. Verdicts + violations appended as one write each; a re-run with the
+   same checkpoint skips finished partitions (idempotent resume).  The
+   rows are built on the driver and handed to Spark as Arrow-backed local
+   relations (``sources.io.driver_frame``), never as a Python RDD.
 
 Resume and global uniqueness: uniqueness is a *global* property, but
 finished partitions are not re-scanned on resume.  Two modes:
 
 - ``unique_resume="local"`` (default): a duplicate group spanning a
   finished and a pending partition is charged only to the pending side —
-  cheap, and exact whenever runs don't split duplicate groups.
+  cheap, and exact whenever runs don't split duplicate groups.  The
+  partials go from the scan straight into the charge job.
 - ``unique_resume="exact"``: every run persists its per-(partition,
   column, key-hash) local counts to a third checkpoint dataset
-  (``unique_partials``).  A resumed run merges the pending partitions'
-  fresh partials with the persisted ones — no finished partition is
-  re-scanned — charges pending partitions against the *merged* totals,
-  and emits retroactive delta violation rows for finished partitions
-  whose members joined a cross-boundary duplicate group.  The cumulative
-  violation table therefore always equals what one uninterrupted run
-  would have produced.  Cost: the partials dataset is O(distinct keys)
-  (16-byte md5 per key — the one checkpoint artifact that scales with
-  data, which is inherent to exact cross-run uniqueness), and each
-  resumed run re-shuffles it once.  Crash-safe: partials are written
-  *before* verdicts and are only trusted when their (partition, run_id)
-  matches a persisted verdict, so a run killed between the two writes
-  re-runs cleanly without double-counting.
+  (``unique_partials``).  The source is scanned for them once, and they
+  are written before anything is charged.  The partials store is then
+  read once: each row is tagged as a finished run's (its (partition,
+  run_id) matches a persisted verdict) or as this call's own, and one
+  charge job computes both the merged charge and the finished runs' own
+  charge.  No finished partition is re-scanned; pending partitions are
+  charged against the *merged* totals, and finished partitions whose
+  members joined a cross-boundary duplicate group get retroactive delta
+  violation rows (merged minus prior charge).  The cumulative violation
+  table therefore always equals what one uninterrupted run would have
+  produced.  Cost: the partials dataset is O(distinct keys) (16-byte md5
+  per key — the one checkpoint artifact that scales with data, which is
+  inherent to exact cross-run uniqueness), and each run re-shuffles it
+  once.  Crash-safe: partials are written *before* verdicts and are only
+  trusted when their (partition, run_id) matches a persisted verdict or
+  this call's pending partitions, so a run killed between the two writes
+  re-runs cleanly without double-counting.  A caller-chosen run_id that
+  already owns such orphan partials is refused, since its rows would be
+  indistinguishable from the retry's own.
 
-Checkpoint storage is a parquet directory pair (``verdicts/``,
-``violations/``) written with dynamic partition append — the layout is
-Iceberg-compatible (swap ``_write`` for ``writeTo(...).append()`` when an
-Iceberg catalog is configured; this sandbox has no catalog).
+Checkpoint storage is a parquet directory triple (``verdicts/``,
+``violations/``, ``unique_partials/``) written with append, or the
+``<checkpoint_table>_{verdicts,violations,unique_partials}`` catalog tables
+written through ``sources.io.write_report_table`` — under an Iceberg
+catalog those appends are snapshot commits.
 """
 
 from __future__ import annotations
@@ -57,6 +69,7 @@ import time
 import uuid
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -95,6 +108,16 @@ UNIQUE_PARTIALS_SCHEMA = T.StructType(
         T.StructField("key_hash", T.StringType()),
         T.StructField("cnt", T.LongType()),
         T.StructField("run_id", T.StringType()),
+    ]
+)
+
+#: trust keys for the partials read-back: one row per persisted verdict
+#: (``_prior``) plus one per partition this call is validating
+_TRUST_SCHEMA = T.StructType(
+    [
+        T.StructField("_kp", T.StringType()),
+        T.StructField("_kr", T.StringType()),
+        T.StructField("_prior", T.BooleanType()),
     ]
 )
 
@@ -171,103 +194,127 @@ class ValidationRunner:
         self.checkpoint_table = checkpoint_table
 
     # -- checkpoint I/O --------------------------------------------------------
-    def _read_verdicts(self, spark: SparkSession) -> Optional[DataFrame]:
+    def _read(self, spark: SparkSession, store: str) -> Optional[DataFrame]:
+        """One checkpoint store (``verdicts``, ``violations`` or
+        ``unique_partials``); None before its first write."""
         if self.checkpoint_table:
-            name = f"{self.checkpoint_table}_verdicts"
-            if not spark.catalog.tableExists(name):
-                return None
-            return spark.table(name)
+            name = f"{self.checkpoint_table}_{store}"
+            return spark.table(name) if spark.catalog.tableExists(name) else None
         if self.checkpoint_dir:
             try:
-                return spark.read.parquet(f"{self.checkpoint_dir}/verdicts")
-            except Exception:
+                return spark.read.parquet(f"{self.checkpoint_dir}/{store}")
+            except AnalysisException:  # no such directory, or no files yet
                 return None
         return None
 
-    def _finished_partitions(self, spark: SparkSession) -> set:
-        verdicts = self._read_verdicts(spark)
-        if verdicts is None:
-            return set()
-        return {
-            r["partition"]
-            for r in verdicts.select("partition").distinct().collect()
-        }
-
-    def _read_unique_partials(self, spark: SparkSession) -> Optional[DataFrame]:
-        """Persisted partials from FINISHED runs only.
-
-        A partials row is trusted iff its (partition, run_id) matches a
-        persisted verdict — partials are written before verdicts, so a
-        crash between the two writes leaves orphan rows that a re-run of
-        the partition would otherwise double-count.
-        """
-        raw = None
+    def _append(self, df: DataFrame, store: str) -> None:
         if self.checkpoint_table:
-            name = f"{self.checkpoint_table}_unique_partials"
-            if spark.catalog.tableExists(name):
-                raw = spark.table(name)
+            from ..sources.io import write_report_table
+
+            write_report_table(df, f"{self.checkpoint_table}_{store}")
         elif self.checkpoint_dir:
-            try:
-                raw = spark.read.parquet(f"{self.checkpoint_dir}/unique_partials")
-            except Exception:
-                raw = None
-        verdicts = self._read_verdicts(spark)
-        if raw is None or verdicts is None:
-            return None
-        keys = verdicts.select("partition", "run_id").distinct()
-        # eqNullSafe: the NULL partition's partials must survive the join
-        cond = raw["partition"].eqNullSafe(keys["partition"]) & (
-            raw["run_id"] == keys["run_id"]
+            df.write.mode("append").parquet(f"{self.checkpoint_dir}/{store}")
+
+    def _verdict_keys(self, spark: SparkSession) -> list:
+        """``(partition, run_id)`` of every persisted verdict: the verdict
+        store's one read per call (one row per finished partition)."""
+        verdicts = self._read(spark, "verdicts")
+        if verdicts is None:
+            return []
+        return [
+            (r["partition"], r["run_id"])
+            for r in verdicts.select("partition", "run_id").distinct().collect()
+        ]
+
+    def _refuse_orphaned_run_id(
+        self, spark: SparkSession, run_id: str, verdict_keys: list
+    ) -> None:
+        """A caller-chosen run_id must not own orphan partials (rows written
+        by a call that died before its verdicts): this call's own partials
+        would share their (partition, run_id) trust key, and both copies
+        would be trusted once the verdicts land."""
+        stored = self._read(spark, "unique_partials")
+        if stored is None:
+            return
+        finished = {p for p, r in verdict_keys if r == run_id}
+        orphans = stored.filter(
+            (F.col("run_id") == run_id) & _outside(F.col("partition"), finished)
         )
-        return raw.join(keys, cond, "left_semi")
+        if orphans.limit(1).count():
+            raise ValueError(
+                f"run_id {run_id!r} already holds unique partials of a call "
+                "that never wrote its verdicts; exact unique_resume cannot "
+                "tell them from this call's own. Retry under a new run_id."
+            )
 
     def _persist_unique_partials(self, partials: DataFrame, run_id: str) -> None:
         """Distributed append of this run's partials (NEVER collected —
         the partials dataset is O(distinct keys), not driver-sized)."""
-        out = partials.select(
-            F.col("_p").alias("partition"),
-            F.col("k").alias("column"),
-            F.col("h").alias("key_hash"),
-            F.col("cnt"),
-            F.lit(run_id).alias("run_id"),
+        self._append(
+            partials.select(
+                F.col("_p").alias("partition"),
+                F.col("k").alias("column"),
+                F.col("h").alias("key_hash"),
+                F.col("cnt"),
+                F.lit(run_id).alias("run_id"),
+            ),
+            "unique_partials",
         )
-        if self.checkpoint_table:
-            from ..sources.io import write_report_table
 
-            write_report_table(out, f"{self.checkpoint_table}_unique_partials")
-        elif self.checkpoint_dir:
-            out.write.mode("append").parquet(
-                f"{self.checkpoint_dir}/unique_partials"
-            )
+    def _trusted_partials(
+        self,
+        spark: SparkSession,
+        verdict_keys: list,
+        run_id: str,
+        pending: list,
+    ) -> Optional[DataFrame]:
+        """The partials store, read once, as ``_p, k, h, cnt, _prior``.
+
+        A row is trusted iff its (partition, run_id) matches a persisted
+        verdict (``_prior``) or this call's own pending partitions.  Partials
+        are written before verdicts, so a crash between the two writes
+        leaves orphan rows that a re-run of the partition would otherwise
+        double-count; they match neither and drop out.
+        """
+        from ..sources.io import driver_frame
+
+        stored = self._read(spark, "unique_partials")
+        if stored is None:
+            return None
+        keys = driver_frame(
+            spark,
+            [{"_kp": p, "_kr": r, "_prior": True} for p, r in verdict_keys]
+            + [{"_kp": p, "_kr": run_id, "_prior": False} for p in pending],
+            _TRUST_SCHEMA,
+        )
+        # eqNullSafe: the NULL partition's partials must survive the join
+        cond = stored["partition"].eqNullSafe(keys["_kp"]) & (
+            stored["run_id"] == keys["_kr"]
+        )
+        return stored.join(F.broadcast(keys), cond).select(
+            F.col("partition").alias("_p"),
+            F.col("column").alias("k"),
+            F.col("key_hash").alias("h"),
+            "cnt",
+            "_prior",
+        )
 
     def _persist(
         self, spark: SparkSession, verdicts: list, violations: list
     ) -> None:
-        if self.checkpoint_table:
-            from ..sources.io import write_report_table
+        if not (self.checkpoint_dir or self.checkpoint_table):
+            return
+        from ..sources.io import driver_frame
 
-            if verdicts:
-                write_report_table(
-                    spark.createDataFrame(verdicts, VERDICT_SCHEMA).coalesce(1),
-                    f"{self.checkpoint_table}_verdicts",
-                )
-            if violations:
-                write_report_table(
-                    spark.createDataFrame(violations, VIOLATION_SCHEMA).coalesce(1),
-                    f"{self.checkpoint_table}_violations",
-                )
-            return
-        if not self.checkpoint_dir:
-            return
         if verdicts:
-            spark.createDataFrame(verdicts, VERDICT_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(f"{self.checkpoint_dir}/verdicts")
+            self._append(
+                driver_frame(spark, verdicts, VERDICT_SCHEMA).coalesce(1),
+                "verdicts",
+            )
         if violations:
-            spark.createDataFrame(
-                violations, VIOLATION_SCHEMA
-            ).coalesce(1).write.mode("append").parquet(
-                f"{self.checkpoint_dir}/violations"
+            self._append(
+                driver_frame(spark, violations, VIOLATION_SCHEMA).coalesce(1),
+                "violations",
             )
 
     # -- run ---------------------------------------------------------------------
@@ -285,6 +332,7 @@ class ValidationRunner:
         ``where=`` scoping on the run API).
         """
         spark = df.sparkSession
+        chosen_run_id = run_id
         run_id = run_id or uuid.uuid4().hex[:12]
         t0 = time.time()
         model = self.model
@@ -296,21 +344,12 @@ class ValidationRunner:
             df = df.withColumn(self.partition_name, self.partition_expr)
         part = F.col(self.partition_name).cast("string")
 
-        finished = self._finished_partitions(spark)
+        verdict_keys = self._verdict_keys(spark)
+        finished = {p for p, _ in verdict_keys}
         if finished:
-            # null-safe resume: `~isin` evaluates to NULL (row silently
-            # dropped) for a NULL partition value, so the null partition is
-            # kept/skipped explicitly based on whether its verdict (recorded
-            # as a NULL `partition` cell) is already checkpointed
-            non_null = [v for v in finished if v is not None]
-            pending_named = ~part.isin(*non_null) if non_null else F.lit(True)
-            keep = (part.isNotNull() & pending_named) | (
-                part.isNull() & F.lit(None not in finished)
-            )
-            df = df.filter(keep)
+            df = df.filter(_outside(part, finished))
 
         # Job 0: schema-level errors — apply to the whole run
-        schema_violations: list = []
         ctx = _Ctx()
         schema_errors: list = []
         _compile_level(
@@ -336,17 +375,7 @@ class ValidationRunner:
             loc="",
             guard=None,
         )
-        for err in schema_errors:
-            schema_violations.append(
-                {
-                    "partition": "*",
-                    "column": err.loc_tuple()[0],
-                    "error_type": get_exc_type(err.exc.__class__),
-                    "message": str(err.exc),
-                    "violation_count": int(getattr(err.exc, "count", 1)),
-                    "run_id": run_id,
-                }
-            )
+        schema_violations = [_violation_row("*", e, run_id) for e in schema_errors]
 
         # Job 1: per-partition single-pass aggregation
         verdicts: list = []
@@ -407,68 +436,39 @@ class ValidationRunner:
         # Job 2: uniqueness with per-partition attribution — each partition
         # is charged its own members of globally-duplicated groups
         retro_violations: list = []
-        if ctx.unique_targets:
+        if ctx.unique_targets and per_partition_errors:
             partials = _unique_partials(df, part, ctx.unique_targets)
-            if self.unique_resume == "exact":
-                prior = self._read_unique_partials(spark)
-                if prior is not None:
-                    prior = prior.select(
-                        F.col("partition").alias("_p"),
-                        F.col("column").alias("k"),
-                        F.col("key_hash").alias("h"),
-                        "cnt",
-                    ).persist()
-                    merged_charge = _charge(partials.unionByName(prior))
-                    prior_charge = _charge(prior)
-                    prior.unpersist()
-                else:
-                    merged_charge, prior_charge = _charge(partials), {}
+            if self.unique_resume == "exact" and (
+                self.checkpoint_dir or self.checkpoint_table
+            ):
+                if chosen_run_id is not None:
+                    self._refuse_orphaned_run_id(spark, run_id, verdict_keys)
                 # write partials BEFORE verdicts: a crash between the two
-                # leaves orphan partials that _read_unique_partials ignores
+                # leaves orphan partials that _trusted_partials ignores
                 self._persist_unique_partials(partials, run_id)
-                pending_parts = set(per_partition_errors)
-                for (p, loc), count in merged_charge.items():
-                    if p in pending_parts:
-                        per_partition_errors[p].append(_dup_error(loc, count))
-                    else:
-                        # finished partition retroactively joined a
-                        # cross-boundary duplicate group: emit the DELTA so
-                        # the cumulative violation table equals what one
-                        # uninterrupted run would have charged
-                        delta = count - prior_charge.get((p, loc), 0)
-                        if delta > 0:
-                            err = _dup_error(loc, delta)
-                            retro_violations.append(
-                                {
-                                    "partition": p,
-                                    "column": err.loc_tuple()[0],
-                                    "error_type": get_exc_type(
-                                        err.exc.__class__
-                                    ),
-                                    "message": str(err.exc),
-                                    "violation_count": delta,
-                                    "run_id": run_id,
-                                }
-                            )
+                tagged = self._trusted_partials(
+                    spark, verdict_keys, run_id, list(per_partition_errors)
+                )
             else:
-                for (p, loc), count in _charge(partials).items():
-                    per_partition_errors.setdefault(p, []).append(
-                        _dup_error(loc, count)
+                # local mode, or nothing to resume from: this call's
+                # partials alone, straight from the scan
+                tagged = partials.withColumn("_prior", F.lit(False))
+            charges = _charge(tagged) if tagged is not None else {}
+            for (p, loc), (count, prior) in charges.items():
+                if p in per_partition_errors:
+                    per_partition_errors[p].append(_dup_error(loc, count))
+                elif count > prior:
+                    # finished partition retroactively joined a
+                    # cross-boundary duplicate group: emit the DELTA so the
+                    # cumulative violation table equals what one
+                    # uninterrupted run would have charged
+                    retro_violations.append(
+                        _violation_row(p, _dup_error(loc, count - prior), run_id)
                     )
 
         finished_at = time.time()
         for p, errs in per_partition_errors.items():
-            part_violations = [
-                {
-                    "partition": p,
-                    "column": e.loc_tuple()[0],
-                    "error_type": get_exc_type(e.exc.__class__),
-                    "message": str(e.exc),
-                    "violation_count": int(getattr(e.exc, "count", 1)),
-                    "run_id": run_id,
-                }
-                for e in errs
-            ]
+            part_violations = [_violation_row(p, e, run_id) for e in errs]
             violations.extend(part_violations)
             verdicts.append(
                 {
@@ -501,6 +501,18 @@ class ValidationRunner:
         if self.checkpoint_table:
             return spark.table(f"{self.checkpoint_table}_verdicts")
         return spark.read.parquet(f"{self.checkpoint_dir}/verdicts")
+
+
+def _violation_row(partition, err, run_id: str) -> dict:
+    """One ``VIOLATION_SCHEMA`` row for a wrapped error."""
+    return {
+        "partition": partition,
+        "column": err.loc_tuple()[0],
+        "error_type": get_exc_type(err.exc.__class__),
+        "message": str(err.exc),
+        "violation_count": int(getattr(err.exc, "count", 1)),
+        "run_id": run_id,
+    }
 
 
 def _dup_error(loc: str, count: int):
@@ -567,17 +579,49 @@ def _unique_partials(df: DataFrame, part, targets: list) -> DataFrame:
     )
 
 
-def _charge(partials: DataFrame) -> dict:
+def _charge(tagged: DataFrame) -> dict:
     """Each partition is charged its local member count of every
     (column, key) group whose GLOBAL total exceeds 1 — cross-partition
     duplicates are attributed to every partition that holds a member.
-    Output is driver-sized: one entry per (partition, column)."""
-    totals = partials.groupBy("k", "h").agg(F.sum("cnt").alias("total"))
+
+    One job over partials tagged ``_prior``: one ``(k, h)`` window computes
+    the merged total and the prior-only total (a window, not an aggregate
+    joined back, so the partials are read once), then one ``(_p, k)``
+    aggregate sums both charges.  Output is driver-sized:
+    ``{(partition, column): (charge, prior_charge)}``.
+    """
+    from pyspark.sql.window import Window  # noqa: PLC0415
+
+    by_key = Window.partitionBy("k", "h")
+    prior_cnt = F.when(F.col("_prior"), F.col("cnt")).otherwise(F.lit(0))
     charged = (
-        partials.join(totals, ["k", "h"])
-        .filter(F.col("total") > 1)
+        tagged.select(
+            "_p",
+            "k",
+            "cnt",
+            prior_cnt.alias("_prior_cnt"),
+            F.sum("cnt").over(by_key).alias("_total"),
+            F.sum(prior_cnt).over(by_key).alias("_prior_total"),
+        )
+        .filter(F.col("_total") > 1)
         .groupBy("_p", "k")
-        .agg(F.sum("cnt").alias("dups"))
+        .agg(
+            F.sum("cnt").alias("dups"),
+            F.sum(
+                F.when(F.col("_prior_total") > 1, F.col("_prior_cnt")).otherwise(0)
+            ).alias("prior_dups"),
+        )
         .collect()
     )
-    return {(r["_p"], r["k"]): int(r["dups"]) for r in charged}
+    return {
+        (r["_p"], r["k"]): (int(r["dups"]), int(r["prior_dups"])) for r in charged
+    }
+
+
+def _outside(col, values: set):
+    """Null-safe ``col ∉ values``: ``~isin`` evaluates to NULL (row silently
+    dropped) for a NULL cell, so the NULL partition — recorded as a NULL
+    ``partition`` cell — is kept or skipped explicitly."""
+    non_null = [v for v in values if v is not None]
+    named = ~col.isin(*non_null) if non_null else F.lit(True)
+    return (col.isNotNull() & named) | (col.isNull() & F.lit(None not in values))

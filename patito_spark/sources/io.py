@@ -99,6 +99,23 @@ def scan_for(spark: SparkSession, model: type, path: str, fmt: str = "parquet"):
     )
 
 
+def driver_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Rows built on the driver (dicts keyed by field name) as an
+    Arrow-backed ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans as a ``LogicalRDD`` over a
+    Python RDD, so every action on it forks a Python worker.  An Arrow
+    table crosses to the JVM once and plans as a local relation, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    """
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), schema
+    )
+
+
 def write_report(df: DataFrame, path: str, partition_by: Optional[list] = None) -> None:
     """Append a violation/metrics report as raw parquet files (path-based;
     for catalog tables use :func:`write_report_table`)."""

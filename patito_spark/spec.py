@@ -264,7 +264,7 @@ class ColumnSpec:
         ):
             value = getattr(self, key)
             if value is not None:
-                d[key] = value
+                d[key] = _json_safe(value) if key in _BOUND_KEYS else value
         if not isinstance(self.default, _Missing):
             d["default"] = _json_safe(self.default)
         if self.constraints:
@@ -935,24 +935,30 @@ def model_from_spec_json(payload: str) -> type:
         derived = col_spec.get("derived_from")
         if isinstance(derived, dict):
             derived = Expr.from_dict(derived["expr"])
-        default = col_spec.get("default", MISSING)
-        if default is not MISSING and isinstance(dtype, T.DateType):
-            default = _dt.date.fromisoformat(default)
-        elif default is not MISSING and isinstance(
-            dtype, (T.TimestampType, T.TimestampNTZType)
-        ):
-            default = _dt.datetime.fromisoformat(default)
+        values = {key: col_spec.get(key) for key in _BOUND_KEYS}
+        values["default"] = col_spec.get("default", MISSING)
+        # date and timestamp values were serialized as ISO strings
+        if isinstance(dtype, T.DateType):
+            parse = _dt.date.fromisoformat
+        elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+            parse = _dt.datetime.fromisoformat
+        else:
+            parse = None
+        if parse is not None:
+            values = {
+                k: parse(v) if isinstance(v, str) else v for k, v in values.items()
+            }
         info = FieldInfo(
-            default,
+            values["default"],
             dtype=dtype if not isinstance(dtype, (T.StructType,)) else None,
             unique=col_spec.get("unique", False),
             allow_missing=col_spec.get("allow_missing", False),
-            ge=col_spec.get("ge"),
-            gt=col_spec.get("gt"),
-            le=col_spec.get("le"),
-            lt=col_spec.get("lt"),
-            multiple_of=col_spec.get("multiple_of"),
-            const=col_spec.get("const"),
+            ge=values["ge"],
+            gt=values["gt"],
+            le=values["le"],
+            lt=values["lt"],
+            multiple_of=values["multiple_of"],
+            const=values["const"],
             pattern=col_spec.get("pattern"),
             min_length=col_spec.get("min_length"),
             max_length=col_spec.get("max_length"),

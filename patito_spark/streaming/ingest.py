@@ -68,6 +68,9 @@ from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..sources.io import driver_frame
 
 __all__ = [
     "compact_stores",
@@ -87,6 +90,16 @@ _ACTIVE_MARKER = "_active_query"
 
 _TABLE_SCHEME = "table:"
 _BATCH_COL = "_ingest_batch_id"
+
+_META_SCHEMA = T.StructType(
+    [T.StructField("key", T.StringType()), T.StructField("value", T.StringType())]
+)
+_SPECS_SCHEMA = T.StructType(
+    [
+        T.StructField("spec_hash", T.StringType()),
+        T.StructField("spec_json", T.StringType()),
+    ]
+)
 
 
 def _is_table_root(store_root: str) -> bool:
@@ -295,14 +308,15 @@ def _read_store_table(
 
 def _meta_put(spark: SparkSession, store_root: str, key: str, value: str):
     table = _table_name(store_root, "meta")
-    rows = spark.createDataFrame([(key, value)], "key string, value string")
+    row = {"key": key, "value": value}
     if not spark.catalog.tableExists(table):
-        rows.write.mode("overwrite").saveAsTable(table)
+        driver_frame(spark, [row], _META_SCHEMA).write.mode("overwrite").saveAsTable(
+            table
+        )
         return
     others = spark.table(table).filter(F.col("key") != key).collect()
-    spark.createDataFrame(
-        [(r["key"], r["value"]) for r in others] + [(key, value)],
-        "key string, value string",
+    driver_frame(
+        spark, [r.asDict() for r in others] + [row], _META_SCHEMA
     ).write.mode("overwrite").insertInto(table, overwrite=True)
 
 
@@ -356,8 +370,8 @@ def _spec_put(
     same hash maps to the same bytes; duplicates are deduped on read)."""
     if _is_table_root(store_root):
         table = _table_name(store_root, "specs")
-        rows = spark.createDataFrame(
-            [(spec_hash, payload)], "spec_hash string, spec_json string"
+        rows = driver_frame(
+            spark, [{"spec_hash": spec_hash, "spec_json": payload}], _SPECS_SCHEMA
         )
         if not spark.catalog.tableExists(table):
             rows.write.mode("overwrite").saveAsTable(table)

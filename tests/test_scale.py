@@ -370,22 +370,7 @@ def test_runner_exact_resume_ignores_orphan_partials(spark, tmp_path):
     runner = ValidationRunner(M, "p", checkpoint_dir=ckpt, unique_resume="exact")
     # simulate the torn write: persist partials for partition 0 under a
     # run_id that never got a verdict
-    from patito_spark.plans.checks import _Ctx, _compile_level
-    from patito_spark.plans.runner import _unique_partials
-
-    half = df.filter(F.col("p") == 0)
-    ctx = _Ctx()
-    _compile_level(
-        ctx=ctx, errors=[], specs=M.__column_specs__,
-        model_config=M.model_config, df_columns=["p", "u"],
-        df_types={"p": T.IntegerType(), "u": T.IntegerType()},
-        columns=None, allow_missing_columns=False,
-        allow_superfluous_columns=False, path="", loc="", guard=None,
-    )
-    runner._persist_unique_partials(
-        _unique_partials(half, F.col("p").cast("string"), ctx.unique_targets),
-        "dead-run",
-    )
+    _write_torn_partials(runner, df.filter(F.col("p") == 0), "dead-run")
     # real run over everything: partition 0 re-runs (no verdict exists);
     # its fresh partials + partition 1's must charge u=1 exactly once per
     # member — the orphan 'dead-run' rows are ignored
@@ -396,6 +381,221 @@ def test_runner_exact_resume_ignores_orphan_partials(spark, tmp_path):
         if v["column"] == "u"
     }
     assert dup == {"0": 1, "1": 1}
+
+
+def _write_torn_partials(runner, df, run_id):
+    """What a call killed between its partials write and its verdict write
+    leaves behind: *df*'s unique partials under *run_id*, no verdicts."""
+    from patito_spark.plans.checks import _Ctx, _compile_level
+    from patito_spark.plans.runner import _unique_partials
+
+    model = runner.model
+    ctx = _Ctx()
+    _compile_level(
+        ctx=ctx, errors=[], specs=model.__column_specs__,
+        model_config=model.model_config, df_columns=df.columns,
+        df_types={f.name: f.dataType for f in df.schema.fields},
+        columns=None, allow_missing_columns=False,
+        allow_superfluous_columns=False, path="", loc="", guard=None,
+    )
+    part = F.col(runner.partition_name).cast("string")
+    runner._persist_unique_partials(
+        _unique_partials(df, part, ctx.unique_targets), run_id
+    )
+
+
+def _dup_counts(violations, column="u"):
+    out: dict = {}
+    for v in violations:
+        if v["column"] == column:
+            out[v["partition"]] = out.get(v["partition"], 0) + v["violation_count"]
+    return out
+
+
+class _Unique(pt.Model):
+    p: int
+    u: int = pt.Field(unique=True)
+
+
+def test_runner_exact_resume_refuses_run_id_with_orphan_partials(spark, tmp_path):
+    """A same-run_id retry after a crash between the partials write and the
+    verdict write: the orphans share the retry's (partition, run_id) trust
+    key, so the retry is refused; a fresh run_id resumes exactly."""
+    rows = [(0, 1), (0, 7), (1, 3), (2, 1), (2, 9)]
+    df = spark.createDataFrame(rows, "p int, u int")
+    truth = _dup_counts(
+        ValidationRunner(
+            _Unique, "p", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
+        ).run(df).violations
+    )
+    assert truth == {"0": 1, "2": 1}
+
+    ckpt = str(tmp_path / "torn")
+    runner = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact")
+    first = df.filter(F.col("p") < 2)
+    _write_torn_partials(runner, first, "r1")
+    with pytest.raises(ValueError, match="'r1'"):
+        runner.run(first, run_id="r1")
+    assert runner._verdict_keys(spark) == []  # the refused call wrote nothing
+
+    runner.run(first, run_id="r2")
+    # reusing an id that owns no orphan partials stays legal
+    runner.run(df, run_id="r2")
+    persisted = runner.report(spark).filter(F.col("column") == "u").collect()
+    assert _dup_counts([r.asDict() for r in persisted]) == truth
+
+
+def test_runner_checkpoint_rows_are_local_relations(spark, tmp_path, monkeypatch):
+    """The verdict and violation frames plan as Arrow-backed local
+    relations, never as a Python RDD (a LogicalRDD forks a Python worker
+    per action), and read back identical to the Python-RDD path."""
+    from patito_spark.plans.runner import VERDICT_SCHEMA
+    from patito_spark.sources.io import driver_frame
+
+    plans: dict = {}
+    append = ValidationRunner._append
+
+    def recording_append(self, df, store):
+        plans.setdefault(store, []).append(
+            df._jdf.queryExecution().analyzed().toString()
+        )
+        append(self, df, store)
+
+    monkeypatch.setattr(ValidationRunner, "_append", recording_append)
+    df = spark.createDataFrame(
+        [(0, 1), (1, 1), (None, 2), (None, 2)], "p int, u int"
+    )
+    ValidationRunner(
+        _Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"), unique_resume="exact"
+    ).run(df)
+    assert set(plans) == {"unique_partials", "verdicts", "violations"}
+    for store in ("verdicts", "violations"):
+        (plan,) = plans[store]
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+    rows = [
+        {
+            "partition": None,
+            "passed": False,
+            "n_rows": 3,
+            "n_violations": 2,
+            "run_id": "r",
+            "finished_at": 1.5,
+            "elapsed_sec": 0.25,
+            "input_files": [],
+        },
+        {
+            "partition": "2024",
+            "passed": True,
+            "n_rows": 1,
+            "n_violations": 0,
+            "run_id": "r",
+            "finished_at": 1.5,
+            "elapsed_sec": 0.25,
+            "input_files": ["file:/a.parquet", "file:/b.parquet"],
+        },
+    ]
+    arrow = driver_frame(spark, rows, VERDICT_SCHEMA)
+    assert arrow.schema == VERDICT_SCHEMA
+    assert arrow.collect() == spark.createDataFrame(rows, VERDICT_SCHEMA).collect()
+
+
+def _input_records(spark, group: str) -> int:
+    """Records read by the stages of *group*'s jobs, from the status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    stage_ids = set()
+    store = sc._jsc.sc().statusStore()
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        ids = store.job(jid).stageIds()
+        stage_ids.update(ids.apply(i) for i in range(ids.size()))
+    jvm = sc._jvm
+    stages = store.stageList(
+        jvm.java.util.ArrayList(),
+        False,
+        False,
+        sc._gateway.new_array(jvm.double, 0),
+        jvm.java.util.ArrayList(),
+    )
+    return sum(
+        stages.apply(i).inputRecords()
+        for i in range(stages.size())
+        if stages.apply(i).stageId() in stage_ids
+    )
+
+
+def test_runner_exact_resume_reads_source_twice_and_store_once(spark, tmp_path):
+    """An exact-mode resume scans each pending row at most twice (the
+    aggregate and the partials) and the stored partials once."""
+    src = str(tmp_path / "src")
+    spark.range(4_000).select(
+        (F.col("id") % 8).cast("int").alias("p"),
+        # one cross-partition duplicate group per 100 ids
+        F.when(F.col("id") % 100 == 0, F.lit(-1)).otherwise(F.col("id")).alias("u"),
+    ).write.partitionBy("p").parquet(src)
+    df = spark.read.parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
+        df, where=F.col("p") < 4
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("runner-resume-reads", "exact resume")
+    try:
+        resume = ValidationRunner(
+            _Unique, "p", checkpoint_dir=ckpt, unique_resume="exact"
+        ).run(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    read = _input_records(spark, "runner-resume-reads")
+    pending = sum(v["n_rows"] for v in resume.verdicts)
+    stored = spark.read.parquet(f"{ckpt}/unique_partials").count()
+    verdict_rows = spark.read.parquet(f"{ckpt}/verdicts").count() - len(resume.verdicts)
+    assert pending == 2_000
+    assert read <= 2 * pending + stored + verdict_rows, (read, pending, stored)
+    # the cross-boundary group is charged to all eight partitions in total
+    persisted = ValidationRunner(
+        _Unique, "p", checkpoint_dir=ckpt, unique_resume="exact"
+    ).report(spark)
+    assert sum(_dup_counts([r.asDict() for r in persisted.collect()]).values()) == 40
+
+
+def test_runner_resumes_checkpoint_of_python_rdd_rows(spark, tmp_path, monkeypatch):
+    """A checkpoint whose verdict and violation rows were written through
+    ``createDataFrame(<list>)`` (the Python-RDD path) resumes under the
+    Arrow path with the same stored schemas and exact cumulative totals."""
+    import patito_spark.sources.io as io
+
+    rows = [(0, 1), (0, 7), (1, 2), (1, 2), (2, 1), (2, 9), (None, 7)]
+    df = spark.createDataFrame(rows, "p int, u int")
+    truth = _dup_counts(
+        ValidationRunner(
+            _Unique, "p", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
+        ).run(df).violations
+    )
+    assert truth == {"0": 2, "1": 2, "2": 1, None: 1}
+
+    ckpt = str(tmp_path / "mixed")
+    with monkeypatch.context() as m:
+        m.setattr(
+            io, "driver_frame", lambda spark, rows, schema: spark.createDataFrame(rows, schema)
+        )
+        ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
+            df.filter(F.col("p") < 2)
+        )
+    runner = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact")
+    resumed = runner.run(df)
+    assert resumed.skipped_partitions == ["0", "1"]
+    persisted = runner.report(spark).collect()
+    assert _dup_counts([r.asDict() for r in persisted]) == truth
+    for store in ("verdicts", "violations"):
+        schemas = {
+            spark.read.parquet(f.path).schema.simpleString()
+            for f in spark.read.parquet(f"{ckpt}/{store}")
+            .select(F.input_file_name().alias("path"))
+            .distinct()
+            .collect()
+        }
+        assert len(schemas) == 1, (store, schemas)
 
 
 # -- referential integrity -------------------------------------------------------

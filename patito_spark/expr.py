@@ -273,9 +273,9 @@ class Expr:
 
         Placeholders accumulate in *acc* (name → subtree); the result is a
         pure row-level expression.  The check compiler evaluates the
-        subtrees in the single-pass aggregation, then splices the scalars
-        back with :meth:`substitute_values` — reproducing polars' broadcast
-        of aggregates over filters (reference test at
+        subtrees in the single-pass aggregation, then resolves the
+        placeholders to their values in a second pass — reproducing polars'
+        broadcast of aggregates over filters (reference test at
         ``tests/test_validators.py:886-894``).
         """
         if self.op in _AGG_OPS:
@@ -291,11 +291,12 @@ class Expr:
         )
 
     # -- compile ----------------------------------------------------------------
-    def to_column(self):
-        """Compile to a native ``pyspark.sql.Column``."""
+    def to_column(self, resolve=None):
+        """Compile to a native ``pyspark.sql.Column``; *resolve* maps each
+        referenced column name to its Column (default ``F.col``)."""
         from pyspark.sql import functions as F
 
-        return _compile(self, F)
+        return _compile(self, F, resolve or F.col)
 
     # -- serialization ----------------------------------------------------------
     def to_dict(self) -> dict:
@@ -339,15 +340,15 @@ def _collect_refs(e: Expr, out: set) -> None:
             _collect_refs(a, out)
 
 
-def _compile(e: Expr, F):
+def _compile(e: Expr, F, resolve):
     op = e.op
     if op == "col":
-        return F.col(e.args[0])
+        return resolve(e.args[0])
     if op == "lit":
         return F.lit(e.args[0])
     if op in _BINARY_OPS:
-        left = _compile(e.args[0], F)
-        right = _compile(e.args[1], F)
+        left = _compile(e.args[0], F, resolve)
+        right = _compile(e.args[1], F, resolve)
         return {
             "add": lambda a, b: a + b,
             "sub": lambda a, b: a - b,
@@ -363,7 +364,11 @@ def _compile(e: Expr, F):
             "and": lambda a, b: a & b,
             "or": lambda a, b: a | b,
         }[op](left, right)
-    child = _compile(e.args[0], F) if e.args and isinstance(e.args[0], Expr) else None
+    child = (
+        _compile(e.args[0], F, resolve)
+        if e.args and isinstance(e.args[0], Expr)
+        else None
+    )
     if op == "not":
         return ~child
     if op == "neg":

@@ -1,4 +1,4 @@
-"""The validation engine: model spec → one single-pass aggregation plan.
+"""The validation engine: one check compiler, two executors.
 
 The reference executes **O(#checks) eager scans** — one kernel per null
 count (``/root/reference/src/patito/validators.py:144``), one ``collect()``
@@ -7,35 +7,46 @@ column (``validators.py:429-432``) and a duplicate mask per unique column
 (``validators.py:237``).  That is fine for a single polars process and fatal
 for a 10^12-row table.
 
-This module compiles the *entire* check suite into:
+**Compile** (:func:`compile_checks`, driver only, no Spark job): the
+schema-level errors (missing/superfluous columns, dtypes — V1/V2/V5) plus a
+flat list of :class:`Check` records, one per error message a column can
+produce: loc and kind, per-row violation predicates keyed by row-flag name
+(``<loc>__<kind>``), the aggregate terms counting them plus extras (enum
+null probes, aggregate-constraint booleans, the row total), the message
+renderer, a pass-2 marker for mixed aggregate/row constraints, a uniqueness
+target and a scope.  Nested-struct fields (V8) are built off their parent
+column, guarded on parent non-nullness; a list-of-struct column (V9) opens
+a scope read off its exploded element ``_item``.
 
-* **Job 0 (driver only, no Spark job)** — missing/superfluous columns and
-  dtype checks straight off ``df.schema`` (V1/V2/V5).
-* **Job 1 (one scan, no shuffle)** — every row-level check (null counts V3,
-  list-null counts V4, enum violations V6, bounds V10, custom constraints
-  V11, aggregate constraints) as terms of a single ``df.agg(...)``.
-  Nested-struct checks (V8) are inlined into the same aggregation via dotted
-  field paths guarded on parent non-nullness — no unnest materialization.
-* **Job 2 (one scan + one shuffle)** — uniqueness (V7) for *all* unique
-  columns at once: each row explodes into (column, value) pairs, a salted
-  pre-aggregation ``groupBy(k, v, salt)`` absorbs hot keys (explicit skew
-  mitigation per the north rule), then ``groupBy(k, v)`` → duplicate-member
-  counts.  The shuffle carries only distinct (column, value, salt) partials,
-  never rows.
-* **Job 3..n** — list-of-struct recursion (V9) per such column (explode is
-  unavoidable there; the reference does the same, ``validators.py:286-329``).
+**Aggregate executor** (:func:`_aggregate`), per scope, unkeyed
+(:func:`find_errors`) or keyed by partition (``plans.runner``): Job 1 puts
+every record's terms in one ``agg`` (one scan, no shuffle); Job 1a, only on
+enum violations, fetches bounded offending-value samples; Job 1b, only with
+mixed constraints, resolves the pass-1 aggregates in the row predicates
+(literals unkeyed, a broadcast local relation joined per key keyed) and
+counts failures in one more scan.  A list-of-struct scope runs over the
+exploded column of its parent's frame, the key carried along.  Uniqueness
+(V7) stays per executor: one hashed shuffle for all unique columns of a
+scope here (:func:`_duplicate_counts`), persisted partials in the runner.
+
+**Row executor** (:func:`row_flags`): the predicates as row flags, for
+``flag_violations`` and everything routed by it; a list-of-struct record
+becomes ``exists(column, element -> predicate)``, its scope compiled again
+against the lambda element.  Uniqueness, aggregate and mixed constraints
+and schema-level errors have no row form.
 
 All expressions are native ``pyspark.sql.functions`` Columns — whole-stage
-codegen end to end, zero Python UDFs.
-
-Check semantics mirror the reference exactly (see SURVEY §7.3): duplicate
-counts include every member of a duplicate group; bound-violation counts sum
-per check (a row can count twice); nulls never fail bounds/constraints;
-``pattern`` is regex *search*; lengths are characters.
+codegen end to end, zero Python UDFs.  Check semantics mirror the reference
+exactly (see SURVEY §7.3): duplicate counts include every member of a
+duplicate group; bound-violation counts sum per check (a row can count
+twice); nulls never fail bounds/constraints; ``pattern`` is regex *search*;
+lengths are characters.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field, replace
+from functools import reduce
 from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -58,23 +69,14 @@ from ..expr import Expr
 #: unbounded collect_set is a driver OOM, so we cap (far above test domains).
 _ENUM_SAMPLE_CAP = 1000
 
-
-
-
-def _enum_sample_values(
-    df: DataFrame,
-    value_expr: Column,
-    is_array: bool,
-    cap: int = _ENUM_SAMPLE_CAP,
-) -> list:
-    """Distinct offending enum values, bounded end to end: the distinct is a
-    spillable hash aggregate (unlike a collect_set buffer) and ``limit``
-    caps what reaches the driver."""
-    vals = df.select(value_expr.alias("_v"))
-    if is_array:
-        vals = vals.select(F.explode("_v").alias("_v"))
-    rows = vals.filter(F.col("_v").isNotNull()).distinct().limit(cap).collect()
-    return [r["_v"] for r in rows]
+#: one builder per counted error message (exact reference wording)
+_COUNT_MESSAGES = {
+    "null": (MissingValuesError, "{n} missing value{s}"),
+    "list_null": (MissingValuesError, "{n} missing value{s} in lists"),
+    "bound": (RowValueError, "{n} row{s} with out of bound values."),
+    "constraint": (RowValueError, "{n} row{s} does not match custom constraints."),
+    "unique": (RowValueError, "{n} rows with duplicated values."),
+}
 
 
 def _wrap(exc_cls, msg: str, loc: str, count: int) -> ErrorWrapper:
@@ -82,37 +84,92 @@ def _wrap(exc_cls, msg: str, loc: str, count: int) -> ErrorWrapper:
     exc.count = count  # structured count for the report/checkpoint writer
     return ErrorWrapper(exc, loc=loc)
 
-class _Ctx:
-    """Accumulates agg terms + result handlers across the recursive compile."""
 
-    def __init__(self) -> None:
-        self.terms: dict[str, Column] = {}
-        self.handlers: list[Callable[[dict, list], None]] = []
-        # (loc, guarded key Column, value Column)
-        self.unique_targets: list[tuple[str, Column, Column]] = []
-        # mixed aggregate/row constraints needing the scalar-splice pass:
-        # dicts with loc / row+mixed Exprs / placeholder→alias / agg aliases
-        self.mixed_groups: list[dict] = []
-        # V6 offending-value samples fetched in a bounded FOLLOW-UP job, not
-        # accumulated in the single-pass agg: (alias, value expr, is_array,
-        # violation-count alias).  A collect_set term would hold the full
-        # distinct set in every partial aggregation buffer — a misdeclared
-        # high-cardinality "enum" column (e.g. url) becomes an executor OOM.
-        self.enum_samples: list[tuple[str, Column, bool, str]] = []
-        self._n = 0
+def count_error(kind: str, loc: str, n) -> Optional[ErrorWrapper]:
+    """The error for *n* violations of a counted check kind; None for 0."""
+    if not n:
+        return None
+    exc_cls, message = _COUNT_MESSAGES[kind]
+    return _wrap(exc_cls, message.format(n=n, s="" if n == 1 else "s"), loc, n)
 
-    def add(self, column: Column) -> str:
-        alias = f"_chk{self._n}"
-        self._n += 1
-        self.terms[alias] = column.alias(alias)
-        return alias
 
-    def add_enum_sample(
-        self, value_expr: Column, is_array: bool, cnt_alias: str
-    ) -> str:
-        alias = f"_enum{len(self.enum_samples)}"
-        self.enum_samples.append((alias, value_expr, is_array, cnt_alias))
-        return alias
+@dataclass(eq=False)
+class Scope:
+    """The row a scope's records read: the frame's row (root) or the element
+    of a list-of-struct ``column`` (relative to the parent scope's row)."""
+
+    loc: str = ""
+    column: Optional[Column] = None
+    model: Optional[type] = None
+    element: Optional[T.StructType] = None
+    parent: Optional["Scope"] = None
+    errors: list = field(default_factory=list)  # schema-level, in this scope
+
+
+@dataclass(eq=False)
+class Check:
+    """One compiled check: everything both executors need to evaluate it."""
+
+    loc: str
+    kind: str  # null | list_null | enum | unique | bound | constraint
+    scope: Scope
+    #: a result row's values of ``terms`` (+ ``values``/``mixed``) → error
+    render: Optional[Callable[[dict], Optional[ErrorWrapper]]] = None
+    terms: dict = field(default_factory=dict)  # local name → aggregate
+    flags: dict = field(default_factory=dict)  # row-flag name → predicate
+    #: enum: (offending-value expression, is_array), sampled when n > 0
+    sample: Optional[tuple] = None
+    #: pass-2 marker: placeholder name → Column resolver ↦ row predicate
+    mixed: Optional[Callable] = None
+    #: uniqueness: (loc, guarded key, value)
+    unique: Optional[tuple] = None
+
+
+@dataclass(eq=False)
+class CheckPlan:
+    """A model compiled against one schema; scopes parent first, root first."""
+
+    checks: list = field(default_factory=list)
+    scopes: list = field(default_factory=lambda: [Scope()])
+
+    @property
+    def root(self) -> Scope:
+        return self.scopes[0]
+
+    @property
+    def schema_errors(self) -> list:
+        return [e for s in self.scopes for e in s.errors]
+
+    def in_scope(self, scope: Scope) -> list:
+        return [c for c in self.checks if c.scope is scope]
+
+
+def compile_checks(
+    model: type,
+    schema: T.StructType,
+    columns: Optional[list] = None,
+    allow_missing_columns: bool = False,
+    allow_superfluous_columns: bool = False,
+) -> CheckPlan:
+    """Compile *model* against a frame *schema* (driver only, no job)."""
+    plan = CheckPlan()
+    _compile_level(
+        plan,
+        plan.root,
+        model,
+        schema,
+        F.col,
+        guard=None,
+        columns=columns,
+        allow_missing_columns=allow_missing_columns,
+        allow_superfluous_columns=allow_superfluous_columns,
+    )
+    return plan
+
+
+# ---------------------------------------------------------------------------
+# validate / find_errors
+# ---------------------------------------------------------------------------
 
 
 def validate(
@@ -168,6 +225,8 @@ def _transform_df(df: DataFrame, model: type) -> DataFrame:
     return df.toDF(*[alias_func(c) for c in df.columns])
 
 
+
+
 def find_errors(
     df: DataFrame,
     model: type,
@@ -175,106 +234,23 @@ def find_errors(
     allow_missing_columns: bool = False,
     allow_superfluous_columns: bool = False,
 ) -> list[ErrorWrapper]:
-    """Run every check; return accumulated ErrorWrappers (no raise)."""
+    """Run every check; return accumulated ErrorWrappers (no raise).  Per
+    scope, root first: schema errors, aggregate executor, duplicates."""
+    plan = compile_checks(
+        model, df.schema, columns, allow_missing_columns, allow_superfluous_columns
+    )
+    frames = scope_frames(df, plan)
     errors: list[ErrorWrapper] = []
-    ctx = _Ctx()
-
-    _compile_level(
-        ctx=ctx,
-        errors=errors,
-        specs=model.__column_specs__,
-        model_config=model.model_config,
-        df_columns=df.columns,
-        df_types={f.name: f.dataType for f in df.schema.fields},
-        columns=columns,
-        allow_missing_columns=allow_missing_columns,
-        allow_superfluous_columns=allow_superfluous_columns,
-        path="",
-        loc="",
-        guard=None,
-    )
-
-    explode_jobs = _collect_explode_jobs(
-        model.__column_specs__,
-        {f.name: f.dataType for f in df.schema.fields},
-        df.columns,
-        columns,
-    )
-
-    # Job 1: single-pass aggregation over all row-level checks
-    result: dict = {}
-    if ctx.terms:
-        result = df.agg(*ctx.terms.values()).collect()[0].asDict()
-        # Job 1a (only when an enum check found violations): bounded
-        # offending-value sample per violating enum column.  distinct() is a
-        # spillable hash aggregate and limit caps the driver transfer, so
-        # neither executors nor the driver ever hold the full distinct set.
-        for alias, value_expr, is_array, cnt_alias in ctx.enum_samples:
-            if (result.get(cnt_alias) or 0) > 0:
-                result[alias] = _enum_sample_values(df, value_expr, is_array)
-        for handler in ctx.handlers:
-            handler(result, errors)
-
-    # Job 1b (only when mixed aggregate/row constraints exist): splice the
-    # pass-1 aggregate scalars into the row predicates and count failures —
-    # ONE extra scan shared by every mixed constraint in the model
-    if ctx.mixed_groups:
-        terms2: dict[str, Column] = {}
-        for i, group in enumerate(ctx.mixed_groups):
-            scalars = {
-                ph: result.get(alias) for ph, alias in group["ph_alias"].items()
-            }
-            pred = None
-            for c in group["row_exprs"]:
-                neg = ~c.substitute_values(scalars).to_column()
-                pred = neg if pred is None else (pred | neg)
-            terms2[f"_mix{i}"] = F.sum(pred.cast("long")).alias(f"_mix{i}")
-        result2 = df.agg(*terms2.values()).collect()[0].asDict()
-        for i, group in enumerate(ctx.mixed_groups):
-            if any(result.get(a) is False for a in group["agg_aliases"]):
-                n = result.get(group["total_alias"]) or 0
-            else:
-                n = result2.get(f"_mix{i}") or 0
-            if n > 0:
-                errors.append(
-                    _wrap(
-                        RowValueError,
-                        f"{n} row{'' if n == 1 else 's'} "
-                        "does not match custom constraints.",
-                        group["loc"],
-                        n,
-                    )
-                )
-
-    # Job 2: all-columns salted uniqueness
-    if ctx.unique_targets:
-        for loc, count in _duplicate_counts(df, ctx.unique_targets).items():
-            if count > 0:
-                errors.append(
-                    _wrap(
-                        RowValueError,
-                        f"{count} rows with duplicated values.",
-                        loc,
-                        count,
-                    )
-                )
-
-    # Job 3..n: list-of-struct recursion (explode unavoidable)
-    for loc, name, submodel, spec in explode_jobs:
-        exploded = (
-            df.filter(F.col(name).isNotNull())
-            .filter(F.size(F.col(name)) > 0)
-            .select(F.explode(name).alias("_item"))
-            .filter(F.col("_item").isNotNull())
-            .select("_item.*")
-        )
-        sub_errors = find_errors(exploded, submodel)
-        for err in sub_errors:
-            err._loc = f"{loc}.{err.loc_tuple()[0]}"
-        errors.extend(sub_errors)
-
-    # Preserve the reference's error ordering loosely: column-order stable
-    # within each check family; exact ordering is not asserted by tests.
+    for scope in plan.scopes:
+        checks = plan.in_scope(scope)
+        errors.extend(scope.errors)
+        for _, scope_errors in _aggregate(frames[scope], checks).values():
+            errors.extend(scope_errors)
+        unique = [c.unique for c in checks if c.unique]
+        if unique:
+            for loc, count in _duplicate_counts(frames[scope], unique).items():
+                if count > 0:
+                    errors.append(count_error("unique", loc, count))
     return errors
 
 
@@ -284,38 +260,40 @@ def find_errors(
 
 
 def _compile_level(
-    ctx: _Ctx,
-    errors: list,
-    specs: dict,
-    model_config: dict,
-    df_columns: list,
-    df_types: dict,
-    columns: Optional[list],
-    allow_missing_columns: bool,
-    allow_superfluous_columns: bool,
-    path: str,
-    loc: str,
+    plan: CheckPlan,
+    scope: Scope,
+    model: type,
+    schema: T.StructType,
+    at: Callable[[str], Column],
     guard: Optional[Column],
+    loc: str = "",
+    columns: Optional[list] = None,
+    allow_missing_columns: bool = False,
+    allow_superfluous_columns: bool = False,
 ) -> None:
+    """Compile one model level over *schema*'s fields, each read by
+    ``at(name)``."""
+    specs = model.__column_specs__
+    fields = {f.name: f.dataType for f in schema.fields}
     schema_subset = columns or list(specs)
-    column_subset = columns or df_columns
+    column_subset = columns or list(fields)
 
     # V1 missing columns (validators.py:118-130)
     if not allow_missing_columns:
-        for missing in sorted(set(schema_subset) - set(df_columns)):
+        for missing in sorted(set(schema_subset) - set(fields)):
             spec = specs.get(missing)
-            if spec is not None and spec.allow_missing:
-                continue
-            errors.append(
-                ErrorWrapper(
-                    MissingColumnsError("Missing column"), loc=_join_loc(loc, missing)
+            if spec is None or not spec.allow_missing:
+                scope.errors.append(
+                    ErrorWrapper(
+                        MissingColumnsError("Missing column"),
+                        loc=_join_loc(loc, missing),
+                    )
                 )
-            )
 
     # V2 superfluous columns (validators.py:132-140)
-    if not (allow_superfluous_columns or model_config.get("extra") == "allow"):
+    if not (allow_superfluous_columns or model.model_config.get("extra") == "allow"):
         for extra in sorted(set(column_subset) - set(specs)):
-            errors.append(
+            scope.errors.append(
                 ErrorWrapper(
                     SuperfluousColumnsError("Superfluous column"),
                     loc=_join_loc(loc, extra),
@@ -323,24 +301,27 @@ def _compile_level(
             )
 
     for name, spec in specs.items():
-        if name not in df_columns or name not in column_subset:
-            continue
-        _compile_column(ctx, errors, spec, df_types[name], path, loc, guard)
+        if name in fields and name in column_subset:
+            _compile_column(plan, scope, spec, fields[name], at, loc, guard)
 
 
 def _compile_column(
-    ctx: _Ctx,
-    errors: list,
+    plan: CheckPlan,
+    scope: Scope,
     spec: Any,
     df_type: T.DataType,
-    path: str,
+    at: Callable[[str], Column],
     loc: str,
     guard: Optional[Column],
 ) -> None:
-    name = spec.name
-    col_path = path + name
-    col_loc = _join_loc(loc, name)
-    col = F.col(col_path)
+    col = at(spec.name)
+    col_loc = _join_loc(loc, spec.name)
+
+    def add(kind: str, **kw: Any) -> None:
+        plan.checks.append(Check(col_loc, kind, scope, **kw))
+
+    def guarded(cond: Column) -> Column:
+        return cond if guard is None else (guard & cond)
 
     is_struct_in_df = isinstance(df_type, T.StructType)
     is_list_struct_in_df = isinstance(df_type, T.ArrayType) and isinstance(
@@ -354,151 +335,74 @@ def _compile_column(
 
         if not dtype_in_valid_set(df_type, spec.valid_dtypes):
             dtype_ok = False
-            errors.append(
-                ErrorWrapper(
-                    ColumnDTypeError(
-                        f"Spark dtype {df_type.simpleString()} does not match "
-                        "model field type."
-                    ),
-                    loc=col_loc,
-                )
-            )
+            scope.errors.append(_dtype_error(df_type, col_loc))
 
     # --- V3 null count for non-nullable columns (validators.py:143-154) ----
     if not spec.nullable:
-        cond = col.isNull() if guard is None else (guard & col.isNull())
-        alias = ctx.add(F.sum(cond.cast("long")))
-
-        def _null_handler(res: dict, errs: list, a=alias, location=col_loc) -> None:
-            n = res.get(a) or 0
-            if n:
-                errs.append(
-                    _wrap(
-                        MissingValuesError,
-                        f"{n} missing {'value' if n == 1 else 'values'}",
-                        location,
-                        n,
-                    )
-                )
-
-        ctx.handlers.append(_null_handler)
+        add("null", **_counted("null", col_loc, {"null": guarded(col.isNull())}))
 
     # --- V4 nulls inside lists (validators.py:156-197) -----------------------
-    list_null_alias: Optional[str] = None
     if (
         isinstance(spec.dtype, T.ArrayType)
         and not spec.item_nullable
         and isinstance(df_type, T.ArrayType)
     ):
-        inner = F.when(
-            col.isNotNull() if guard is None else (guard & col.isNotNull()),
-            F.size(F.filter(col, lambda x: x.isNull())),
-        ).otherwise(0)
-        list_null_alias = ctx.add(F.sum(inner))
-
-        def _list_null_handler(
-            res: dict, errs: list, a=list_null_alias, location=col_loc
-        ) -> None:
-            n = res.get(a) or 0
-            if n:
-                errs.append(
-                    _wrap(
-                        MissingValuesError,
-                        f"{n} missing {'value' if n == 1 else 'values'} in lists",
-                        location,
-                        n,
-                    )
-                )
-
-        ctx.handlers.append(_list_null_handler)
+        present = guarded(col.isNotNull())
+        n_null = F.size(F.filter(col, lambda x: x.isNull()))
+        has_null = F.coalesce(F.exists(col, lambda x: x.isNull()), F.lit(False))
+        add(
+            "list_null",
+            terms={"n": F.sum(F.when(present, n_null).otherwise(0))},
+            flags={f"{col_loc}__list_null": present & has_null},
+            render=lambda res: count_error("list_null", col_loc, res["n"]),
+        )
 
     # --- V6 enum / allowed values (validators.py:405-439) --------------------
     if spec.allowed_values:
+        # Job 1 carries a NATIVE violation count (constant aggregation state
+        # per buffer; a collect_set term would hold the full distinct set in
+        # every partial buffer — a misdeclared high-cardinality "enum"
+        # column, e.g. url, becomes an executor OOM).  Offending values come
+        # from the bounded Job 1a sample instead.
         allowed = list(spec.allowed_values)
-        # Phase 1 (this agg): a NATIVE violation count — constant aggregation
-        # state per buffer.  Phase 2 (find_errors / the runner): when the
-        # count is non-zero, the offending-value sample is fetched by a tiny
-        # follow-up job (spillable distinct + limit) and injected into the
-        # result dict under `set_alias` before handlers run.
+        terms: dict = {}
         if isinstance(df_type, T.ArrayType):
             bad = F.filter(col, lambda x: ~x.isin(*allowed))
-            cnt_alias = ctx.add(F.sum(F.greatest(F.size(bad), F.lit(0))))
-            set_alias = ctx.add_enum_sample(bad, True, cnt_alias)
-            null_in_alias = ctx.add(
-                F.max(F.coalesce(F.exists(col, lambda x: x.isNull()), F.lit(False)))
-            )
-        else:
-            bad_val = F.when(~col.isin(*allowed), col)
-            cnt_alias = ctx.add(F.sum((~col.isin(*allowed)).cast("long")))
-            set_alias = ctx.add_enum_sample(bad_val, False, cnt_alias)
-            null_in_alias = None
-        col_null_alias = (
-            ctx.add(F.sum(col.isNull().cast("long"))) if not spec.nullable else None
-        )
-
-        def _enum_handler(
-            res: dict,
-            errs: list,
-            sa=set_alias,
-            na=null_in_alias,
-            cna=col_null_alias,
-            nullable=spec.nullable,
-            location=col_loc,
-        ) -> None:
-            values = set(res.get(sa) or [])
-            # the reference derives "actual" from unique(), which includes
-            # nulls; None is impermissible unless the column is Optional
-            # (validators.py:426-433)
-            if not nullable:
-                if na is not None and res.get(na):
-                    values.add(None)
-                if cna is not None and (res.get(cna) or 0) > 0:
-                    values.add(None)
-            if values:
-                errs.append(
-                    _wrap(
-                        RowValueError,
-                        f"Rows with invalid values: {values}.",
-                        location,
-                        len(values),
-                    )
+            terms["n"] = F.sum(F.greatest(F.size(bad), F.lit(0)))
+            flag = F.size(bad) > 0
+            sample = (bad, True)
+            if not spec.nullable:
+                terms["null_in"] = F.max(
+                    F.coalesce(F.exists(col, lambda x: x.isNull()), F.lit(False))
                 )
-
-        ctx.handlers.append(_enum_handler)
+        else:
+            flag = F.coalesce(~col.isin(*allowed), F.lit(False))
+            terms["n"] = F.sum(flag.cast("long"))
+            sample = (F.when(flag, col), False)
+        if not spec.nullable:
+            terms["nulls"] = F.sum(col.isNull().cast("long"))
+        add(
+            "enum",
+            terms=terms,
+            flags={f"{col_loc}__enum": flag},
+            sample=sample,
+            render=_enum_render(col_loc, spec.nullable),
+        )
 
     # --- V7 uniqueness target (validators.py:235-244) ------------------------
     if spec.unique:
         key = F.lit(col_loc) if guard is None else F.when(guard, F.lit(col_loc))
-        ctx.unique_targets.append((col_loc, key, col.cast("string")))
+        add("unique", unique=(col_loc, key, col.cast("string")))
 
-    # --- struct recursion: inline into the same agg (validators.py:246-284) --
+    # --- struct recursion: fields off the parent column (validators.py:246-284)
     if isinstance(spec.dtype, T.StructType) and spec.model is not None:
         if not is_struct_in_df:
             if dtype_ok:
-                errors.append(
-                    ErrorWrapper(
-                        ColumnDTypeError(
-                            f"Spark dtype {df_type.simpleString()} does not "
-                            "match model field type."
-                        ),
-                        loc=col_loc,
-                    )
-                )
+                scope.errors.append(_dtype_error(df_type, col_loc))
             return
-        sub_guard = col.isNotNull() if guard is None else (guard & col.isNotNull())
         _compile_level(
-            ctx=ctx,
-            errors=errors,
-            specs=spec.model.__column_specs__,
-            model_config=spec.model.model_config,
-            df_columns=[f.name for f in df_type.fields],
-            df_types={f.name: f.dataType for f in df_type.fields},
-            columns=None,
-            allow_missing_columns=False,
-            allow_superfluous_columns=False,
-            path=col_path + ".",
-            loc=col_loc,
-            guard=sub_guard,
+            plan, scope, spec.model, df_type, col.getField,
+            guarded(col.isNotNull()), col_loc,
         )
         return  # no bounds/constraints on the struct itself (reference :283)
 
@@ -506,7 +410,12 @@ def _compile_column(
         isinstance(spec.dtype, T.ArrayType)
         and isinstance(spec.dtype.elementType, T.StructType)
     ):
-        return  # handled by the explode job (validators.py:286-329)
+        # a new scope over the exploded element (validators.py:286-329)
+        if is_list_struct_in_df and spec.model is not None:
+            child = Scope(col_loc, col, spec.model, df_type.elementType, scope)
+            plan.scopes.append(child)
+            _compile_element(plan, child, F.col("_item"), None)
+        return
 
     if not dtype_ok:
         return  # type-sensitive checks below would fail analysis
@@ -533,104 +442,125 @@ def _compile_column(
     if spec.max_length is not None:
         checks.append(F.char_length(col) <= spec.max_length)
     if checks:
-        # one term per check; counts SUM across checks (a row failing two
-        # bounds counts twice — reference validators.py:358-366). `~check` is
-        # null for null inputs, and sum() skips nulls → nulls never fail.
-        aliases = [ctx.add(F.sum((~check).cast("long"))) for check in checks]
-
-        def _bounds_handler(res: dict, errs: list, als=aliases, location=col_loc) -> None:
-            n = sum(res.get(a) or 0 for a in als)
-            if n > 0:
-                errs.append(
-                    _wrap(
-                        RowValueError,
-                        f"{n} row{'' if n == 1 else 's'} with out of bound values.",
-                        location,
-                        n,
-                    )
-                )
-
-        ctx.handlers.append(_bounds_handler)
+        # one flag and one term per check; counts SUM across checks (a row
+        # failing two bounds counts twice — reference validators.py:358-366);
+        # a null check (null input) never fails
+        preds = {f"bound{i}": ~F.coalesce(c, F.lit(True)) for i, c in enumerate(checks)}
+        add("bound", **_counted("bound", col_loc, preds))
 
     # --- V11 custom constraints (validators.py:378-402) ----------------------
     if spec.constraints:
-        rename = {"_": col_path}
-        if path:
-            for ref in set().union(
-                *(c.references() for c in spec.constraints)
-            ) - {"_"}:
-                rename[ref] = path + ref
-        bound = [c.substitute(rename) for c in spec.constraints]
-        row_constraints = [c for c in bound if not c.is_aggregate()]
-        agg_full = [c for c in bound if c.is_aggregate()]
-        agg_constraints = [c for c in agg_full if not _has_row_refs_outside_agg(c)]
-        mixed_constraints = [c for c in agg_full if _has_row_refs_outside_agg(c)]
 
-        total_alias = ctx.add(F.count(F.lit(1)))
-        agg_aliases = [ctx.add(c.to_column().cast("boolean")) for c in agg_constraints]
+        def resolve(ref: str) -> Column:  # `_` is the field, else a sibling
+            return col if ref == "_" else at(ref)
 
-        if mixed_constraints:
-            # e.g. `field - field.mean() < 2`: evaluate the aggregate
-            # subtrees in THIS pass, splice the scalars into the row
-            # predicate, and count failures in one shared follow-up pass —
-            # reproducing polars' agg-over-filter broadcast
+        row = [c for c in spec.constraints if not c.is_aggregate()]
+        agg_full = [c for c in spec.constraints if c.is_aggregate()]
+        pure_agg = [c for c in agg_full if not _has_row_refs_outside_agg(c)]
+        mixed = [c for c in agg_full if _has_row_refs_outside_agg(c)]
+
+        terms = {"total": F.count(F.lit(1))}
+        for i, c in enumerate(pure_agg):
+            terms[f"agg{i}"] = c.to_column(resolve).cast("boolean")
+        flags: dict = {}
+        if row:
+            # fail if ANY constraint is false (any_horizontal of negations,
+            # validators.py:382-384); null predicates don't count as failures
+            failed = F.coalesce(_any_false(row, resolve), F.lit(False))
+            flags[f"{col_loc}__constraint"] = failed
+            if not mixed:
+                terms["n"] = F.sum(failed.cast("long"))
+        violated = None
+        if mixed:
+            # e.g. `field - field.mean() < 2`: the aggregate subtrees are
+            # Job 1 terms named by their placeholders; Job 1b resolves the
+            # placeholders to their values and counts rows failing any row
+            # or mixed constraint — polars' agg-over-filter broadcast
             # (tests/test_validators.py:886-894) without a single-partition
             # global window
             placeholders: dict = {}
-            mixed_rows = [
-                c.extract_aggregates(placeholders) for c in mixed_constraints
-            ]
-            ph_alias = {
-                ph: ctx.add(sub.to_column()) for ph, sub in placeholders.items()
-            }
-            ctx.mixed_groups.append(
-                {
-                    "loc": col_loc,
-                    "row_exprs": row_constraints + mixed_rows,
-                    "ph_alias": ph_alias,
-                    "agg_aliases": agg_aliases,
-                    "total_alias": total_alias,
-                }
-            )
-            return  # reported by the pass-2 handler instead
+            rows = row + [c.extract_aggregates(placeholders) for c in mixed]
+            for ph, sub in placeholders.items():
+                terms[ph] = sub.to_column(resolve)
 
-        row_alias = None
-        if row_constraints:
-            # fail if ANY constraint is false (any_horizontal of negations,
-            # validators.py:382-384); null predicates don't count as failures
-            pred = None
-            for c in row_constraints:
-                neg = ~c.to_column()
-                pred = neg if pred is None else (pred | neg)
-            row_alias = ctx.add(F.sum(pred.cast("long")))
+            def violated(scalar: Callable[[str], Column]) -> Column:
+                def bind(ref: str) -> Column:
+                    return scalar(ref) if ref in placeholders else resolve(ref)
 
-        def _constraint_handler(
-            res: dict,
-            errs: list,
-            ra=row_alias,
-            aas=agg_aliases,
-            ta=total_alias,
-            location=col_loc,
-        ) -> None:
-            if any(res.get(a) is False for a in aas):
-                # a failed aggregate constraint marks every row illegal
-                # (polars broadcasts the agg over the filter,
-                # reference test test_validators.py:886-894)
-                n = res.get(ta) or 0
-            else:
-                n = (res.get(ra) or 0) if ra is not None else 0
-            if n > 0:
-                errs.append(
-                    _wrap(
-                        RowValueError,
-                        f"{n} row{'' if n == 1 else 's'} "
-                        "does not match custom constraints.",
-                        location,
-                        n,
-                    )
-                )
+                return _any_false(rows, bind)
 
-        ctx.handlers.append(_constraint_handler)
+        add(
+            "constraint",
+            terms=terms,
+            flags=flags,
+            mixed=violated,
+            render=_constraint_render(col_loc, len(pure_agg)),
+        )
+
+
+def _compile_element(
+    plan: CheckPlan, scope: Scope, item: Column, guard: Optional[Column]
+) -> None:
+    """Compile a list-of-struct scope's sub-model against one *item*: the
+    exploded ``_item`` column, or a higher-order-function lambda element."""
+    _compile_level(
+        plan, scope, scope.model, scope.element, item.getField, guard, scope.loc
+    )
+
+
+def _counted(kind: str, loc: str, preds: dict) -> dict:
+    """A check counting violating rows: per predicate one flag
+    ``<loc>__<name>`` and one ``sum`` term."""
+
+    def render(res: dict) -> Optional[ErrorWrapper]:
+        return count_error(kind, loc, sum(res[name] or 0 for name in preds))
+
+    return {
+        "terms": {name: F.sum(p.cast("long")) for name, p in preds.items()},
+        "flags": {f"{loc}__{name}": p for name, p in preds.items()},
+        "render": render,
+    }
+
+
+def _enum_render(loc: str, nullable: bool) -> Callable:
+    def render(res: dict) -> Optional[ErrorWrapper]:
+        values = set(res.get("values") or [])
+        # the reference derives "actual" from unique(), which includes
+        # nulls; None is impermissible unless the column is Optional
+        # (validators.py:426-433)
+        if not nullable and (res.get("null_in") or (res.get("nulls") or 0) > 0):
+            values.add(None)
+        if not values:
+            return None
+        msg = f"Rows with invalid values: {values}."
+        return _wrap(RowValueError, msg, loc, len(values))
+
+    return render
+
+
+def _constraint_render(loc: str, n_agg: int) -> Callable:
+    def render(res: dict) -> Optional[ErrorWrapper]:
+        if any(res[f"agg{i}"] is False for i in range(n_agg)):
+            # a failed aggregate constraint marks every row illegal
+            # (polars broadcasts the agg over the filter,
+            # reference test test_validators.py:886-894)
+            return count_error("constraint", loc, res["total"])
+        return count_error("constraint", loc, res.get("mixed", res.get("n")))
+
+    return render
+
+
+def _dtype_error(df_type: T.DataType, loc: str) -> ErrorWrapper:
+    return ErrorWrapper(
+        ColumnDTypeError(
+            f"Spark dtype {df_type.simpleString()} does not match model field type."
+        ),
+        loc=loc,
+    )
+
+
+def _any_false(exprs: list, resolve: Callable[[str], Column]) -> Column:
+    return reduce(lambda a, b: a | b, [~e.to_column(resolve) for e in exprs])
 
 
 def _has_row_refs_outside_agg(expr: Expr) -> bool:
@@ -646,29 +576,194 @@ def _has_row_refs_outside_agg(expr: Expr) -> bool:
     )
 
 
-def _collect_explode_jobs(
-    specs: dict,
-    df_types: dict,
-    df_columns: list,
-    columns: Optional[list],
-) -> list:
-    jobs = []
-    subset = columns or df_columns
-    for name, spec in specs.items():
-        if name not in df_columns or name not in subset:
-            continue
-        if (
-            isinstance(spec.dtype, T.ArrayType)
-            and isinstance(spec.dtype.elementType, T.StructType)
-            and spec.model is not None
-            and isinstance(df_types.get(name), T.ArrayType)
-        ):
-            jobs.append((name, name, spec.model, spec))
-    return jobs
+def _join_loc(prefix: str, name: str) -> str:
+    # the reference prefixes nested locs as a dotted *string* inside a
+    # 1-tuple (validators.py:279-281), e.g. ("outer.inner",)
+    return f"{prefix}.{name}" if prefix else name
 
 
 # ---------------------------------------------------------------------------
-# uniqueness: one scan, salted two-stage aggregation for ALL unique columns
+# aggregate executor
+# ---------------------------------------------------------------------------
+
+
+def scope_frames(df: DataFrame, plan: CheckPlan, key: Optional[str] = None) -> dict:
+    """The frame each scope's records run over: *df* for the root, the
+    non-null exploded ``_item`` of the parent's frame (with *key*) below."""
+    frames = {plan.root: df}
+    carried = [key] if key else []
+    for scope in plan.scopes[1:]:
+        frames[scope] = (
+            frames[scope.parent]
+            .select(*carried, F.explode(scope.column).alias("_item"))
+            .filter(F.col("_item").isNotNull())
+        )
+    return frames
+
+
+def _aggregate(
+    frame: DataFrame,
+    checks: list,
+    key: Optional[str] = None,
+    extra: Optional[dict] = None,
+) -> dict:
+    """Run one scope's records over *frame*: ``{key value: (Job 1 row,
+    errors)}`` (one entry, key None, unkeyed).  *extra* aggregate terms
+    ride Job 1 and come back in its row."""
+    checks = [c for c in checks if c.terms]
+    aliases = [{n: f"_c{i}_{n}" for n in c.terms} for i, c in enumerate(checks)]
+    terms = [
+        term.alias(aliases[i][name])
+        for i, c in enumerate(checks)
+        for name, term in c.terms.items()
+    ] + [term.alias(name) for name, term in (extra or {}).items()]
+    if not terms:
+        return {}
+
+    def by_key(f: DataFrame):
+        return f.groupBy(key) if key else f
+
+    # Job 1: single-pass aggregation over all terms
+    job1 = by_key(frame).agg(*terms)
+    rows = {(r[key] if key else None): r.asDict() for r in job1.collect()}
+    results = {
+        k: [{name: row[a] for name, a in names.items()} for names in aliases]
+        for k, row in rows.items()
+    }
+
+    # Job 1a: bounded offending-value sample per violating enum column
+    for i, c in enumerate(checks):
+        if c.sample and any((res[i]["n"] or 0) > 0 for res in results.values()):
+            values = _enum_sample_values(frame, *c.sample, key=key)
+            for k, res in results.items():
+                res[i]["values"] = values.get(k, [])
+
+    # Job 1b: mixed aggregate/row constraints, pass 2
+    mixed = [i for i, c in enumerate(checks) if c.mixed]
+    if mixed and rows:
+        if key is None:  # splice the scalars in as literals
+            (row,) = rows.values()
+            scanned, value = frame, lambda alias: F.lit(row[alias])
+        else:  # join each key's scalars on as columns
+            names = [
+                alias
+                for i in mixed
+                for ph, alias in aliases[i].items()
+                if ph.startswith("__aggph")
+            ]
+            scanned = _join_scalars(frame, rows, job1.schema, key, names)
+            value = F.col
+        # (each placeholder resolver runs inside its own mixed() call)
+        preds = [checks[i].mixed(lambda ph: value(aliases[i][ph])) for i in mixed]
+        counts = by_key(scanned).agg(
+            *[F.sum(p.cast("long")).alias(f"_mix{i}") for i, p in zip(mixed, preds)]
+        )
+        for r in counts.collect():
+            for i in mixed:
+                results[r[key] if key else None][i]["mixed"] = r[f"_mix{i}"]
+
+    return {
+        k: (row, [e for c, res in zip(checks, results[k]) if (e := c.render(res))])
+        for k, row in rows.items()
+    }
+
+
+def _join_scalars(
+    frame: DataFrame, rows: dict, schema: T.StructType, key: str, names: list
+) -> DataFrame:
+    """*frame* with each key's Job 1 values of *names* joined on as columns:
+    the collected rows go back as a broadcast local relation, so pass 2
+    re-runs no aggregate."""
+    from ..sources.io import driver_frame
+
+    scalars = driver_frame(
+        frame.sparkSession,
+        [{"_mk": k, **{n: row[n] for n in names}} for k, row in rows.items()],
+        T.StructType(
+            [T.StructField("_mk", schema[key].dataType)] + [schema[n] for n in names]
+        ),
+    )
+    # eqNullSafe: the NULL key's rows must find their scalars
+    cond = frame[key].eqNullSafe(scalars["_mk"])
+    return frame.join(F.broadcast(scalars), cond).drop("_mk")
+
+
+def _enum_sample_values(
+    frame: DataFrame,
+    value_expr: Column,
+    is_array: bool,
+    key: Optional[str] = None,
+    cap: int = _ENUM_SAMPLE_CAP,
+) -> dict:
+    """Distinct offending enum values per key value, bounded end to end: the
+    distinct is a spillable hash aggregate (unlike a collect_set buffer), and
+    ``limit`` (unkeyed) or a per-key ``row_number`` (keyed) caps what
+    reaches the driver."""
+    carried = [key] if key else []
+    vals = frame.select(*carried, value_expr.alias("_v"))
+    if is_array:
+        vals = vals.select(*carried, F.explode("_v").alias("_v"))
+    vals = vals.filter(F.col("_v").isNotNull()).distinct()
+    if key is None:
+        return {None: [r["_v"] for r in vals.limit(cap).collect()]}
+    from pyspark.sql.window import Window
+
+    rank = F.row_number().over(Window.partitionBy(key).orderBy("_v"))
+    out: dict = {}
+    for r in vals.withColumn("_rn", rank).filter(F.col("_rn") <= cap).collect():
+        out.setdefault(r[key], []).append(r["_v"])
+    return out
+
+
+# ---------------------------------------------------------------------------
+# row executor
+# ---------------------------------------------------------------------------
+
+
+def row_flags(model: type, schema: T.StructType) -> dict:
+    """Row-flag name → per-row violation predicate of every record with a
+    row form (for the columns of *model* present in *schema*)."""
+    plan = compile_checks(
+        model, schema, allow_missing_columns=True, allow_superfluous_columns=True
+    )
+    return _scope_flags(plan, plan.root)
+
+
+def _scope_flags(plan: CheckPlan, scope: Scope) -> dict:
+    """*scope*'s own flags, then its child scopes' flags (any depth) as
+    ``exists`` over the child's column."""
+    flags = {n: p for c in plan.in_scope(scope) for n, p in c.flags.items()}
+    for child in plan.scopes:
+        if child.parent is scope:
+            for c in plan.checks:
+                if _within(c.scope, child):
+                    for name in c.flags:
+                        flags[name] = F.exists(child.column, _element_flag(child, name))
+    return flags
+
+
+def _within(scope: Optional[Scope], ancestor: Scope) -> bool:
+    while scope is not None and scope is not ancestor:
+        scope = scope.parent
+    return scope is ancestor
+
+
+def _element_flag(scope: Scope, name: str) -> Callable[[Column], Column]:
+    """Lambda body of ``exists(scope.column, item -> flag)``: the scope's
+    sub-model compiled again against the element (a factory: Spark HOF
+    lambdas take no default-arg captures)."""
+
+    def flag(item: Column) -> Column:
+        element = replace(scope, errors=[])
+        plan = CheckPlan(scopes=[element])
+        _compile_element(plan, element, item, item.isNotNull())
+        return _scope_flags(plan, element)[name]
+
+    return flag
+
+
+# ---------------------------------------------------------------------------
+# uniqueness: one scan, hashed aggregation for ALL unique columns
 # ---------------------------------------------------------------------------
 
 
@@ -713,9 +808,3 @@ def _duplicate_counts(
         .collect()
     )
     return {row["k"]: row["dups"] for row in counts}
-
-
-def _join_loc(prefix: str, name: str) -> str:
-    # the reference prefixes nested locs as a dotted *string* inside a
-    # 1-tuple (validators.py:279-281), e.g. ("outer.inner",)
-    return f"{prefix}.{name}" if prefix else name

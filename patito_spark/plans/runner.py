@@ -8,15 +8,21 @@ interrupted 10^12-row run resumes at partition granularity.
 
 Execution plan per run (SURVEY §4.3):
 
-1. **Job 0 (driver)** — schema-level checks (missing/superfluous/dtype) from
-   ``df.schema``; recorded once per run with ``partition = '*'``.
+1. **Job 0 (driver)** — the model is compiled once (``plans.checks.
+   compile_checks``); its schema-level errors (missing/superfluous/dtype)
+   are recorded once per run with ``partition = '*'``.
 2. **pending = partitions ∉ checkpoint** — the verdict store is read once:
    its (partition, run_id) pairs are collected (partition lists are small —
    even 10^12 rows is ~10^4-10^5 date partitions) and the finished
    partitions are filtered out of the scan.
-3. **Job 1** — ``df.filter(partition ∈ pending).groupBy(partition).agg(ALL
-   check terms)``: one scan of only the pending partitions, one tiny shuffle
-   row per partition.
+3. **Job 1 (+1a, 1b, explode jobs)** — the checks' aggregate executor
+   keyed by partition: ``groupBy(partition).agg(ALL check terms)`` over
+   only the pending partitions (one tiny shuffle row per partition, the
+   lineage sample riding along), the per-partition enum samples, the
+   mixed-constraint pass 2, and one exploded frame per list-of-struct
+   column with the partition carried through the explode.  Aggregate and
+   mixed constraints are therefore evaluated **per partition**: a verdict
+   belongs to one partition, and a resume never re-scans finished ones.
 4. **Job 2** — global uniqueness with per-partition attribution:
    ``groupBy(column, value, partition)`` local counts (the partials) → one
    ``(column, key)`` window for the global totals → each partition charged
@@ -67,6 +73,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from functools import reduce
 from typing import Optional
 
 from pyspark.errors import AnalysisException
@@ -75,7 +82,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import get_exc_type
-from .checks import _Ctx, _compile_level, _transform_df
+from .checks import _aggregate, _transform_df, compile_checks, count_error, scope_frames
+
+#: the partition key column every runner frame carries
+_KEY = "_partition"
 
 VERDICT_SCHEMA = T.StructType(
     [
@@ -349,95 +359,65 @@ class ValidationRunner:
         if finished:
             df = df.filter(_outside(part, finished))
 
-        # Job 0: schema-level errors — apply to the whole run
-        ctx = _Ctx()
-        schema_errors: list = []
-        _compile_level(
-            ctx=ctx,
-            errors=schema_errors,
-            specs=model.__column_specs__,
-            model_config=model.model_config,
-            # the declared partition column is runner plumbing: when it is
-            # NOT a model column, don't report it superfluous — but when it
-            # IS one (the normal case), it must stay visible or V1 would
-            # report it missing
-            df_columns=[
-                c
-                for c in df.columns
-                if c != self.partition_name
-                or self.partition_name in model.__column_specs__
-            ],
-            df_types={f.name: f.dataType for f in df.schema.fields},
-            columns=None,
-            allow_missing_columns=False,
-            allow_superfluous_columns=False,
-            path="",
-            loc="",
-            guard=None,
+        # Job 0: the model compiled once against the scan's schema; its
+        # schema-level errors apply to the whole run.  The declared
+        # partition column is runner plumbing: when it is NOT a model
+        # column it is hidden (never superfluous), when it IS one (the
+        # normal case) it stays visible or V1 would report it missing.
+        plan = compile_checks(
+            model,
+            T.StructType(
+                [
+                    f
+                    for f in df.schema.fields
+                    if f.name != self.partition_name
+                    or self.partition_name in model.__column_specs__
+                ]
+            ),
         )
-        schema_violations = [_violation_row("*", e, run_id) for e in schema_errors]
+        schema_violations = [
+            _violation_row("*", e, run_id) for e in plan.schema_errors
+        ]
 
-        # Job 1: per-partition single-pass aggregation
-        verdicts: list = []
-        violations: list = list(schema_violations)
+        # Job 1 (+1a/1b, explode jobs): the aggregate executor keyed by
+        # partition.  Lineage rides the root scope's Job 1: a capped,
+        # sorted sample of the source files behind each partition ('' =
+        # non-file source, dropped).  input_file_name() is nondeterministic,
+        # so it must be projected as a column BEFORE the aggregate (Spark
+        # rejects it inside one).
+        df = df.withColumn(_KEY, part).withColumn("_src_file", F.input_file_name())
+        lineage = {
+            "_rows": F.count(F.lit(1)),
+            "_files": F.slice(
+                F.sort_array(F.array_remove(F.collect_set("_src_file"), "")),
+                1,
+                _LINEAGE_FILE_CAP,
+            ),
+        }
+        frames = scope_frames(df, plan, _KEY)
         per_partition_errors: dict = {}
-        rows_per_partition: dict = {}
-        # lineage rides the same aggregation: a capped, sorted sample of the
-        # source files behind each partition ('' = non-file source, dropped).
-        # input_file_name() is nondeterministic, so it must be projected as
-        # a column BEFORE the aggregate (Spark rejects it inside one).
-        lineage_df = df.withColumn("_src_file", F.input_file_name())
-        lineage_term = F.slice(
-            F.sort_array(F.array_remove(F.collect_set("_src_file"), "")),
-            1,
-            _LINEAGE_FILE_CAP,
-        ).alias("_files")
-        files_per_partition: dict = {}
-        if ctx.terms:
-            agg_rows = (
-                lineage_df.groupBy(part.alias("_partition"))
-                .agg(F.count(F.lit(1)).alias("_rows"), lineage_term, *ctx.terms.values())
-                .collect()
-            )
-            # Job 1a: bounded per-partition enum offending-value samples,
-            # fetched only for enum columns that violated somewhere (the
-            # single-pass agg carries native counts, never a collect_set)
-            enum_fetch = [
-                e
-                for e in ctx.enum_samples
-                if any((row.asDict().get(e[3]) or 0) > 0 for row in agg_rows)
-            ]
-            enum_by_part = (
-                _enum_samples_by_partition(df, part, enum_fetch)
-                if enum_fetch
-                else {}
-            )
-            for row in agg_rows:
-                d = row.asDict()
-                p = d["_partition"]
-                for alias, _, _, _ in enum_fetch:
-                    d[alias] = enum_by_part.get((p, alias), [])
-                rows_per_partition[p] = d["_rows"]
-                files_per_partition[p] = list(d["_files"] or [])
-                errs: list = []
-                for handler in ctx.handlers:
-                    handler(d, errs)
-                per_partition_errors[p] = errs
-        else:
-            for row in (
-                lineage_df.groupBy(part.alias("_partition"))
-                .agg(F.count(F.lit(1)).alias("count"), lineage_term)
-                .collect()
-            ):
-                rows_per_partition[row["_partition"]] = row["count"]
-                files_per_partition[row["_partition"]] = list(row["_files"] or [])
-                per_partition_errors[row["_partition"]] = []
+        stats: dict = {}  # partition → its Job 1 row (_rows, _files)
+        for p, (row, errs) in _aggregate(
+            df, plan.in_scope(plan.root), _KEY, lineage
+        ).items():
+            stats[p] = row
+            per_partition_errors[p] = errs
+        for scope in plan.scopes[1:]:
+            for p, (_, errs) in _aggregate(
+                frames[scope], plan.in_scope(scope), _KEY
+            ).items():
+                per_partition_errors[p].extend(errs)
 
         # Job 2: uniqueness with per-partition attribution — each partition
         # is charged its own members of globally-duplicated groups
         retro_violations: list = []
-        if ctx.unique_targets and per_partition_errors:
-            partials = _unique_partials(df, part, ctx.unique_targets)
+        partials = [
+            _unique_partials(frames[s], F.col(_KEY), targets)
+            for s in plan.scopes
+            if (targets := [c.unique for c in plan.in_scope(s) if c.unique])
+        ]
+        if partials and per_partition_errors:
+            partials = reduce(DataFrame.unionByName, partials)
             if self.unique_resume == "exact" and (
                 self.checkpoint_dir or self.checkpoint_table
             ):
@@ -456,17 +436,21 @@ class ValidationRunner:
             charges = _charge(tagged) if tagged is not None else {}
             for (p, loc), (count, prior) in charges.items():
                 if p in per_partition_errors:
-                    per_partition_errors[p].append(_dup_error(loc, count))
+                    per_partition_errors[p].append(count_error("unique", loc, count))
                 elif count > prior:
                     # finished partition retroactively joined a
                     # cross-boundary duplicate group: emit the DELTA so the
                     # cumulative violation table equals what one
                     # uninterrupted run would have charged
                     retro_violations.append(
-                        _violation_row(p, _dup_error(loc, count - prior), run_id)
+                        _violation_row(
+                            p, count_error("unique", loc, count - prior), run_id
+                        )
                     )
 
         finished_at = time.time()
+        verdicts: list = []
+        violations: list = list(schema_violations)
         for p, errs in per_partition_errors.items():
             part_violations = [_violation_row(p, e, run_id) for e in errs]
             violations.extend(part_violations)
@@ -474,14 +458,14 @@ class ValidationRunner:
                 {
                     "partition": p,
                     "passed": not part_violations and not schema_violations,
-                    "n_rows": int(rows_per_partition.get(p, 0)),
+                    "n_rows": int(stats[p]["_rows"]),
                     "n_violations": int(
                         sum(v["violation_count"] for v in part_violations)
                     ),
                     "run_id": run_id,
                     "finished_at": finished_at,
                     "elapsed_sec": finished_at - t0,
-                    "input_files": files_per_partition.get(p, []),
+                    "input_files": list(stats[p]["_files"] or []),
                 }
             )
 
@@ -513,40 +497,6 @@ def _violation_row(partition, err, run_id: str) -> dict:
         "violation_count": int(getattr(err.exc, "count", 1)),
         "run_id": run_id,
     }
-
-
-def _dup_error(loc: str, count: int):
-    from ..errors import RowValueError
-    from .checks import _wrap
-
-    return _wrap(
-        RowValueError, f"{count} rows with duplicated values.", loc, count
-    )
-
-
-def _enum_samples_by_partition(df: DataFrame, part, enum_fetch: list) -> dict:
-    """Distinct offending enum values per (partition, enum alias), bounded
-    end to end: the distinct is a spillable hash aggregate and a
-    per-partition ``row_number`` caps what each partition contributes to
-    the driver.  One tiny job per violating enum column, and only when a
-    violation exists somewhere."""
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
-    from .checks import _ENUM_SAMPLE_CAP  # noqa: PLC0415
-
-    out: dict = {}
-    for alias, value_expr, is_array, _ in enum_fetch:
-        vals = df.select(part.alias("_p"), value_expr.alias("_v"))
-        if is_array:
-            vals = vals.select("_p", F.explode("_v").alias("_v"))
-        vals = vals.filter(F.col("_v").isNotNull()).distinct()
-        w = Window.partitionBy("_p").orderBy("_v")
-        capped = vals.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= _ENUM_SAMPLE_CAP
-        )
-        for r in capped.collect():
-            out.setdefault((r["_p"], alias), []).append(r["_v"])
-    return out
 
 
 def _unique_partials(df: DataFrame, part, targets: list) -> DataFrame:

@@ -26,9 +26,6 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Default salt bucket count for explicit pre-aggregation.
-DEFAULT_SALT_BUCKETS = 64
-
 #: Dimension plan-size estimate (bytes) under which we force a broadcast
 #: join.  256 MB is inside a healthy executor broadcast budget; a 10^8-row
 #: dim estimates well past it and takes the shuffle path instead of OOMing
@@ -36,27 +33,16 @@ DEFAULT_SALT_BUCKETS = 64
 BROADCAST_SIZE_THRESHOLD = 256 * 1024 * 1024
 
 
-def duplicate_stats(
-    df: DataFrame,
-    column: str,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
+def duplicate_stats(df: DataFrame, column: str) -> DataFrame:
     """Duplicate groups for *column*: ``(value, cnt)`` with cnt > 1.
 
     One hash aggregation: Spark's partial (map-side) aggregation IS the
     salted pre-combine for a count — each map task emits at most one row
     per distinct value, so a hot key reaches its reducer as ≤
-    #map-partitions partial rows, never as raw input rows.  The previous
-    two-stage form (``groupBy(value, salt)`` → ``groupBy(value)``) paid a
-    SECOND full exchange of the ~|distinct| partial rows for zero extra
-    skew protection, since salt was the map partition id — the same
-    grouping partial aggregation already performs (the validate path's
-    ``plans.checks._duplicate_counts`` measured the explicit salt stage
-    2× slower at 3 M rows; r9 removed it here too — one Exchange instead
-    of two, identical counts).  *salt_buckets* is retained for API
-    compatibility and ignored.
+    #map-partitions partial rows, never as raw input rows.  An explicit
+    ``groupBy(value, salt)`` stage would add a second exchange for no extra
+    skew protection.
     """
-    del salt_buckets  # subsumed by map-side partial aggregation
     return (
         df.groupBy(F.col(column).alias("value"))
         .agg(F.count(F.lit(1)).alias("cnt"))

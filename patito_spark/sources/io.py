@@ -220,9 +220,10 @@ def write_validated(
     at ``path``; violating rows (annotated with ``_violations`` — the
     failing check names) land at ``quarantine_path``.
 
-    The batch twin of ``streaming.validate_stream``'s quarantine router,
-    sharing the same compiled row predicates, so a pipeline can use one
-    model for both its backfill and its live path.  Each write is its own
+    The batch twin of ``streaming.validate_stream``'s quarantine router:
+    both run the row executor of the one check compiler
+    (``streaming.flag_violations``), so a pipeline can use one model for
+    both its backfill and its live path.  Each write is its own
     Spark action, so the source is scanned (and the row predicates
     re-evaluated) once per branch — two independent scan+validate passes,
     not one shared pass.  That is deliberate: caching the flagged frame
@@ -235,9 +236,14 @@ def write_validated(
     the destination.
 
     Note the scope (same as the streaming router): ROW-level checks only —
-    nullability, bounds, enums, patterns, row-wise constraints.  Dataset
-    checks (uniqueness, schema errors) need the full validate()/runner
-    path; they are not expressible as a per-row filter.
+    nullability, nulls inside lists, bounds and patterns, enums (scalar and
+    list), row-wise constraints, at any nesting depth (a list-of-struct
+    check flags the row when any element violates).  ``_violations`` holds
+    their names, ``<loc>__null | __list_null | __bound<i> | __enum |
+    __constraint``, with ``loc`` dotted for nested fields
+    (``items.price__bound0``).  Dataset checks — uniqueness, aggregate and
+    mixed aggregate/row constraints, schema errors — need the full
+    validate()/runner path; they are not expressible as a per-row filter.
 
     Quarantined rows carry a ``_spec_hash`` column (md5 of
     ``model.spec_json()``) — the same lineage the streaming ingest

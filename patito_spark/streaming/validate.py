@@ -1,17 +1,23 @@
 """Continuous validation over Structured Streaming sources.
 
 The reference is batch-only (SURVEY §2.f: no streaming); at web scale a
-crawl is an unbounded stream, so the same model spec also compiles to a
-streaming plan:
+crawl is an unbounded stream, so the same model spec also runs as a
+streaming plan.  Both functions here are the **row executor** of the one
+check compiler (``plans.checks``): they project the compiled records'
+per-row violation predicates (``plans.checks.row_flags``), the same
+predicates the batch aggregate executor counts.
 
-- ``flag_violations`` — per-row boolean flags + an error-name array, as a
-  stateless projection (works on any stream, no watermark needed).  The
-  per-row predicates are exactly the batch checks' row-level conditions.
-- ``windowed_violation_counts`` — event-time windowed violation counts with
-  a watermark for late data; emits the same (column, error_type, count)
-  shape as the batch runner, one row per window.
+- ``flag_violations`` — per-row ``_valid`` flag + an array of the failing
+  check names, as a stateless projection (works on any stream, no
+  watermark needed).
+- ``windowed_violation_counts`` — event-time windowed counts per check name
+  with a watermark for late data, one row per window.
 
-Uniqueness/aggregate constraints are deliberately excluded here: exact
+Check names are ``<loc>__null``, ``__list_null``, ``__bound<i>``,
+``__enum`` and ``__constraint``; ``loc`` is dotted for nested-struct and
+list-of-struct fields (``items.price__bound0``: some element of ``items``
+violates).  Uniqueness, aggregate and mixed aggregate/row constraints and
+schema-level errors have no row form and are deliberately excluded: exact
 global uniqueness over an unbounded stream is unbounded state.  Use
 ``dropDuplicatesWithinWatermark`` upstream or the batch runner over closed
 partitions.
@@ -21,57 +27,11 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _row_check_predicates(model: type, df_columns: list) -> dict:
-    """(column, check_name) → violation predicate Column (true = bad row)."""
-    preds: dict[str, Column] = {}
-    for name, spec in model.__column_specs__.items():
-        if name not in df_columns:
-            continue
-        col = F.col(name)
-        if not spec.nullable:
-            preds[f"{name}__null"] = col.isNull()
-        checks = []
-        if spec.le is not None:
-            checks.append(col <= F.lit(spec.le))
-        if spec.lt is not None:
-            checks.append(col < F.lit(spec.lt))
-        if spec.ge is not None:
-            checks.append(col >= F.lit(spec.ge))
-        if spec.gt is not None:
-            checks.append(col > F.lit(spec.gt))
-        if spec.multiple_of is not None:
-            checks.append((col == 0) | ((col % F.lit(spec.multiple_of)) == 0))
-        if spec.const is not None:
-            checks.append(col == F.lit(spec.const))
-        if spec.pattern is not None:
-            checks.append(col.rlike(spec.pattern))
-        if spec.min_length is not None:
-            checks.append(F.char_length(col) >= spec.min_length)
-        if spec.max_length is not None:
-            checks.append(F.char_length(col) <= spec.max_length)
-        for i, check in enumerate(checks):
-            # violation only when the check is definitively false (nulls
-            # never fail bounds — same as batch)
-            preds[f"{name}__bound{i}"] = ~F.coalesce(check, F.lit(True))
-        if spec.allowed_values:
-            preds[f"{name}__enum"] = col.isNotNull() & ~col.isin(
-                *spec.allowed_values
-            )
-        if spec.constraints:
-            pred = None
-            for c in spec.constraints:
-                if c.is_aggregate():
-                    continue  # aggregate constraints are batch-only
-                neg = ~c.substitute({"_": name}).to_column()
-                pred = neg if pred is None else (pred | neg)
-            if pred is not None:
-                preds[f"{name}__constraint"] = F.coalesce(pred, F.lit(False))
-    return preds
+from ..plans.checks import row_flags
 
 
 def flag_violations(df: DataFrame, model: type) -> DataFrame:
@@ -81,18 +41,13 @@ def flag_violations(df: DataFrame, model: type) -> DataFrame:
     (valid rows → main sink, invalid → quarantine) via ``foreachBatch`` or
     two filtered writeStreams.
     """
-    preds = _row_check_predicates(model, df.columns)
+    preds = row_flags(model, df.schema)
     if not preds:
         return df.withColumn("_valid", F.lit(True)).withColumn(
             "_violations", F.array().cast(T.ArrayType(T.StringType()))
         )
     viol = F.array_compact(
-        F.array(
-            *[
-                F.when(pred, F.lit(name))
-                for name, pred in preds.items()
-            ]
-        )
+        F.array(*[F.when(pred, F.lit(name)) for name, pred in preds.items()])
     )
     return df.withColumn("_violations", viol).withColumn(
         "_valid", F.size("_violations") == 0
@@ -141,7 +96,7 @@ def windowed_violation_counts(
     One output row per (window, check) — the streaming analogue of the
     batch runner's per-partition violation rows.
     """
-    preds = _row_check_predicates(model, stream.columns)
+    preds = row_flags(model, stream.schema)
     aggs = [
         F.sum(pred.cast("long")).alias(name) for name, pred in preds.items()
     ] or [F.count(F.lit(1)).alias("rows")]

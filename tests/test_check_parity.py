@@ -1,0 +1,275 @@
+"""Cross-mode parity: every executor of the compiled checks gives the same
+verdict on the same rows.
+
+One planted-violation matrix, spread over three partitions, runs through
+``find_errors`` (unkeyed aggregate executor), ``ValidationRunner`` (the
+same executor keyed by partition), ``flag_violations`` and
+``windowed_violation_counts`` (the row executor), and ``jobs.main``.
+"""
+
+import datetime as dt
+import json
+from typing import Literal
+
+import pytest
+from pyspark.sql import functions as F
+
+import patito_spark as pt
+from patito_spark import jobs
+from patito_spark.plans.checks import find_errors
+from patito_spark.plans.runner import ValidationRunner
+from patito_spark.streaming.validate import flag_violations, windowed_violation_counts
+
+
+class Item(pt.Model):
+    price: int = pt.Field(ge=0)
+
+
+class Inner(pt.Model):
+    x: int = pt.Field(gt=0)
+    y: int
+
+
+class Planted(pt.Model):
+    part: str
+    le_column: float = pt.Field(le=42.5)
+    lt_column: float = pt.Field(lt=42.5)
+    ge_column: float = pt.Field(ge=42.5)
+    gt_column: float = pt.Field(gt=42.5)
+    combined_column: float = pt.Field(gt=42.5, le=43.0)
+    multiple_column: float = pt.Field(multiple_of=0.5)
+    const_column: str = pt.Field(const="3.1415")
+    regex_column: str = pt.Field(pattern=r"value [A-Z]")
+    min_length_column: str = pt.Field(min_length=2)
+    max_length_column: str = pt.Field(max_length=2)
+    s: Inner
+    tags: list[str]
+    kinds: list[Literal["a", "b"]]
+    kind: Literal["a", "b"]
+    even: int = pt.Field(constraints=pt.field % 2 == 0)
+    small_sum: int = pt.Field(constraints=pt.field.sum() < 100)
+    near_mean: float = pt.Field(constraints=pt.field - pt.field.mean() < 5.0)
+    items: list[Item]
+    u: int = pt.Field(unique=True)
+
+
+_VALID = {
+    "le_column": 42.5,
+    "lt_column": 42.4,
+    "ge_column": 42.5,
+    "gt_column": 42.6,
+    "combined_column": 42.6,
+    "multiple_column": 19.5,
+    "const_column": "3.1415",
+    "regex_column": "value X",
+    "min_length_column": "ab",
+    "max_length_column": "ab",
+    "s": (1, 1),
+    "tags": ["t"],
+    "kinds": ["a"],
+    "kind": "a",
+    "even": 2,
+    "small_sum": 1,
+    "near_mean": 1.0,
+    "items": [(1,), (2,)],
+}
+
+#: one planted violation per row (the F7 bound matrix first); distinct bad
+#: enum values and at most one bad item per list, so row counts and
+#: find_errors counts measure the same thing
+_PLANTED = [
+    {"le_column": 42.6},
+    {"lt_column": 42.5},
+    {"ge_column": 42.4},
+    {"gt_column": 42.5},
+    {"combined_column": 43.1},
+    {"multiple_column": 19.75},
+    {"const_column": "3.2"},
+    {"regex_column": "value x"},
+    {"min_length_column": "a"},
+    {"max_length_column": "abc"},
+    {"s": (-1, 1)},
+    {"s": (1, None)},
+    {"tags": ["t", None]},
+    {"kinds": ["a", "q"]},
+    {"kinds": ["r"]},
+    {"kind": "x"},
+    {"kind": "z"},
+    {"even": 3},
+    {"items": [(1,), (-5,)]},
+    {"items": [(-1,)]},
+    {"small_sum": 150},  # fails the aggregate constraint of its partition
+    {"near_mean": 50.0},  # fails the mixed constraint of its partition
+    {},
+    {},
+    {},
+]
+
+_SCHEMA = (
+    "part string, le_column double, lt_column double, ge_column double, "
+    "gt_column double, combined_column double, multiple_column double, "
+    "const_column string, regex_column string, min_length_column string, "
+    "max_length_column string, s struct<x: bigint, y: bigint>, "
+    "tags array<string>, kinds array<string>, kind string, even bigint, "
+    "small_sum bigint, near_mean double, items array<struct<price: bigint>>, "
+    "u bigint, ts timestamp, junk string"
+)
+
+_PARTS = ["p0", "p1", "p2"]
+
+
+@pytest.fixture(scope="module")
+def planted(spark):
+    rows = []
+    for i, bad in enumerate(_PLANTED):
+        row = {"part": _PARTS[i % 3], **_VALID, **bad}
+        # two duplicate groups: one across partitions, one inside p0
+        row["u"] = {0: 1000, 1: 1000, 3: 2000, 6: 2000}.get(i, i)
+        row["ts"] = dt.datetime(2024, 1, 1)
+        row["junk"] = "superfluous"
+        rows.append(row)
+    names = [*Planted.columns, "ts", "junk"]
+    return spark.createDataFrame([tuple(r[n] for n in names) for r in rows], _SCHEMA)
+
+
+def _kind(message: str) -> str:
+    for marker, kind in [
+        ("in lists", "list_null"),
+        ("missing value", "null"),
+        ("out of bound", "bound"),
+        ("invalid values", "enum"),
+        ("custom constraints", "constraint"),
+        ("duplicated", "unique"),
+    ]:
+        if marker in message:
+            return kind
+    return "schema"
+
+
+def _counts(errors) -> dict:
+    return {
+        (e.loc_tuple()[0], _kind(str(e.exc))): getattr(e.exc, "count", 1)
+        for e in errors
+    }
+
+
+def test_runner_matches_find_errors_per_partition(spark, planted, tmp_path):
+    result = ValidationRunner(
+        Planted, "part", checkpoint_dir=str(tmp_path / "ckpt")
+    ).run(planted)
+    by_partition: dict = {}
+    for v in result.violations:
+        key = (v["column"], _kind(v["message"]))
+        by_partition.setdefault(v["partition"], {})[key] = v["violation_count"]
+
+    whole = _counts(find_errors(planted, Planted))
+    schema_locs = {loc for loc, kind in whole if kind == "schema"}
+    assert schema_locs == {"ts", "junk"}
+    assert set(by_partition.pop("*")) == {(loc, "schema") for loc in schema_locs}
+
+    assert sorted(by_partition) == _PARTS
+    for p in _PARTS:
+        want = _counts(find_errors(planted.where(F.col("part") == p), Planted))
+        want = {k: n for k, n in want.items() if k[1] not in ("schema", "unique")}
+        got = {k: n for k, n in by_partition[p].items() if k[1] != "unique"}
+        assert got == want, p
+    # every planted family reached the runner, nested and exploded included
+    seen = {k for counts in by_partition.values() for k in counts}
+    assert {
+        ("s.x", "bound"),
+        ("s.y", "null"),
+        ("tags", "list_null"),
+        ("kinds", "enum"),
+        ("small_sum", "constraint"),
+        ("near_mean", "constraint"),
+        ("items.price", "bound"),
+    } <= seen
+    # uniqueness stays globally charged: the partition charges add up
+    unique = sum(
+        n for c in by_partition.values() for (_, k), n in c.items() if k == "unique"
+    )
+    assert unique == whole[("u", "unique")] == 4
+
+
+def test_row_flags_match_find_errors(spark, planted):
+    from patito_spark.plans.checks import compile_checks
+
+    whole = _counts(find_errors(planted, Planted))
+    flagged = flag_violations(planted, Planted)
+    flag_counts = {
+        r["name"]: r["n"]
+        for r in flagged.select(F.explode("_violations").alias("name"))
+        .groupBy("name")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    (window,) = windowed_violation_counts(
+        planted, Planted, "ts", window="1 hour"
+    ).collect()
+    window = window.asDict()
+
+    plan = compile_checks(Planted, planted.schema)
+    checked = set()
+    for check in plan.checks:
+        if not check.flags:
+            continue  # batch-only: uniqueness, aggregate and mixed constraints
+        rows = sum(flag_counts.get(name, 0) for name in check.flags)
+        assert rows == whole.get((check.loc, check.kind), 0), check.flags
+        assert sum(window[name] for name in check.flags) == rows, check.flags
+        if rows:
+            checked.add((check.loc, check.kind))
+    assert {
+        ("le_column", "bound"),
+        ("max_length_column", "bound"),
+        ("s.x", "bound"),
+        ("s.y", "null"),
+        ("tags", "list_null"),
+        ("kinds", "enum"),
+        ("kind", "enum"),
+        ("even", "constraint"),
+        ("items.price", "bound"),
+    } <= checked
+    # top-level names keep the <column>__<check> form; nested ones are dotted
+    assert {
+        "even__constraint",
+        "s.x__bound0",
+        "tags__list_null",
+        "items.price__bound0",
+    } <= set(flag_counts)
+    assert flagged.filter(~F.col("_valid")).count() == sum(flag_counts.values())
+
+
+class Flat(pt.Model):
+    p: int
+    v: float = pt.Field(ge=0.0, constraints=pt.field - pt.field.mean() < 5.0)
+
+
+def test_jobs_main_runs_mixed_constraints(spark, tmp_path, capsys):
+    df = spark.createDataFrame(
+        [(p, v) for p in range(3) for v in (1.0, 1.0, 1.0, 1.0)]
+        + [(0, 30.0), (1, -2.0)],
+        "p bigint, v double",
+    )
+    spec = tmp_path / "spec.json"
+    spec.write_text(Flat.spec_json())
+    data = str(tmp_path / "input")
+    df.write.parquet(data)
+
+    code = jobs.main(
+        [
+            "--spec", str(spec),
+            "--input", data,
+            "--partition-col", "p",
+            "--checkpoint-dir", str(tmp_path / "ckpt"),
+        ]
+    )
+    assert code == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    want = sum(
+        getattr(e.exc, "count", 1)
+        for p in range(3)
+        for e in find_errors(df.where(F.col("p") == p), Flat)
+    )
+    assert want == 2  # partition 0's outlier and partition 1's negative value
+    assert out["passed"] is False
+    assert out["violations"] == want

@@ -386,22 +386,13 @@ def test_runner_exact_resume_ignores_orphan_partials(spark, tmp_path):
 def _write_torn_partials(runner, df, run_id):
     """What a call killed between its partials write and its verdict write
     leaves behind: *df*'s unique partials under *run_id*, no verdicts."""
-    from patito_spark.plans.checks import _Ctx, _compile_level
+    from patito_spark.plans.checks import compile_checks
     from patito_spark.plans.runner import _unique_partials
 
-    model = runner.model
-    ctx = _Ctx()
-    _compile_level(
-        ctx=ctx, errors=[], specs=model.__column_specs__,
-        model_config=model.model_config, df_columns=df.columns,
-        df_types={f.name: f.dataType for f in df.schema.fields},
-        columns=None, allow_missing_columns=False,
-        allow_superfluous_columns=False, path="", loc="", guard=None,
-    )
+    plan = compile_checks(runner.model, df.schema)
+    targets = [c.unique for c in plan.checks if c.unique]
     part = F.col(runner.partition_name).cast("string")
-    runner._persist_unique_partials(
-        _unique_partials(df, part, ctx.unique_targets), run_id
-    )
+    runner._persist_unique_partials(_unique_partials(df, part, targets), run_id)
 
 
 def _dup_counts(violations, column="u"):

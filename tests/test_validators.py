@@ -252,23 +252,11 @@ def test_enum_bounded_executor_state(spark):
         F.concat(F.lit("x"), F.col("id")).alias("v")
     )
     # the compiled single-pass agg holds no unbounded collect buffer
-    ctx = checks._Ctx()
-    checks._compile_level(
-        ctx=ctx,
-        errors=[],
-        specs=M.__column_specs__,
-        model_config=M.model_config,
-        df_columns=["v"],
-        df_types={"v": T.StringType()},
-        columns=None,
-        allow_missing_columns=False,
-        allow_superfluous_columns=False,
-        path="",
-        loc="",
-        guard=None,
+    compiled = checks.compile_checks(
+        M, T.StructType([T.StructField("v", T.StringType())])
     )
     plan = (
-        df.agg(*ctx.terms.values())
+        df.agg(*[t for c in compiled.checks for t in c.terms.values()])
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -1,6 +1,6 @@
 """Column-level function library: text analysis, vector math, hashing."""
 
-from .hashing import md5_long, stable_long_hash
+from .hashing import md5_long
 from .text import (
     doc_fingerprint,
     language_id,
@@ -21,7 +21,6 @@ __all__ = [
     "quality_score",
     "doc_fingerprint",
     "md5_long",
-    "stable_long_hash",
     "cosine_similarity",
     "dot_product",
     "l2_norm",

@@ -78,10 +78,3 @@ def minhash_constants(num_hashes: int) -> list:
         return raw % (MINHASH_P - 1) + 1
 
     return [(c("minhashA", k), c("minhashB", k)) for k in range(num_hashes)]
-
-
-def stable_long_hash(col: Column, seed: int = 0) -> Column:
-    """Seeded portable hash: md5 over the value with a seed suffix."""
-    if seed:
-        col = F.concat(col.cast("string"), F.lit(f"#{seed}"))
-    return md5_long(col.cast("string"))

@@ -52,16 +52,6 @@ def registrable_domain(url: Column) -> Column:
     ).otherwise(host)
 
 
-def domain_counts(df, url_col: str) -> "DataFrame":  # noqa: F821
-    """Rows per registrable domain, descending — the hot-domain report the
-    skew utilities (``plans.skew``) consume to pick salting targets."""
-    return (
-        df.groupBy(registrable_domain(F.col(url_col)).alias("domain"))
-        .agg(F.count(F.lit(1)).cast("long").alias("rows"))
-        .orderBy(F.col("rows").desc(), F.col("domain"))
-    )
-
-
 #: query parameters that never identify content (analytics/click tracking)
 TRACKING_PARAM_RE = r"^(utm_[a-z0-9]+|fbclid|gclid|msclkid|mc_eid|igshid)="
 

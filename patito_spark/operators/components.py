@@ -285,18 +285,3 @@ def drop_near_duplicates(
     return df.join(
         losers, df[id_col] == losers["_pt_node"], "left_anti"
     )
-
-
-def component_stats(components: DataFrame) -> DataFrame:
-    """Cluster-size distribution: ``(cluster_size, n_clusters)``.
-
-    The dedup planning view: how many pairs/triples/large clusters exist,
-    i.e. how many documents dedup would remove (``sum((size-1) *
-    n_clusters)``).  Driver-sized output for any corpus.
-    """
-    sizes = components.groupBy("component").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return sizes.groupBy("cluster_size").agg(
-        F.count(F.lit(1)).cast("long").alias("n_clusters")
-    )

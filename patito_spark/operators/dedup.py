@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MINHASH_SLICES as _MINHASH_SLICES_TAG
 from ..functions.hashing import md5_long
-from ..functions.text import doc_fingerprint, normalize_text, tokens, word_shingles
+from ..functions.text import doc_fingerprint, tokens
 from ..functions.vectors import cosine_similarity
 
 DEFAULT_NUM_HASHES = 16
@@ -43,25 +43,6 @@ SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed bigint portably
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
-
-
-def exact_duplicate_groups(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Duplicate groups by normalized-text fingerprint:
-    ``(fingerprint, dup_count, keep_id)`` for groups with >1 member."""
-    return (
-        df.select(
-            doc_fingerprint(F.col(text_col)).alias("fingerprint"),
-            F.col(id_col).alias("_id"),
-        )
-        .groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).alias("dup_count"),
-            F.min("_id").alias("keep_id"),
-        )
-        .filter(F.col("dup_count") > 1)
-    )
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -304,54 +285,12 @@ def _bounded_buckets(
     )
 
 
-def minhash_signature(
-    text_col: Column, num_hashes: int = DEFAULT_NUM_HASHES, shingle_n: int = 3
-) -> Column:
-    """Array of ``num_hashes`` minhash values (bigints, engine-portable).
-
-    ONE md5 per shingle, not one per (shingle, k): the digest is split
-    into ``MINHASH_SLICES`` 30-bit slices and hash k is a per-k universal
-    multiply-add over two of them mod 2^31-1
-    (``functions.hashing.md5_slices30`` has the family, its measured
-    quality vs alternatives, and the overflow budget).  minhash_k = min
-    over shingles — int64 ordering is identical in every engine, and the
-    md5 basis keeps the pipeline auditable offline.
-    """
-    shingles = _shingle_hash_slices(word_shingles(text_col, n=shingle_n))
-    return _minwise_signature(shingles, num_hashes)
-
-
 def _shingle_hash_slices(shingles: Column) -> Column:
     """array<array<bigint>> — one md5 per shingle, split into the
     30-bit mixing slices."""
     from ..functions.hashing import md5_slices30
 
     return F.transform(shingles, md5_slices30)
-
-
-def _minwise_signature(hash_slices: Column, num_hashes: int) -> Column:
-    """sig[k] = min over shingles of ``(A_k*x[k%S] + B_k*x[(k+1)%S]) % P``
-    (S = ``MINHASH_SLICES``) — arithmetic only; the md5 work happened once
-    upstream."""
-    from ..functions.hashing import MINHASH_P, MINHASH_SLICES, minhash_constants
-
-    consts = minhash_constants(num_hashes)
-
-    def _mix(k: int, a: int, b: int):
-        def inner(x: Column) -> Column:
-            return (
-                F.lit(a).cast("bigint") * F.get(x, k % MINHASH_SLICES)
-                + F.lit(b).cast("bigint") * F.get(x, (k + 1) % MINHASH_SLICES)
-            ) % F.lit(MINHASH_P).cast("bigint")
-
-        return inner
-
-    return F.array(
-        *[
-            F.array_min(F.transform(hash_slices, _mix(k, a, b)))
-            for k, (a, b) in enumerate(consts)
-        ]
-    )
 
 
 def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:

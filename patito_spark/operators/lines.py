@@ -79,42 +79,6 @@ def _line_hash(col):
     return F.substring(F.md5(col), 1, 16)
 
 
-def duplicated_line_stats(
-    df: DataFrame,
-    text_col: str,
-    min_count: int = 2,
-    sep: str = "\n",
-) -> DataFrame:
-    """``(line_hash, n_docs)`` for every line occurring in ≥ *min_count*
-    documents (each document counts a line once — within-doc repeats don't
-    inflate the boilerplate signal).  Empty lines never participate, so
-    blank-line paragraph separators survive the cleaning pass.
-
-    Standalone planning view; :func:`remove_duplicated_lines` derives the
-    same set from its own explode so that the corpus text is scanned once
-    for both the set and the removal indexes.
-    """
-    lines = df.select(
-        F.explode_outer(
-            F.array_distinct(
-                F.transform(
-                    F.filter(
-                        _split_lines(F.col(text_col), sep),
-                        lambda l: l != "",
-                    ),
-                    _line_hash,
-                )
-            )
-        ).alias("_pt_h")
-    ).filter(F.col("_pt_h").isNotNull())
-    return (
-        lines.groupBy("_pt_h")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_count)
-        .select(F.col("_pt_h").alias("line_hash"), "n_docs")
-    )
-
-
 def remove_duplicated_lines(
     df: DataFrame,
     id_col: str,

@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Media payloads are opaque ``binary`` columns with a typed metadata struct —
-the north-rule table already carries one (``html binary``).  The Spark-side
+Media payloads are opaque ``binary`` columns — the north-rule table
+already carries one (``html binary``).  The Spark-side
 plumbing (schemas, Arrow batch shapes, partition-aware ``mapInPandas``
 stages) is real and tested.  Image decode is REAL for PPM/BMP/PNG via the
 stdlib codec in ``operators.imagecodec`` (struct+zlib+numpy — no imaging
@@ -11,9 +11,8 @@ deterministic byte-level features are genuinely computable (and useful:
 byte histograms catch corrupt/truncated payloads at ingest).
 
 Batch-shape contract for every stage here: input Arrow batches of
-``(id, payload binary, ...)``; output one row per input row (feature
-stages) or N rows per input (frame sampling); numpy-vectorized inside the
-batch, never per-row Python loops over pixels.
+``(id, payload binary, ...)``; output one row per input row;
+numpy-vectorized inside the batch, never per-row Python loops over pixels.
 """
 
 from __future__ import annotations
@@ -21,35 +20,7 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
-
-def attach_media_meta(
-    df: DataFrame, payload_col: str, mime: Optional[str] = None
-) -> DataFrame:
-    """Cheap metadata struct from the payload itself (no decode)."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            (F.lit(mime) if mime else F.lit(None).cast("string")).alias("mime"),
-            F.octet_length(F.col(payload_col)).cast("long").alias("n_bytes"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-        ),
-    )
-
 
 def byte_histogram(
     df: DataFrame, id_col: str, payload_col: str, buckets: int = 16
@@ -244,53 +215,3 @@ def decode_audio(
             yield pd.DataFrame(rows)
 
     return df.select(id_col, payload_col).mapInPandas(_decode, DECODE_AUDIO_SCHEMA)
-
-
-def fake_image_features(
-    df: DataFrame, id_col: str, payload_col: str, dim: int = 8
-) -> DataFrame:
-    """Deterministic stand-in for an image-embedding stage: features are a
-    seeded function of the payload bytes (md5-chunked), so tests exercise
-    the exact batching/schema/shuffle path a real encoder would use."""
-    import hashlib  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("feature", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def _feat(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            ids, feats = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                digest = hashlib.md5(payload or b"").digest()
-                feats.append(
-                    [(digest[j % 16] - 128) / 128.0 for j in range(dim)]
-                )
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "feature": feats})
-
-    return df.select(id_col, payload_col).mapInPandas(_feat, out_schema)
-
-
-def frame_sample(
-    df: DataFrame, id_col: str, payload_col: str, n_frames: int = 4
-) -> DataFrame:
-    """'Video' frame sampling stub: splits the payload into ``n_frames``
-    equal byte slices (1 input row → N output rows — the real fan-out shape
-    of a frame sampler), each tagged with its frame index."""
-    idx = F.posexplode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_frames - 1)),
-            lambda i: F.substring(
-                F.col(payload_col),
-                (i * (F.octet_length(payload_col) / n_frames)).cast("int") + 1,
-                (F.octet_length(payload_col) / n_frames).cast("int"),
-            ),
-        )
-    )
-    return df.select(F.col(id_col), idx.alias("frame_idx", "frame_bytes"))

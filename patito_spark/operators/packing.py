@@ -83,29 +83,3 @@ def pack_sequences(
         .withColumn("tok_start", cum_before % budget)
         .drop("_ok", "_tk")
     )
-
-
-def packing_stats(packed: DataFrame, token_col: str, budget: int) -> DataFrame:
-    """Per-stream packing summary: ``(stream, n_docs, n_tokens, n_packs,
-    fill_rate)``.
-
-    ``n_packs`` is the number of *budget*-token context windows the
-    stream's concatenation actually consumes — ``ceil(n_tokens /
-    budget)`` — which accounts for straddling documents spilling past the
-    last started pack; ``fill_rate = n_tokens / (n_packs × budget)`` is
-    therefore in (0, 1], and (1 − fill_rate) is exactly the padding waste
-    of the final window.  Driver-sized output for any corpus."""
-    return packed.groupBy("stream").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.coalesce(F.col(token_col).cast("bigint"), F.lit(0))).alias(
-            "n_tokens"
-        ),
-    ).withColumn(
-        "n_packs", F.ceil(F.col("n_tokens") / budget)
-    ).withColumn(
-        "fill_rate",
-        F.when(
-            F.col("n_packs") > 0,
-            F.round(F.col("n_tokens") / (F.col("n_packs") * budget), 6),
-        ).otherwise(F.lit(0.0)),
-    )

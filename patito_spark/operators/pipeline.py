@@ -294,29 +294,3 @@ def prepare_training_increment(
         shingle_n=shingle_n,
     )
     return out, fingerprint_delta, signature_delta
-
-
-def clean_corpus_stats(cleaned: DataFrame, original: DataFrame) -> DataFrame:
-    """One-row retention report for a cleaning run.
-
-    Returned LAZY: both counts fold into a single union-aggregate plan, so
-    collecting it runs ONE job (the old shape ran two separate ``count()``
-    actions — two scans of the cleaning lineage where one suffices)."""
-    tagged = original.select(F.lit(0).alias("_pt_kept")).unionByName(
-        cleaned.select(F.lit(1).alias("_pt_kept"))
-    )
-    return tagged.agg(
-        F.count(F.when(F.col("_pt_kept") == 0, True)).cast("long").alias(
-            "rows_in"
-        ),
-        F.sum("_pt_kept").cast("long").alias("rows_kept"),
-    ).select(
-        "rows_in",
-        "rows_kept",
-        F.when(
-            F.col("rows_in") > 0,
-            F.round(F.col("rows_kept") / F.col("rows_in"), 6),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("retention"),
-    )

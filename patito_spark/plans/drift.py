@@ -129,40 +129,3 @@ def compare_profiles(
         ),
         "drifted": bool(drifted),
     }
-
-
-class DriftMonitor:
-    """Persist a reference profile once; check every later run against it.
-
-    ``check`` returns the per-column drift verdicts and (optionally)
-    refreshes the stored reference when no drift was found (sliding
-    baseline).
-    """
-
-    def __init__(self, profile_dir: str) -> None:
-        self.profile_dir = profile_dir
-
-    def _path(self, column: str) -> str:
-        return os.path.join(self.profile_dir, f"{column}.profile.json")
-
-    def baseline(self, df: DataFrame, columns: list, **kwargs) -> None:
-        for c in columns:
-            save_profile(build_profile(df, c, **kwargs), self._path(c))
-
-    def check(
-        self, df: DataFrame, columns: list, refresh_if_clean: bool = False, **kwargs
-    ) -> list:
-        results = []
-        for c in columns:
-            ref = load_profile(self._path(c))
-            cur = build_profile(
-                df,
-                c,
-                histogram_bounds=(ref["histogram"]["lo"], ref["histogram"]["hi"]),
-                buckets=ref["histogram"]["buckets"],
-            )
-            verdict = compare_profiles(cur, ref, **kwargs)
-            results.append(verdict)
-            if refresh_if_clean and not verdict["drifted"]:
-                save_profile(cur, self._path(c))
-        return results

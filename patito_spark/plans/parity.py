@@ -60,20 +60,3 @@ def text_parity_report(
         .groupBy("verdict")
         .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
     )
-
-
-def text_parity_violations(
-    current: DataFrame,
-    reference: DataFrame,
-    key_col: str,
-    text_col: str,
-    limit: int = 1000,
-) -> DataFrame:
-    """The offending keys (bounded — at web scale an unbounded violation
-    list is its own incident; the full set is re-derivable by filtering)."""
-    return (
-        text_parity(current, reference, key_col, text_col)
-        .filter(F.col("verdict") != "identical")
-        .orderBy(key_col)
-        .limit(limit)
-    )

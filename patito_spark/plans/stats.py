@@ -7,9 +7,8 @@ distribution-drift checks against a stored reference profile.
 
 Everything here is a single ``groupBy(partition_cols).agg(...)`` —
 partition-local partials, tiny shuffle (one row per partition), never a
-per-row Python callback.  The only pandas UDF in the engine is the optional
-exact-KS path (``ks_exact_by_group``), Arrow-batched via ``applyInPandas``
-as the north star prescribes.
+per-row Python callback; KS against a reference grid is native too
+(:func:`ks_grid_by_group`).
 """
 
 from __future__ import annotations
@@ -138,52 +137,6 @@ def grid_cdf_reference(
     return pts, [counts[i] / n for i in range(points)]
 
 
-def ks_exact_vs_cdf(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ref_points: Sequence[float],
-    ref_cdf: Sequence[float],
-) -> DataFrame:
-    """Exact per-group KS statistic against an explicit (points, cdf)
-    reference — e.g. from :func:`grid_cdf_reference`.
-
-    Same grouped ``applyInPandas`` shape as :func:`ks_exact_by_group`
-    (Arrow-batched, vectorized numpy — no per-row Python), but the reference
-    CDF is given directly instead of assumed equi-probability, so the
-    statistic is integer-count-derived and bit-exact across engines.
-    """
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    pts = np.asarray(list(ref_points), dtype="float64")
-    cdf = np.asarray(list(ref_cdf), dtype="float64")
-    schema = T.StructType(
-        [
-            T.StructField(group_col, df.schema[group_col].dataType),
-            T.StructField("ks", T.DoubleType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def _ks(pdf: pd.DataFrame) -> pd.DataFrame:
-        values = np.sort(pdf[value_col].dropna().to_numpy(dtype="float64"))
-        n = len(values)
-        if n == 0 or len(pts) == 0:
-            stat = float("nan")
-        else:
-            # searchsorted(side="right") == count(values <= point)
-            positions = np.searchsorted(values, pts, side="right") / n
-            stat = float(np.max(np.abs(positions - cdf)))
-        return pd.DataFrame(
-            {group_col: [pdf[group_col].iloc[0]], "ks": [stat], "n": [n]}
-        )
-
-    return df.select(group_col, value_col).groupBy(group_col).applyInPandas(
-        _ks, schema
-    )
-
-
 def ks_grid_by_group(
     df: DataFrame,
     group_col: str,
@@ -194,17 +147,12 @@ def ks_grid_by_group(
     """Per-group KS statistic against an explicit (points, cdf) reference —
     pure native Columns, no Python anywhere.
 
-    Identical statistic to :func:`ks_exact_vs_cdf` when the reference is a
-    fixed grid (``numpy.searchsorted(values, p, side="right") ==
-    count(values <= p)``), computed as one ``groupBy(group).agg`` of
-    per-grid-point conditional counts.  This is the scale path: the grouped
-    ``applyInPandas`` variant materializes an entire group in one pandas
-    frame — at corpus scale a single language is terabytes — while this
-    formulation is a single scan with map-side partial aggregation and a
-    one-row-per-group shuffle, for any group size.
-
-    Keep :func:`ks_exact_by_group` / :func:`ks_exact_vs_cdf` for
-    driver-sized frames or non-grid references.
+    The statistic is ``max_i |count(values <= p_i) / n - cdf_i|``, computed
+    as one ``groupBy(group).agg`` of per-grid-point conditional counts: a
+    single scan with map-side partial aggregation and a one-row-per-group
+    shuffle, for any group size (a grouped ``applyInPandas`` form would
+    materialize a whole group — at corpus scale a single language is
+    terabytes — in one pandas frame).
     """
     pts = [float(p) for p in ref_points]
     cdf = [float(c) for c in ref_cdf]
@@ -402,49 +350,3 @@ def chi_square_from_histograms(
         stat += (o - e_scaled) ** 2 / e_scaled
         dof += 1
     return {"statistic": stat, "dof": max(dof, 0)}
-
-
-def ks_exact_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    reference_cdf: Sequence[float],
-) -> DataFrame:
-    """Exact per-group KS statistic vs a reference quantile sketch.
-
-    The one pandas-UDF path in the engine: grouped ``applyInPandas``
-    (Arrow-batched, vectorized numpy inside — no per-row Python), used when
-    sketch-based KS is too coarse for a partition-level drift verdict.
-    """
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    ref = list(reference_cdf)
-    schema = T.StructType(
-        [
-            T.StructField(group_col, df.schema[group_col].dataType),
-            T.StructField("ks", T.DoubleType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def _ks(pdf: pd.DataFrame) -> pd.DataFrame:
-        values = np.sort(pdf[value_col].dropna().to_numpy(dtype="float64"))
-        n = len(values)
-        if n == 0 or not ref:
-            stat = float("nan")
-        else:
-            ref_arr = np.asarray(ref, dtype="float64")
-            # empirical CDF of `values` evaluated at the reference quantile
-            # positions, compared with the reference CDF i/(m-1)
-            m = len(ref_arr)
-            positions = np.searchsorted(values, ref_arr, side="right") / n
-            ref_cdf = np.arange(m) / max(m - 1, 1)
-            stat = float(np.max(np.abs(positions - ref_cdf)))
-        return pd.DataFrame(
-            {group_col: [pdf[group_col].iloc[0]], "ks": [stat], "n": [n]}
-        )
-
-    return df.select(group_col, value_col).groupBy(group_col).applyInPandas(
-        _ks, schema
-    )

@@ -50,15 +50,6 @@ def duplicate_stats(df: DataFrame, column: str) -> DataFrame:
     )
 
 
-def duplicate_member_count(df: DataFrame, column: str) -> int:
-    """Total rows belonging to duplicate groups (reference counting:
-    a duplicated pair counts 2, ``validators.py:237``)."""
-    row = duplicate_stats(df, column).agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("n")
-    ).collect()[0]
-    return int(row["n"])
-
-
 def _estimated_bytes(df: DataFrame) -> int:
     """Catalyst's optimized-plan size estimate in bytes — metadata only
     (file sizes for scans, width×rows for ranges), never a Spark job.
@@ -104,15 +95,3 @@ def referential_violations(
     return withkey.join(
         keys, withkey["_fact_key"] == keys["_ref_key"], "left_anti"
     ).drop("_fact_key")
-
-
-def referential_violation_count(
-    fact: DataFrame,
-    fact_key: Column,
-    dim: DataFrame,
-    dim_key: str,
-    broadcast_dim: Optional[bool] = None,
-) -> int:
-    return referential_violations(
-        fact, fact_key, dim, dim_key, broadcast_dim
-    ).count()

@@ -275,6 +275,9 @@ class ColumnSpec:
                 if isinstance(self.derived_from, str)
                 else {"expr": self.derived_from.to_dict()}
             )
+        if self.model is not None:
+            # struct / list-of-struct: the sub-model's own checks travel too
+            d["model"] = _spec_dict(self.model)
         return d
 
     def struct_field(self) -> T.StructField:
@@ -446,6 +449,13 @@ def _json_safe(v: Any) -> Any:
     if isinstance(v, bytes):
         return v.hex()
     return v
+
+
+def _spec_dict(model: type) -> dict:
+    return {
+        "model": model.__name__,
+        "columns": [s.to_dict() for s in model.__column_specs__.values()],
+    }
 
 
 def _nested_model(annotation: Any) -> Optional[type]:
@@ -847,14 +857,9 @@ class Model(metaclass=ModelMetaclass):
     # -- (de)serialization ------------------------------------------------------
     @classmethod
     def spec_json(cls) -> str:
-        """The full model spec as a JSON artifact (shippable/persistable)."""
-        return json.dumps(
-            {
-                "model": cls.__name__,
-                "columns": [s.to_dict() for s in cls.__column_specs__.values()],
-            },
-            separators=(",", ":"),
-        )
+        """The full model spec as a JSON artifact (shippable/persistable);
+        a struct or list-of-struct column nests its sub-model's spec."""
+        return json.dumps(_spec_dict(cls), separators=(",", ":"))
 
 
 def _spec_as_field(spec: ColumnSpec, force_nullable: bool = False) -> tuple:
@@ -907,7 +912,6 @@ def model_from_spec_json(payload: str) -> type:
     original class definition.  The reference proves the same property for
     polars expressions (``column_info.py:131-149``).
     """
-    import datetime as _dt
     import json as _json
 
     try:
@@ -923,10 +927,18 @@ def model_from_spec_json(payload: str) -> type:
             "Model.spec_json() (an object with a 'columns' list); got "
             f"{type(data).__name__}"
         )
+    return _model_from_dict(data)
+
+
+def _model_from_dict(data: dict) -> type:
+    import datetime as _dt
+
     fields: dict[str, tuple] = {}
     for col_spec in data["columns"]:
         dtype = T._parse_datatype_json_string(col_spec["dtype"])  # type: ignore[attr-defined]
-        annotation = _annotation_for_spark_type(dtype)
+        nested = col_spec.get("model")
+        nested = _model_from_dict(nested) if nested else None
+        annotation = _annotation_for_spark_type(dtype, nested)
         if col_spec.get("nullable"):
             annotation = Optional[annotation]
         constraints = None
@@ -950,7 +962,11 @@ def model_from_spec_json(payload: str) -> type:
             }
         info = FieldInfo(
             values["default"],
-            dtype=dtype if not isinstance(dtype, (T.StructType,)) else None,
+            dtype=(
+                None
+                if nested is not None or isinstance(dtype, T.StructType)
+                else dtype
+            ),
             unique=col_spec.get("unique", False),
             allow_missing=col_spec.get("allow_missing", False),
             ge=values["ge"],
@@ -979,7 +995,12 @@ def model_from_spec_json(payload: str) -> type:
     return _derive_model(data.get("model", "DeserializedModel"), fields)
 
 
-def _annotation_for_spark_type(dtype: T.DataType) -> Any:
+def _annotation_for_spark_type(
+    dtype: T.DataType, nested: Optional[type] = None
+) -> Any:
+    """Annotation for *dtype*; its struct (at any list depth) becomes
+    *nested* when the spec carried the sub-model, else a check-free
+    ``NestedStruct``."""
     import datetime as _dt
 
     if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
@@ -999,11 +1020,13 @@ def _annotation_for_spark_type(dtype: T.DataType) -> Any:
     if isinstance(dtype, T.DayTimeIntervalType):
         return _dt.timedelta
     if isinstance(dtype, T.ArrayType):
-        inner = _annotation_for_spark_type(dtype.elementType)
+        inner = _annotation_for_spark_type(dtype.elementType, nested)
         if dtype.containsNull:
             inner = Optional[inner]
         return list[inner]
     if isinstance(dtype, T.StructType):
+        if nested is not None:
+            return nested
         fields = {
             f.name: (
                 Optional[_annotation_for_spark_type(f.dataType)]

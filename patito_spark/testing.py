@@ -49,13 +49,6 @@ class WebPage(Model):
     lang: str = Field(allowed=ALLOWED_LANGS)
 
 
-class Domain(Model):
-    """Referential-integrity companion dim (FIXTURES.md F2)."""
-
-    domain: str = Field(unique=True)
-    first_seen: dt.datetime
-
-
 def synth_webpages(
     spark: SparkSession,
     n_rows: int,

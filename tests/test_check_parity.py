@@ -9,7 +9,7 @@ same executor keyed by partition), ``flag_violations`` and
 
 import datetime as dt
 import json
-from typing import Literal
+from typing import Literal, Optional
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +18,7 @@ import patito_spark as pt
 from patito_spark import jobs
 from patito_spark.plans.checks import find_errors
 from patito_spark.plans.runner import ValidationRunner
+from patito_spark.spec import model_from_spec_json
 from patito_spark.streaming.validate import flag_violations, windowed_violation_counts
 
 
@@ -273,3 +274,58 @@ def test_jobs_main_runs_mixed_constraints(spark, tmp_path, capsys):
     assert want == 2  # partition 0's outlier and partition 1's negative value
     assert out["passed"] is False
     assert out["violations"] == want
+
+
+class Nested(pt.Model):
+    p: int
+    s: Inner
+    box: Optional[Inner]
+    items: list[Item]
+
+
+def test_spec_json_keeps_nested_submodels():
+    rebuilt = model_from_spec_json(Nested.spec_json())
+    assert rebuilt.spec_json() == Nested.spec_json()
+    assert rebuilt.dtypes == Nested.dtypes
+    assert rebuilt.specs["s"].model.specs["x"].gt == 0
+    assert rebuilt.specs["box"].model.specs["x"].gt == 0
+    assert rebuilt.specs["items"].model.specs["price"].ge == 0
+
+
+def test_jobs_main_checks_nested_fields(spark, tmp_path, capsys):
+    """A spec file carries the sub-models, so the job checks nested struct
+    and list-of-struct fields exactly as find_errors does."""
+    df = spark.createDataFrame(
+        [
+            (0, (1, 1), None, [(1,)]),
+            (0, (-1, 1), (1, 1), [(1,), (-5,)]),
+            (1, (1, 1), (0, 1), [(2,)]),
+            (1, (1, 1), None, [(-1,)]),
+        ],
+        "p bigint, s struct<x: bigint, y: bigint>, "
+        "box struct<x: bigint, y: bigint>, items array<struct<price: bigint>>",
+    )
+    spec = tmp_path / "spec.json"
+    spec.write_text(Nested.spec_json())
+    data = str(tmp_path / "input")
+    df.write.parquet(data)
+
+    code = jobs.main(
+        [
+            "--spec", str(spec),
+            "--input", data,
+            "--partition-col", "p",
+            "--checkpoint-dir", str(tmp_path / "ckpt"),
+        ]
+    )
+    assert code == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    # row-level checks only, so per-partition and whole-table counts agree
+    errors = find_errors(df, Nested)
+    assert _counts(errors) == {
+        ("s.x", "bound"): 1,
+        ("box.x", "bound"): 1,
+        ("items.price", "bound"): 2,
+    }
+    assert out["passed"] is False
+    assert out["violations"] == sum(getattr(e.exc, "count", 1) for e in errors)

@@ -16,7 +16,6 @@ from patito_spark.functions.vectors import cosine_similarity, dot_product, l2_no
 from patito_spark.operators.dedup import (
     embedding_near_duplicates,
     exact_dedup,
-    exact_duplicate_groups,
     hamming_distance,
     minhash_candidate_pairs,
     minhash_dedup_pairs,
@@ -25,13 +24,7 @@ from patito_spark.operators.dedup import (
     simhash,
     simhash_candidate_pairs,
 )
-from patito_spark.operators.multimodal import (
-    attach_media_meta,
-    byte_histogram,
-    decode_image,
-    fake_image_features,
-    frame_sample,
-)
+from patito_spark.operators.multimodal import byte_histogram, decode_image
 from patito_spark.operators.similarity import (
     build_ivf_index,
     ivf_topk,
@@ -177,15 +170,6 @@ def test_vector_math(spark):
 def _with_planted_dups(docs):
     dup = docs.limit(3).withColumn("doc_id", F.col("doc_id") + 100_000)
     return docs.unionByName(dup)
-
-
-def test_exact_duplicate_groups(spark, docs):
-    corpus = _with_planted_dups(docs)
-    groups = exact_duplicate_groups(corpus, "doc_id", "text")
-    rows = groups.collect()
-    assert len(rows) == 3
-    assert all(r["dup_count"] == 2 for r in rows)
-    assert all(r["keep_id"] < 100_000 for r in rows)
 
 
 def test_exact_dedup_keeps_lowest_id(spark, docs):
@@ -934,7 +918,6 @@ def test_pii_counts(spark):
 
 def test_url_parsing(spark):
     from patito_spark.functions.urls import (
-        domain_counts,
         registrable_domain,
         url_host,
         url_path,
@@ -969,11 +952,6 @@ def test_url_parsing(spark):
     assert rows[3]["scheme"] == "" and rows[3]["host"] == "cdn.example.org"
     assert rows[4]["host"] == "" and rows[4]["domain"] == ""
     assert rows[5]["domain"] == "example.net"
-
-    hot = domain_counts(
-        df.filter(F.col("id") != 4), "url"
-    ).collect()
-    assert hot[0]["rows"] == 2 and hot[0]["domain"] == "example.com"
 
 
 # -- per-group cap -----------------------------------------------------------------------------------
@@ -1062,7 +1040,7 @@ def test_keyword_tfidf_single_text_scan(spark, tmp_path):
 def test_pack_sequences_semantics(spark):
     from pyspark.sql import functions as F
 
-    from patito_spark.operators.packing import pack_sequences, packing_stats
+    from patito_spark.operators.packing import pack_sequences
 
     docs = spark.range(200).select(
         F.col("id").alias("doc_id"), (F.col("id") % 90 + 10).alias("ntok")
@@ -1084,9 +1062,6 @@ def test_pack_sequences_semantics(spark):
         docs.repartition(13), "doc_id", "ntok", budget=128, streams=4
     ).collect()
     assert {tuple(r) for r in again} == {tuple(r) for r in rows}
-    stats = packing_stats(packed, "ntok", 128).collect()
-    assert sum(s["n_docs"] for s in stats) == 200
-    assert all(0 < s["fill_rate"] <= 1.0 for s in stats)
     with pytest.raises(ValueError, match="budget must be positive"):
         pack_sequences(docs, "doc_id", "ntok", budget=0)
 
@@ -1209,25 +1184,21 @@ def test_ngram_contamination_counts_distinct_ngrams_once(spark):
 
 
 def test_connected_components_basic(spark):
-    from patito_spark.operators.components import (
-        component_stats,
-        connected_components,
-    )
+    from collections import Counter
+
+    from patito_spark.operators.components import connected_components
 
     # chain 1-2-3, pair 10-11 (reversed direction), triangle 20-21-22
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (11, 10), (20, 21), (21, 22), (20, 22)],
         "id_a long, id_b long",
     )
-    comp = {
-        r["node"]: r["component"]
-        for r in connected_components(pairs).collect()
-    }
+    comps = connected_components(pairs)
+    comp = {r["node"]: r["component"] for r in comps.collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-    stats = {
-        r["cluster_size"]: r["n_clusters"]
-        for r in component_stats(connected_components(pairs)).collect()
-    }
+    # cluster-size distribution: {size: number of clusters of that size}
+    sizes = comps.groupBy("component").count().collect()
+    stats = Counter(r["count"] for r in sizes)
     assert stats == {3: 2, 2: 1}
 
 
@@ -1662,13 +1633,6 @@ def media(spark):
     )
 
 
-def test_attach_media_meta(spark, media):
-    out = attach_media_meta(media, "payload", mime="application/octet-stream")
-    rows = {r["id"]: r["media_meta"] for r in out.collect()}
-    assert rows[1]["n_bytes"] == 256
-    assert rows[2]["mime"] == "application/octet-stream"
-
-
 def test_byte_histogram(spark, media):
     out = {r["id"]: r for r in byte_histogram(media, "id", "payload").collect()}
     assert out[1]["n_bytes"] == 256
@@ -1827,21 +1791,6 @@ def test_decode_image_real_stdlib_path(spark):
     small = px[np.arange(2) * 5 // 2][:, np.arange(2) * 4 // 2]
     assert (resized[1]["width"], resized[1]["height"]) == (2, 2)
     assert abs(resized[1]["mean_pixel"] - float(small.astype("float64").mean())) < 1e-12
-
-
-def test_fake_image_features_deterministic(spark, media):
-    a = {r["id"]: r["feature"] for r in fake_image_features(media, "id", "payload").collect()}
-    b = {r["id"]: r["feature"] for r in fake_image_features(media, "id", "payload").collect()}
-    assert a == b
-    assert len(a[1]) == 8
-
-
-def test_frame_sample_fanout(spark, media):
-    frames = frame_sample(media, "id", "payload", n_frames=4)
-    counts = {r["id"]: r["n"] for r in frames.groupBy("id").agg(F.count("*").alias("n")).collect()}
-    assert counts[1] == 4
-    one = frames.filter((F.col("id") == 1)).collect()
-    assert all(len(r["frame_bytes"]) == 64 for r in one)
 
 
 # -- property-based (hypothesis) ----------------------------------------------------------------
@@ -2057,36 +2006,6 @@ def test_canonical_url_rules(spark):
     df2 = spark.createDataFrame([(w,) for _, w in cases], "url string")
     again = [r[0] for r in df2.select(canonical_url(F.col("url"))).collect()]
     assert again == [want for _, want in cases]
-
-
-def test_minhash_signature_helper(spark):
-    # the public helper: int64 signatures, identical text -> identical
-    # signature, near-identical text -> mostly-shared mins, and the
-    # num_hashes knob controls length
-    from patito_spark.operators.dedup import minhash_signature
-
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy dog"),
-            (3, "the quick brown fox jumps over the lazy cat today"),
-            (4, "completely different content about spark plans"),
-        ],
-        "id long, t string",
-    )
-    sigs = {
-        r["id"]: r["s"]
-        for r in df.select(
-            "id", minhash_signature(F.col("t"), num_hashes=16).alias("s")
-        ).collect()
-    }
-    assert all(len(s) == 16 for s in sigs.values())
-    assert all(isinstance(v, int) and v >= 0 for v in sigs[1])
-    assert sigs[1] == sigs[2]
-    shared_near = sum(a == b for a, b in zip(sigs[1], sigs[3]))
-    shared_far = sum(a == b for a, b in zip(sigs[1], sigs[4]))
-    assert shared_near > shared_far
-    assert shared_far == 0
 
 
 @st.composite
@@ -2388,10 +2307,7 @@ def test_probe_cap_raises_instead_of_collecting(spark, embeddings):
 
 
 def test_remove_duplicated_lines_boilerplate(spark):
-    from patito_spark.operators.lines import (
-        duplicated_line_stats,
-        remove_duplicated_lines,
-    )
+    from patito_spark.operators.lines import remove_duplicated_lines
 
     docs = spark.createDataFrame(
         [
@@ -2403,11 +2319,6 @@ def test_remove_duplicated_lines_boilerplate(spark):
         ],
         "doc_id long, text string",
     )
-    stats = {
-        r["line_hash"]: r["n_docs"]
-        for r in duplicated_line_stats(docs, "text").collect()
-    }
-    assert sorted(stats.values()) == [2, 3]  # banner ×2, footer ×3
     out = {
         r["doc_id"]: r
         for r in remove_duplicated_lines(docs, "doc_id", "text").collect()

@@ -20,6 +20,9 @@ COVERAGE.md: a regression here means a rewrite changed the distributed
 shape of a query, not just its wall time.
 """
 
+import ast
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -247,3 +250,50 @@ def test_exchange_counts_within_budget(plans):
         if n in EXCHANGE_BUDGET and p.count("Exchange") > EXCHANGE_BUDGET[n]
     }
     assert not over, f"shuffle-count regressions (got, budget): {over}"
+
+
+def _module_defs(path: str) -> dict:
+    """Top-level function, class and assignment nodes of a module, by name."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    defs = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            defs[node.name] = node
+        elif isinstance(node, ast.Assign):
+            for target in node.targets:
+                if isinstance(target, ast.Name):
+                    defs[target.id] = node
+    return defs
+
+
+def test_entry_registry_has_no_orphans():
+    """Every ``q_*`` function is reachable from ``queries()`` or
+    ``bench.HEADLINE``, and every SQL twin (``SQL_*`` / ``_sql_*``) from
+    ``oracle_sql()`` — a query neither gate runs is dead weight."""
+    defs = _module_defs(entrymod.__file__)
+    bench = os.path.join(os.path.dirname(entrymod.__file__), "bench.py")
+    headline = [
+        f"q_{name}"
+        for name in ast.literal_eval(_module_defs(bench)["HEADLINE"].value)
+    ]
+    assert set(headline) <= set(defs)
+
+    def reach(*roots):
+        seen, todo = set(), list(roots)
+        while todo:
+            name = todo.pop()
+            if name in defs and name not in seen:
+                seen.add(name)
+                todo += [
+                    n.id for n in ast.walk(defs[name]) if isinstance(n, ast.Name)
+                ]
+        return seen
+
+    live_q = reach("queries", *headline)
+    live_sql = reach("oracle_sql")
+    orphans = [n for n in defs if n.startswith("q_") and n not in live_q]
+    orphans += [
+        n for n in defs if n.startswith(("SQL_", "_sql_")) and n not in live_sql
+    ]
+    assert not orphans, f"unreachable from queries()/HEADLINE/oracle_sql(): {orphans}"

@@ -4,9 +4,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from patito_spark.plans.drift import (
-    DriftMonitor,
     build_profile,
     compare_profiles,
+    load_profile,
+    save_profile,
 )
 from patito_spark.plans.skew import salted_join, skewness_report, with_salt
 
@@ -129,43 +130,49 @@ def test_left_salted_join_keeps_unmatched(spark, skewed):
 # -- drift -----------------------------------------------------------------------
 
 
-def test_profile_and_self_compare(spark):
+def test_profile_and_self_compare(spark, tmp_path):
     df = spark.range(10_000).select((F.col("id") % 500).cast("double").alias("x"))
     prof = build_profile(df, "x")
     assert prof["count"] == 10_000
     assert prof["min"] == 0.0 and prof["max"] == 499.0
-    verdict = compare_profiles(prof, prof)
+    path = str(tmp_path / "profiles" / "x.profile.json")
+    save_profile(prof, path)
+    assert load_profile(path) == prof
+    verdict = compare_profiles(prof, load_profile(path))
     assert verdict["drifted"] is False
     assert verdict["ks"] < 0.01
     assert verdict["null_rate_delta"] == 0.0
 
 
-def test_drift_monitor_detects_shift(spark, tmp_path):
-    monitor = DriftMonitor(str(tmp_path / "profiles"))
-    base = spark.range(10_000).select((F.col("id") % 500).cast("double").alias("x"))
-    monitor.baseline(base, ["x"])
-    same = spark.range(10_000).select((F.col("id") % 500).cast("double").alias("x"))
-    clean = monitor.check(same, ["x"])
-    assert clean[0]["drifted"] is False
+def test_profile_compare_detects_shift_and_null_rate(spark):
+    """A later run profiled on the reference's histogram grid: a shifted
+    distribution drifts, and a null-rate change is reported."""
+
+    def against(ref, df):
+        grid = ref["histogram"]
+        cur = build_profile(
+            df, "x", histogram_bounds=(grid["lo"], grid["hi"]), buckets=grid["buckets"]
+        )
+        return compare_profiles(cur, ref)
+
+    ref = build_profile(
+        spark.range(10_000).select((F.col("id") % 500).cast("double").alias("x")), "x"
+    )
     shifted = spark.range(10_000).select(
         ((F.col("id") % 500) + 250).cast("double").alias("x")
     )
-    drifted = monitor.check(shifted, ["x"])
-    assert drifted[0]["drifted"] is True
-    assert drifted[0]["ks"] > 0.2
+    drifted = against(ref, shifted)
+    assert drifted["drifted"] is True
+    assert drifted["ks"] > 0.2
 
-
-def test_drift_monitor_null_rate(spark, tmp_path):
-    monitor = DriftMonitor(str(tmp_path / "p2"))
     base = spark.range(1000).select(F.col("id").cast("double").alias("x"))
-    monitor.baseline(base, ["x"])
+    ref = build_profile(base, "x")
     with_nulls = spark.range(1000).select(
         F.when(F.col("id") % 4 == 0, None).otherwise(F.col("id"))
         .cast("double")
         .alias("x")
     )
-    verdict = monitor.check(with_nulls, ["x"])[0]
-    assert verdict["null_rate_delta"] == pytest.approx(0.25, abs=0.01)
+    assert against(ref, with_nulls)["null_rate_delta"] == pytest.approx(0.25, abs=0.01)
 
 
 def test_chi_square_by_group_detects_shift(spark):
@@ -192,7 +199,7 @@ def test_chi_square_by_group_detects_shift(spark):
 
 
 def test_clean_corpus_stages(spark):
-    from patito_spark.operators.pipeline import clean_corpus, clean_corpus_stats
+    from patito_spark.operators.pipeline import clean_corpus
 
     good = "the quick brown fox and the lazy dog is of great renown " * 3
     df = spark.createDataFrame(
@@ -213,19 +220,6 @@ def test_clean_corpus_stages(spark):
     )
     kept = sorted(r["doc_id"] for r in cleaned.collect())
     assert kept == [1, 6]  # lowest id wins the dup group
-    sc = spark.sparkContext
-    sc.setJobGroup("ccs_build", "clean_corpus_stats plan construction")
-    stats_df = clean_corpus_stats(cleaned, df)
-    assert stats_df.columns == ["rows_in", "rows_kept", "retention"]
-    # constructing the report is LAZY — zero jobs (the old shape ran two
-    # driver-side count() actions before returning); both counts are one
-    # union-aggregate plan, executed only when the caller collects (AQE
-    # may split that single execution into multiple scheduler jobs)
-    assert len(sc.statusTracker().getJobIdsForGroup("ccs_build")) == 0
-    assert "Union" in stats_df._jdf.queryExecution().optimizedPlan().toString()
-    stats = stats_df.collect()[0]
-    assert stats["rows_in"] == 6 and stats["rows_kept"] == 2
-    assert stats["retention"] == pytest.approx(round(2 / 6, 6))
 
 
 def test_prepare_training_increment_two_batches(spark, tmp_path):

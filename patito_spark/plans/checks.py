@@ -27,7 +27,8 @@ mixed constraints, resolves the pass-1 aggregates in the row predicates
 counts failures in one more scan.  A list-of-struct scope runs over the
 exploded column of its parent's frame, the key carried along.  Uniqueness
 (V7) stays per executor: one hashed shuffle for all unique columns of a
-scope here (:func:`_duplicate_counts`), persisted partials in the runner.
+scope here (:func:`_duplicate_counts`), persisted partials in the runner;
+both group on the same pre-shuffle key hash pair (:func:`_key_hashes`).
 
 **Row executor** (:func:`row_flags`): the predicates as row flags, for
 ``flag_violations`` and everything routed by it; a list-of-struct record
@@ -767,6 +768,23 @@ def _element_flag(scope: Scope, name: str) -> Callable[[Column], Column]:
 # ---------------------------------------------------------------------------
 
 
+def _key_hashes(targets: list[tuple[str, Column, Column]]) -> Column:
+    """One ``struct(k, h1, h2)`` per unique target, as an array: its loc
+    *key* and two independently-seeded 64-bit hashes of its *value* — the
+    one key hash every uniqueness path groups on.  A NULL value hashes to
+    a constant pair, so nulls form one group."""
+    return F.array(
+        *[
+            F.struct(
+                key.alias("k"),
+                F.xxhash64(value, F.lit(41)).alias("h1"),
+                F.xxhash64(value, F.lit(97)).alias("h2"),
+            )
+            for _, key, value in targets
+        ]
+    )
+
+
 def _duplicate_counts(
     df: DataFrame, targets: list[tuple[str, Column, Column]]
 ) -> dict[str, int]:
@@ -784,18 +802,8 @@ def _duplicate_counts(
     reference's ``is_duplicated().sum()`` semantics (``validators.py:
     235-244``: a duplicated pair counts 2; nulls form a group).
     """
-    pairs = F.array(
-        *[
-            F.struct(
-                key.alias("k"),
-                F.xxhash64(value, F.lit(41)).alias("h1"),
-                F.xxhash64(value, F.lit(97)).alias("h2"),
-            )
-            for _, key, value in targets
-        ]
-    )
     exploded = (
-        df.select(F.explode(pairs).alias("p"))
+        df.select(F.explode(_key_hashes(targets)).alias("p"))
         .select("p.k", "p.h1", "p.h2")
         .filter(F.col("k").isNotNull())
     )

@@ -23,15 +23,26 @@ Execution plan per run (SURVEY §4.3):
    column with the partition carried through the explode.  Aggregate and
    mixed constraints are therefore evaluated **per partition**: a verdict
    belongs to one partition, and a resume never re-scans finished ones.
-4. **Job 2** — global uniqueness with per-partition attribution:
-   ``groupBy(column, value, partition)`` local counts (the partials) → one
-   ``(column, key)`` window for the global totals → each partition charged
-   its own members of cross-partition duplicate groups by one
-   ``groupBy(partition, column)``.
+4. **Job 2** — global uniqueness with per-partition attribution: each
+   unique value is hashed *before* the shuffle into the xxhash64 pair
+   ``find_errors`` groups on (``plans.checks._key_hashes``), and
+   ``groupBy(column, h1, h2, partition)`` gives the local counts (the
+   partials) → one ``(column, h1, h2)`` window for the global totals →
+   each partition charged its own members of cross-partition duplicate
+   groups by one ``groupBy(partition, column)``.
 5. Verdicts + violations appended as one write each; a re-run with the
    same checkpoint skips finished partitions (idempotent resume).  The
    rows are built on the driver and handed to Spark as Arrow-backed local
    relations (``sources.io.driver_frame``), never as a Python RDD.
+
+Job 1 and the scan side of Job 2 (the partials write in exact mode, the
+whole charge in local mode) do not depend on each other, so they run
+concurrently, as do the two writes of step 5.  The second branch runs on a
+``pyspark.InheritableThread``: its jobs keep the caller's job group and
+local properties.  Both branches are joined before the run goes on, and
+the first exception is re-raised.  The checkpoint stores are read with
+their known schemas (an unschema'd parquet read launches a
+schema-inference job).
 
 Resume and global uniqueness: uniqueness is a *global* property, but
 finished partitions are not re-scanned on resume.  Two modes:
@@ -42,7 +53,7 @@ finished partitions are not re-scanned on resume.  Two modes:
   partials go from the scan straight into the charge job.
 - ``unique_resume="exact"``: every run persists its per-(partition,
   column, key-hash) local counts to a third checkpoint dataset
-  (``unique_partials``).  The source is scanned for them once, and they
+  (``unique_keys``).  The source is scanned for them once, and they
   are written before anything is charged.  The partials store is then
   read once: each row is tagged as a finished run's (its (partition,
   run_id) matches a persisted verdict) or as this call's own, and one
@@ -52,19 +63,24 @@ finished partitions are not re-scanned on resume.  Two modes:
   members joined a cross-boundary duplicate group get retroactive delta
   violation rows (merged minus prior charge).  The cumulative violation
   table therefore always equals what one uninterrupted run would have
-  produced.  Cost: the partials dataset is O(distinct keys) (16-byte md5
-  per key — the one checkpoint artifact that scales with data, which is
-  inherent to exact cross-run uniqueness), and each run re-shuffles it
-  once.  Crash-safe: partials are written *before* verdicts and are only
-  trusted when their (partition, run_id) matches a persisted verdict or
-  this call's pending partitions, so a run killed between the two writes
-  re-runs cleanly without double-counting.  A caller-chosen run_id that
-  already owns such orphan partials is refused, since its rows would be
-  indistinguishable from the retry's own.
+  produced.  Cost: the partials dataset is O(distinct keys) (two
+  xxhash64 longs, 16 bytes, per key — the one checkpoint artifact that
+  scales with data, which is inherent to exact cross-run uniqueness), and
+  each run re-shuffles it once.  Crash-safe: partials are written
+  *before* verdicts and are only trusted when their (partition, run_id)
+  matches a persisted verdict or this call's pending partitions, so a run
+  killed between the two writes re-runs cleanly without double-counting.
+  A caller-chosen run_id that already owns such orphan partials is
+  refused, since its rows would be indistinguishable from the retry's
+  own.  The store's format is
+  versioned by its name: a checkpoint that still holds the legacy
+  md5-hex ``unique_partials`` store is refused by exact mode before
+  anything is written (start a fresh checkpoint, or resume it with
+  ``unique_resume="local"``), so the two formats never mix.
 
 Checkpoint storage is a parquet directory triple (``verdicts/``,
-``violations/``, ``unique_partials/``) written with append, or the
-``<checkpoint_table>_{verdicts,violations,unique_partials}`` catalog tables
+``violations/``, ``unique_keys/``) written with append, or the
+``<checkpoint_table>_{verdicts,violations,unique_keys}`` catalog tables
 written through ``sources.io.write_report_table`` — under an Iceberg
 catalog those appends are snapshot commits.
 """
@@ -76,13 +92,21 @@ import uuid
 from functools import reduce
 from typing import Optional
 
+from pyspark import InheritableThread
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import get_exc_type
-from .checks import _aggregate, _transform_df, compile_checks, count_error, scope_frames
+from .checks import (
+    _aggregate,
+    _key_hashes,
+    _transform_df,
+    compile_checks,
+    count_error,
+    scope_frames,
+)
 
 #: the partition key column every runner frame carries
 _KEY = "_partition"
@@ -108,18 +132,23 @@ VERDICT_SCHEMA = T.StructType(
 #: the verdict row keeps a bounded sorted sample
 _LINEAGE_FILE_CAP = 64
 
-#: exact-resume partials: one row per (partition, unique column, key hash)
-#: with its local member count.  Hashes, never raw key values, are
+#: exact-resume partials: one row per (partition, unique column, key hash
+#: pair) with its local member count.  Hashes, never raw key values, are
 #: persisted — bounded width and no payload leakage into the checkpoint.
-UNIQUE_PARTIALS_SCHEMA = T.StructType(
+UNIQUE_KEYS_SCHEMA = T.StructType(
     [
         T.StructField("partition", T.StringType()),
         T.StructField("column", T.StringType()),
-        T.StructField("key_hash", T.StringType()),
+        T.StructField("h1", T.LongType()),
+        T.StructField("h2", T.LongType()),
         T.StructField("cnt", T.LongType()),
         T.StructField("run_id", T.StringType()),
     ]
 )
+
+#: the partials store, and the name of its legacy md5-hex format
+_UNIQUE_STORE = "unique_keys"
+_LEGACY_UNIQUE_STORE = "unique_partials"
 
 #: trust keys for the partials read-back: one row per persisted verdict
 #: (``_prior``) plus one per partition this call is validating
@@ -141,6 +170,12 @@ VIOLATION_SCHEMA = T.StructType(
         T.StructField("run_id", T.StringType()),
     ]
 )
+
+_STORE_SCHEMAS = {
+    "verdicts": VERDICT_SCHEMA,
+    "violations": VIOLATION_SCHEMA,
+    _UNIQUE_STORE: UNIQUE_KEYS_SCHEMA,
+}
 
 
 class RunResult:
@@ -206,16 +241,26 @@ class ValidationRunner:
     # -- checkpoint I/O --------------------------------------------------------
     def _read(self, spark: SparkSession, store: str) -> Optional[DataFrame]:
         """One checkpoint store (``verdicts``, ``violations`` or
-        ``unique_partials``); None before its first write."""
+        ``unique_keys``); None before its first write.  A directory store
+        is read with its known schema, so no schema-inference job runs."""
         if self.checkpoint_table:
             name = f"{self.checkpoint_table}_{store}"
             return spark.table(name) if spark.catalog.tableExists(name) else None
         if self.checkpoint_dir:
             try:
-                return spark.read.parquet(f"{self.checkpoint_dir}/{store}")
-            except AnalysisException:  # no such directory, or no files yet
+                return spark.read.schema(_STORE_SCHEMAS[store]).parquet(
+                    f"{self.checkpoint_dir}/{store}"
+                )
+            except AnalysisException:  # no such directory yet
                 return None
         return None
+
+    def _stored(self, spark: SparkSession, store: str) -> DataFrame:
+        """:meth:`_read`, raising while *store* has never been written."""
+        df = self._read(spark, store)
+        if df is None:
+            raise AnalysisException(f"nothing written to the {store} store yet")
+        return df
 
     def _append(self, df: DataFrame, store: str) -> None:
         if self.checkpoint_table:
@@ -227,14 +272,39 @@ class ValidationRunner:
 
     def _verdict_keys(self, spark: SparkSession) -> list:
         """``(partition, run_id)`` of every persisted verdict: the verdict
-        store's one read per call (one row per finished partition)."""
+        store's one read per call (one row per finished partition),
+        deduplicated on the driver — a ``distinct`` would cost a shuffle."""
         verdicts = self._read(spark, "verdicts")
         if verdicts is None:
             return []
-        return [
-            (r["partition"], r["run_id"])
-            for r in verdicts.select("partition", "run_id").distinct().collect()
-        ]
+        return list(
+            {
+                (r["partition"], r["run_id"])
+                for r in verdicts.select("partition", "run_id").collect()
+            }
+        )
+
+    def _refuse_legacy_store(self, spark: SparkSession) -> None:
+        """Exact mode never mixes key-store formats: a checkpoint that still
+        holds the legacy md5-hex partials store is refused before anything
+        is written.  An existence check only, no Spark job."""
+        if self.checkpoint_table:
+            legacy = f"{self.checkpoint_table}_{_LEGACY_UNIQUE_STORE}"
+            found = spark.catalog.tableExists(legacy)
+        elif self.checkpoint_dir:
+            legacy = f"{self.checkpoint_dir}/{_LEGACY_UNIQUE_STORE}"
+            path = spark._jvm.org.apache.hadoop.fs.Path(legacy)
+            fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+            found = fs.exists(path)
+        else:
+            return
+        if found:
+            raise ValueError(
+                f"checkpoint holds a legacy {_LEGACY_UNIQUE_STORE!r} store "
+                f"({legacy}) that exact unique_resume can no longer read. Start "
+                "a fresh checkpoint, or resume this one with "
+                "unique_resume='local'."
+            )
 
     def _refuse_orphaned_run_id(
         self, spark: SparkSession, run_id: str, verdict_keys: list
@@ -243,7 +313,7 @@ class ValidationRunner:
         by a call that died before its verdicts): this call's own partials
         would share their (partition, run_id) trust key, and both copies
         would be trusted once the verdicts land."""
-        stored = self._read(spark, "unique_partials")
+        stored = self._read(spark, _UNIQUE_STORE)
         if stored is None:
             return
         finished = {p for p, r in verdict_keys if r == run_id}
@@ -264,11 +334,12 @@ class ValidationRunner:
             partials.select(
                 F.col("_p").alias("partition"),
                 F.col("k").alias("column"),
-                F.col("h").alias("key_hash"),
-                F.col("cnt"),
+                "h1",
+                "h2",
+                "cnt",
                 F.lit(run_id).alias("run_id"),
             ),
-            "unique_partials",
+            _UNIQUE_STORE,
         )
 
     def _trusted_partials(
@@ -277,8 +348,8 @@ class ValidationRunner:
         verdict_keys: list,
         run_id: str,
         pending: list,
-    ) -> Optional[DataFrame]:
-        """The partials store, read once, as ``_p, k, h, cnt, _prior``.
+    ) -> DataFrame:
+        """The partials store, read once, as ``_p, k, h1, h2, cnt, _prior``.
 
         A row is trusted iff its (partition, run_id) matches a persisted
         verdict (``_prior``) or this call's own pending partitions.  Partials
@@ -288,9 +359,7 @@ class ValidationRunner:
         """
         from ..sources.io import driver_frame
 
-        stored = self._read(spark, "unique_partials")
-        if stored is None:
-            return None
+        stored = self._stored(spark, _UNIQUE_STORE)
         keys = driver_frame(
             spark,
             [{"_kp": p, "_kr": r, "_prior": True} for p, r in verdict_keys]
@@ -304,7 +373,8 @@ class ValidationRunner:
         return stored.join(F.broadcast(keys), cond).select(
             F.col("partition").alias("_p"),
             F.col("column").alias("k"),
-            F.col("key_hash").alias("h"),
+            "h1",
+            "h2",
             "cnt",
             "_prior",
         )
@@ -316,16 +386,14 @@ class ValidationRunner:
             return
         from ..sources.io import driver_frame
 
-        if verdicts:
-            self._append(
-                driver_frame(spark, verdicts, VERDICT_SCHEMA).coalesce(1),
-                "verdicts",
-            )
-        if violations:
-            self._append(
-                driver_frame(spark, violations, VIOLATION_SCHEMA).coalesce(1),
-                "violations",
-            )
+        def write(rows: list, schema: T.StructType, store: str) -> None:
+            if rows:
+                self._append(driver_frame(spark, rows, schema).coalesce(1), store)
+
+        _concurrently(
+            lambda: write(verdicts, VERDICT_SCHEMA, "verdicts"),
+            lambda: write(violations, VIOLATION_SCHEMA, "violations"),
+        )
 
     # -- run ---------------------------------------------------------------------
     def run(
@@ -346,6 +414,11 @@ class ValidationRunner:
         run_id = run_id or uuid.uuid4().hex[:12]
         t0 = time.time()
         model = self.model
+        exact = self.unique_resume == "exact" and bool(
+            self.checkpoint_dir or self.checkpoint_table
+        )
+        if exact:
+            self._refuse_legacy_store(spark)
 
         if where is not None:
             df = df.filter(where)
@@ -395,45 +468,55 @@ class ValidationRunner:
             ),
         }
         frames = scope_frames(df, plan, _KEY)
-        per_partition_errors: dict = {}
-        stats: dict = {}  # partition → its Job 1 row (_rows, _files)
-        for p, (row, errs) in _aggregate(
-            df, plan.in_scope(plan.root), _KEY, lineage
-        ).items():
-            stats[p] = row
-            per_partition_errors[p] = errs
-        for scope in plan.scopes[1:]:
-            for p, (_, errs) in _aggregate(
-                frames[scope], plan.in_scope(scope), _KEY
+
+        def aggregates() -> tuple:
+            per_partition_errors: dict = {}
+            stats: dict = {}  # partition → its Job 1 row (_rows, _files)
+            for p, (row, errs) in _aggregate(
+                df, plan.in_scope(plan.root), _KEY, lineage
             ).items():
-                per_partition_errors[p].extend(errs)
+                stats[p] = row
+                per_partition_errors[p] = errs
+            for scope in plan.scopes[1:]:
+                for p, (_, errs) in _aggregate(
+                    frames[scope], plan.in_scope(scope), _KEY
+                ).items():
+                    per_partition_errors[p].extend(errs)
+            return per_partition_errors, stats
 
         # Job 2: uniqueness with per-partition attribution — each partition
         # is charged its own members of globally-duplicated groups
-        retro_violations: list = []
         partials = [
             _unique_partials(frames[s], F.col(_KEY), targets)
             for s in plan.scopes
             if (targets := [c.unique for c in plan.in_scope(s) if c.unique])
         ]
-        if partials and per_partition_errors:
-            partials = reduce(DataFrame.unionByName, partials)
-            if self.unique_resume == "exact" and (
-                self.checkpoint_dir or self.checkpoint_table
-            ):
-                if chosen_run_id is not None:
-                    self._refuse_orphaned_run_id(spark, run_id, verdict_keys)
+        partials = reduce(DataFrame.unionByName, partials) if partials else None
+        if partials is not None and exact and chosen_run_id is not None:
+            self._refuse_orphaned_run_id(spark, run_id, verdict_keys)
+
+        def uniqueness() -> dict:
+            """Job 2's half that needs nothing from Job 1."""
+            if partials is None:
+                return {}
+            if exact:
                 # write partials BEFORE verdicts: a crash between the two
                 # leaves orphan partials that _trusted_partials ignores
                 self._persist_unique_partials(partials, run_id)
-                tagged = self._trusted_partials(
-                    spark, verdict_keys, run_id, list(per_partition_errors)
+                return {}
+            # local mode, or nothing to resume from: this call's partials
+            # alone, straight from the scan
+            return _charge(partials.withColumn("_prior", F.lit(False)))
+
+        (per_partition_errors, stats), charges = _concurrently(aggregates, uniqueness)
+        retro_violations: list = []
+        if partials is not None and per_partition_errors:
+            if exact:
+                charges = _charge(
+                    self._trusted_partials(
+                        spark, verdict_keys, run_id, list(per_partition_errors)
+                    )
                 )
-            else:
-                # local mode, or nothing to resume from: this call's
-                # partials alone, straight from the scan
-                tagged = partials.withColumn("_prior", F.lit(False))
-            charges = _charge(tagged) if tagged is not None else {}
             for (p, loc), (count, prior) in charges.items():
                 if p in per_partition_errors:
                     per_partition_errors[p].append(count_error("unique", loc, count))
@@ -477,14 +560,10 @@ class ValidationRunner:
 
     def report(self, spark: SparkSession) -> DataFrame:
         """The persisted violations table for this checkpoint."""
-        if self.checkpoint_table:
-            return spark.table(f"{self.checkpoint_table}_violations")
-        return spark.read.parquet(f"{self.checkpoint_dir}/violations")
+        return self._stored(spark, "violations")
 
     def verdicts(self, spark: SparkSession) -> DataFrame:
-        if self.checkpoint_table:
-            return spark.table(f"{self.checkpoint_table}_verdicts")
-        return spark.read.parquet(f"{self.checkpoint_dir}/verdicts")
+        return self._stored(spark, "verdicts")
 
 
 def _violation_row(partition, err, run_id: str) -> dict:
@@ -502,30 +581,18 @@ def _violation_row(partition, err, run_id: str) -> dict:
 def _unique_partials(df: DataFrame, part, targets: list) -> DataFrame:
     """Per-(partition, column, key) local member counts — one scan.
 
-    Stage 1 (salted by the partition column itself + key value):
-    ``groupBy(column, value, partition)`` partial counts; the key value is
-    then md5-hashed (post-agg, so the shuffle groups on exact values) into
-    a 16-byte persistable digest.  Output columns: ``_p, k, h, cnt``.
+    Each value is hashed before the shuffle into ``find_errors``' xxhash64
+    pair (``_key_hashes``: 16 bytes cross the shuffle per key, not the raw
+    value), then ``groupBy(column, h1, h2, partition)`` counts the members.
+    Output columns: ``_p, k, h1, h2, cnt``.
     """
-    pairs = F.array(
-        *[F.struct(key.alias("k"), value.alias("v")) for _, key, value in targets]
+    exploded = (
+        df.select(part.alias("_p"), F.explode(_key_hashes(targets)).alias("pair"))
+        .select("_p", "pair.k", "pair.h1", "pair.h2")
+        .filter(F.col("k").isNotNull())
     )
-    exploded = df.select(
-        part.alias("_p"), F.explode(pairs).alias("pair")
-    ).select("_p", F.col("pair.k").alias("k"), F.col("pair.v").alias("v"))
-    exploded = exploded.filter(F.col("k").isNotNull())
-    return (
-        exploded.groupBy("k", "v", "_p")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "_p",
-            "k",
-            # to_json(struct(v)) serializes ANY key dtype deterministically
-            # (NULL keys collapse to '{}' — null==null for uniqueness, same
-            # as the raw-value grouping this replaces)
-            F.md5(F.to_json(F.struct("v"))).alias("h"),
-            "cnt",
-        )
+    return exploded.groupBy("k", "h1", "h2", "_p").agg(
+        F.count(F.lit(1)).alias("cnt")
     )
 
 
@@ -534,7 +601,7 @@ def _charge(tagged: DataFrame) -> dict:
     (column, key) group whose GLOBAL total exceeds 1 — cross-partition
     duplicates are attributed to every partition that holds a member.
 
-    One job over partials tagged ``_prior``: one ``(k, h)`` window computes
+    One job over partials tagged ``_prior``: one ``(k, h1, h2)`` window computes
     the merged total and the prior-only total (a window, not an aggregate
     joined back, so the partials are read once), then one ``(_p, k)``
     aggregate sums both charges.  Output is driver-sized:
@@ -542,7 +609,7 @@ def _charge(tagged: DataFrame) -> dict:
     """
     from pyspark.sql.window import Window  # noqa: PLC0415
 
-    by_key = Window.partitionBy("k", "h")
+    by_key = Window.partitionBy("k", "h1", "h2")
     prior_cnt = F.when(F.col("_prior"), F.col("cnt")).otherwise(F.lit(0))
     charged = (
         tagged.select(
@@ -575,3 +642,28 @@ def _outside(col, values: set):
     non_null = [v for v in values if v is not None]
     named = ~col.isin(*non_null) if non_null else F.lit(True)
     return (col.isNotNull() & named) | (col.isNull() & F.lit(None not in values))
+
+
+def _concurrently(first, second) -> tuple:
+    """``(first(), second())``, the two run at once: *second* on a
+    ``pyspark.InheritableThread``, so its Spark jobs keep the caller's job
+    group and local properties (a plain thread drops them).  Both finish
+    before this returns; the first exception, in argument order, is
+    re-raised."""
+    out: dict = {}
+
+    def side() -> None:
+        try:
+            out["value"] = second()
+        except BaseException as exc:  # re-raised on the calling thread
+            out["error"] = exc
+
+    thread = InheritableThread(side)
+    thread.start()
+    try:
+        result = first()
+    finally:
+        thread.join()
+    if "error" in out:
+        raise out["error"]
+    return result, out["value"]

@@ -2,6 +2,7 @@
 
 import datetime as dt
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -461,7 +462,7 @@ def test_runner_checkpoint_rows_are_local_relations(spark, tmp_path, monkeypatch
     ValidationRunner(
         _Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"), unique_resume="exact"
     ).run(df)
-    assert set(plans) == {"unique_partials", "verdicts", "violations"}
+    assert set(plans) == {"unique_keys", "verdicts", "violations"}
     for store in ("verdicts", "violations"):
         (plan,) = plans[store]
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
@@ -517,16 +518,22 @@ def _input_records(spark, group: str) -> int:
     )
 
 
-def test_runner_exact_resume_reads_source_twice_and_store_once(spark, tmp_path):
-    """An exact-mode resume scans each pending row at most twice (the
-    aggregate and the partials) and the stored partials once."""
+def _partitioned_source(spark, tmp_path):
+    """4,000 rows over eight ``partitionBy("p")`` directories, with one
+    cross-partition duplicate group of ``u`` (40 members)."""
     src = str(tmp_path / "src")
     spark.range(4_000).select(
         (F.col("id") % 8).cast("int").alias("p"),
         # one cross-partition duplicate group per 100 ids
         F.when(F.col("id") % 100 == 0, F.lit(-1)).otherwise(F.col("id")).alias("u"),
     ).write.partitionBy("p").parquet(src)
-    df = spark.read.parquet(src)
+    return spark.read.parquet(src)
+
+
+def test_runner_exact_resume_reads_source_twice_and_store_once(spark, tmp_path):
+    """An exact-mode resume scans each pending row at most twice (the
+    aggregate and the partials) and the stored partials once."""
+    df = _partitioned_source(spark, tmp_path)
     ckpt = str(tmp_path / "ckpt")
     ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
         df, where=F.col("p") < 4
@@ -541,7 +548,7 @@ def test_runner_exact_resume_reads_source_twice_and_store_once(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     read = _input_records(spark, "runner-resume-reads")
     pending = sum(v["n_rows"] for v in resume.verdicts)
-    stored = spark.read.parquet(f"{ckpt}/unique_partials").count()
+    stored = spark.read.parquet(f"{ckpt}/unique_keys").count()
     verdict_rows = spark.read.parquet(f"{ckpt}/verdicts").count() - len(resume.verdicts)
     assert pending == 2_000
     assert read <= 2 * pending + stored + verdict_rows, (read, pending, stored)
@@ -550,6 +557,141 @@ def test_runner_exact_resume_reads_source_twice_and_store_once(spark, tmp_path):
         _Unique, "p", checkpoint_dir=ckpt, unique_resume="exact"
     ).report(spark)
     assert sum(_dup_counts([r.asDict() for r in persisted.collect()]).values()) == 40
+
+
+def _job_ids(spark) -> set:
+    """Ids of every job the status store has seen."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_runner_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """The runner's concurrent branches run on threads that inherit the
+    caller's job group, and an exact-mode resume launches at most 11 jobs
+    (no schema-inference read, no ``distinct`` over the verdict keys)."""
+    df = _partitioned_source(spark, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
+        df, where=F.col("p") < 4
+    )
+    sc = spark.sparkContext
+    before = _job_ids(spark)
+    sc.setJobGroup("runner-resume-jobs", "exact resume")
+    try:
+        ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
+            df
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    launched = _job_ids(spark) - before
+    grouped = set(sc.statusTracker().getJobIdsForGroup("runner-resume-jobs"))
+    assert launched and launched <= grouped, (launched, grouped)
+    assert len(launched) <= 11, sorted(launched)
+
+
+def test_runner_failing_concurrent_branch_writes_no_verdicts(
+    spark, tmp_path, monkeypatch
+):
+    """A failure in the branch that runs beside Job 1 (the exact-mode
+    partials write) is re-raised by ``run()`` before any verdict is
+    written, and a retry under a fresh run_id reproduces the uninterrupted
+    totals (null keys, one group across the resume boundary, included)."""
+    rows = [(0, 1), (0, 7), (1, 2), (1, 2), (1, None), (2, 1), (3, 7), (3, None)]
+    df = spark.createDataFrame(rows, "p int, u int")
+    truth = _dup_counts(
+        ValidationRunner(
+            _Unique, "p", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
+        ).run(df).violations
+    )
+    # a null u is a missing value AND a member of the null duplicate group
+    assert truth == {"0": 2, "1": 4, "2": 1, "3": 3}
+
+    runner = ValidationRunner(
+        _Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"), unique_resume="exact"
+    )
+    runner.run(df.filter(F.col("p") < 2), run_id="r1")
+    finished = sorted(runner._verdict_keys(spark))
+
+    def fail(self, partials, run_id):
+        raise RuntimeError("partials write failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(ValidationRunner, "_persist_unique_partials", fail)
+        with pytest.raises(RuntimeError, match="partials write failed"):
+            runner.run(df, run_id="r2")
+    assert sorted(runner._verdict_keys(spark)) == finished
+
+    retry = runner.run(df, run_id="r3")
+    assert sorted(v["partition"] for v in retry.verdicts) == ["2", "3"]
+    persisted = runner.report(spark).filter(F.col("column") == "u").collect()
+    assert _dup_counts([r.asDict() for r in persisted]) == truth
+
+
+def _write_legacy_unique_store(spark, runner):
+    """A pre-``unique_keys`` exact-mode store: md5-hex key hashes."""
+    legacy = spark.createDataFrame(
+        [("0", "u", "c4ca4238a0b923820dcc509a6f75849b", 1, "old")],
+        "partition string, column string, key_hash string, cnt long, run_id string",
+    )
+    if runner.checkpoint_table:
+        legacy.write.saveAsTable(f"{runner.checkpoint_table}_unique_partials")
+    else:
+        legacy.write.parquet(f"{runner.checkpoint_dir}/unique_partials")
+
+
+def _store_snapshot(spark, runner) -> dict:
+    """Every checkpoint store's rows, legacy one included."""
+    stores = ("verdicts", "violations", "unique_keys", "unique_partials")
+    if runner.checkpoint_table:
+        frames = {
+            s: spark.table(f"{runner.checkpoint_table}_{s}")
+            for s in stores
+            if spark.catalog.tableExists(f"{runner.checkpoint_table}_{s}")
+        }
+    else:
+        frames = {
+            s: spark.read.parquet(f"{runner.checkpoint_dir}/{s}")
+            for s in stores
+            if os.path.isdir(f"{runner.checkpoint_dir}/{s}")
+        }
+    return {s: sorted(map(tuple, f.collect()), key=repr) for s, f in frames.items()}
+
+
+@pytest.mark.parametrize("storage", ["dir", "table"])
+def test_runner_exact_refuses_legacy_unique_store(spark, tmp_path, storage):
+    """Exact mode refuses a checkpoint that still holds the legacy
+    ``unique_partials`` store, before writing anything, and names the fix;
+    a local-mode resume of the same checkpoint still works."""
+    table = "patito_test_legacy_ckpt"
+    suffixes = ("_verdicts", "_violations", "_unique_keys", "_unique_partials")
+    where = (
+        {"checkpoint_table": table}
+        if storage == "table"
+        else {"checkpoint_dir": str(tmp_path / "ckpt")}
+    )
+    df = spark.createDataFrame([(0, 1), (1, 1), (2, 5), (2, 5)], "p int, u int")
+    for suffix in suffixes:
+        spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
+    try:
+        ValidationRunner(_Unique, "p", **where).run(df.filter(F.col("p") < 2))
+        exact = ValidationRunner(_Unique, "p", unique_resume="exact", **where)
+        _write_legacy_unique_store(spark, exact)
+        before = _store_snapshot(spark, exact)
+        assert set(before) == {"verdicts", "violations", "unique_partials"}
+
+        with pytest.raises(ValueError, match="fresh checkpoint") as refused:
+            exact.run(df)
+        assert "unique_resume='local'" in str(refused.value)
+        assert _store_snapshot(spark, exact) == before
+
+        resumed = ValidationRunner(_Unique, "p", **where).run(df)
+        assert resumed.skipped_partitions == ["0", "1"]
+        assert _dup_counts(resumed.violations) == {"2": 2}
+    finally:
+        for suffix in suffixes:
+            spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
 
 
 def test_runner_resumes_checkpoint_of_python_rdd_rows(spark, tmp_path, monkeypatch):

@@ -18,6 +18,17 @@ target and a scope.  Nested-struct fields (V8) are built off their parent
 column, guarded on parent non-nullness; a list-of-struct column (V9) opens
 a scope read off its exploded element ``_item``.
 
+A plan is compiled once per (model, schema, options) and SparkContext: the
+memo keeps the last ``_MEMO_SIZE`` plans, so a repeated call (every ingest
+micro-batch, every runner call) builds DataFrames only — under PySpark's
+py4j bridge every ``functions``/Column call is several round trips.  Each
+plan also holds, built at compile time, every scope's aliased Job 1 term
+list and its uniqueness targets' key-hash generator
+(``inline(_key_hashes(...))``, shared by :func:`_duplicate_counts` and the
+runner's partials).  A plan is shared, so it holds no DataFrame-bound
+Column, is never mutated after compilation, and hands out its schema-level
+errors as fresh ErrorWrappers per call.
+
 **Aggregate executor** (:func:`_aggregate`), per scope, unkeyed
 (:func:`find_errors`) or keyed by partition (``plans.runner``): Job 1 puts
 every record's terms in one ``agg`` (one scan, no shuffle); Job 1a, only on
@@ -29,12 +40,16 @@ exploded column of its parent's frame, the key carried along.  Uniqueness
 (V7) stays per executor: one hashed shuffle for all unique columns of a
 scope here (:func:`_duplicate_counts`), persisted partials in the runner;
 both group on the same pre-shuffle key hash pair (:func:`_key_hashes`).
+In :func:`find_errors` a scope's aggregate executor and its duplicate count
+need nothing from each other and run concurrently (:func:`_concurrently`);
+the errors keep their order: schema, aggregate, then duplicates.
 
 **Row executor** (:func:`row_flags`): the predicates as row flags, for
 ``flag_violations`` and everything routed by it; a list-of-struct record
 becomes ``exists(column, element -> predicate)``, its scope compiled again
-against the lambda element.  Uniqueness, aggregate and mixed constraints
-and schema-level errors have no row form.
+against the lambda element; the flag set is memoized like the plan.
+Uniqueness, aggregate and mixed constraints and schema-level errors have no
+row form.
 
 All expressions are native ``pyspark.sql.functions`` Columns — whole-stage
 codegen end to end, zero Python UDFs.  Check semantics mirror the reference
@@ -46,10 +61,13 @@ lengths are characters.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field, replace
 from functools import reduce
 from typing import Any, Callable, Optional
 
+from pyspark import InheritableThread, SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,6 +87,10 @@ from ..expr import Expr
 #: The reference reports the full set (validators.py:436); at web scale an
 #: unbounded collect_set is a driver OOM, so we cap (far above test domains).
 _ENUM_SAMPLE_CAP = 1000
+
+#: compiled plans (and the row executor's flag sets) kept per SparkContext,
+#: model, schema and options; past this many the least recently used goes
+_MEMO_SIZE = 64
 
 #: one builder per counted error message (exact reference wording)
 _COUNT_MESSAGES = {
@@ -104,7 +126,19 @@ class Scope:
     model: Optional[type] = None
     element: Optional[T.StructType] = None
     parent: Optional["Scope"] = None
-    errors: list = field(default_factory=list)  # schema-level, in this scope
+    #: schema-level errors in this scope, as (exception class, message, loc)
+    errors: list = field(default_factory=list)
+    # executor inputs, derived once the plan is compiled (:func:`_derive`)
+    counted: list = field(default_factory=list)  # records with Job 1 terms
+    aliases: list = field(default_factory=list)  # per record: name → alias
+    terms: list = field(default_factory=list)  # the aliased Job 1 terms
+    unique: list = field(default_factory=list)  # uniqueness targets
+    #: ``inline`` of the targets' key hashes: one ``(k, h1, h2)`` row each
+    key_hashes: Optional[Column] = None
+
+    def schema_errors(self) -> list:
+        """Fresh ErrorWrappers of :attr:`errors` (a plan is shared)."""
+        return [ErrorWrapper(cls(msg), loc=loc) for cls, msg, loc in self.errors]
 
 
 @dataclass(eq=False)
@@ -139,10 +173,31 @@ class CheckPlan:
 
     @property
     def schema_errors(self) -> list:
-        return [e for s in self.scopes for e in s.errors]
+        return [e for s in self.scopes for e in s.schema_errors()]
 
     def in_scope(self, scope: Scope) -> list:
         return [c for c in self.checks if c.scope is scope]
+
+
+_memo: OrderedDict = OrderedDict()
+_memo_lock = threading.Lock()
+
+
+def _memoized(key: tuple, build: Callable[[], Any]) -> Any:
+    """``build()``, kept under *key* and the active SparkContext: Columns
+    are JVM objects of one gateway, so no other context ever sees them.
+    Least recently used first out past ``_MEMO_SIZE`` entries."""
+    key = (SparkContext._active_spark_context, *key)
+    with _memo_lock:
+        if key in _memo:
+            _memo.move_to_end(key)
+            return _memo[key]
+    value = build()  # outside the lock: a race only compiles twice
+    with _memo_lock:
+        _memo[key] = value
+        while len(_memo) > _MEMO_SIZE:
+            _memo.popitem(last=False)
+    return value
 
 
 def compile_checks(
@@ -152,20 +207,46 @@ def compile_checks(
     allow_missing_columns: bool = False,
     allow_superfluous_columns: bool = False,
 ) -> CheckPlan:
-    """Compile *model* against a frame *schema* (driver only, no job)."""
-    plan = CheckPlan()
-    _compile_level(
-        plan,
-        plan.root,
-        model,
-        schema,
-        F.col,
-        guard=None,
-        columns=columns,
-        allow_missing_columns=allow_missing_columns,
-        allow_superfluous_columns=allow_superfluous_columns,
-    )
-    return plan
+    """Compile *model* against a frame *schema* (driver only, no job),
+    once per (model, schema, options): the plan is shared, never mutated."""
+
+    def build() -> CheckPlan:
+        plan = CheckPlan()
+        _compile_level(
+            plan,
+            plan.root,
+            model,
+            schema,
+            F.col,
+            guard=None,
+            columns=columns,
+            allow_missing_columns=allow_missing_columns,
+            allow_superfluous_columns=allow_superfluous_columns,
+        )
+        for scope in plan.scopes:
+            _derive(plan, scope)
+        return plan
+
+    options = (tuple(columns or ()), allow_missing_columns, allow_superfluous_columns)
+    return _memoized(("plan", model, schema.json(), *options), build)
+
+
+def _derive(plan: CheckPlan, scope: Scope) -> None:
+    """Fill *scope*'s executor inputs: its Job 1 term list, aliased, and the
+    key-hash generator of its uniqueness targets."""
+    checks = plan.in_scope(scope)
+    scope.counted = [c for c in checks if c.terms]
+    scope.aliases = [
+        {n: f"_c{i}_{n}" for n in c.terms} for i, c in enumerate(scope.counted)
+    ]
+    scope.terms = [
+        term.alias(scope.aliases[i][name])
+        for i, c in enumerate(scope.counted)
+        for name, term in c.terms.items()
+    ]
+    scope.unique = [c.unique for c in checks if c.unique]
+    if scope.unique:
+        scope.key_hashes = F.inline(_key_hashes(scope.unique))
 
 
 # ---------------------------------------------------------------------------
@@ -236,22 +317,28 @@ def find_errors(
     allow_superfluous_columns: bool = False,
 ) -> list[ErrorWrapper]:
     """Run every check; return accumulated ErrorWrappers (no raise).  Per
-    scope, root first: schema errors, aggregate executor, duplicates."""
+    scope, root first: schema errors, aggregate executor, duplicates; the
+    aggregate executor and the duplicate count run concurrently."""
     plan = compile_checks(
         model, df.schema, columns, allow_missing_columns, allow_superfluous_columns
     )
     frames = scope_frames(df, plan)
     errors: list[ErrorWrapper] = []
     for scope in plan.scopes:
-        checks = plan.in_scope(scope)
-        errors.extend(scope.errors)
-        for _, scope_errors in _aggregate(frames[scope], checks).values():
+        frame = frames[scope]
+        errors.extend(scope.schema_errors())
+        if scope.unique:
+            aggregated, duplicates = _concurrently(
+                lambda: _aggregate(frame, scope),
+                lambda: _duplicate_counts(frame, scope.key_hashes),
+            )
+        else:
+            aggregated, duplicates = _aggregate(frame, scope), {}
+        for _, scope_errors in aggregated.values():
             errors.extend(scope_errors)
-        unique = [c.unique for c in checks if c.unique]
-        if unique:
-            for loc, count in _duplicate_counts(frames[scope], unique).items():
-                if count > 0:
-                    errors.append(count_error("unique", loc, count))
+        for loc, count in duplicates.items():
+            if count > 0:
+                errors.append(count_error("unique", loc, count))
     return errors
 
 
@@ -285,20 +372,14 @@ def _compile_level(
             spec = specs.get(missing)
             if spec is None or not spec.allow_missing:
                 scope.errors.append(
-                    ErrorWrapper(
-                        MissingColumnsError("Missing column"),
-                        loc=_join_loc(loc, missing),
-                    )
+                    (MissingColumnsError, "Missing column", _join_loc(loc, missing))
                 )
 
     # V2 superfluous columns (validators.py:132-140)
     if not (allow_superfluous_columns or model.model_config.get("extra") == "allow"):
         for extra in sorted(set(column_subset) - set(specs)):
             scope.errors.append(
-                ErrorWrapper(
-                    SuperfluousColumnsError("Superfluous column"),
-                    loc=_join_loc(loc, extra),
-                )
+                (SuperfluousColumnsError, "Superfluous column", _join_loc(loc, extra))
             )
 
     for name, spec in specs.items():
@@ -551,13 +632,9 @@ def _constraint_render(loc: str, n_agg: int) -> Callable:
     return render
 
 
-def _dtype_error(df_type: T.DataType, loc: str) -> ErrorWrapper:
-    return ErrorWrapper(
-        ColumnDTypeError(
-            f"Spark dtype {df_type.simpleString()} does not match model field type."
-        ),
-        loc=loc,
-    )
+def _dtype_error(df_type: T.DataType, loc: str) -> tuple:
+    message = f"Spark dtype {df_type.simpleString()} does not match model field type."
+    return ColumnDTypeError, message, loc
 
 
 def _any_false(exprs: list, resolve: Callable[[str], Column]) -> Column:
@@ -604,20 +681,15 @@ def scope_frames(df: DataFrame, plan: CheckPlan, key: Optional[str] = None) -> d
 
 def _aggregate(
     frame: DataFrame,
-    checks: list,
+    scope: Scope,
     key: Optional[str] = None,
     extra: Optional[dict] = None,
 ) -> dict:
-    """Run one scope's records over *frame*: ``{key value: (Job 1 row,
+    """Run *scope*'s records over *frame*: ``{key value: (Job 1 row,
     errors)}`` (one entry, key None, unkeyed).  *extra* aggregate terms
     ride Job 1 and come back in its row."""
-    checks = [c for c in checks if c.terms]
-    aliases = [{n: f"_c{i}_{n}" for n in c.terms} for i, c in enumerate(checks)]
-    terms = [
-        term.alias(aliases[i][name])
-        for i, c in enumerate(checks)
-        for name, term in c.terms.items()
-    ] + [term.alias(name) for name, term in (extra or {}).items()]
+    checks, aliases = scope.counted, scope.aliases
+    terms = scope.terms + [term.alias(name) for name, term in (extra or {}).items()]
     if not terms:
         return {}
 
@@ -723,11 +795,16 @@ def _enum_sample_values(
 
 def row_flags(model: type, schema: T.StructType) -> dict:
     """Row-flag name → per-row violation predicate of every record with a
-    row form (for the columns of *model* present in *schema*)."""
-    plan = compile_checks(
-        model, schema, allow_missing_columns=True, allow_superfluous_columns=True
-    )
-    return _scope_flags(plan, plan.root)
+    row form (for the columns of *model* present in *schema*), built once
+    per (model, schema)."""
+
+    def build() -> dict:
+        plan = compile_checks(
+            model, schema, allow_missing_columns=True, allow_superfluous_columns=True
+        )
+        return _scope_flags(plan, plan.root)
+
+    return dict(_memoized(("row_flags", model, schema.json()), build))
 
 
 def _scope_flags(plan: CheckPlan, scope: Scope) -> dict:
@@ -785,15 +862,14 @@ def _key_hashes(targets: list[tuple[str, Column, Column]]) -> Column:
     )
 
 
-def _duplicate_counts(
-    df: DataFrame, targets: list[tuple[str, Column, Column]]
-) -> dict[str, int]:
+def _duplicate_counts(df: DataFrame, key_hashes: Column) -> dict[str, int]:
     """Duplicate-member count per unique column, in ONE job.
 
-    Each row emits one ``(k, h1, h2)`` triple per unique column, where
-    h1/h2 are two independently-seeded 64-bit hashes of the value — the
-    shuffle carries 16 bytes per pair instead of raw values (urls can be
-    hundreds of bytes), and a double collision is ~2^-128, i.e. never.
+    *key_hashes* (a scope's compiled generator) emits one ``(k, h1, h2)``
+    row per unique column, where h1/h2 are two independently-seeded 64-bit
+    hashes of the value — the shuffle carries 16 bytes per pair instead of
+    raw values (urls can be hundreds of bytes), and a double collision is
+    ~2^-128, i.e. never.
     Spark's partial aggregation IS the salted pre-combine: hot keys (hot
     URL domains) collapse map-side, so no reducer ever receives more than
     #map-partitions rows per key — an explicit extra salt stage would just
@@ -802,13 +878,10 @@ def _duplicate_counts(
     reference's ``is_duplicated().sum()`` semantics (``validators.py:
     235-244``: a duplicated pair counts 2; nulls form a group).
     """
-    exploded = (
-        df.select(F.explode(_key_hashes(targets)).alias("p"))
-        .select("p.k", "p.h1", "p.h2")
-        .filter(F.col("k").isNotNull())
-    )
     counts = (
-        exploded.groupBy("k", "h1", "h2")
+        df.select(key_hashes)
+        .filter(F.col("k").isNotNull())
+        .groupBy("k", "h1", "h2")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") > 1)
         .groupBy("k")
@@ -816,3 +889,28 @@ def _duplicate_counts(
         .collect()
     )
     return {row["k"]: row["dups"] for row in counts}
+
+
+def _concurrently(first, second) -> tuple:
+    """``(first(), second())``, the two run at once: *second* on a
+    ``pyspark.InheritableThread``, so its Spark jobs keep the caller's job
+    group and local properties (a plain thread drops them).  Both finish
+    before this returns; the first exception, in argument order, is
+    re-raised."""
+    out: dict = {}
+
+    def side() -> None:
+        try:
+            out["value"] = second()
+        except BaseException as exc:  # re-raised on the calling thread
+            out["error"] = exc
+
+    thread = InheritableThread(side)
+    thread.start()
+    try:
+        result = first()
+    finally:
+        thread.join()
+    if "error" in out:
+        raise out["error"]
+    return result, out["value"]

@@ -8,9 +8,10 @@ interrupted 10^12-row run resumes at partition granularity.
 
 Execution plan per run (SURVEY §4.3):
 
-1. **Job 0 (driver)** — the model is compiled once (``plans.checks.
-   compile_checks``); its schema-level errors (missing/superfluous/dtype)
-   are recorded once per run with ``partition = '*'``.
+1. **Job 0 (driver)** — the model is compiled once per schema
+   (``plans.checks.compile_checks``, memoized across calls); its
+   schema-level errors (missing/superfluous/dtype) are recorded once per
+   run with ``partition = '*'``.
 2. **pending = partitions ∉ checkpoint** — the verdict store is read once:
    its (partition, run_id) pairs are collected (partition lists are small —
    even 10^12 rows is ~10^4-10^5 date partitions) and the finished
@@ -37,7 +38,8 @@ Execution plan per run (SURVEY §4.3):
 
 Job 1 and the scan side of Job 2 (the partials write in exact mode, the
 whole charge in local mode) do not depend on each other, so they run
-concurrently, as do the two writes of step 5.  The second branch runs on a
+concurrently, as do the two writes of step 5 (``plans.checks.
+_concurrently``).  The second branch runs on a
 ``pyspark.InheritableThread``: its jobs keep the caller's job group and
 local properties.  Both branches are joined before the run goes on, and
 the first exception is re-raised.  The checkpoint stores are read with
@@ -92,7 +94,6 @@ import uuid
 from functools import reduce
 from typing import Optional
 
-from pyspark import InheritableThread
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,7 +102,7 @@ from pyspark.sql import types as T
 from ..errors import get_exc_type
 from .checks import (
     _aggregate,
-    _key_hashes,
+    _concurrently,
     _transform_df,
     compile_checks,
     count_error,
@@ -472,24 +473,20 @@ class ValidationRunner:
         def aggregates() -> tuple:
             per_partition_errors: dict = {}
             stats: dict = {}  # partition → its Job 1 row (_rows, _files)
-            for p, (row, errs) in _aggregate(
-                df, plan.in_scope(plan.root), _KEY, lineage
-            ).items():
+            for p, (row, errs) in _aggregate(df, plan.root, _KEY, lineage).items():
                 stats[p] = row
                 per_partition_errors[p] = errs
             for scope in plan.scopes[1:]:
-                for p, (_, errs) in _aggregate(
-                    frames[scope], plan.in_scope(scope), _KEY
-                ).items():
+                for p, (_, errs) in _aggregate(frames[scope], scope, _KEY).items():
                     per_partition_errors[p].extend(errs)
             return per_partition_errors, stats
 
         # Job 2: uniqueness with per-partition attribution — each partition
         # is charged its own members of globally-duplicated groups
         partials = [
-            _unique_partials(frames[s], F.col(_KEY), targets)
+            _unique_partials(frames[s], F.col(_KEY), s.key_hashes)
             for s in plan.scopes
-            if (targets := [c.unique for c in plan.in_scope(s) if c.unique])
+            if s.unique
         ]
         partials = reduce(DataFrame.unionByName, partials) if partials else None
         if partials is not None and exact and chosen_run_id is not None:
@@ -578,21 +575,20 @@ def _violation_row(partition, err, run_id: str) -> dict:
     }
 
 
-def _unique_partials(df: DataFrame, part, targets: list) -> DataFrame:
+def _unique_partials(df: DataFrame, part, key_hashes) -> DataFrame:
     """Per-(partition, column, key) local member counts — one scan.
 
     Each value is hashed before the shuffle into ``find_errors``' xxhash64
-    pair (``_key_hashes``: 16 bytes cross the shuffle per key, not the raw
-    value), then ``groupBy(column, h1, h2, partition)`` counts the members.
-    Output columns: ``_p, k, h1, h2, cnt``.
+    pair (*key_hashes*, the scope's compiled ``plans.checks._key_hashes``
+    generator: 16 bytes cross the shuffle per key, not the raw value), then
+    ``groupBy(column, h1, h2, partition)`` counts the members.  Output
+    columns: ``_p, k, h1, h2, cnt``.
     """
-    exploded = (
-        df.select(part.alias("_p"), F.explode(_key_hashes(targets)).alias("pair"))
-        .select("_p", "pair.k", "pair.h1", "pair.h2")
+    return (
+        df.select(part.alias("_p"), key_hashes)
         .filter(F.col("k").isNotNull())
-    )
-    return exploded.groupBy("k", "h1", "h2", "_p").agg(
-        F.count(F.lit(1)).alias("cnt")
+        .groupBy("k", "h1", "h2", "_p")
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
@@ -643,27 +639,3 @@ def _outside(col, values: set):
     named = ~col.isin(*non_null) if non_null else F.lit(True)
     return (col.isNotNull() & named) | (col.isNull() & F.lit(None not in values))
 
-
-def _concurrently(first, second) -> tuple:
-    """``(first(), second())``, the two run at once: *second* on a
-    ``pyspark.InheritableThread``, so its Spark jobs keep the caller's job
-    group and local properties (a plain thread drops them).  Both finish
-    before this returns; the first exception, in argument order, is
-    re-raised."""
-    out: dict = {}
-
-    def side() -> None:
-        try:
-            out["value"] = second()
-        except BaseException as exc:  # re-raised on the calling thread
-            out["error"] = exc
-
-    thread = InheritableThread(side)
-    thread.start()
-    try:
-        result = first()
-    finally:
-        thread.join()
-    if "error" in out:
-        raise out["error"]
-    return result, out["value"]

@@ -231,9 +231,10 @@ def write_validated(
     scales this sink targets, while a second columnar scan is cheap.
     Without ``quarantine_path``, violating rows are dropped but still
     counted.  Returns ``{"written": n, "quarantined": n}`` — counted from
-    the written parquet footers (metadata-only, no extra data scan); with
-    ``mode="append"`` the counts therefore include pre-existing rows at
-    the destination.
+    the written parquet footers (metadata-only, no extra data scan), each
+    sink read back with the written frame's schema (no schema-inference
+    job); with ``mode="append"`` the counts therefore include pre-existing
+    rows at the destination.
 
     Note the scope (same as the streaming router): ROW-level checks only —
     nullability, nulls inside lists, bounds and patterns, enums (scalar and
@@ -260,14 +261,16 @@ def write_validated(
     good = flagged.filter(F.col("_valid")).drop("_valid", "_violations")
     good.write.format(fmt).mode(mode).save(path)
     spark = df.sparkSession
-    written = spark.read.format(fmt).load(path).count()
+    written = spark.read.format(fmt).schema(good.schema).load(path).count()
     spec_hash = hashlib.md5(model.spec_json().encode()).hexdigest()
     bad = flagged.filter(~F.col("_valid")).drop("_valid").withColumn(
         "_spec_hash", F.lit(spec_hash)
     )
     if quarantine_path is not None:
         bad.write.format(fmt).mode(mode).save(quarantine_path)
-        quarantined = spark.read.format(fmt).load(quarantine_path).count()
+        quarantined = (
+            spark.read.format(fmt).schema(bad.schema).load(quarantine_path).count()
+        )
     else:
         quarantined = bad.count()
     return {"written": written, "quarantined": quarantined}

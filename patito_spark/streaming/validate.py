@@ -9,7 +9,12 @@ predicates the batch aggregate executor counts.
 
 - ``flag_violations`` — per-row ``_valid`` flag + an array of the failing
   check names, as a stateless projection (works on any stream, no
-  watermark needed).
+  watermark needed).  ``_valid`` is ``~(coalesce(p1, false) OR
+  coalesce(p2, false) OR ...)`` over the predicates themselves — the same
+  verdict as ``size(_violations) == 0`` (a NULL predicate is no
+  violation), but the valid branch never builds the array and the
+  quarantine branch builds it only for the rows it keeps.  Both columns
+  are built once per (model, schema).
 - ``windowed_violation_counts`` — event-time windowed counts per check name
   with a watermark for late data, one row per window.
 
@@ -25,13 +30,14 @@ partitions.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans.checks import row_flags
+from ..plans.checks import _memoized, row_flags
 
 
 def flag_violations(df: DataFrame, model: type) -> DataFrame:
@@ -41,17 +47,30 @@ def flag_violations(df: DataFrame, model: type) -> DataFrame:
     (valid rows → main sink, invalid → quarantine) via ``foreachBatch`` or
     two filtered writeStreams.
     """
-    preds = row_flags(model, df.schema)
-    if not preds:
-        return df.withColumn("_valid", F.lit(True)).withColumn(
-            "_violations", F.array().cast(T.ArrayType(T.StringType()))
+    return df.withColumns(_router_columns(model, df.schema))
+
+
+def _router_columns(model: type, schema: T.StructType) -> dict:
+    """``_violations`` and ``_valid`` (defined in the module docstring) for
+    *model* over *schema*, built once."""
+
+    def build() -> dict:
+        preds = row_flags(model, schema)
+        if not preds:
+            return {
+                "_valid": F.lit(True),
+                "_violations": F.array().cast(T.ArrayType(T.StringType())),
+            }
+        violations = F.array_compact(
+            F.array(*[F.when(pred, F.lit(name)) for name, pred in preds.items()])
         )
-    viol = F.array_compact(
-        F.array(*[F.when(pred, F.lit(name)) for name, pred in preds.items()])
-    )
-    return df.withColumn("_violations", viol).withColumn(
-        "_valid", F.size("_violations") == 0
-    )
+        violated = [F.coalesce(pred, F.lit(False)) for pred in preds.values()]
+        return {
+            "_violations": violations,
+            "_valid": ~reduce(lambda a, b: a | b, violated),
+        }
+
+    return _memoized(("router", model, schema.json()), build)
 
 
 def validate_stream(

@@ -329,3 +329,198 @@ def test_jobs_main_checks_nested_fields(spark, tmp_path, capsys):
     }
     assert out["passed"] is False
     assert out["violations"] == sum(getattr(e.exc, "count", 1) for e in errors)
+
+
+# ---------------------------------------------------------------------------
+# one compiled plan per (model, schema, options); find_errors' two jobs
+# overlap; the router's `_valid` reads the predicates directly
+# ---------------------------------------------------------------------------
+
+
+class Small(pt.Model):
+    a: int = pt.Field(unique=True, ge=0)
+    b: str = pt.Field(allowed=["x"])
+    c: int
+    d: Optional[int] = pt.Field(le=5)
+
+
+@pytest.fixture(scope="module")
+def small(spark):
+    return spark.createDataFrame(
+        [(1, "x", "j", 1), (1, "y", "j", 9), (-1, "x", "j", 2), (2, "x", "j", None)],
+        "a bigint, b string, junk string, d bigint",
+    )
+
+
+def _compile_counter(monkeypatch) -> dict:
+    """A fresh, empty memo and a count of ``_compile_level`` entries (one
+    per compile for the flat models below)."""
+    from collections import OrderedDict
+
+    from patito_spark.plans import checks
+
+    monkeypatch.setattr(checks, "_memo", OrderedDict())
+    entered = {"n": 0}
+    compile_level = checks._compile_level
+
+    def counting(*args, **kwargs):
+        entered["n"] += 1
+        return compile_level(*args, **kwargs)
+
+    monkeypatch.setattr(checks, "_compile_level", counting)
+    return entered
+
+
+def test_compile_memo_compiles_once_per_schema_and_options(
+    spark, small, tmp_path, monkeypatch
+):
+    from patito_spark.plans import checks
+
+    entered = _compile_counter(monkeypatch)
+    first = find_errors(small, Small)
+    assert entered["n"] == 1
+    assert [str(e.exc) for e in find_errors(small, Small)] == [
+        str(e.exc) for e in first
+    ]
+    assert entered["n"] == 1
+    # schema errors handed out are fresh objects, never the shared plan's
+    again = find_errors(small, Small)
+    assert all(x is not y for x, y in zip(first, again))
+
+    flag_violations(small, Small)  # row mode: other options, one compile
+    assert entered["n"] == 2
+    flag_violations(small, Small)
+    flag_violations(small.select("a", "b", "junk", "d"), Small)  # equal schema
+    assert entered["n"] == 2
+
+    runner = ValidationRunner(Small, "a")
+    runner.run(small)
+    compiled = entered["n"]
+    runner.run(small)
+    ValidationRunner(Small, "a", checkpoint_dir=str(tmp_path / "ckpt")).run(small)
+    assert entered["n"] == compiled
+
+    find_errors(small.drop("junk"), Small)  # another schema
+    assert entered["n"] == compiled + 1
+    find_errors(small, Small, allow_superfluous_columns=True)  # other options
+    assert entered["n"] == compiled + 2
+    find_errors(small, Small, columns=["a", "b"])
+    assert entered["n"] == compiled + 3
+    # every plan belongs to the context that built it
+    assert all(key[0] is spark.sparkContext for key in checks._memo)
+
+
+def test_compile_memo_is_bounded(spark, monkeypatch):
+    import gc
+    import weakref
+
+    from pyspark.sql import types as T
+
+    from patito_spark.plans import checks
+    from patito_spark.plans.checks import compile_checks, row_flags
+
+    entered = _compile_counter(monkeypatch)
+    schema = T.StructType([T.StructField("v", T.LongType())])
+    refs = []
+    for i in range(checks._MEMO_SIZE + 10):
+        local = type(f"Local{i}", (pt.Model,), {"__annotations__": {"v": int}})
+        compile_checks(local, schema)
+        row_flags(local, schema)
+        refs.append(weakref.ref(local))
+        assert len(checks._memo) <= checks._MEMO_SIZE
+    del local
+    assert entered["n"] == 2 * len(refs)
+    gc.collect()
+    # the models evicted from the memo are not kept alive by it
+    assert refs[0]() is None
+
+
+def _job_ids(spark) -> set:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_find_errors_overlap_keeps_job_group_and_error_order(spark, small):
+    """Both concurrent branches launch their jobs in the caller's job group,
+    and the errors keep their order: schema, aggregate, then duplicates."""
+    sc = spark.sparkContext
+    before = _job_ids(spark)
+    sc.setJobGroup("find-errors-jobs", "find_errors")
+    try:
+        errors = find_errors(small, Small)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    launched = _job_ids(spark) - before
+    grouped = set(sc.statusTracker().getJobIdsForGroup("find-errors-jobs"))
+    assert launched and launched <= grouped, (launched, grouped)
+    assert [(e.loc_tuple(), type(e.exc).__name__, str(e.exc)) for e in errors] == [
+        (("c",), "MissingColumnsError", "Missing column"),
+        (("junk",), "SuperfluousColumnsError", "Superfluous column"),
+        (("a",), "RowValueError", "1 row with out of bound values."),
+        (("b",), "RowValueError", "Rows with invalid values: {'y'}."),
+        (("d",), "RowValueError", "1 row with out of bound values."),
+        (("a",), "RowValueError", "2 rows with duplicated values."),
+    ]
+
+
+def test_find_errors_concurrent_branch_failures(small, monkeypatch):
+    from patito_spark.plans import checks
+
+    class AggregateFailed(Exception):
+        pass
+
+    class DuplicatesFailed(Exception):
+        pass
+
+    def duplicates_fail(*args):
+        raise DuplicatesFailed()
+
+    def aggregate_fail(*args):
+        raise AggregateFailed()
+
+    monkeypatch.setattr(checks, "_duplicate_counts", duplicates_fail)
+    with pytest.raises(DuplicatesFailed):
+        find_errors(small, Small)
+    # both raise: the first branch in argument order (the aggregate) wins
+    monkeypatch.setattr(checks, "_aggregate", aggregate_fail)
+    with pytest.raises(AggregateFailed):
+        find_errors(small, Small)
+
+
+class OptionalKinds(pt.Model):
+    kinds: Optional[list[Literal["a", "b"]]]
+
+
+def test_valid_matches_empty_violations(spark, planted):
+    """``_valid`` is set from the predicates, yet equals ``size(_violations)
+    == 0`` on every row, NULL predicates included; the column order of the
+    flagged frame and both sinks is unchanged."""
+    from patito_spark.plans.checks import row_flags
+
+    with_nulls = planted.unionByName(
+        planted.limit(1).withColumn("kinds", F.lit(None).cast("array<string>"))
+    )
+    enum = row_flags(Planted, with_nulls.schema)["kinds__enum"]
+    assert with_nulls.filter(enum.isNull()).count() == 1
+    flagged = flag_violations(with_nulls, Planted)
+    assert flagged.columns == [*planted.columns, "_violations", "_valid"]
+    assert flagged.filter(F.col("_valid") != (F.size("_violations") == 0)).count() == 0
+    assert flagged.filter(F.col("_valid").isNull()).count() == 0
+    valid = flagged.filter(F.col("_valid")).drop("_valid", "_violations")
+    quarantine = flagged.filter(~F.col("_valid")).drop("_valid")
+    assert valid.columns == planted.columns
+    assert quarantine.columns == [*planted.columns, "_violations"]
+
+    # a NULL predicate alone is no violation
+    lists = spark.createDataFrame([(None,), (["a"],), (["q"],)], "kinds array<string>")
+    rows = flag_violations(lists, OptionalKinds).collect()
+    assert [(r["_valid"], list(r["_violations"])) for r in rows] == [
+        (True, []),
+        (True, []),
+        (False, ["kinds__enum"]),
+    ]
+    # no row-level check at all: every row valid, `_valid` first as before
+    none = flag_violations(lists.select(F.lit(1).alias("x")), OptionalKinds)
+    assert none.columns == ["x", "_valid", "_violations"]

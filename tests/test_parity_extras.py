@@ -247,3 +247,39 @@ def test_write_validated_quarantine_split(spark, tmp_path):
     # no quarantine path: dropped but counted
     counts2 = write_validated(df, M, str(tmp_path / "good2"))
     assert counts2 == {"written": 2, "quarantined": 3}
+
+
+def test_write_validated_reads_sinks_back_with_their_schema(spark, tmp_path):
+    """Each sink's count reads the written files with the written frame's
+    schema: two jobs per sink (write, count), no schema-inference job."""
+    from patito_spark.sources.io import write_validated
+
+    class M(pt.Model):
+        v: int = pt.Field(ge=0)
+
+    df = spark.createDataFrame([(1,), (-1,), (2,)], "v int")
+    sc = spark.sparkContext
+
+    def job_ids() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc._jsc.sc().statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    sc.setJobGroup("write-validated", "write_validated")
+    try:
+        counts = write_validated(
+            df, M, str(tmp_path / "good"), quarantine_path=str(tmp_path / "bad")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    launched = job_ids() - before
+    assert counts == {"written": 2, "quarantined": 1}
+    assert launched <= set(sc.statusTracker().getJobIdsForGroup("write-validated"))
+    # without a schema each read-back cost one more (inference) job: 8
+    assert len(launched) <= 6, sorted(launched)
+    # append: the counts still include the rows already at the sink
+    again = write_validated(
+        df, M, str(tmp_path / "good"), str(tmp_path / "bad"), mode="append"
+    )
+    assert again == {"written": 4, "quarantined": 2}

@@ -393,9 +393,9 @@ def _write_torn_partials(runner, df, run_id):
     from patito_spark.plans.runner import _unique_partials
 
     plan = compile_checks(runner.model, df.schema)
-    targets = [c.unique for c in plan.checks if c.unique]
     part = F.col(runner.partition_name).cast("string")
-    runner._persist_unique_partials(_unique_partials(df, part, targets), run_id)
+    partials = _unique_partials(df, part, plan.root.key_hashes)
+    runner._persist_unique_partials(partials, run_id)
 
 
 def _dup_counts(violations, column="u"):

@@ -3,7 +3,7 @@
 A from-scratch re-creation of the query/data-processing capabilities of
 JakobGM/patito (reference studied at /root/reference, v0.8.6), re-designed
 for Spark's distributed execution model: the whole check suite compiles to
-ONE single-pass DataFrame aggregation plus one salted uniqueness job, scales
+ONE single-pass DataFrame aggregation plus one hashed uniqueness count, scales
 to web-size tables, and emits per-partition verdicts with checkpoint/resume
 (see patito_spark.plans.runner).
 

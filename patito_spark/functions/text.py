@@ -30,7 +30,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "nl": ["de", "het", "een", "van", "niet"],
 }
 
-_TOKEN_PATTERN = r"[^\p{L}\p{N}']+"
 #: BPE-ish fallback used by token_count's subword estimate: word chunks of
 #: ≤4 chars approximate byte-pair vocab entries
 _SUBWORD_LEN = 4

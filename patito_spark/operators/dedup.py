@@ -10,7 +10,7 @@ reference — patito stops at column uniqueness, ``validators.py:235-244``):
   pairs only ever materialize within a bucket.  Buckets above
   ``max_bucket_size`` are dropped *and counted* — boilerplate pages would
   otherwise create O(n²) pair explosions (silent truncation would read as
-  "covered everything", so the count is returned).  Bucket sizing happens
+  "covered everything", so ``minhash_bucket_audit`` reports the count).  Bucket sizing happens
   BEFORE any member list is collected (see ``_bounded_buckets``), so a hot
   bucket never materializes an aggregation array.
 - **SimHash**: 60-bit signature via per-token hash bit-voting (single-pass
@@ -135,27 +135,17 @@ def _check_store_family(
     scale this is noise next to the batch job it guards).  All rows of a
     store carry the same literal by construction, so the first row is
     authoritative.  A store WITHOUT the column (written before the tag
-    existed) is accepted with a LOUD warning: an untagged store built
-    under different parameters would not error — it would silently
-    return ~no pairs (duplicates pass), the worst failure mode this
-    module has (VERDICT r7/ADVICE).  Upgrade legacy snapshots once via
-    :func:`tag_store` (or rewrite them through the current
-    ``*_signatures`` builder) to make the mismatch case impossible.
+    existed) is refused like a mismatched one: built under different
+    parameters it would not error — it would silently return ~no pairs
+    (duplicates pass), the worst failure mode this module has.
     """
     if FAMILY_COL not in store.columns:
-        import warnings
-
-        warnings.warn(
-            f"{caller}: signature store has no '{FAMILY_COL}' tag (pre-tag "
-            f"snapshot) — cannot verify it was built with family "
-            f"'{expected}'. A parameter mismatch would SILENTLY miss "
-            "near-duplicates, not raise. Upgrade the snapshot once with "
-            "patito_spark.operators.dedup.tag_store(store, ...) and "
-            "persist it.",
-            UserWarning,
-            stacklevel=3,
+        raise ValueError(
+            f"{caller}: signature store has no '{FAMILY_COL}' tag (written "
+            f"before the tag existed), so it cannot be checked against "
+            f"family '{expected}'. Rebuild the store with the current "
+            "*_signatures builder."
         )
-        return store
     row = store.select(FAMILY_COL).first()
     if row is not None and row[0] != expected:
         raise ValueError(
@@ -166,35 +156,6 @@ def _check_store_family(
             "parameters"
         )
     return store.drop(FAMILY_COL)
-
-
-def tag_store(store: DataFrame, kind: str, **params) -> DataFrame:
-    """One-time upgrade of a legacy (pre-tag) signature store: stamp the
-    family the caller KNOWS it was built with, so every later consumer
-    asserts instead of trusting.
-
-    ``kind``/``params`` must mirror the builder that produced the store —
-    e.g. a pre-r7 minhash snapshot (all of which used the 4-slice md5
-    family)::
-
-        tagged = tag_store(store, "minhash",
-                           num_hashes=16, bands=4, shingle_n=3, slices=4)
-        tagged.write.parquet(...)   # persist; the warning never fires again
-
-    Refuses a store that already carries a (different) tag — retagging a
-    tagged store is either a no-op or a lie.
-    """
-    tag = _family_tag(kind, **params)
-    if FAMILY_COL in store.columns:
-        row = store.select(FAMILY_COL).first()
-        if row is not None and row[0] != tag:
-            raise ValueError(
-                f"tag_store: store already tagged '{row[0]}' — refusing to "
-                f"restamp as '{tag}'; a retag cannot fix a family mismatch, "
-                "rebuild the store instead"
-            )
-        return store
-    return store.withColumn(FAMILY_COL, F.lit(tag))
 
 
 def replace_in_store(
@@ -228,7 +189,7 @@ def replace_in_store(
     Scale shape: the batch-sized id set broadcasts (AQE), the store is
     scanned once with a broadcast anti probe and NEVER shuffled; the
     ``family`` tag column rides through untouched.  Works on any
-    id-keyed store (minhash / simhash / embedding signatures) — NOT on
+    id-keyed store (e.g. :func:`minhash_signatures`) — NOT on
     the one-column exact-dedup fingerprint store, which carries no ids:
     a replaced document's old fingerprint stays behind as a conservative
     tombstone (text identical to a removed crawl is still treated as
@@ -326,7 +287,7 @@ def minhash_candidate_pairs(
 
     Pipeline: signature → band buckets → explode(band) → salted bucket
     grouping → pairs within surviving buckets.  Oversized buckets are
-    dropped; their count is exposed via ``minhash_oversized_buckets``.
+    dropped; :func:`minhash_bucket_audit` counts them per band.
     """
     banded = _minhash_banded(df, id_col, text_col, num_hashes, bands, shingle_n)
     ok = _bounded_buckets(
@@ -617,10 +578,10 @@ def incremental_minhash_pairs(
     built.  *num_hashes*/*bands*/*shingle_n* must match the parameters
     the store was built with (different families collide meaninglessly);
     the store's persisted ``family`` tag is asserted against them before
-    anything joins (a mismatch raises — legacy stores without the tag
-    are accepted and stay a caller obligation).  Batch ids must be
-    disjoint from stored ids (re-crawled documents should have their old
-    store rows replaced first — see :func:`replace_in_store`).
+    anything joins (a mismatch or a store without the tag raises).
+    Batch ids must be disjoint from stored ids (re-crawled documents
+    should have their old store rows replaced first — see
+    :func:`replace_in_store`).
 
     Bucket sizes are gated over the UNION (store + batch), matching what
     a from-scratch run over the merged corpus would see.  Consequently a
@@ -699,23 +660,6 @@ def incremental_minhash_pairs(
         .select("p.id_a", "p.id_b")
         .distinct()
     )
-
-
-def minhash_oversized_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 3,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
-) -> int:
-    """How many LSH buckets the pair stage dropped for being oversized."""
-    audit = minhash_bucket_audit(
-        df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket_size
-    )
-    row = audit.agg(F.sum("n_oversized")).first()
-    return int(row[0] or 0)
 
 
 def jaccard_of_pairs(
@@ -920,118 +864,6 @@ def simhash_candidate_pairs(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, chunks: int = 4
-) -> DataFrame:
-    """``(id, simhash, chunk, value, family)`` banded rows — the
-    persistable SimHash dedup state, the pigeonhole-family twin of
-    :func:`minhash_signatures`.  ``chunks`` rows per document; the stored
-    ``simhash`` lets incremental verification recompute exact hamming
-    against old documents without touching their text.  The constant
-    ``family`` tag column encodes ``chunks`` (and the fixed signature
-    width) and is asserted by :func:`incremental_simhash_pairs` before
-    joining — a mismatched store raises instead of silently bucketing
-    incompatibly."""
-    banded = _simhash_banded(df, id_col, text_col, chunks)
-    tag = _family_tag("simhash", chunks=chunks, bits=SIMHASH_BITS)
-    return banded.select(
-        F.col("_id").alias(id_col),
-        F.col("_sh").alias("simhash"),
-        "chunk",
-        "value",
-        F.lit(tag).alias(FAMILY_COL),
-    )
-
-
-def incremental_simhash_pairs(
-    new_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    stored_signatures: DataFrame,
-    max_hamming: int = 3,
-    chunks: int = 4,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """SimHash near-dup pairs INTRODUCED by a new batch against a
-    :func:`simhash_signatures` store — same contract as
-    :func:`incremental_minhash_pairs`: signatures compute only for the
-    batch, the corpus-sized store is scanned once and semi-joined down to
-    batch-touched ``(chunk, value)`` buckets before anything shuffles,
-    bucket sizes gate over the union, every returned pair touches a new
-    document, and hamming is verified exactly from the stored signatures
-    (old texts are never re-read).  Batch ids must be disjoint from
-    stored ids (see :func:`replace_in_store` for re-crawls); ``chunks``
-    must match the store — the store's persisted
-    ``family`` tag is asserted before joining (mismatch raises; legacy
-    tag-less stores are accepted).
-    """
-    stored_signatures = _check_store_family(
-        stored_signatures,
-        _family_tag("simhash", chunks=chunks, bits=SIMHASH_BITS),
-        "incremental_simhash_pairs",
-    )
-    new_banded = _simhash_banded(new_df, id_col, text_col, chunks).withColumn(
-        "_new", F.lit(True)
-    )
-    touched = new_banded.select("chunk", "value").distinct()
-    stored = (
-        stored_signatures.select(
-            F.col(id_col).alias("_id"),
-            F.col("simhash").alias("_sh"),
-            F.col("chunk"),
-            F.col("value"),
-        )
-        .join(touched, ["chunk", "value"], "left_semi")
-        .withColumn("_new", F.lit(False))
-    )
-    union = stored.unionByName(new_banded)
-    ok = _bounded_buckets(
-        union, ["chunk", "value"], max_bucket_size,
-        F.sort_array(
-            F.collect_list(F.struct("_id", "_sh", "_new"))
-        ).alias("members"),
-    )
-    pairs = (
-        ok.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("members") - 2),
-                        lambda i: F.transform(
-                            F.slice(F.col("members"), i + 2, F.size("members")),
-                            lambda m: F.struct(
-                                F.get(F.col("members"), i.cast("int"))[
-                                    "_id"
-                                ].alias("id_a"),
-                                m["_id"].alias("id_b"),
-                                F.get(F.col("members"), i.cast("int"))[
-                                    "_sh"
-                                ].alias("sh_a"),
-                                m["_sh"].alias("sh_b"),
-                                F.get(F.col("members"), i.cast("int"))[
-                                    "_new"
-                                ].alias("new_a"),
-                                m["_new"].alias("new_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .filter(
-            (F.col("p.new_a") | F.col("p.new_b"))
-            & (F.col("p.id_a") != F.col("p.id_b"))
-        )
-        .select("p.id_a", "p.id_b", "p.sh_a", "p.sh_b")
-        .distinct()
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        hamming_distance(F.col("sh_a"), F.col("sh_b")).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
-
-
 # ---------------------------------------------------------------------------
 # n-gram Jaccard within blocks
 # ---------------------------------------------------------------------------
@@ -1181,125 +1013,4 @@ def embedding_near_duplicates(
         "id_a",
         "id_b",
         F.round(cosine_similarity(F.col("v_a"), F.col("v_b")), 6).alias("cosine"),
-    ).filter(F.col("cosine") >= threshold).distinct()
-
-
-def embedding_signatures(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    planes: int = 12,
-    dim: Optional[int] = None,
-) -> DataFrame:
-    """``(id, bucket, embedding, family)`` rows — the persistable
-    embedding-LSH dedup state (the vector rides along so incremental
-    verification can compute exact cosine against old documents without
-    re-reading the corpus).  One row per document.  ``planes``/``dim``
-    must match between the store build and every later incremental call
-    (different hyperplane families bucket incompatibly) — the constant
-    ``family`` tag column encodes both plus the hyperplane-seed version,
-    and :func:`incremental_embedding_near_dups` asserts it before
-    joining."""
-    if dim is None:
-        first = df.select(F.size(vec_col)).first()
-        dim = int(first[0]) if first else 0
-    hashed = _hyperplane_hashed(df, id_col, vec_col, planes, dim)
-    tag = _family_tag("embedding-lsh", planes=planes, dim=dim, seed="md5v1")
-    return hashed.select(
-        F.col("_id").alias(id_col),
-        F.col("_b").alias("bucket"),
-        F.col("_v").alias("embedding"),
-        F.lit(tag).alias(FAMILY_COL),
-    )
-
-
-def incremental_embedding_near_dups(
-    new_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    stored_signatures: DataFrame,
-    threshold: float = 0.95,
-    planes: int = 12,
-    dim: Optional[int] = None,
-    max_bucket_size: int = 256,
-) -> DataFrame:
-    """Embedding cosine near-dup pairs INTRODUCED by a new batch against
-    an :func:`embedding_signatures` store — same contract as the MinHash
-    and SimHash incremental twins: hashing runs only over the batch, the
-    corpus-sized store is scanned once and semi-joined down to
-    batch-touched buckets before anything shuffles, bucket sizes gate
-    over the union, every returned pair touches a new document, and
-    cosine is verified exactly from the STORED vectors.  Batch ids must
-    be disjoint from stored ids (see :func:`replace_in_store` for
-    re-crawls).  ``planes``/``dim`` are asserted
-    against the store's persisted ``family`` tag before joining
-    (mismatch raises; legacy tag-less stores are accepted).
-    """
-    if dim is None:
-        first = new_df.select(F.size(vec_col)).first()
-        dim = int(first[0]) if first else 0
-    stored_signatures = _check_store_family(
-        stored_signatures,
-        _family_tag("embedding-lsh", planes=planes, dim=dim, seed="md5v1"),
-        "incremental_embedding_near_dups",
-    )
-    new_hashed = _hyperplane_hashed(
-        new_df, id_col, vec_col, planes, dim
-    ).withColumn("_new", F.lit(True))
-    touched = new_hashed.select("_b").distinct()
-    stored = (
-        stored_signatures.select(
-            F.col(id_col).alias("_id"),
-            F.col("embedding").alias("_v"),
-            F.col("bucket").alias("_b"),
-        )
-        .join(touched, "_b", "left_semi")
-        .withColumn("_new", F.lit(False))
-    )
-    union = stored.unionByName(new_hashed.select("_id", "_v", "_b", "_new"))
-    ok = _bounded_buckets(
-        union, ["_b"], max_bucket_size,
-        F.sort_array(
-            F.collect_list(F.struct("_id", "_v", "_new"))
-        ).alias("members"),
-    )
-    pairs = (
-        ok.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("members") - 2),
-                        lambda i: F.transform(
-                            F.slice(F.col("members"), i + 2, F.size("members")),
-                            lambda m: F.struct(
-                                F.get(F.col("members"), i.cast("int"))[
-                                    "_id"
-                                ].alias("id_a"),
-                                m["_id"].alias("id_b"),
-                                F.get(F.col("members"), i.cast("int"))[
-                                    "_v"
-                                ].alias("v_a"),
-                                m["_v"].alias("v_b"),
-                                F.get(F.col("members"), i.cast("int"))[
-                                    "_new"
-                                ].alias("new_a"),
-                                m["_new"].alias("new_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .filter(
-            (F.col("p.new_a") | F.col("p.new_b"))
-            & (F.col("p.id_a") != F.col("p.id_b"))
-        )
-        .select("p.id_a", "p.id_b", "p.v_a", "p.v_b")
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.round(cosine_similarity(F.col("v_a"), F.col("v_b")), 6).alias(
-            "cosine"
-        ),
     ).filter(F.col("cosine") >= threshold).distinct()

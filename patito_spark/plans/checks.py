@@ -863,7 +863,11 @@ def _key_hashes(targets: list[tuple[str, Column, Column]]) -> Column:
 
 
 def _duplicate_counts(df: DataFrame, key_hashes: Column) -> dict[str, int]:
-    """Duplicate-member count per unique column, in ONE job.
+    """Duplicate-member count per unique column: one scan, two shuffles.
+
+    The first shuffle groups the ``(k, h1, h2)`` pairs; the second
+    re-groups the few duplicated pairs per column ``k``.  AQE runs each
+    shuffle stage as its own job, so a call launches three jobs.
 
     *key_hashes* (a scope's compiled generator) emits one ``(k, h1, h2)``
     row per unique column, where h1/h2 are two independently-seeded 64-bit

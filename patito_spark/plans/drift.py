@@ -1,22 +1,21 @@
-"""Cross-run distribution-drift monitoring with persisted profiles.
+"""Cross-run distribution-drift monitoring over column profiles.
 
-The north star requires histogram/HLL sketches persisted so a later run can
-be compared against a stored reference (KS / chi-square drift checks).
-A profile is a small JSON document per column:
+A later run is compared against a stored reference profile (KS /
+chi-square drift checks).  A profile is a small JSON-serializable dict
+per column:
 
 - ``quantiles`` — 101-point equi-spaced quantile sketch (KS input),
 - ``histogram`` — fixed-bucket counts (chi-square input),
 - ``count`` / ``nulls`` / ``min`` / ``max`` / ``approx_distinct``.
 
-Profiles are engine-independent JSON (auditable offline) and tiny (~2 KB
-per column), so they live next to the checkpoint tables.
+Profiles are engine-independent (``json.dump`` makes them auditable
+offline) and tiny (~2 KB per column), so they can live next to the
+checkpoint tables.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
 import time
 from typing import Optional
 
@@ -78,17 +77,6 @@ def build_profile(
         },
         "created_at": time.time(),
     }
-
-
-def save_profile(profile: dict, path: str) -> None:
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(profile, f)
-
-
-def load_profile(path: str) -> dict:
-    with open(path) as f:
-        return json.load(f)
 
 
 def compare_profiles(

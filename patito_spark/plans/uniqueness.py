@@ -1,4 +1,4 @@
-"""Salted uniqueness + referential-integrity checks at scale.
+"""Uniqueness + referential-integrity checks at scale.
 
 The reference's uniqueness check is a single-machine duplicate mask
 (``/root/reference/src/patito/validators.py:235-244``); it has no

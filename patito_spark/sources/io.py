@@ -253,19 +253,12 @@ def write_validated(
     evolution (resolve the hash via ``model.spec_json()`` archives or
     ``streaming.read_quarantine_specs`` stores).
     """
-    import hashlib
+    from ..streaming.validate import quarantine_split
 
-    from ..streaming.validate import flag_violations
-
-    flagged = flag_violations(df, model)
-    good = flagged.filter(F.col("_valid")).drop("_valid", "_violations")
+    good, bad, _ = quarantine_split(df, model)
     good.write.format(fmt).mode(mode).save(path)
     spark = df.sparkSession
     written = spark.read.format(fmt).schema(good.schema).load(path).count()
-    spec_hash = hashlib.md5(model.spec_json().encode()).hexdigest()
-    bad = flagged.filter(~F.col("_valid")).drop("_valid").withColumn(
-        "_spec_hash", F.lit(spec_hash)
-    )
     if quarantine_path is not None:
         bad.write.format(fmt).mode(mode).save(quarantine_path)
         quarantined = (

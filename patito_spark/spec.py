@@ -702,7 +702,7 @@ class Model(metaclass=ModelMetaclass):
         """Validate *df* against this model; raise ``DataFrameValidationError``.
 
         Compiles every row-level check into ONE aggregation job plus one
-        salted uniqueness job (SURVEY §3.1 Spark redesign) instead of the
+        hashed uniqueness count (SURVEY §3.1 Spark redesign) instead of the
         reference's O(#checks) scans (``validators.py:359-366``).
         Returns the validated DataFrame wrapped as ``cls.DataFrame``.
         """

@@ -63,7 +63,6 @@ same lambda split as ``streaming/dedup.py``.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -429,24 +428,11 @@ def _make_batch_processor(
             # spec hash that flagged them — lineage that survives
             # compaction because it rides IN the rows, with the full
             # spec JSON content-addressed in the spec registry
-            from .validate import flag_violations
+            from .validate import quarantine_split
 
-            spec_payload = model.spec_json()
-            spec_hash = hashlib.md5(spec_payload.encode()).hexdigest()
-            _spec_put(spark, store_root, spec_hash, spec_payload)
-
-            flagged = flag_violations(batch_df, model)
-            _write_delta(
-                flagged.filter(~F.col("_valid"))
-                .drop("_valid")
-                .withColumn("_spec_hash", F.lit(spec_hash)),
-                store_root,
-                _QUARANTINE,
-                batch_id,
-            )
-            batch_df = flagged.filter(F.col("_valid")).drop(
-                "_valid", "_violations"
-            )
+            batch_df, quarantine, spec_hash = quarantine_split(batch_df, model)
+            _spec_put(spark, store_root, spec_hash, model.spec_json())
+            _write_delta(quarantine, store_root, _QUARANTINE, batch_id)
         fp_store = _read_store(spark, store_root, _FINGERPRINTS, batch_id)
         sig_store = _read_store(spark, store_root, _SIGNATURES, batch_id)
         survivors, fp_delta, sig_delta = prepare_training_increment(

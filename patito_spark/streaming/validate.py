@@ -15,6 +15,8 @@ predicates the batch aggregate executor counts.
   violation), but the valid branch never builds the array and the
   quarantine branch builds it only for the rows it keeps.  Both columns
   are built once per (model, schema).
+- ``quarantine_split`` — the valid and quarantine frames of the batch
+  routers (``sources.io.write_validated`` and the ingest model gate).
 - ``windowed_violation_counts`` — event-time windowed counts per check name
   with a watermark for late data, one row per window.
 
@@ -30,6 +32,7 @@ partitions.
 
 from __future__ import annotations
 
+import hashlib
 from functools import reduce
 from typing import Optional
 
@@ -71,6 +74,24 @@ def _router_columns(model: type, schema: T.StructType) -> dict:
         }
 
     return _memoized(("router", model, schema.json()), build)
+
+
+def quarantine_split(df: DataFrame, model: type) -> tuple:
+    """``(valid, quarantine, spec_hash)`` of *df* under *model*'s row checks.
+
+    ``valid`` is the passing rows with the input's columns.  ``quarantine``
+    is the violating rows with ``_violations`` and ``_spec_hash`` (md5 of
+    ``model.spec_json()``, the model version that flagged them) appended.
+    """
+    spec_hash = hashlib.md5(model.spec_json().encode()).hexdigest()
+    flagged = flag_violations(df, model)
+    valid = flagged.filter(F.col("_valid")).drop("_valid", "_violations")
+    quarantine = (
+        flagged.filter(~F.col("_valid"))
+        .drop("_valid")
+        .withColumn("_spec_hash", F.lit(spec_hash))
+    )
+    return valid, quarantine, spec_hash
 
 
 def validate_stream(

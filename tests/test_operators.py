@@ -18,8 +18,8 @@ from patito_spark.operators.dedup import (
     exact_dedup,
     hamming_distance,
     minhash_candidate_pairs,
+    minhash_bucket_audit,
     minhash_dedup_pairs,
-    minhash_oversized_buckets,
     ngram_jaccard_pairs,
     simhash,
     simhash_candidate_pairs,
@@ -434,56 +434,6 @@ def test_incremental_minhash_random_splits_match_from_scratch(spark):
         assert inc == expected, f"seed {seed}"
 
 
-def test_incremental_embedding_near_dups_matches_from_scratch(spark, tmp_path):
-    """The embedding-LSH twin of the incremental contract: batch vs
-    stored (id, bucket, embedding) rows equals a from-scratch merged run
-    restricted to batch-touching pairs, cosine verified from STORED
-    vectors."""
-    from patito_spark.operators.dedup import (
-        embedding_near_duplicates,
-        embedding_signatures,
-        incremental_embedding_near_dups,
-    )
-
-    def vec(seed, dim=8):
-        import hashlib
-
-        return [
-            ((int.from_bytes(hashlib.md5(f"{seed}:{i}".encode()).digest()[:4], "big") % 2000) - 1000) / 1000.0
-            for i in range(dim)
-        ]
-
-    old_rows = [(i, vec(i)) for i in range(20)]
-    new_rows = [
-        (200, [x * 1.001 for x in vec(3)]),   # near-dup of stored 3
-        (201, vec("fresh-a")),
-        (202, [x * 0.999 for x in vec("fresh-a")]),  # new-new near-dup
-    ]
-    old = spark.createDataFrame(old_rows, "vec_id long, embedding array<double>")
-    new = spark.createDataFrame(new_rows, "vec_id long, embedding array<double>")
-    kw = dict(planes=6, dim=8)
-    store_path = str(tmp_path / "emb_store")
-    embedding_signatures(old, "vec_id", "embedding", **kw).write.parquet(store_path)
-    inc = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in incremental_embedding_near_dups(
-            new, "vec_id", "embedding", spark.read.parquet(store_path),
-            threshold=0.98, **kw,
-        ).collect()
-    }
-    new_ids = {r[0] for r in new_rows}
-    scratch = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_duplicates(
-            old.unionByName(new), "vec_id", "embedding", threshold=0.98, **kw
-        ).collect()
-    }
-    expected = {p for p in scratch if p[0] in new_ids or p[1] in new_ids}
-    assert inc == expected
-    assert {(a, b) for a, b, _ in inc} >= {(3, 200), (201, 202)}
-    assert all(a in new_ids or b in new_ids for a, b, _ in inc)
-
-
 def test_incremental_minhash_union_sized_gate(spark):
     """Bucket sizes are gated over store + batch: a bucket the NEW batch
     pushes past the cap stops producing pairs — including for its old
@@ -519,50 +469,6 @@ def test_incremental_minhash_union_sized_gate(spark):
         (0, 100), (0, 101), (1, 100), (1, 101), (2, 100), (2, 101),
         (100, 101),
     }
-
-
-def test_incremental_simhash_pairs_matches_from_scratch(spark, tmp_path):
-    """The SimHash twin of the incremental-minhash contract: batch vs
-    stored signatures equals a from-scratch merged run restricted to
-    batch-touching pairs, hamming verified from STORED signatures."""
-    from patito_spark.operators.dedup import (
-        incremental_simhash_pairs,
-        simhash_candidate_pairs,
-        simhash_signatures,
-    )
-
-    old_rows = [
-        (i, f"stable corpus document {i} with plenty of filler words here")
-        for i in range(25)
-    ]
-    new_rows = [
-        (200, old_rows[7][1]),  # new-old exact near-dup
-        (201, old_rows[7][1] + " tail"),  # perturbed
-        (202, "totally different fresh content page"),
-    ]
-    old = spark.createDataFrame(old_rows, "doc_id long, text string")
-    new = spark.createDataFrame(new_rows, "doc_id long, text string")
-    store_path = str(tmp_path / "sim_store")
-    simhash_signatures(old, "doc_id", "text").write.parquet(store_path)
-    inc = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in incremental_simhash_pairs(
-            new, "doc_id", "text", spark.read.parquet(store_path)
-        ).collect()
-    }
-    new_ids = {r[0] for r in new_rows}
-    scratch = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_candidate_pairs(
-            old.unionByName(new), "doc_id", "text"
-        ).collect()
-    }
-    expected = {
-        p for p in scratch if p[0] in new_ids or p[1] in new_ids
-    }
-    assert inc == expected
-    assert (7, 200, 0) in inc
-    assert all(a in new_ids or b in new_ids for a, b, _ in inc)
 
 
 def test_incremental_minhash_store_never_shuffles(spark, tmp_path):
@@ -602,16 +508,12 @@ def test_incremental_store_family_mismatch_raises(spark):
     """A signature store fed to an incremental call with DIFFERENT family
     parameters must raise loudly — mismatched families bucket
     incompatibly, which is a silent wrong answer otherwise (VERDICT r6
-    item 1).  All three families; legacy tag-less stores still pass."""
+    item 1).  A store without the tag cannot be checked, so it raises too."""
     import pytest
 
     from patito_spark.operators.dedup import (
-        embedding_signatures,
-        incremental_embedding_near_dups,
         incremental_minhash_pairs,
-        incremental_simhash_pairs,
         minhash_signatures,
-        simhash_signatures,
     )
 
     docs = spark.createDataFrame(
@@ -626,60 +528,11 @@ def test_incremental_store_family_mismatch_raises(spark):
         incremental_minhash_pairs(
             batch, "doc_id", "text", mh_store, num_hashes=16, bands=4
         ).collect()
-    sh_store = simhash_signatures(docs, "doc_id", "text", chunks=4)
-    with pytest.raises(ValueError, match="chunks=4"):
-        incremental_simhash_pairs(
-            batch, "doc_id", "text", sh_store, chunks=8
-        ).collect()
-    vecs = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.5, -0.25]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    vbatch = spark.createDataFrame(
-        [(100, [0.1, 0.2, 0.3, 0.4])], "vec_id long, embedding array<double>"
-    )
-    emb_store = embedding_signatures(vecs, "vec_id", "embedding", planes=6)
-    with pytest.raises(ValueError, match="planes=6"):
-        incremental_embedding_near_dups(
-            vbatch, "vec_id", "embedding", emb_store, planes=12
-        ).collect()
-    # legacy tag-less store: accepted, but LOUDLY — silence would leave
-    # the one silent-mismatch path alive (ADVICE r7)
-    legacy = mh_store.drop("family")
-    with pytest.warns(UserWarning, match="no 'family' tag"):
+    with pytest.raises(ValueError, match="no 'family' tag.*_signatures builder"):
         incremental_minhash_pairs(
-            batch, "doc_id", "text", legacy, num_hashes=16, bands=4
-        ).collect()
-    # the documented upgrade path: tag_store stamps the family the
-    # caller knows built it; consumers then assert instead of trusting
-    import warnings as _warnings
-
-    from patito_spark.operators.dedup import tag_store
-
-    from patito_spark.functions.hashing import MINHASH_SLICES
-
-    upgraded = tag_store(
-        legacy, "minhash",
-        num_hashes=8, bands=4, shingle_n=3, slices=MINHASH_SLICES,
-    )
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")  # any warning fails the test
-        incremental_minhash_pairs(
-            batch, "doc_id", "text", upgraded, num_hashes=8, bands=4
-        ).collect()
-    # an upgraded-but-wrong family still raises at consumption
-    with pytest.raises(ValueError, match="num_hashes=8"):
-        incremental_minhash_pairs(
-            batch, "doc_id", "text", upgraded, num_hashes=16, bands=4
-        ).collect()
-    # retagging a tagged store with a different family is refused
-    with pytest.raises(ValueError, match="refusing to"):
-        tag_store(upgraded, "minhash", num_hashes=16, bands=4)
-    # idempotent when the tag already matches
-    assert tag_store(
-        upgraded, "minhash",
-        num_hashes=8, bands=4, shingle_n=3, slices=MINHASH_SLICES,
-    ).columns == upgraded.columns
+            batch, "doc_id", "text", mh_store.drop("family"),
+            num_hashes=8, bands=4,
+        )
 
 
 def test_oversized_bucket_never_aggregated(spark, docs):
@@ -705,28 +558,22 @@ def test_oversized_bucket_never_aggregated(spark, docs):
     assert all(a < 500_000 and b < 500_000 for a, b in found)
     planted = {(r["doc_id"], r["doc_id"] + 100_000) for r in keep.collect()}
     assert planted <= found
-    dropped = minhash_oversized_buckets(
-        corpus, "doc_id", "text", num_hashes=8, bands=4, max_bucket_size=8
-    )
-    assert dropped >= 4  # the boilerplate bucket is dropped in every band
-    # plan shape: collect_list (Aggregate) must sit ABOVE the window-count
-    # filter — i.e. the size gate executes first
-    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-    assert "collect_list" in plan and "_bucket_n" in plan
-    assert plan.index("collect_list") < plan.index("_bucket_n")
-    # the audit DataFrame agrees with the scalar helper and with the pair
-    # stage: per band, the boilerplate bucket is oversized, the planted-dup
-    # buckets are pair buckets
-    from patito_spark.operators.dedup import minhash_bucket_audit
-
     audit = {
         r["band"]: r
         for r in minhash_bucket_audit(
             corpus, "doc_id", "text", num_hashes=8, bands=4, max_bucket_size=8
         ).collect()
     }
+    dropped = sum(r["n_oversized"] for r in audit.values())
+    assert dropped >= 4  # the boilerplate bucket is dropped in every band
+    # plan shape: collect_list (Aggregate) must sit ABOVE the window-count
+    # filter — i.e. the size gate executes first
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "collect_list" in plan and "_bucket_n" in plan
+    assert plan.index("collect_list") < plan.index("_bucket_n")
+    # per band, the boilerplate bucket is oversized and the planted-dup
+    # buckets are pair buckets
     assert len(audit) == 4
-    assert sum(r["n_oversized"] for r in audit.values()) == dropped
     assert all(r["n_oversized"] >= 1 for r in audit.values())
     assert all(r["n_pair_buckets"] >= 1 for r in audit.values())
 

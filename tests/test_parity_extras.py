@@ -249,6 +249,47 @@ def test_write_validated_quarantine_split(spark, tmp_path):
     assert counts2 == {"written": 2, "quarantined": 3}
 
 
+def test_write_validated_and_ingest_quarantine_agree(spark, tmp_path):
+    """The batch sink and the streaming ingest gate quarantine one batch
+    under one model identically: same columns in the same order, same
+    rows, same ``_violations`` and ``_spec_hash``."""
+    from patito_spark.sources.io import write_validated
+    from patito_spark.streaming.ingest import _make_batch_processor, read_quarantine
+
+    class Page(pt.Model):
+        doc_id: int
+        text: str
+        lang: str = pt.Field(allowed=["en", "de"])
+        n_chars: int = pt.Field(ge=1)
+
+    batch = spark.createDataFrame(
+        [(1, "first unique page body with plenty of words here", "en", 49),
+         (2, "page francaise interdite par le contrat du modele", "fr", 49),
+         (3, "second unique page body other words entirely now", "en", 0),
+         (4, "third page breaks two checks at once in this row", "xx", -3)],
+        "doc_id long, text string, lang string, n_chars long",
+    )
+    sink = str(tmp_path / "quarantine")
+    counts = write_validated(batch, Page, str(tmp_path / "good"), sink)
+    assert counts == {"written": 1, "quarantined": 3}
+    root = str(tmp_path / "stores")
+    _make_batch_processor(
+        root, "doc_id", "text", dict(num_hashes=8, bands=4, shingle_n=3), model=Page
+    )(batch, 0)
+    batch_side = spark.read.parquet(sink)
+    ingest_side = read_quarantine(spark, root)
+    assert batch_side.columns == ingest_side.columns == [
+        "doc_id", "text", "lang", "n_chars", "_violations", "_spec_hash",
+    ]
+
+    assert sorted(map(tuple, batch_side.collect())) == sorted(
+        map(tuple, ingest_side.collect())
+    )
+    assert [r["_violations"] for r in batch_side.orderBy("doc_id").collect()] == [
+        ["lang__enum"], ["n_chars__bound0"], ["lang__enum", "n_chars__bound0"],
+    ]
+
+
 def test_write_validated_reads_sinks_back_with_their_schema(spark, tmp_path):
     """Each sink's count reads the written files with the written frame's
     schema: two jobs per sink (write, count), no schema-inference job."""

@@ -21,6 +21,7 @@ shape of a query, not just its wall time.
 """
 
 import ast
+import glob
 import os
 
 import pytest
@@ -297,3 +298,105 @@ def test_entry_registry_has_no_orphans():
         n for n in defs if n.startswith(("SQL_", "_sql_")) and n not in live_sql
     ]
     assert not orphans, f"unreachable from queries()/HEADLINE/oracle_sql(): {orphans}"
+
+
+#: library defs no production root reaches, kept on purpose; an entry that
+#: no longer exists, or that a root now reaches, fails the test
+ALLOWED = {
+    "examples.pandas_examples": "patito's pandas_examples API (SURVEY.md)",
+    "operators.dedup.minhash_bucket_audit": (
+        "the reference test_minhash_pairs_with_audit_single_scan compares "
+        "minhash_pairs_with_audit against"
+    ),
+    "operators.pipeline.prepare_training_corpus": (
+        "the from-scratch reference of "
+        "test_increment_batches_match_from_scratch_corpus"
+    ),
+    "plans.stats.column_profile": "README: HLL/histogram column profiles",
+    "plans.stats.quantile_sketch": "README: HLL/histogram column profiles",
+    "plans.drift.build_profile": "README: KS / chi-square drift",
+    "plans.drift.compare_profiles": "README: KS / chi-square drift",
+    "operators.sampling.deterministic_sample": (
+        "named implementation of COVERAGE.md's deterministic-sampling row"
+    ),
+    "sources.io.write_bucketed_table": (
+        "named implementation of COVERAGE.md's bucketed-joins row"
+    ),
+    "testing.synth_domains": "the F2 dimension fixture (FIXTURES.md)",
+}
+
+
+def _names_used(tree: ast.AST) -> set:
+    """Every ``Name``, ``Attribute`` and import-alias name in *tree*.
+    String constants (docstrings included) never count."""
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            used.add(node.attr)
+        elif isinstance(node, ast.alias):
+            used.add(node.name.rsplit(".", 1)[-1])
+    return used
+
+
+def test_library_has_no_orphans():
+    """Every module-level function, class and UPPER_CASE constant of
+    ``patito_spark`` is reachable from a production root, or listed in
+    ``ALLOWED`` with a reason — library code only tests reach is dead.
+
+    Roots: every name the entry, bench and perfbench scripts use, every
+    def of ``jobs.py`` and ``submit.py``, every package ``__all__`` and
+    ``plans.runner.ValidationRunner``.  A name reaches every def of that
+    name in any module, so a name collision can hide an orphan but never
+    invent one; a reached class keeps all of its methods' references."""
+    repo = os.path.dirname(entrymod.__file__)
+    pkg = os.path.join(repo, "patito_spark")
+    defs, exported = {}, set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        parts = os.path.relpath(path, pkg)[: -len(".py")].split(os.sep)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+                if parts[-1] == "__init__" and "__all__" in names:
+                    exported |= set(ast.literal_eval(node.value))
+                names = [n for n in names if n == n.upper()]
+            else:
+                continue
+            for name in names:
+                defs[".".join([p for p in parts if p != "__init__"] + [name])] = node
+    by_name = {}
+    for key in defs:
+        by_name.setdefault(key.rsplit(".", 1)[-1], []).append(key)
+
+    def reach(start):
+        seen, todo = set(), list(start)
+        while todo:
+            key = todo.pop()
+            if key not in seen:
+                seen.add(key)
+                todo += [k for n in _names_used(defs[key]) for k in by_name.get(n, ())]
+        return seen
+
+    scripts = ["__spark_entry__.py", "bench.py", "bench_extra.py"]
+    scripts += glob.glob(os.path.join(repo, "perfbench", "*.py"))
+    used = set(exported)
+    for script in scripts:
+        with open(os.path.join(repo, script)) as fh:
+            used |= _names_used(ast.parse(fh.read()))
+    roots = [k for n in used for k in by_name.get(n, ())]
+    roots += [k for k in defs if k.split(".")[0] in ("jobs", "submit")]
+    roots.append("plans.runner.ValidationRunner")
+    live = reach(roots)
+
+    stale = sorted(k for k in ALLOWED if k not in defs or k in live)
+    assert not stale, f"ALLOWED entries that are gone or now reached: {stale}"
+    orphans = sorted(set(defs) - live - reach(ALLOWED))
+    assert not orphans, (
+        "library code only tests reach (delete it, or add it to ALLOWED "
+        f"with a reason): {orphans}"
+    )

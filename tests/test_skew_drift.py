@@ -3,12 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from patito_spark.plans.drift import (
-    build_profile,
-    compare_profiles,
-    load_profile,
-    save_profile,
-)
+from patito_spark.plans.drift import build_profile, compare_profiles
 from patito_spark.plans.skew import salted_join, skewness_report, with_salt
 
 
@@ -130,15 +125,12 @@ def test_left_salted_join_keeps_unmatched(spark, skewed):
 # -- drift -----------------------------------------------------------------------
 
 
-def test_profile_and_self_compare(spark, tmp_path):
+def test_profile_and_self_compare(spark):
     df = spark.range(10_000).select((F.col("id") % 500).cast("double").alias("x"))
     prof = build_profile(df, "x")
     assert prof["count"] == 10_000
     assert prof["min"] == 0.0 and prof["max"] == 499.0
-    path = str(tmp_path / "profiles" / "x.profile.json")
-    save_profile(prof, path)
-    assert load_profile(path) == prof
-    verdict = compare_profiles(prof, load_profile(path))
+    verdict = compare_profiles(prof, prof)
     assert verdict["drifted"] is False
     assert verdict["ks"] < 0.01
     assert verdict["null_rate_delta"] == 0.0

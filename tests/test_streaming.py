@@ -12,10 +12,6 @@ from patito_spark.streaming import (
     validate_stream,
     windowed_violation_counts,
 )
-from patito_spark.streaming.stateful import (
-    dedup_within_watermark,
-    running_column_stats,
-)
 
 
 class Event(pt.Model):
@@ -129,61 +125,6 @@ def test_quarantine_exactly_once_across_restart(spark, tmp_path):
     # exactly once: 3 distinct bad rows, none duplicated by the restart
     assert bad.count() == 3
     assert sorted(r["value"] for r in bad.collect()) == [7, 150, 999]
-
-
-def test_dedup_within_watermark_plan(spark):
-    # streaming-only operator: assert the plan builds on a real stream
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "10").load()
-        .select(F.col("timestamp").alias("ts"), (F.col("value") % 5).alias("k"))
-    )
-    deduped = dedup_within_watermark(stream, ["k"], "ts", "1 minute")
-    assert deduped.isStreaming
-
-
-def test_running_column_stats_state(spark, tmp_path):
-    stream = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "200")
-        .load()
-        .select(
-            (F.col("value") % 2).alias("k"),
-            F.col("value").cast("double").alias("x"),
-        )
-    )
-    out = running_column_stats(stream, "k", "x")
-    query = (
-        out.writeStream.format("memory")
-        .queryName("running_stats")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        import time
-
-        deadline = time.time() + 40
-        rows = []
-        while time.time() < deadline:
-            query.processAllAvailable()
-            rows = spark.sql(
-                "select * from running_stats order by n desc"
-            ).collect()
-            if len({r["key"] for r in rows}) == 2 and all(
-                r["n"] > 10 for r in rows[:2]
-            ):
-                break
-            time.sleep(1)
-    finally:
-        query.stop()
-    by_key = {}
-    for r in rows:
-        by_key.setdefault(r["key"], r)  # first = largest n (latest update)
-    assert set(by_key) == {0, 1}
-    # keys are even/odd values → means differ by exactly 1 once synced
-    m0, m1 = by_key[0]["mean"], by_key[1]["mean"]
-    assert abs(abs(m1 - m0) - 1.0) < 2.0  # loose: stream cut mid-batch
-    assert all(r["nulls"] == 0 for r in rows)
 
 
 def test_sessionize_stream_batch_parity(spark):

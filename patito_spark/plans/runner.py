@@ -10,75 +10,52 @@ Execution plan per run (SURVEY §4.3):
 
 1. **Job 0 (driver)** — the model is compiled once per schema
    (``plans.checks.compile_checks``, memoized across calls); its
-   schema-level errors (missing/superfluous/dtype) are recorded once per
-   run with ``partition = '*'``.
-2. **pending = partitions ∉ checkpoint** — the verdict store is read once:
-   its (partition, run_id) pairs are collected (partition lists are small —
-   even 10^12 rows is ~10^4-10^5 date partitions) and the finished
-   partitions are filtered out of the scan.
+   schema-level errors (missing/superfluous/dtype) are stored once per
+   checkpoint with ``partition = '*'``.
+2. **pending = partitions ∉ checkpoint** — the verdict store's (partition,
+   run_id) pairs are collected once (even 10^12 rows is ~10^4-10^5 date
+   partitions) and the finished partitions are filtered out of the scan.
 3. **Job 1 (+1a, 1b, explode jobs)** — the checks' aggregate executor
    keyed by partition: ``groupBy(partition).agg(ALL check terms)`` over
-   only the pending partitions (one tiny shuffle row per partition, the
-   lineage sample riding along), the per-partition enum samples, the
-   mixed-constraint pass 2, and one exploded frame per list-of-struct
-   column with the partition carried through the explode.  Aggregate and
-   mixed constraints are therefore evaluated **per partition**: a verdict
-   belongs to one partition, and a resume never re-scans finished ones.
+   the pending partitions (the lineage sample riding along), the
+   per-partition enum samples, the mixed-constraint pass 2, and one
+   exploded frame per list-of-struct column.  Aggregate and mixed
+   constraints are therefore evaluated **per partition**.
 4. **Job 2** — global uniqueness with per-partition attribution: each
-   unique value is hashed *before* the shuffle into the xxhash64 pair
-   ``find_errors`` groups on (``plans.checks._key_hashes``), and
-   ``groupBy(column, h1, h2, partition)`` gives the local counts (the
-   partials) → one ``(column, h1, h2)`` window for the global totals →
-   each partition charged its own members of cross-partition duplicate
-   groups by one ``groupBy(partition, column)``.
-5. Verdicts + violations appended as one write each; a re-run with the
-   same checkpoint skips finished partitions (idempotent resume).  The
-   rows are built on the driver and handed to Spark as Arrow-backed local
-   relations (``sources.io.driver_frame``), never as a Python RDD.
+   unique value is hashed *before* the shuffle into ``find_errors``'
+   xxhash64 pair (``plans.checks._key_hashes``); ``groupBy(column, h1, h2,
+   partition)`` gives the local counts (the partials), one ``(column, h1,
+   h2)`` window the global totals, and one ``groupBy(partition, column)``
+   charges each partition its members of duplicated groups.
+5. Verdicts + violations appended as one write each, built on the driver
+   as Arrow-backed local relations (``sources.io.driver_frame``).
 
-Job 1 and the scan side of Job 2 (the partials write in exact mode, the
-whole charge in local mode) do not depend on each other, so they run
-concurrently, as do the two writes of step 5 (``plans.checks.
-_concurrently``).  The second branch runs on a
-``pyspark.InheritableThread``: its jobs keep the caller's job group and
-local properties.  Both branches are joined before the run goes on, and
-the first exception is re-raised.  The checkpoint stores are read with
-their known schemas (an unschema'd parquet read launches a
-schema-inference job).
+Job 1 and the scan side of Job 2 run concurrently, as do the two writes
+of step 5 (``plans.checks._concurrently``: the second branch runs on a
+``pyspark.InheritableThread``, keeping the caller's job group; the first
+exception is re-raised).  Stores are read with their known schemas (an
+unschema'd parquet read launches a schema-inference job).
 
-Resume and global uniqueness: uniqueness is a *global* property, but
-finished partitions are not re-scanned on resume.  Two modes:
+Resume and global uniqueness: finished partitions are never re-scanned, so
+every checkpointed run persists its partials to a third store
+(``unique_keys``, 16 bytes per distinct key — the one checkpoint artifact
+that scales with data) before anything is charged, then reads the store
+back once: a row is trusted iff its (partition, run_id) matches a
+persisted verdict (a finished run's) or this call's pending partitions,
+and one charge job computes the merged charge and the finished runs' own.
+Pending partitions are charged against the merged totals; a finished
+partition that joined a cross-boundary duplicate group gets delta
+violation rows (merged minus prior charge) and one more, failed, verdict
+row with ``n_rows = 0`` — a partition's stored verdict is the AND of its
+rows, its counts their sums.  The cumulative stores therefore always say
+what one uninterrupted run would have said.  A run without a checkpoint
+has nothing to resume from and charges straight from the scan.
 
-- ``unique_resume="local"`` (default): a duplicate group spanning a
-  finished and a pending partition is charged only to the pending side —
-  cheap, and exact whenever runs don't split duplicate groups.  The
-  partials go from the scan straight into the charge job.
-- ``unique_resume="exact"``: every run persists its per-(partition,
-  column, key-hash) local counts to a third checkpoint dataset
-  (``unique_keys``).  The source is scanned for them once, and they
-  are written before anything is charged.  The partials store is then
-  read once: each row is tagged as a finished run's (its (partition,
-  run_id) matches a persisted verdict) or as this call's own, and one
-  charge job computes both the merged charge and the finished runs' own
-  charge.  No finished partition is re-scanned; pending partitions are
-  charged against the *merged* totals, and finished partitions whose
-  members joined a cross-boundary duplicate group get retroactive delta
-  violation rows (merged minus prior charge).  The cumulative violation
-  table therefore always equals what one uninterrupted run would have
-  produced.  Cost: the partials dataset is O(distinct keys) (two
-  xxhash64 longs, 16 bytes, per key — the one checkpoint artifact that
-  scales with data, which is inherent to exact cross-run uniqueness), and
-  each run re-shuffles it once.  Crash-safe: partials are written
-  *before* verdicts and are only trusted when their (partition, run_id)
-  matches a persisted verdict or this call's pending partitions, so a run
-  killed between the two writes re-runs cleanly without double-counting.
-  A caller-chosen run_id that already owns such orphan partials is
-  refused, since its rows would be indistinguishable from the retry's
-  own.  The store's format is
-  versioned by its name: a checkpoint that still holds the legacy
-  md5-hex ``unique_partials`` store is refused by exact mode before
-  anything is written (start a fresh checkpoint, or resume it with
-  ``unique_resume="local"``), so the two formats never mix.
+Crash safety: partials written by a call that died before its verdicts
+match no trust key and drop out; a caller-chosen run_id that owns such
+orphans is refused, since they would be indistinguishable from its own.
+A checkpoint that still holds the legacy md5-hex ``unique_partials`` store
+is refused before anything is written, so the two formats never mix.
 
 Checkpoint storage is a parquet directory triple (``verdicts/``,
 ``violations/``, ``unique_keys/``) written with append, or the
@@ -112,6 +89,8 @@ from .checks import (
 #: the partition key column every runner frame carries
 _KEY = "_partition"
 
+#: one row per partition a run validated, plus one failed row (``n_rows``
+#: 0) per finished partition a later run charges retroactively
 VERDICT_SCHEMA = T.StructType(
     [
         T.StructField("partition", T.StringType()),
@@ -133,7 +112,7 @@ VERDICT_SCHEMA = T.StructType(
 #: the verdict row keeps a bounded sorted sample
 _LINEAGE_FILE_CAP = 64
 
-#: exact-resume partials: one row per (partition, unique column, key hash
+#: resume partials: one row per (partition, unique column, key hash
 #: pair) with its local member count.  Hashes, never raw key values, are
 #: persisted — bounded width and no payload leakage into the checkpoint.
 UNIQUE_KEYS_SCHEMA = T.StructType(
@@ -206,27 +185,27 @@ class RunResult:
 class ValidationRunner:
     """Checkpointed, resumable, per-partition validation of a model spec.
 
-    ``partition_col`` may be any existing column or a named expression to
-    derive one (e.g. ``("day", F.to_date("warc_ts"))``) — at real scale use
-    the table's physical partition column so the filter prunes at the scan.
+    ``partition_col`` names an existing column (derive one with
+    ``withColumn`` before :meth:`run`) — at real scale use the table's
+    physical partition column so the filter prunes at the scan.
     """
 
     def __init__(
         self,
         model: type,
-        partition_col,
+        partition_col: str,
         checkpoint_dir: Optional[str] = None,
         checkpoint_table: Optional[str] = None,
-        unique_resume: str = "local",
+        unique_resume: str = "exact",
     ) -> None:
-        if unique_resume not in ("local", "exact"):
-            raise ValueError("unique_resume must be 'local' or 'exact'")
-        self.unique_resume = unique_resume
+        # kept only because perfbench/run.py still passes unique_resume="exact"
+        if unique_resume != "exact":
+            raise ValueError(
+                "unique_resume='local' is gone: every checkpointed run charges "
+                "cross-run duplicates exactly"
+            )
         self.model = model
-        if isinstance(partition_col, tuple):
-            self.partition_name, self.partition_expr = partition_col
-        else:
-            self.partition_name, self.partition_expr = partition_col, None
+        self.partition_name = partition_col
         if checkpoint_dir and checkpoint_table:
             raise ValueError(
                 "pass checkpoint_dir (parquet path) OR checkpoint_table "
@@ -286,7 +265,7 @@ class ValidationRunner:
         )
 
     def _refuse_legacy_store(self, spark: SparkSession) -> None:
-        """Exact mode never mixes key-store formats: a checkpoint that still
+        """The runner never mixes key-store formats: a checkpoint that still
         holds the legacy md5-hex partials store is refused before anything
         is written.  An existence check only, no Spark job."""
         if self.checkpoint_table:
@@ -302,9 +281,8 @@ class ValidationRunner:
         if found:
             raise ValueError(
                 f"checkpoint holds a legacy {_LEGACY_UNIQUE_STORE!r} store "
-                f"({legacy}) that exact unique_resume can no longer read. Start "
-                "a fresh checkpoint, or resume this one with "
-                "unique_resume='local'."
+                f"({legacy}) that this runner can no longer read. Start a "
+                "fresh checkpoint."
             )
 
     def _refuse_orphaned_run_id(
@@ -324,9 +302,20 @@ class ValidationRunner:
         if orphans.limit(1).count():
             raise ValueError(
                 f"run_id {run_id!r} already holds unique partials of a call "
-                "that never wrote its verdicts; exact unique_resume cannot "
-                "tell them from this call's own. Retry under a new run_id."
+                "that never wrote its verdicts; they cannot be told from "
+                "this call's own. Retry under a new run_id."
             )
+
+    def _unstored(self, spark: SparkSession, schema_rows: list) -> list:
+        """*schema_rows* minus those an earlier run stored (same column,
+        error type and message): one read of the violations store."""
+        key = ("column", "error_type", "message")
+        stored = self._read(spark, "violations")
+        if stored is None:
+            return schema_rows
+        stored = stored.filter(F.col("partition") == "*").select(*key)
+        seen = set(map(tuple, stored.collect()))
+        return [v for v in schema_rows if tuple(map(v.get, key)) not in seen]
 
     def _persist_unique_partials(self, partials: DataFrame, run_id: str) -> None:
         """Distributed append of this run's partials (NEVER collected —
@@ -415,17 +404,12 @@ class ValidationRunner:
         run_id = run_id or uuid.uuid4().hex[:12]
         t0 = time.time()
         model = self.model
-        exact = self.unique_resume == "exact" and bool(
-            self.checkpoint_dir or self.checkpoint_table
-        )
-        if exact:
-            self._refuse_legacy_store(spark)
+        checkpointed = bool(self.checkpoint_dir or self.checkpoint_table)
+        self._refuse_legacy_store(spark)
 
         if where is not None:
             df = df.filter(where)
         df = _transform_df(df, model)
-        if self.partition_expr is not None:
-            df = df.withColumn(self.partition_name, self.partition_expr)
         part = F.col(self.partition_name).cast("string")
 
         verdict_keys = self._verdict_keys(spark)
@@ -452,6 +436,8 @@ class ValidationRunner:
         schema_violations = [
             _violation_row("*", e, run_id) for e in plan.schema_errors
         ]
+        if schema_violations and verdict_keys:
+            schema_violations = self._unstored(spark, schema_violations)
 
         # Job 1 (+1a/1b, explode jobs): the aggregate executor keyed by
         # partition.  Lineage rides the root scope's Job 1: a capped,
@@ -489,26 +475,26 @@ class ValidationRunner:
             if s.unique
         ]
         partials = reduce(DataFrame.unionByName, partials) if partials else None
-        if partials is not None and exact and chosen_run_id is not None:
+        if partials is not None and checkpointed and chosen_run_id is not None:
             self._refuse_orphaned_run_id(spark, run_id, verdict_keys)
 
         def uniqueness() -> dict:
             """Job 2's half that needs nothing from Job 1."""
             if partials is None:
                 return {}
-            if exact:
+            if checkpointed:
                 # write partials BEFORE verdicts: a crash between the two
                 # leaves orphan partials that _trusted_partials ignores
                 self._persist_unique_partials(partials, run_id)
                 return {}
-            # local mode, or nothing to resume from: this call's partials
-            # alone, straight from the scan
+            # nothing to resume from: this call's partials alone, straight
+            # from the scan
             return _charge(partials.withColumn("_prior", F.lit(False)))
 
         (per_partition_errors, stats), charges = _concurrently(aggregates, uniqueness)
-        retro_violations: list = []
+        retro: dict = {}  # finished partition → its retroactive delta rows
         if partials is not None and per_partition_errors:
-            if exact:
+            if checkpointed:
                 charges = _charge(
                     self._trusted_partials(
                         spark, verdict_keys, run_id, list(per_partition_errors)
@@ -522,35 +508,41 @@ class ValidationRunner:
                     # cross-boundary duplicate group: emit the DELTA so the
                     # cumulative violation table equals what one
                     # uninterrupted run would have charged
-                    retro_violations.append(
+                    retro.setdefault(p, []).append(
                         _violation_row(
                             p, count_error("unique", loc, count - prior), run_id
                         )
                     )
 
         finished_at = time.time()
+
+        def verdict(p, part_violations: list, n_rows: int = 0, files=()) -> dict:
+            return {
+                "partition": p,
+                "passed": not part_violations and not plan.schema_errors,
+                "n_rows": n_rows,
+                "n_violations": sum(v["violation_count"] for v in part_violations),
+                "run_id": run_id,
+                "finished_at": finished_at,
+                "elapsed_sec": finished_at - t0,
+                "input_files": list(files),
+            }
+
         verdicts: list = []
         violations: list = list(schema_violations)
         for p, errs in per_partition_errors.items():
             part_violations = [_violation_row(p, e, run_id) for e in errs]
             violations.extend(part_violations)
+            row = stats[p]
             verdicts.append(
-                {
-                    "partition": p,
-                    "passed": not part_violations and not schema_violations,
-                    "n_rows": int(stats[p]["_rows"]),
-                    "n_violations": int(
-                        sum(v["violation_count"] for v in part_violations)
-                    ),
-                    "run_id": run_id,
-                    "finished_at": finished_at,
-                    "elapsed_sec": finished_at - t0,
-                    "input_files": list(stats[p]["_files"] or []),
-                }
+                verdict(p, part_violations, int(row["_rows"]), row["_files"] or [])
             )
-
-        violations.extend(retro_violations)
-        self._persist(spark, verdicts, violations)
+        # a finished partition charged retroactively fails from now on: it
+        # gets one more stored verdict row (failed, no rows of its own)
+        retro_verdicts = [verdict(p, rows) for p, rows in retro.items()]
+        for rows in retro.values():
+            violations.extend(rows)
+        self._persist(spark, verdicts + retro_verdicts, violations)
         # None (the null partition's checkpoint key) sorts first
         skipped = sorted(finished, key=lambda p: (p is not None, p))
         return RunResult(run_id, verdicts, violations, skipped)

@@ -3,10 +3,12 @@
 The reference's uniqueness check is a single-machine duplicate mask
 (``/root/reference/src/patito/validators.py:235-244``); it has no
 referential-integrity concept.  This module provides both as standalone
-scale-path operators (the inline validate() path uses
-``plans.checks._duplicate_counts`` — same strategy):
+scale-path operators:
 
-- ``duplicate_stats``: per-key duplicate groups via one hash aggregation.
+- ``duplicate_stats``: per-key duplicate groups via one hash aggregation
+  over the raw values, because it returns them as ``(value, cnt)`` rows.
+  The inline validate() path (``plans.checks._duplicate_counts``) needs
+  only counts, so it groups on the xxhash64 key-hash pair instead.
   Hot keys (e.g. hot URL domains covering ~30% of rows) are pre-combined
   by Spark's map-side partial aggregation, so no single reducer receives
   more than ``#map-partitions`` partial rows per key — the skew

@@ -128,7 +128,7 @@ def synth_webpages(
     )
 
 
-def synth_domains(spark: SparkSession, seed: int = 42) -> DataFrame:
+def synth_domains(spark: SparkSession) -> DataFrame:
     """The domain dim covering all NON-hot synthetic domains plus hot ones;
     planted orphan: hot domains are present, site-domains ending in 13 are
     omitted so RI checks find a known class of orphans."""

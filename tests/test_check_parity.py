@@ -276,6 +276,54 @@ def test_jobs_main_runs_mixed_constraints(spark, tmp_path, capsys):
     assert out["violations"] == want
 
 
+class Keyed(pt.Model):
+    p: int
+    u: int = pt.Field(unique=True)
+
+
+def test_jobs_main_resume_matches_uninterrupted(spark, tmp_path):
+    """A job cut by ``--where`` and then resumed stores what one
+    uninterrupted job stores: u=1 spans partitions 0 and 2, which the two
+    runs validate apart, so it is charged to both and fails both — and the
+    resume exits 1 under ``--fail-on-violations``."""
+    spec = tmp_path / "spec.json"
+    spec.write_text(Keyed.spec_json())
+    data = str(tmp_path / "input")
+    spark.createDataFrame(
+        [(0, 1), (0, 7), (1, 2), (1, 2), (2, 1), (2, 9)], "p bigint, u bigint"
+    ).write.parquet(data)
+    args = ["--spec", str(spec), "--input", data, "--partition-col", "p"]
+
+    def stored(ckpt: str) -> tuple:
+        """Per-partition ``u`` violation totals, and stored verdicts (the
+        AND of a partition's verdict rows)."""
+        dups: dict = {}
+        for r in (
+            spark.read.parquet(f"{ckpt}/violations")
+            .filter(F.col("column") == "u")
+            .collect()
+        ):
+            dups[r["partition"]] = dups.get(r["partition"], 0) + r["violation_count"]
+        verdicts = (
+            spark.read.parquet(f"{ckpt}/verdicts")
+            .groupBy("partition")
+            .agg(F.bool_and("passed").alias("passed"))
+            .collect()
+        )
+        return dups, {r["partition"]: r["passed"] for r in verdicts}
+
+    full = str(tmp_path / "full")
+    assert jobs.main(args + ["--checkpoint-dir", full]) == 0
+    truth = stored(full)
+    assert truth == ({"0": 1, "1": 2, "2": 1}, {"0": False, "1": False, "2": False})
+
+    ckpt = str(tmp_path / "resume")
+    assert jobs.main(args + ["--checkpoint-dir", ckpt, "--where", "p < 2"]) == 0
+    resumed = jobs.main(args + ["--checkpoint-dir", ckpt, "--fail-on-violations"])
+    assert stored(ckpt) == truth
+    assert resumed == 1
+
+
 class Nested(pt.Model):
     p: int
     s: Inner

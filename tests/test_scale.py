@@ -93,13 +93,9 @@ def test_validation_never_mutates_text(spark, pages):
 
 
 def test_runner_per_partition_verdicts(spark, pages, tmp_path):
-    runner = ValidationRunner(
-        WebPage,
-        ("crawl_date", None),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    runner.partition_expr = None
-    result = runner.run(pages)
+    result = ValidationRunner(
+        WebPage, "crawl_date", checkpoint_dir=str(tmp_path / "ckpt")
+    ).run(pages)
     assert len(result.verdicts) > 100  # dates spread over ~30 years
     assert not result.passed
     total_rows = sum(v["n_rows"] for v in result.verdicts)
@@ -298,10 +294,9 @@ def test_runner_attributes_cross_partition_duplicates(spark, tmp_path):
 
 
 def test_runner_exact_unique_resume_matches_uninterrupted(spark, tmp_path):
-    """Kill-and-resume with unique_resume='exact': the cumulative violation
-    table must equal one uninterrupted run's — WITHOUT rescanning finished
-    partitions (the delta for the finished side comes from persisted
-    key-hash partials alone)."""
+    """Kill-and-resume: the cumulative violation table must equal one
+    uninterrupted run's — WITHOUT rescanning finished partitions (the delta
+    for the finished side comes from persisted key-hash partials alone)."""
 
     class M(pt.Model):
         p: int
@@ -320,25 +315,19 @@ def test_runner_exact_unique_resume_matches_uninterrupted(spark, tmp_path):
         return out
 
     # ground truth: one uninterrupted run
-    full = ValidationRunner(
-        M, "p", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
-    ).run(df)
+    full = ValidationRunner(M, "p", checkpoint_dir=str(tmp_path / "full")).run(df)
     truth = dup_counts(full.violations)
     assert truth == {"0": 1, "1": 2, "2": 1}
 
     # interrupted: run 1 sees partitions {0, 1} only, then "dies"
     ckpt = str(tmp_path / "resume")
-    r1 = ValidationRunner(
-        M, "p", checkpoint_dir=ckpt, unique_resume="exact"
-    ).run(df.filter(F.col("p") < 2))
+    r1 = ValidationRunner(M, "p", checkpoint_dir=ckpt).run(df.filter(F.col("p") < 2))
     assert dup_counts(r1.violations) == {"1": 2}  # u=1 not yet duplicated
 
     # resume with ONLY the pending half of the data on disk-equivalent:
     # partition 2's scan plus partition 0's persisted partials must
     # reconstruct the cross-boundary group
-    runner2 = ValidationRunner(
-        M, "p", checkpoint_dir=ckpt, unique_resume="exact"
-    )
+    runner2 = ValidationRunner(M, "p", checkpoint_dir=ckpt)
     r2 = runner2.run(df)
     assert r2.skipped_partitions == ["0", "1"]
     assert [v["partition"] for v in r2.verdicts] == ["2"]
@@ -349,12 +338,10 @@ def test_runner_exact_unique_resume_matches_uninterrupted(spark, tmp_path):
     persisted = runner2.report(spark).filter(F.col("column") == "u").collect()
     assert dup_counts([r.asDict() for r in persisted]) == truth
     # a third run changes nothing (no double-charging on repeated resume)
-    r3 = ValidationRunner(
-        M, "p", checkpoint_dir=ckpt, unique_resume="exact"
-    ).run(df)
+    r3 = ValidationRunner(M, "p", checkpoint_dir=ckpt).run(df)
     assert dup_counts(r3.violations) == {}
     persisted = ValidationRunner(
-        M, "p", checkpoint_dir=ckpt, unique_resume="exact"
+        M, "p", checkpoint_dir=ckpt
     ).report(spark).filter(F.col("column") == "u").collect()
     assert dup_counts([r.asDict() for r in persisted]) == truth
 
@@ -370,7 +357,7 @@ def test_runner_exact_resume_ignores_orphan_partials(spark, tmp_path):
 
     df = spark.createDataFrame([(0, 1), (1, 1)], "p int, u int")
     ckpt = str(tmp_path / "orphan")
-    runner = ValidationRunner(M, "p", checkpoint_dir=ckpt, unique_resume="exact")
+    runner = ValidationRunner(M, "p", checkpoint_dir=ckpt)
     # simulate the torn write: persist partials for partition 0 under a
     # run_id that never got a verdict
     _write_torn_partials(runner, df.filter(F.col("p") == 0), "dead-run")
@@ -419,13 +406,13 @@ def test_runner_exact_resume_refuses_run_id_with_orphan_partials(spark, tmp_path
     df = spark.createDataFrame(rows, "p int, u int")
     truth = _dup_counts(
         ValidationRunner(
-            _Unique, "p", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
+            _Unique, "p", checkpoint_dir=str(tmp_path / "full")
         ).run(df).violations
     )
     assert truth == {"0": 1, "2": 1}
 
     ckpt = str(tmp_path / "torn")
-    runner = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact")
+    runner = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt)
     first = df.filter(F.col("p") < 2)
     _write_torn_partials(runner, first, "r1")
     with pytest.raises(ValueError, match="'r1'"):
@@ -459,9 +446,7 @@ def test_runner_checkpoint_rows_are_local_relations(spark, tmp_path, monkeypatch
     df = spark.createDataFrame(
         [(0, 1), (1, 1), (None, 2), (None, 2)], "p int, u int"
     )
-    ValidationRunner(
-        _Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"), unique_resume="exact"
-    ).run(df)
+    ValidationRunner(_Unique, "p", checkpoint_dir=str(tmp_path / "ckpt")).run(df)
     assert set(plans) == {"unique_keys", "verdicts", "violations"}
     for store in ("verdicts", "violations"):
         (plan,) = plans[store]
@@ -531,19 +516,17 @@ def _partitioned_source(spark, tmp_path):
 
 
 def test_runner_exact_resume_reads_source_twice_and_store_once(spark, tmp_path):
-    """An exact-mode resume scans each pending row at most twice (the
+    """A resume scans each pending row at most twice (the
     aggregate and the partials) and the stored partials once."""
     df = _partitioned_source(spark, tmp_path)
     ckpt = str(tmp_path / "ckpt")
-    ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
+    ValidationRunner(_Unique, "p", checkpoint_dir=ckpt).run(
         df, where=F.col("p") < 4
     )
     sc = spark.sparkContext
     sc.setJobGroup("runner-resume-reads", "exact resume")
     try:
-        resume = ValidationRunner(
-            _Unique, "p", checkpoint_dir=ckpt, unique_resume="exact"
-        ).run(df)
+        resume = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt).run(df)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     read = _input_records(spark, "runner-resume-reads")
@@ -553,9 +536,7 @@ def test_runner_exact_resume_reads_source_twice_and_store_once(spark, tmp_path):
     assert pending == 2_000
     assert read <= 2 * pending + stored + verdict_rows, (read, pending, stored)
     # the cross-boundary group is charged to all eight partitions in total
-    persisted = ValidationRunner(
-        _Unique, "p", checkpoint_dir=ckpt, unique_resume="exact"
-    ).report(spark)
+    persisted = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt).report(spark)
     assert sum(_dup_counts([r.asDict() for r in persisted.collect()]).values()) == 40
 
 
@@ -569,18 +550,18 @@ def _job_ids(spark) -> set:
 
 def test_runner_jobs_keep_the_callers_job_group(spark, tmp_path):
     """The runner's concurrent branches run on threads that inherit the
-    caller's job group, and an exact-mode resume launches at most 11 jobs
+    caller's job group, and a resume launches at most 11 jobs
     (no schema-inference read, no ``distinct`` over the verdict keys)."""
     df = _partitioned_source(spark, tmp_path)
     ckpt = str(tmp_path / "ckpt")
-    ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
+    ValidationRunner(_Unique, "p", checkpoint_dir=ckpt).run(
         df, where=F.col("p") < 4
     )
     sc = spark.sparkContext
     before = _job_ids(spark)
     sc.setJobGroup("runner-resume-jobs", "exact resume")
     try:
-        ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
+        ValidationRunner(_Unique, "p", checkpoint_dir=ckpt).run(
             df
         )
     finally:
@@ -594,7 +575,7 @@ def test_runner_jobs_keep_the_callers_job_group(spark, tmp_path):
 def test_runner_failing_concurrent_branch_writes_no_verdicts(
     spark, tmp_path, monkeypatch
 ):
-    """A failure in the branch that runs beside Job 1 (the exact-mode
+    """A failure in the branch that runs beside Job 1 (the
     partials write) is re-raised by ``run()`` before any verdict is
     written, and a retry under a fresh run_id reproduces the uninterrupted
     totals (null keys, one group across the resume boundary, included)."""
@@ -602,15 +583,13 @@ def test_runner_failing_concurrent_branch_writes_no_verdicts(
     df = spark.createDataFrame(rows, "p int, u int")
     truth = _dup_counts(
         ValidationRunner(
-            _Unique, "p", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
+            _Unique, "p", checkpoint_dir=str(tmp_path / "full")
         ).run(df).violations
     )
     # a null u is a missing value AND a member of the null duplicate group
     assert truth == {"0": 2, "1": 4, "2": 1, "3": 3}
 
-    runner = ValidationRunner(
-        _Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"), unique_resume="exact"
-    )
+    runner = ValidationRunner(_Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"))
     runner.run(df.filter(F.col("p") < 2), run_id="r1")
     finished = sorted(runner._verdict_keys(spark))
 
@@ -630,7 +609,7 @@ def test_runner_failing_concurrent_branch_writes_no_verdicts(
 
 
 def _write_legacy_unique_store(spark, runner):
-    """A pre-``unique_keys`` exact-mode store: md5-hex key hashes."""
+    """A pre-``unique_keys`` partials store: md5-hex key hashes."""
     legacy = spark.createDataFrame(
         [("0", "u", "c4ca4238a0b923820dcc509a6f75849b", 1, "old")],
         "partition string, column string, key_hash string, cnt long, run_id string",
@@ -661,9 +640,9 @@ def _store_snapshot(spark, runner) -> dict:
 
 @pytest.mark.parametrize("storage", ["dir", "table"])
 def test_runner_exact_refuses_legacy_unique_store(spark, tmp_path, storage):
-    """Exact mode refuses a checkpoint that still holds the legacy
-    ``unique_partials`` store, before writing anything, and names the fix;
-    a local-mode resume of the same checkpoint still works."""
+    """A default-constructed runner (what ``jobs.py`` builds) refuses a
+    checkpoint that still holds the legacy ``unique_partials`` store,
+    before writing anything, and names the one fix."""
     table = "patito_test_legacy_ckpt"
     suffixes = ("_verdicts", "_violations", "_unique_keys", "_unique_partials")
     where = (
@@ -675,23 +654,60 @@ def test_runner_exact_refuses_legacy_unique_store(spark, tmp_path, storage):
     for suffix in suffixes:
         spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
     try:
-        ValidationRunner(_Unique, "p", **where).run(df.filter(F.col("p") < 2))
-        exact = ValidationRunner(_Unique, "p", unique_resume="exact", **where)
-        _write_legacy_unique_store(spark, exact)
-        before = _store_snapshot(spark, exact)
-        assert set(before) == {"verdicts", "violations", "unique_partials"}
+        runner = ValidationRunner(_Unique, "p", **where)
+        runner.run(df.filter(F.col("p") < 2))
+        _write_legacy_unique_store(spark, runner)
+        before = _store_snapshot(spark, runner)
+        assert set(before) == {
+            "verdicts",
+            "violations",
+            "unique_keys",
+            "unique_partials",
+        }
 
         with pytest.raises(ValueError, match="fresh checkpoint") as refused:
-            exact.run(df)
-        assert "unique_resume='local'" in str(refused.value)
-        assert _store_snapshot(spark, exact) == before
-
-        resumed = ValidationRunner(_Unique, "p", **where).run(df)
-        assert resumed.skipped_partitions == ["0", "1"]
-        assert _dup_counts(resumed.violations) == {"2": 2}
+            ValidationRunner(_Unique, "p", **where).run(df)
+        assert "unique_resume" not in str(refused.value)
+        assert _store_snapshot(spark, runner) == before
     finally:
         for suffix in suffixes:
             spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
+
+
+def test_runner_resume_stores_schema_rows_once(spark, tmp_path):
+    """Schema-level rows (``partition = '*'``) are stored once, as one
+    uninterrupted run stores them: neither a resume nor a resume with
+    nothing pending appends them again, and the resumed partitions still
+    fail on them."""
+    df = spark.createDataFrame(
+        [(0, 1, "x"), (1, 2, "y"), (2, 3, "z")], "p int, u int, extra string"
+    )
+
+    def schema_rows(runner):
+        return sorted(
+            (r["column"], r["error_type"], r["message"])
+            for r in runner.report(spark).filter(F.col("partition") == "*").collect()
+        )
+
+    full = ValidationRunner(_Unique, "p", checkpoint_dir=str(tmp_path / "full"))
+    full.run(df)
+    truth = schema_rows(full)
+    assert [column for column, _, _ in truth] == ["extra"]  # superfluous
+
+    runner = ValidationRunner(_Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"))
+    runner.run(df.filter(F.col("p") < 2))
+    resumed = runner.run(df)
+    assert [(v["partition"], v["passed"]) for v in resumed.verdicts] == [("2", False)]
+    assert runner.run(df).verdicts == []
+    assert schema_rows(runner) == truth
+
+
+def test_runner_rejects_local_unique_resume():
+    """The pending-side-only resume mode is gone; only ``"exact"`` is
+    accepted, and it is the default."""
+    with pytest.raises(ValueError, match="'local' is gone"):
+        ValidationRunner(_Unique, "p", unique_resume="local")
+    ValidationRunner(_Unique, "p", unique_resume="exact")
 
 
 def test_runner_resumes_checkpoint_of_python_rdd_rows(spark, tmp_path, monkeypatch):
@@ -704,7 +720,7 @@ def test_runner_resumes_checkpoint_of_python_rdd_rows(spark, tmp_path, monkeypat
     df = spark.createDataFrame(rows, "p int, u int")
     truth = _dup_counts(
         ValidationRunner(
-            _Unique, "p", checkpoint_dir=str(tmp_path / "full"), unique_resume="exact"
+            _Unique, "p", checkpoint_dir=str(tmp_path / "full")
         ).run(df).violations
     )
     assert truth == {"0": 2, "1": 2, "2": 1, None: 1}
@@ -714,10 +730,10 @@ def test_runner_resumes_checkpoint_of_python_rdd_rows(spark, tmp_path, monkeypat
         m.setattr(
             io, "driver_frame", lambda spark, rows, schema: spark.createDataFrame(rows, schema)
         )
-        ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact").run(
+        ValidationRunner(_Unique, "p", checkpoint_dir=ckpt).run(
             df.filter(F.col("p") < 2)
         )
-    runner = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt, unique_resume="exact")
+    runner = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt)
     resumed = runner.run(df)
     assert resumed.skipped_partitions == ["0", "1"]
     persisted = runner.report(spark).collect()

@@ -850,7 +850,7 @@ def _sql_minhash_banded(num_hashes: int = 8, bands: int = 4) -> str:
 ), hp AS (
   -- ONE md5 per shingle, MINHASH_SLICES 30-bit slices; hash k is the per-k
   -- universal multiply-add mod 2^31-1 mirrored from
-  -- functions/hashing.py::md5_slices30 / minhash_constants
+  -- operators/dedup.py::_minhash_banded / functions/hashing.py::minhash_constants
   SELECT doc_id,
          list_transform(s, x -> [
            {_sql_md5_slices30()}
@@ -870,9 +870,10 @@ def _sql_minhash_banded(num_hashes: int = 8, bands: int = 4) -> str:
 def _sql_minhash_pairs(
     num_hashes: int = 8, bands: int = 4, max_bucket: int = 64
 ) -> str:
-    # the sized/ok gate mirrors the engine's _bounded_buckets exactly:
-    # only buckets with 1 < n <= max_bucket contribute pairs, so a future
-    # SF bump that produces an oversized bucket reds out NEITHER engine
+    # the sized/ok gate mirrors the engine's _sized_buckets/_bucket_pairs
+    # gate exactly: only buckets with 1 < n <= max_bucket contribute pairs,
+    # so a future SF bump that produces an oversized bucket reds out
+    # NEITHER engine
     return f"""
 WITH {_sql_minhash_banded(num_hashes, bands)},
 sized AS (
@@ -1662,7 +1663,7 @@ def _sql_embedding_near_dups(
         "({}, [{}]::DOUBLE[])".format(p, ", ".join(repr(x) for x in plane))
         for p, plane in enumerate(_hyperplane_literals(planes, dim))
     )
-    # sized/okb mirrors the engine's _bounded_buckets gate (default
+    # sized/okb mirrors the engine's _sized_buckets/_bucket_pairs gate (default
     # max_bucket_size=256 in embedding_near_duplicates) so an SF where a
     # hyperplane bucket overflows stays green on both engines
     return f"""

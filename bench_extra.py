@@ -1,6 +1,6 @@
 """Round-9 optimization measurement harness (bench.py is FROZEN — this
-file exists so the round's iteration loop and stage isolation never touch
-the driver-timed artifact; numbers are cited in OPTIMIZATION_r09.md).
+file exists so the round's iteration loop never touches the driver-timed
+artifact; numbers are cited in OPTIMIZATION_r09.md).
 
 Methodology matches bench.py where it matters: identical session conf
 (same ``_session``), identical query entry points (the module-level
@@ -11,7 +11,6 @@ bracketing every block so a hostile host window self-identifies.
 Sub-commands::
 
   python bench_extra.py queries [name ...]   # per-query best-of-N
-  python bench_extra.py stages               # minhash/simhash stage probes (noop sink)
   python bench_extra.py explain NAME OUT     # write .explain('formatted') to OUT
 
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
@@ -42,10 +41,6 @@ def _spark():
         F.md5(F.col("id").cast("string")).alias("h")
     ).agg(F.count(F.lit(1))).collect()
     return spark
-
-
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
 
 
 def _time_best(fn, reps=REPS):
@@ -81,87 +76,6 @@ def cmd_queries(names):
     spark.stop()
 
 
-def _minhash_stage_frames(spark):
-    """Progressive minhash sub-pipelines over the bench's exact input."""
-    import __spark_entry__ as entrymod
-    from pyspark.sql import functions as F
-
-    from patito_spark.functions.text import tokens, word_shingles_from_tokens
-    from patito_spark.operators.dedup import (
-        _materialize,
-        _minhash_banded,
-        _shingle_hash_slices,
-        minhash_candidate_pairs,
-    )
-
-    docs = (
-        entrymod._t(spark, SF_DIR, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("text_norm", F.array_join(entrymod._tokens(F.col("text")), " "))
-    )
-    base = docs.select(F.col("doc_id").alias("_id"), F.col("text_norm").alias("_text"))
-    toks = _materialize(base, _toks=tokens(F.col("_text")))
-    sh = _materialize(toks, _sh=word_shingles_from_tokens(F.col("_toks"), 3))
-    hp = _materialize(sh, _hp=_shingle_hash_slices(F.col("_sh")))
-    banded = _minhash_banded(docs, "doc_id", "text_norm", 8, 4, 3)
-    pairs = minhash_candidate_pairs(
-        docs, "doc_id", "text_norm", num_hashes=8, bands=4, shingle_n=3
-    )
-    return {
-        "mh1_tokens": toks.drop("_text"),
-        "mh2_shingles": sh.drop("_text", "_toks"),
-        "mh3_md5slices": hp.drop("_text", "_toks", "_sh"),
-        "mh4_banded": banded,
-        "mh5_pairs": pairs,
-    }
-
-
-def _simhash_stage_frames(spark):
-    import __spark_entry__ as entrymod
-    from pyspark.sql import functions as F
-
-    from patito_spark.functions.hashing import md5_long
-    from patito_spark.functions.text import tokens
-    from patito_spark.operators.dedup import simhash
-
-    docs = (
-        entrymod._t(spark, SF_DIR, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("text_norm", F.array_join(entrymod._tokens(F.col("text")), " "))
-    )
-    tok_hashes = docs.select(
-        "doc_id",
-        F.transform(
-            F.array_distinct(tokens(F.col("text_norm"))), lambda t: md5_long(t)
-        ).alias("h"),
-    )
-    return {
-        "sh1_token_hashes": tok_hashes,
-        "sh2_simhash": docs.select(
-            "doc_id", simhash(F.col("text_norm")).alias("simhash")
-        ),
-    }
-
-
-def cmd_stages():
-    spark = _spark()
-    cal0 = _deliverable_compute(CPUS)
-    out = {}
-    frames = {}
-    frames.update(_minhash_stage_frames(spark))
-    frames.update(_simhash_stage_frames(spark))
-    for name, df in frames.items():
-        spark.sparkContext.setJobDescription(f"bench_extra:stage:{name}")
-        best, samples = _time_best(lambda: _noop(df))
-        out[name] = {"best": best, "samples": samples}
-    cal1 = _deliverable_compute(CPUS)
-    print(json.dumps({
-        "sf_dir": SF_DIR, "reps": REPS, "probe_before": round(cal0),
-        "probe_after": round(cal1), "stages": out,
-    }))
-    spark.stop()
-
-
 def cmd_explain(name, out_path):
     import __spark_entry__ as entrymod
 
@@ -181,8 +95,6 @@ def main():
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if cmd == "queries":
         cmd_queries(sys.argv[2:])
-    elif cmd == "stages":
-        cmd_stages()
     elif cmd == "explain":
         cmd_explain(sys.argv[2], sys.argv[3])
     else:

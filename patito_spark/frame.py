@@ -177,7 +177,8 @@ class DataFrame:
         for name, spec in specs.items():
             if name not in df_types or (columns is not None and name not in columns):
                 continue
-            explicit = spec.dtype_str is not None or len(spec.valid_dtypes) == 1
+            # a declared dtype is always the one valid dtype
+            explicit = len(spec.valid_dtypes) == 1
             current = df_types[name]
             if explicit or strict or not dtype_in_valid_set(
                 current, spec.valid_dtypes

@@ -40,37 +40,26 @@ MINHASH_P = 2**31 - 1
 MINHASH_SLICES = 4
 
 
-def md5_slices30(col: Column) -> Column:
-    """Array of ``MINHASH_SLICES`` independent 30-bit bigints from ONE
-    md5 digest (8 hex chars each, reduced mod 2^30).
-
-    Basis for k portable hash functions at one digest per value:
-    ``h_k = (A_k * x[k%S] + B_k * x[(k+1)%S]) % (2^31-1)`` with fixed
-    multiply-add constants per k (see ``minhash_constants``) — a
-    2-universal family whose mod-P wrap destroys the cross-k rank
-    correlation that a plain linear combination (or Kirsch-Mitzenmacher
-    ``h1 + k*h2``) keeps; measured on the documents table, plain KM
-    inflated LSH candidate pairs 6.5x vs md5-per-k while this family
-    matches it (BENCH/BASELINE.md optimization log; the slice COUNT is
-    pinned by the planted-pair recall study — see ``MINHASH_SLICES``
-    above).  Width budget: A,B < 2^31 and
-    x < 2^30 keep every product under 2^61 — no int64 overflow on either
-    engine, for any k.
-    DuckDB twin: ``('0x'||substring(md5(x), 1+i*8, 8))::BIGINT % 1073741824``.
-    """
-    digest = F.md5(col)
-    return F.array(
-        *[
-            F.conv(F.substring(digest, 1 + i * 8, 8), 16, 10).cast("bigint")
-            % F.lit(2**30).cast("bigint")
-            for i in range(MINHASH_SLICES)
-        ]
-    )
-
-
 def minhash_constants(num_hashes: int) -> list:
     """Deterministic (A_k, B_k) multiply-add constants in [1, 2^31-2] —
-    md5-derived, so any engine (or an offline audit) regenerates them."""
+    md5-derived, so any engine (or an offline audit) regenerates them.
+
+    They define k portable hash functions at one md5 digest per shingle:
+    the digest splits into ``MINHASH_SLICES`` 30-bit slices ``x`` (8 hex
+    chars each, mod 2^30) and
+    ``h_k = (A_k * x[k%S] + B_k * x[(k+1)%S]) % (2^31-1)``
+    (``operators.dedup._minhash_banded``) — a 2-universal family whose
+    mod-P wrap destroys the cross-k rank correlation that a plain linear
+    combination (or Kirsch-Mitzenmacher ``h1 + k*h2``) keeps; measured on
+    the documents table, plain KM inflated LSH candidate pairs 6.5x vs
+    md5-per-k while this family matches it (BENCH/BASELINE.md
+    optimization log; the slice COUNT is pinned by the planted-pair
+    recall study — see ``MINHASH_SLICES`` above).  Width budget:
+    A,B < 2^31 and x < 2^30 keep every product under 2^61 — no int64
+    overflow on either engine, for any k.
+    DuckDB twin of a slice:
+    ``('0x'||substring(md5(x), 1+i*8, 8))::BIGINT % 1073741824``.
+    """
     import hashlib
 
     def c(tag: str, k: int) -> int:

@@ -20,7 +20,7 @@ shallow instead of nesting one join per iteration — the standard Spark
 trap for iterative algorithms.
 
 Scale notes (100 TB): the edge list is the PAIR output, already bounded by
-the LSH bucket gates (``_bounded_buckets``) — |edges| ≪ |corpus|.  Label
+the LSH bucket gate (``_bucket_pairs``) — |edges| ≪ |corpus|.  Label
 state is one row per node appearing in any pair (non-duplicates never
 enter).  The per-round shuffle carries (node, label) pairs — two bigints.
 A giant component (boilerplate cluster) degrades gracefully: min-label is

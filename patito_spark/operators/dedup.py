@@ -10,9 +10,11 @@ reference — patito stops at column uniqueness, ``validators.py:235-244``):
   pairs only ever materialize within a bucket.  Buckets above
   ``max_bucket_size`` are dropped *and counted* — boilerplate pages would
   otherwise create O(n²) pair explosions (silent truncation would read as
-  "covered everything", so ``minhash_bucket_audit`` reports the count).  Bucket sizing happens
-  BEFORE any member list is collected (see ``_bounded_buckets``), so a hot
-  bucket never materializes an aggregation array.
+  "covered everything", so ``minhash_bucket_audit`` reports the count).
+  Bucket sizing happens BEFORE any member list is collected (see
+  ``_sized_buckets``), so a hot bucket never materializes an aggregation
+  array; ``_bucket_pairs`` is the one pair expansion every LSH family
+  (MinHash, SimHash, embedding hyperplanes) runs over a gated bucket.
 - **SimHash**: 60-bit signature via per-token hash bit-voting (single-pass
   higher-order aggregate, no explode); near-dup pairs found by pigeonhole
   banding into 4 chunks — hamming ≤ 3 guarantees one identical chunk.
@@ -219,39 +221,73 @@ def _materialize(df: DataFrame, **cols: Column) -> DataFrame:
     return df
 
 
-def _bounded_buckets(
-    banded: DataFrame, keys: list, max_bucket_size: int, *aggs: Column
-) -> DataFrame:
-    """Aggregate only buckets with ``1 < size <= max_bucket_size``.
+def _sized_buckets(banded: DataFrame, keys: list) -> DataFrame:
+    """``banded`` plus ``_bucket_n``, the row count of each row's bucket —
+    the LSH size gate's first half (:func:`_bucket_pairs` is the second).
 
-    The size gate runs BEFORE any ``collect_list``: a window ``count`` over
-    the bucket key (spillable row buffer — never builds an array) sizes
-    every bucket in the same shuffle, the filter drops oversized buckets,
-    and only then does the group aggregate materialize member lists.  A hot
-    boilerplate bucket with millions of members therefore costs a disk
-    spill at worst, never an executor-OOM-sized aggregation buffer.  The
-    groupBy reuses the window's hash partitioning — one shuffle total.
+    A window ``count`` over the bucket key (spillable row buffer — never
+    builds an array) sizes every bucket in one shuffle BEFORE any member
+    list is collected.  A hot boilerplate bucket with millions of members
+    therefore costs a disk spill at worst, never an executor-OOM-sized
+    aggregation buffer.
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(*keys)
-    sized = banded.withColumn("_bucket_n", F.count(F.lit(1)).over(w))
-    return (
+    return banded.withColumn(
+        "_bucket_n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    )
+
+
+def _bucket_pairs(
+    sized: DataFrame, keys: list, max_bucket_size: int, member: Column, *aggs
+) -> DataFrame:
+    """Every unordered pair of *member* values within each bucket of a
+    :func:`_sized_buckets` frame with ``1 < size <= max_bucket_size``.
+
+    The gated buckets aggregate their members into one sorted array (plus
+    the caller's extra *aggs*; the groupBy reuses the window's hash
+    partitioning — one shuffle total), which expands to one row per pair
+    as the struct ``p``: ``p.a`` sorts before ``p.b``, so members that
+    lead with a unique id give ``p.a`` the smaller id.  Each caller picks
+    its id and payload fields from the two members.  The gate bounds the
+    expansion at C(max_bucket_size, 2) pairs per bucket.
+    """
+    ok = (
         sized.filter(
             (F.col("_bucket_n") > 1) & (F.col("_bucket_n") <= max_bucket_size)
         )
         .drop("_bucket_n")
         .groupBy(*keys)
-        .agg(*aggs)
+        .agg(F.sort_array(F.collect_list(member)).alias("_members"), *aggs)
+    )
+    m = F.col("_members")
+    return ok.select(
+        *ok.columns[len(keys) + 1:],  # the caller's aggs
+        F.explode(
+            F.flatten(
+                F.transform(
+                    F.sequence(F.lit(0), F.size(m) - 2),
+                    lambda i: F.transform(
+                        F.slice(m, i + 2, F.size(m)),
+                        lambda b: F.struct(
+                            F.get(m, i.cast("int")).alias("a"), b.alias("b")
+                        ),
+                    ),
+                )
+            )
+        ).alias("p"),
     )
 
 
-def _shingle_hash_slices(shingles: Column) -> Column:
-    """array<array<bigint>> — one md5 per shingle, split into the
-    30-bit mixing slices."""
-    from ..functions.hashing import md5_slices30
-
-    return F.transform(shingles, md5_slices30)
+def _band_audit(sizes: DataFrame, cap: int) -> DataFrame:
+    """Per-band accounting of the size gate at *cap* over per-bucket sizes
+    ``_n`` (one row per ``(band, bucket)``)."""
+    gate_ok = (F.col("_n") > 1) & (F.col("_n") <= cap)
+    return sizes.groupBy("band").agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum(gate_ok.cast("long")).alias("n_pair_buckets"),
+        F.sum((F.col("_n") > cap).cast("long")).alias("n_oversized"),
+    )
 
 
 def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
@@ -285,42 +321,14 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """Candidate near-duplicate id pairs ``(id_a, id_b)`` with id_a < id_b.
 
-    Pipeline: signature → band buckets → explode(band) → salted bucket
-    grouping → pairs within surviving buckets.  Oversized buckets are
-    dropped; :func:`minhash_bucket_audit` counts them per band.
+    Pipeline: signature → band buckets → explode(band) → bucket sizing →
+    pairs within surviving buckets.  Oversized buckets are dropped;
+    :func:`minhash_bucket_audit` counts them per band.  The pair leg of
+    :func:`minhash_pairs_with_audit` (its audit frame is never run here).
     """
-    banded = _minhash_banded(df, id_col, text_col, num_hashes, bands, shingle_n)
-    ok = _bounded_buckets(
-        banded, ["band", "bucket"], max_bucket_size,
-        F.sort_array(F.collect_list("_id")).alias("ids"),
-    )
-    return _pairs_from_bucket_ids(ok)
-
-
-def _pairs_from_bucket_ids(ok: DataFrame) -> DataFrame:
-    """Distinct ``(id_a, id_b)`` with id_a < id_b from per-bucket sorted
-    ``ids`` arrays (bucket sizes already gated, so the per-bucket pair
-    expansion is bounded)."""
-    return (
-        ok.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("ids") - 2),
-                        lambda i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size("ids")),
-                            lambda b: F.struct(
-                                F.get(F.col("ids"), i.cast("int")).alias("id_a"),
-                                b.alias("id_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    return minhash_pairs_with_audit(
+        df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket_size
+    )[0]
 
 
 def minhash_pairs_with_audit(
@@ -361,8 +369,6 @@ def minhash_pairs_with_audit(
     ``n_buckets`` alone prunes the fence with the size column and the
     legs fall back to one scan each.
     """
-    from pyspark.sql.window import Window
-
     audit_cap = (
         max_bucket_size if audit_max_bucket_size is None
         else audit_max_bucket_size
@@ -374,18 +380,12 @@ def minhash_pairs_with_audit(
             "would report n_pair_buckets for buckets the pair leg dropped"
         )
     banded = _minhash_banded(df, id_col, text_col, num_hashes, bands, shingle_n)
-    w = Window.partitionBy("band", "bucket")
-    sized = banded.withColumn("_bucket_n", F.count(F.lit(1)).over(w))
-    ok = (
-        sized.filter(
-            (F.col("_bucket_n") > 1)
-            & (F.col("_bucket_n") <= max_bucket_size)
-        )
-        .drop("_bucket_n")
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
+    sized = _sized_buckets(banded, ["band", "bucket"])
+    pairs = (
+        _bucket_pairs(sized, ["band", "bucket"], max_bucket_size, F.col("_id"))
+        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
+        .distinct()
     )
-    pairs = _pairs_from_bucket_ids(ok)
     # one row per bucket, reusing the window's (band, bucket) partitioning
     # (no new exchange); the count is an optimizer fence — references _id
     # and _bucket_n so this branch prunes to the same column set as the
@@ -398,13 +398,7 @@ def minhash_pairs_with_audit(
             )
         ).alias("_n")
     )
-    gate_ok = (F.col("_n") > 1) & (F.col("_n") <= audit_cap)
-    audit = sizes.groupBy("band").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(gate_ok.cast("long")).alias("n_pair_buckets"),
-        F.sum((F.col("_n") > audit_cap).cast("long")).alias("n_oversized"),
-    )
-    return pairs, audit
+    return pairs, _band_audit(sizes, audit_cap)
 
 
 def _minhash_banded(
@@ -509,12 +503,7 @@ def minhash_bucket_audit(
     """
     banded = _minhash_banded(df, id_col, text_col, num_hashes, bands, shingle_n)
     sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_n"))
-    gate_ok = (F.col("_n") > 1) & (F.col("_n") <= max_bucket_size)
-    return sizes.groupBy("band").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(gate_ok.cast("long")).alias("n_pair_buckets"),
-        F.sum((F.col("_n") > max_bucket_size).cast("long")).alias("n_oversized"),
-    )
+    return _band_audit(sizes, max_bucket_size)
 
 
 def minhash_signatures(
@@ -622,42 +611,25 @@ def incremental_minhash_pairs(
     # collect_list skips NULLs, so _new_ids is exactly the bucket's new
     # members; buckets are capped, so the per-pair membership probe below
     # is O(max_bucket_size) worst case
-    ok = _bounded_buckets(
-        union, ["band", "bucket"], max_bucket_size,
-        F.sort_array(F.collect_list("_id")).alias("ids"),
+    keys = ["band", "bucket"]
+    pairs = _bucket_pairs(
+        _sized_buckets(union, keys), keys, max_bucket_size, F.col("_id"),
         F.sort_array(
             F.collect_list(F.when(F.col("_new"), F.col("_id")))
         ).alias("_new_ids"),
     )
-    exploded = ok.select(
-        "_new_ids",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("ids") - 2),
-                    lambda i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size("ids")),
-                        lambda b: F.struct(
-                            F.get(F.col("ids"), i.cast("int")).alias("id_a"),
-                            b.alias("id_b"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p"),
-    )
     return (
-        exploded.filter(
+        pairs.filter(
             (
-                F.array_contains(F.col("_new_ids"), F.col("p.id_a"))
-                | F.array_contains(F.col("_new_ids"), F.col("p.id_b"))
+                F.array_contains(F.col("_new_ids"), F.col("p.a"))
+                | F.array_contains(F.col("_new_ids"), F.col("p.b"))
             )
             # defensive: a batch id colliding with a stored id would pair
             # with itself — the disjointness contract above makes this a
             # no-op, but a violation must not emit (x, x) rows
-            & (F.col("p.id_a") != F.col("p.id_b"))
+            & (F.col("p.a") != F.col("p.b"))
         )
-        .select("p.id_a", "p.id_b")
+        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
     )
 
@@ -671,27 +643,39 @@ def jaccard_of_pairs(
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs: joins the (tiny)
     pair list back to the corpus twice — broadcast when it fits."""
+    shingled = _shingle_sets(df, id_col, text_col, shingle_n)
+    a = shingled.withColumnRenamed("_id", "id_a").withColumnRenamed("_sh", "_sh_a")
+    b = shingled.withColumnRenamed("_id", "id_b").withColumnRenamed("_sh", "_sh_b")
+    return pairs.join(a, "id_a").join(b, "id_b").select(
+        "id_a", "id_b", _jaccard(F.col("_sh_a"), F.col("_sh_b")).alias("jaccard")
+    )
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, *keep: str
+) -> DataFrame:
+    """``(*keep, _id, _sh)``: each document's distinct word-shingle set,
+    tokenized once per row (see ``_materialize``)."""
     from ..functions.text import word_shingles_from_tokens
 
-    shingled = _materialize(
-        df.select(F.col(id_col).alias("_jid"), F.col(text_col).alias("_t")),
+    return _materialize(
+        df.select(*keep, F.col(id_col).alias("_id"), F.col(text_col).alias("_t")),
         _toks=tokens(F.col("_t")),
     ).select(
-        "_jid",
+        *keep,
+        "_id",
         F.array_distinct(
             word_shingles_from_tokens(F.col("_toks"), shingle_n)
         ).alias("_sh"),
     )
-    a = shingled.withColumnRenamed("_jid", "id_a").withColumnRenamed("_sh", "_sh_a")
-    b = shingled.withColumnRenamed("_jid", "id_b").withColumnRenamed("_sh", "_sh_b")
-    joined = pairs.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    return joined.select(
-        "id_a",
-        "id_b",
-        F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
-    )
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """|a ∩ b| / |a ∪ b| of two distinct-element arrays; 0.0 when both
+    are empty."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
 def minhash_dedup_pairs(
@@ -830,31 +814,18 @@ def simhash_candidate_pairs(
     chunk, so bucketing on (chunk_idx, chunk_value) finds all of them with
     zero cross-bucket comparisons.  Verification recomputes exact hamming.
     """
-    banded = _simhash_banded(df, id_col, text_col, chunks)
-    ok = _bounded_buckets(
-        banded, ["chunk", "value"], max_bucket_size,
-        F.sort_array(F.collect_list(F.struct("_id", "_sh"))).alias("members"),
-    )
+    keys = ["chunk", "value"]
     pairs = (
-        ok.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("members") - 2),
-                        lambda i: F.transform(
-                            F.slice(F.col("members"), i + 2, F.size("members")),
-                            lambda m: F.struct(
-                                F.get(F.col("members"), i.cast("int"))["_id"].alias("id_a"),
-                                m["_id"].alias("id_b"),
-                                F.get(F.col("members"), i.cast("int"))["_sh"].alias("sh_a"),
-                                m["_sh"].alias("sh_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
+        _bucket_pairs(
+            _sized_buckets(_simhash_banded(df, id_col, text_col, chunks), keys),
+            keys, max_bucket_size, F.struct("_id", "_sh"),
         )
-        .select("p.*")
+        .select(
+            F.col("p.a._id").alias("id_a"),
+            F.col("p.b._id").alias("id_b"),
+            F.col("p.a._sh").alias("sh_a"),
+            F.col("p.b._sh").alias("sh_b"),
+        )
         .distinct()
     )
     return pairs.select(
@@ -888,22 +859,7 @@ def ngram_jaccard_pairs(
     :func:`minhash_candidate_pairs` + :func:`jaccard_of_pairs` for
     anything coarser).
     """
-    from ..functions.text import word_shingles_from_tokens
-
-    shingled = _materialize(
-        df.select(
-            *(block_cols or []),
-            F.col(id_col).alias("_id"),
-            F.col(text_col).alias("_t"),
-        ),
-        _toks=tokens(F.col("_t")),
-    ).select(
-        *(block_cols or []),
-        "_id",
-        F.array_distinct(
-            word_shingles_from_tokens(F.col("_toks"), shingle_n)
-        ).alias("_sh"),
-    )
+    shingled = _shingle_sets(df, id_col, text_col, shingle_n, *(block_cols or []))
     a = shingled.select(
         *[F.col(c).alias(f"_ba_{c}") for c in (block_cols or [])],
         F.col("_id").alias("id_a"),
@@ -917,13 +873,8 @@ def ngram_jaccard_pairs(
     cond = F.col("id_a") < F.col("id_b")
     for c in block_cols or []:
         cond = cond & (F.col(f"_ba_{c}") == F.col(f"_bb_{c}"))
-    joined = a.join(b, cond)
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    return joined.select(
-        "id_a",
-        "id_b",
-        F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
+    return a.join(b, cond).select(
+        "id_a", "id_b", _jaccard(F.col("_sh_a"), F.col("_sh_b")).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
 
 
@@ -987,30 +938,14 @@ def embedding_near_duplicates(
     ``planes`` (fewer planes → bigger buckets → higher recall, more work).
     """
     hashed = _hyperplane_hashed(df, id_col, vec_col, planes, dim)
-    ok = _bounded_buckets(
-        hashed, ["_b"], max_bucket_size,
-        F.sort_array(F.collect_list(F.struct("_id", "_v"))).alias("members"),
+    pairs = _bucket_pairs(
+        _sized_buckets(hashed, ["_b"]), ["_b"], max_bucket_size,
+        F.struct("_id", "_v"),
     )
-    pairs = ok.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("members") - 2),
-                    lambda i: F.transform(
-                        F.slice(F.col("members"), i + 2, F.size("members")),
-                        lambda m: F.struct(
-                            F.get(F.col("members"), i.cast("int"))["_id"].alias("id_a"),
-                            m["_id"].alias("id_b"),
-                            F.get(F.col("members"), i.cast("int"))["_v"].alias("v_a"),
-                            m["_v"].alias("v_b"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.*")
     return pairs.select(
-        "id_a",
-        "id_b",
-        F.round(cosine_similarity(F.col("v_a"), F.col("v_b")), 6).alias("cosine"),
+        F.col("p.a._id").alias("id_a"),
+        F.col("p.b._id").alias("id_b"),
+        F.round(cosine_similarity(F.col("p.a._v"), F.col("p.b._v")), 6).alias(
+            "cosine"
+        ),
     ).filter(F.col("cosine") >= threshold).distinct()

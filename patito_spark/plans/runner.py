@@ -165,15 +165,17 @@ class RunResult:
         verdicts: list,
         violations: list,
         skipped_partitions: list,
+        passed: bool,
     ) -> None:
         self.run_id = run_id
         self.verdicts = verdicts
         self.violations = violations
         self.skipped_partitions = skipped_partitions
-
-    @property
-    def passed(self) -> bool:
-        return all(v["passed"] for v in self.verdicts)
+        #: the checkpoint's verdict after this call: every verdict row it
+        #: wrote (retroactive ones included) and every row stored before it
+        #: passed — so a re-run with nothing pending still fails on failed
+        #: stored partitions
+        self.passed = passed
 
     def __repr__(self) -> str:  # pragma: no cover
         return (
@@ -219,21 +221,37 @@ class ValidationRunner:
         self.checkpoint_table = checkpoint_table
 
     # -- checkpoint I/O --------------------------------------------------------
+    def _location(self, store: str) -> Optional[str]:
+        """The catalog table or directory that holds *store*."""
+        if self.checkpoint_table:
+            return f"{self.checkpoint_table}_{store}"
+        if self.checkpoint_dir:
+            return f"{self.checkpoint_dir}/{store}"
+        return None
+
+    def _exists(self, spark: SparkSession, store: str) -> bool:
+        """Whether *store* was ever written: a catalog lookup, or an
+        ``exists`` on the Hadoop FileSystem — no Spark job either way."""
+        location = self._location(store)
+        if location is None:
+            return False
+        if self.checkpoint_table:
+            return spark.catalog.tableExists(location)
+        path = spark._jvm.org.apache.hadoop.fs.Path(location)
+        fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        return fs.exists(path)
+
     def _read(self, spark: SparkSession, store: str) -> Optional[DataFrame]:
         """One checkpoint store (``verdicts``, ``violations`` or
         ``unique_keys``); None before its first write.  A directory store
         is read with its known schema, so no schema-inference job runs."""
+        if not self._exists(spark, store):
+            return None
         if self.checkpoint_table:
-            name = f"{self.checkpoint_table}_{store}"
-            return spark.table(name) if spark.catalog.tableExists(name) else None
-        if self.checkpoint_dir:
-            try:
-                return spark.read.schema(_STORE_SCHEMAS[store]).parquet(
-                    f"{self.checkpoint_dir}/{store}"
-                )
-            except AnalysisException:  # no such directory yet
-                return None
-        return None
+            return spark.table(self._location(store))
+        return spark.read.schema(_STORE_SCHEMAS[store]).parquet(
+            self._location(store)
+        )
 
     def _stored(self, spark: SparkSession, store: str) -> DataFrame:
         """:meth:`_read`, raising while *store* has never been written."""
@@ -246,43 +264,33 @@ class ValidationRunner:
         if self.checkpoint_table:
             from ..sources.io import write_report_table
 
-            write_report_table(df, f"{self.checkpoint_table}_{store}")
+            write_report_table(df, self._location(store))
         elif self.checkpoint_dir:
-            df.write.mode("append").parquet(f"{self.checkpoint_dir}/{store}")
+            df.write.mode("append").parquet(self._location(store))
 
-    def _verdict_keys(self, spark: SparkSession) -> list:
-        """``(partition, run_id)`` of every persisted verdict: the verdict
-        store's one read per call (one row per finished partition),
-        deduplicated on the driver — a ``distinct`` would cost a shuffle."""
+    def _stored_verdicts(self, spark: SparkSession) -> tuple:
+        """``(keys, passed)``: the ``(partition, run_id)`` of every persisted
+        verdict, and whether every one of them passed.  The verdict store's
+        one read per call (one row per finished partition), deduplicated on
+        the driver — a ``distinct`` would cost a shuffle."""
         verdicts = self._read(spark, "verdicts")
         if verdicts is None:
-            return []
-        return list(
-            {
-                (r["partition"], r["run_id"])
-                for r in verdicts.select("partition", "run_id").collect()
-            }
+            return [], True
+        rows = verdicts.select("partition", "run_id", "passed").collect()
+        return (
+            list({(r["partition"], r["run_id"]) for r in rows}),
+            all(r["passed"] for r in rows),
         )
 
     def _refuse_legacy_store(self, spark: SparkSession) -> None:
         """The runner never mixes key-store formats: a checkpoint that still
         holds the legacy md5-hex partials store is refused before anything
         is written.  An existence check only, no Spark job."""
-        if self.checkpoint_table:
-            legacy = f"{self.checkpoint_table}_{_LEGACY_UNIQUE_STORE}"
-            found = spark.catalog.tableExists(legacy)
-        elif self.checkpoint_dir:
-            legacy = f"{self.checkpoint_dir}/{_LEGACY_UNIQUE_STORE}"
-            path = spark._jvm.org.apache.hadoop.fs.Path(legacy)
-            fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            found = fs.exists(path)
-        else:
-            return
-        if found:
+        if self._exists(spark, _LEGACY_UNIQUE_STORE):
             raise ValueError(
                 f"checkpoint holds a legacy {_LEGACY_UNIQUE_STORE!r} store "
-                f"({legacy}) that this runner can no longer read. Start a "
-                "fresh checkpoint."
+                f"({self._location(_LEGACY_UNIQUE_STORE)}) that this runner "
+                "can no longer read. Start a fresh checkpoint."
             )
 
     def _refuse_orphaned_run_id(
@@ -412,7 +420,7 @@ class ValidationRunner:
         df = _transform_df(df, model)
         part = F.col(self.partition_name).cast("string")
 
-        verdict_keys = self._verdict_keys(spark)
+        verdict_keys, stored_passed = self._stored_verdicts(spark)
         finished = {p for p, _ in verdict_keys}
         if finished:
             df = df.filter(_outside(part, finished))
@@ -545,7 +553,10 @@ class ValidationRunner:
         self._persist(spark, verdicts + retro_verdicts, violations)
         # None (the null partition's checkpoint key) sorts first
         skipped = sorted(finished, key=lambda p: (p is not None, p))
-        return RunResult(run_id, verdicts, violations, skipped)
+        passed = stored_passed and all(
+            v["passed"] for v in verdicts + retro_verdicts
+        )
+        return RunResult(run_id, verdicts, violations, skipped, passed)
 
     def report(self, spark: SparkSession) -> DataFrame:
         """The persisted violations table for this checkpoint."""

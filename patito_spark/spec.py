@@ -174,7 +174,7 @@ class ColumnSpec:
         "alias_choices",
         "alias_path",
         "model",
-        "dtype_str",
+        "explicit_dtype",
     )
 
     def __init__(self, name: str, annotation: Any, info: FieldInfo) -> None:
@@ -207,7 +207,9 @@ class ColumnSpec:
         self.alias_path = info.alias_path
         # nested model (struct) recursion target, if any
         self.model = _nested_model(annotation)
-        self.dtype_str = info.dtype if isinstance(info.dtype, str) else None
+        #: the column declared its dtype (``Field(dtype=...)``), so only that
+        #: dtype is valid — even when it equals the annotation's default
+        self.explicit_dtype = info.dtype is not None
 
         if info.dtype is not None:
             explicit = parse_dtype(info.dtype)
@@ -248,6 +250,8 @@ class ColumnSpec:
             "unique": self.unique,
             "allow_missing": self.allow_missing,
         }
+        if self.explicit_dtype:
+            d["explicit_dtype"] = True
         for key in (
             "ge",
             "gt",
@@ -960,12 +964,16 @@ def _model_from_dict(data: dict) -> type:
             values = {
                 k: parse(v) if isinstance(v, str) else v for k, v in values.items()
             }
+        # an undeclared dtype is the annotation's default: passing it back
+        # as explicit would narrow e.g. an int column to {LongType}
         info = FieldInfo(
             values["default"],
             dtype=(
-                None
-                if nested is not None or isinstance(dtype, T.StructType)
-                else dtype
+                dtype
+                if col_spec.get("explicit_dtype")
+                and nested is None
+                and not isinstance(dtype, T.StructType)
+                else None
             ),
             unique=col_spec.get("unique", False),
             allow_missing=col_spec.get("allow_missing", False),

@@ -324,6 +324,74 @@ def test_jobs_main_resume_matches_uninterrupted(spark, tmp_path):
     assert resumed == 1
 
 
+class Bounded(pt.Model):
+    p: int
+    v: int = pt.Field(ge=0)
+
+
+@pytest.mark.parametrize("rows, verdict", [([(0, -1), (1, 2)], False), ([(0, 1), (1, 2)], True)])
+def test_rerun_of_finished_checkpoint_keeps_its_verdict(spark, tmp_path, rows, verdict):
+    """A re-run with nothing pending validates nothing, yet reports the
+    checkpoint's stored verdict: a failed checkpoint stays failed, so
+    ``jobs.main --fail-on-violations`` keeps exiting 1."""
+    df = spark.createDataFrame(rows, "p bigint, v bigint")
+    runner = ValidationRunner(Bounded, "p", checkpoint_dir=str(tmp_path / "ckpt"))
+    assert runner.run(df).passed is verdict
+    again = runner.run(df)
+    assert again.verdicts == [] and again.skipped_partitions == ["0", "1"]
+    assert again.passed is verdict
+
+    spec = tmp_path / "spec.json"
+    spec.write_text(Bounded.spec_json())
+    data = str(tmp_path / "input")
+    df.write.parquet(data)
+    args = [
+        "--spec", str(spec), "--input", data, "--partition-col", "p",
+        "--checkpoint-dir", str(tmp_path / "jobs_ckpt"), "--fail-on-violations",
+    ]
+    assert jobs.main(args) == (0 if verdict else 1)
+    assert jobs.main(args) == (0 if verdict else 1)
+
+
+class Typed(pt.Model):
+    i: int
+    f: float
+    s: str
+    t: dt.datetime
+    xs: list[int]
+    n: int = pt.Field(dtype="int32")
+    w: int = pt.Field(dtype="long")
+
+
+def test_spec_json_keeps_valid_dtypes(spark, tmp_path):
+    """A rebuilt spec accepts exactly the dtypes the model accepts: an
+    undeclared dtype comes back as the annotation's valid set, a declared
+    one (even the annotation's default) as itself — so ``jobs.main`` over
+    an int32 table checks bounds instead of reporting dtype errors."""
+    rebuilt = model_from_spec_json(Typed.spec_json())
+    assert rebuilt.valid_dtypes == Typed.valid_dtypes
+    assert rebuilt.spec_json() == Typed.spec_json()
+
+    df = spark.createDataFrame([(0, -1), (1, 2)], "p int, v int")
+    assert _counts(find_errors(df, model_from_spec_json(Bounded.spec_json()))) == {
+        ("v", "bound"): 1
+    }
+    spec = tmp_path / "spec.json"
+    spec.write_text(Bounded.spec_json())
+    data = str(tmp_path / "input")
+    df.write.parquet(data)
+    ckpt = str(tmp_path / "ckpt")
+    assert jobs.main(
+        ["--spec", str(spec), "--input", data, "--partition-col", "p",
+         "--checkpoint-dir", ckpt]
+    ) == 0
+    stored = spark.read.parquet(f"{ckpt}/violations").collect()
+    assert [(r["partition"], r["column"], r["violation_count"]) for r in stored] == [
+        ("0", "v", 1)
+    ]
+    assert not [r for r in stored if r["error_type"] == "type_error.columndtype"]
+
+
 class Nested(pt.Model):
     p: int
     s: Inner

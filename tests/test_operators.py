@@ -578,6 +578,36 @@ def test_oversized_bucket_never_aggregated(spark, docs):
     assert all(r["n_pair_buckets"] >= 1 for r in audit.values())
 
 
+@pytest.mark.parametrize("n", [3, 4])
+@pytest.mark.parametrize("family", ["minhash", "simhash", "embedding"])
+def test_bucket_pair_kernel_emits_each_pair_once(spark, family, n):
+    """One bucket of n identical members yields exactly its C(n, 2) pairs,
+    each once with id_a < id_b; above ``max_bucket_size`` it yields none."""
+    import itertools
+
+    ids = [7, 3, 11, 5][:n]
+    if family == "embedding":
+        df = spark.createDataFrame(
+            [(i, [0.6, 0.8, 0.0]) for i in ids], "id long, v array<double>"
+        )
+
+        def pairs(cap):
+            return embedding_near_duplicates(df, "id", "v", max_bucket_size=cap)
+    else:
+        df = spark.createDataFrame(
+            [(i, "one page of text repeated verbatim") for i in ids],
+            "id long, text string",
+        )
+        op = minhash_candidate_pairs if family == "minhash" else simhash_candidate_pairs
+
+        def pairs(cap):
+            return op(df, "id", "text", max_bucket_size=cap)
+
+    found = [(r["id_a"], r["id_b"]) for r in pairs(n).collect()]
+    assert sorted(found) == list(itertools.combinations(sorted(ids), 2))
+    assert pairs(n - 1).count() == 0
+
+
 # -- simhash ----------------------------------------------------------------------------------
 
 

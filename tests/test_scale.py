@@ -417,7 +417,7 @@ def test_runner_exact_resume_refuses_run_id_with_orphan_partials(spark, tmp_path
     _write_torn_partials(runner, first, "r1")
     with pytest.raises(ValueError, match="'r1'"):
         runner.run(first, run_id="r1")
-    assert runner._verdict_keys(spark) == []  # the refused call wrote nothing
+    assert runner._stored_verdicts(spark)[0] == []  # the refused call wrote nothing
 
     runner.run(first, run_id="r2")
     # reusing an id that owns no orphan partials stays legal
@@ -591,7 +591,7 @@ def test_runner_failing_concurrent_branch_writes_no_verdicts(
 
     runner = ValidationRunner(_Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"))
     runner.run(df.filter(F.col("p") < 2), run_id="r1")
-    finished = sorted(runner._verdict_keys(spark))
+    finished = sorted(runner._stored_verdicts(spark)[0])
 
     def fail(self, partials, run_id):
         raise RuntimeError("partials write failed")
@@ -600,7 +600,7 @@ def test_runner_failing_concurrent_branch_writes_no_verdicts(
         m.setattr(ValidationRunner, "_persist_unique_partials", fail)
         with pytest.raises(RuntimeError, match="partials write failed"):
             runner.run(df, run_id="r2")
-    assert sorted(runner._verdict_keys(spark)) == finished
+    assert sorted(runner._stored_verdicts(spark)[0]) == finished
 
     retry = runner.run(df, run_id="r3")
     assert sorted(v["partition"] for v in retry.verdicts) == ["2", "3"]

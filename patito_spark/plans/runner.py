@@ -24,32 +24,41 @@ Execution plan per run (SURVEY §4.3):
 4. **Job 2** — global uniqueness with per-partition attribution: each
    unique value is hashed *before* the shuffle into ``find_errors``'
    xxhash64 pair (``plans.checks._key_hashes``); ``groupBy(column, h1, h2,
-   partition)`` gives the local counts (the partials), one ``(column, h1,
-   h2)`` window the global totals, and one ``groupBy(partition, column)``
-   charges each partition its members of duplicated groups.
+   partition)`` gives the local counts (the partials).  They are
+   materialized once (``localCheckpoint``: the shuffle's map stage runs
+   once and the result partitions stay in executor storage until the call
+   ends), then appended to the ``unique_keys`` store while the charge runs
+   over them: one ``(column, h1, h2)`` window gives the global totals, one
+   ``groupBy(partition, column)`` charges each partition its members of
+   duplicated groups.
 5. Verdicts + violations appended as one write each, built on the driver
    as Arrow-backed local relations (``sources.io.driver_frame``).
 
-Job 1 and the scan side of Job 2 run concurrently, as do the two writes
-of step 5 (``plans.checks._concurrently``: the second branch runs on a
-``pyspark.InheritableThread``, keeping the caller's job group; the first
-exception is re-raised).  Stores are read with their known schemas (an
-unschema'd parquet read launches a schema-inference job).
+Job 1 and Job 2 run concurrently, as do Job 2's store append and charge,
+and the two writes of step 5 (``plans.checks._concurrently``: the second
+branch runs on a ``pyspark.InheritableThread``, keeping the caller's job
+group; the first exception is re-raised).  Stores are read with their
+known schemas (an unschema'd parquet read launches a schema-inference
+job).
 
 Resume and global uniqueness: finished partitions are never re-scanned, so
 every checkpointed run persists its partials to a third store
 (``unique_keys``, 16 bytes per distinct key — the one checkpoint artifact
-that scales with data) before anything is charged, then reads the store
-back once: a row is trusted iff its (partition, run_id) matches a
-persisted verdict (a finished run's) or this call's pending partitions,
-and one charge job computes the merged charge and the finished runs' own.
-Pending partitions are charged against the merged totals; a finished
-partition that joined a cross-boundary duplicate group gets delta
-violation rows (merged minus prior charge) and one more, failed, verdict
-row with ``n_rows = 0`` — a partition's stored verdict is the AND of its
-rows, its counts their sums.  The cumulative stores therefore always say
-what one uninterrupted run would have said.  A run without a checkpoint
-has nothing to resume from and charges straight from the scan.
+that scales with data) before any verdict lands.  The charge covers this
+call's in-flight partials, which are exactly its pending partitions', plus
+the prior ones: the store read once, a row trusted iff its (partition,
+run_id) matches a persisted verdict, so neither orphans nor the rows being
+appended beside the charge are counted.  One charge job computes the
+merged charge and the finished runs' own.  Pending partitions are charged
+against the merged totals; a finished partition that joined a
+cross-boundary duplicate group gets delta violation rows (merged minus
+prior charge) and one more, failed, verdict row with ``n_rows = 0`` — a
+partition's stored verdict is the AND of its rows, its counts their sums.
+The cumulative stores therefore always say what one uninterrupted run
+would have said.  A call with no pending key (its partials are empty,
+e.g. a re-run of a finished checkpoint) neither reads the store nor
+writes to it; a run without a checkpoint has no prior partials and no
+store to write.
 
 Crash safety: partials written by a call that died before its verdicts
 match no trust key and drop out; a caller-chosen run_id that owns such
@@ -68,6 +77,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from contextlib import contextmanager
 from functools import reduce
 from typing import Optional
 
@@ -130,13 +140,11 @@ UNIQUE_KEYS_SCHEMA = T.StructType(
 _UNIQUE_STORE = "unique_keys"
 _LEGACY_UNIQUE_STORE = "unique_partials"
 
-#: trust keys for the partials read-back: one row per persisted verdict
-#: (``_prior``) plus one per partition this call is validating
+#: trust keys for the prior partials: one row per persisted verdict
 _TRUST_SCHEMA = T.StructType(
     [
         T.StructField("_kp", T.StringType()),
         T.StructField("_kr", T.StringType()),
-        T.StructField("_prior", T.BooleanType()),
     ]
 )
 
@@ -340,29 +348,25 @@ class ValidationRunner:
             _UNIQUE_STORE,
         )
 
-    def _trusted_partials(
-        self,
-        spark: SparkSession,
-        verdict_keys: list,
-        run_id: str,
-        pending: list,
-    ) -> DataFrame:
-        """The partials store, read once, as ``_p, k, h1, h2, cnt, _prior``.
+    def _prior_partials(
+        self, spark: SparkSession, verdict_keys: list
+    ) -> Optional[DataFrame]:
+        """The stored partials of finished partitions, as ``_p, k, h1, h2,
+        cnt, _prior``; None while nothing is finished or stored.
 
         A row is trusted iff its (partition, run_id) matches a persisted
-        verdict (``_prior``) or this call's own pending partitions.  Partials
-        are written before verdicts, so a crash between the two writes
-        leaves orphan rows that a re-run of the partition would otherwise
-        double-count; they match neither and drop out.
+        verdict.  Partials are written before verdicts, so a crash between
+        the two writes leaves orphan rows that a re-run of the partition
+        would otherwise double-count; they match no verdict and drop out,
+        as do the rows this call is appending concurrently.
         """
         from ..sources.io import driver_frame
 
-        stored = self._stored(spark, _UNIQUE_STORE)
+        stored = self._read(spark, _UNIQUE_STORE) if verdict_keys else None
+        if stored is None:
+            return None
         keys = driver_frame(
-            spark,
-            [{"_kp": p, "_kr": r, "_prior": True} for p, r in verdict_keys]
-            + [{"_kp": p, "_kr": run_id, "_prior": False} for p in pending],
-            _TRUST_SCHEMA,
+            spark, [{"_kp": p, "_kr": r} for p, r in verdict_keys], _TRUST_SCHEMA
         )
         # eqNullSafe: the NULL partition's partials must survive the join
         cond = stored["partition"].eqNullSafe(keys["_kp"]) & (
@@ -374,7 +378,7 @@ class ValidationRunner:
             "h1",
             "h2",
             "cnt",
-            "_prior",
+            F.lit(True).alias("_prior"),
         )
 
     def _persist(
@@ -487,40 +491,39 @@ class ValidationRunner:
             self._refuse_orphaned_run_id(spark, run_id, verdict_keys)
 
         def uniqueness() -> dict:
-            """Job 2's half that needs nothing from Job 1."""
+            """Job 2, which needs nothing from Job 1: this call's partials,
+            computed once, are appended to the store while they are charged
+            together with the prior ones."""
             if partials is None:
                 return {}
-            if checkpointed:
-                # write partials BEFORE verdicts: a crash between the two
-                # leaves orphan partials that _trusted_partials ignores
-                self._persist_unique_partials(partials, run_id)
-                return {}
-            # nothing to resume from: this call's partials alone, straight
-            # from the scan
-            return _charge(partials.withColumn("_prior", F.lit(False)))
+            with _materialized(partials) as own:
+                if own is None:
+                    # no pending key: no charge can change, nothing to store
+                    return {}
+                tagged = own.withColumn("_prior", F.lit(False))
+                prior = self._prior_partials(spark, verdict_keys)
+                if prior is not None:
+                    tagged = tagged.unionByName(prior)
+                # the partials land BEFORE any verdict: a crash between the
+                # two leaves orphan partials that _prior_partials ignores
+                _, charges = _concurrently(
+                    lambda: self._persist_unique_partials(own, run_id),
+                    lambda: _charge(tagged),
+                )
+                return charges
 
         (per_partition_errors, stats), charges = _concurrently(aggregates, uniqueness)
         retro: dict = {}  # finished partition → its retroactive delta rows
-        if partials is not None and per_partition_errors:
-            if checkpointed:
-                charges = _charge(
-                    self._trusted_partials(
-                        spark, verdict_keys, run_id, list(per_partition_errors)
-                    )
-                )
-            for (p, loc), (count, prior) in charges.items():
-                if p in per_partition_errors:
-                    per_partition_errors[p].append(count_error("unique", loc, count))
-                elif count > prior:
-                    # finished partition retroactively joined a
-                    # cross-boundary duplicate group: emit the DELTA so the
-                    # cumulative violation table equals what one
-                    # uninterrupted run would have charged
-                    retro.setdefault(p, []).append(
-                        _violation_row(
-                            p, count_error("unique", loc, count - prior), run_id
-                        )
-                    )
+        for (p, loc), (count, prior) in charges.items():
+            if p in per_partition_errors:
+                per_partition_errors[p].append(count_error("unique", loc, count))
+            elif count > prior:
+                # finished partition retroactively joined a cross-boundary
+                # duplicate group: emit the DELTA so the cumulative
+                # violation table equals what one uninterrupted run would
+                # have charged
+                delta = count_error("unique", loc, count - prior)
+                retro.setdefault(p, []).append(_violation_row(p, delta, run_id))
 
         finished_at = time.time()
 
@@ -593,6 +596,26 @@ def _unique_partials(df: DataFrame, part, key_hashes) -> DataFrame:
         .groupBy("k", "h1", "h2", "_p")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+
+
+@contextmanager
+def _materialized(df: DataFrame):
+    """*df* computed once for several concurrent consumers, or None when it
+    holds no row.
+
+    ``localCheckpoint(eager=False)`` runs the frame's shuffle map stages
+    now (adaptive execution plans the final stage from their output) and
+    keeps each result partition in executor storage once computed.  When
+    the map stages wrote no row, the final plan is an empty relation with
+    no partitions, so emptiness costs no job.  The blocks are released on
+    exit, on success and on failure alike.
+    """
+    frame = df.localCheckpoint(eager=False)
+    rdd = frame._jdf.queryExecution().analyzed().rdd()
+    try:
+        yield frame if rdd.getNumPartitions() else None
+    finally:
+        rdd.unpersist(False)
 
 
 def _charge(tagged: DataFrame) -> dict:

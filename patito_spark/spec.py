@@ -174,7 +174,7 @@ class ColumnSpec:
         "alias_choices",
         "alias_path",
         "model",
-        "explicit_dtype",
+        "declared_dtype",
     )
 
     def __init__(self, name: str, annotation: Any, info: FieldInfo) -> None:
@@ -207,9 +207,10 @@ class ColumnSpec:
         self.alias_path = info.alias_path
         # nested model (struct) recursion target, if any
         self.model = _nested_model(annotation)
-        #: the column declared its dtype (``Field(dtype=...)``), so only that
-        #: dtype is valid — even when it equals the annotation's default
-        self.explicit_dtype = info.dtype is not None
+        #: the column's ``Field(dtype=...)`` as declared, None when it
+        #: declared none: a declared dtype is the only valid one — even when
+        #: it equals the annotation's default
+        self.declared_dtype = info.dtype
 
         if info.dtype is not None:
             explicit = parse_dtype(info.dtype)
@@ -250,7 +251,7 @@ class ColumnSpec:
             "unique": self.unique,
             "allow_missing": self.allow_missing,
         }
-        if self.explicit_dtype:
+        if self.declared_dtype is not None:
             d["explicit_dtype"] = True
         for key in (
             "ge",
@@ -876,6 +877,10 @@ def _spec_as_field(spec: ColumnSpec, force_nullable: bool = False) -> tuple:
         spec.default if not force_nullable else (
             spec.default if not isinstance(spec.default, _Missing) else None
         ),
+        # the declared value, not the parsed one: an undeclared dtype stays
+        # undeclared (the default would narrow an int column to {LongType}),
+        # and an unsigned alias keeps its widening past the annotation
+        dtype=spec.declared_dtype,
         unique=spec.unique,
         allow_missing=spec.allow_missing,
         ge=spec.ge,

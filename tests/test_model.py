@@ -4,6 +4,7 @@ import datetime as dt
 from typing import Literal, Optional
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import patito_spark as pt
@@ -116,6 +117,43 @@ def test_algebra_preserves_constraints():
     S = M.select("a")
     assert S.specs["a"].unique is True
     assert S.specs["a"].ge == 0
+
+
+class Declared(pt.Model):
+    n: int = pt.Field(dtype="int32")
+    k: str
+
+
+def test_algebra_keeps_declared_dtype(spark):
+    """A derived model accepts exactly the dtypes its source column
+    declared: an int64 ``n`` fails every derivation as it fails the
+    original, an int32 one passes."""
+    derived = {
+        "n": [
+            Declared,
+            Declared.select("n"),
+            Declared.drop("k"),
+            Declared.rename({"k": "kk"}),
+            Declared.join(Other, how="left"),
+            Declared.with_fields(c=(float, pt.Field(ge=0.0))),
+        ],
+        "x_n": [Declared.prefix("x_")],
+        "n_y": [Declared.suffix("_y")],
+    }
+    for name, models in derived.items():
+        for model in models:
+            assert model.valid_dtypes[name] == {T.IntegerType()}, model
+
+            def frame(n_type):
+                cols = [
+                    F.lit(1).cast(n_type if c == name else model.dtypes[c]).alias(c)
+                    for c in model.columns
+                ]
+                return spark.range(1).select(*cols)
+
+            model.validate(frame("int"))
+            with pytest.raises(pt.DataFrameValidationError, match=name):
+                model.validate(frame("bigint"))
 
 
 def test_validate_schema_catches_bad_constraint_refs():

@@ -608,6 +608,97 @@ def test_runner_failing_concurrent_branch_writes_no_verdicts(
     assert _dup_counts([r.asDict() for r in persisted]) == truth
 
 
+def test_runner_failing_charge_writes_no_verdicts(spark, tmp_path, monkeypatch):
+    """The charge fails while the partials write beside it succeeds:
+    ``run()`` re-raises before any verdict is written, a retry under the
+    same chosen run_id is refused (its partials are orphans now), and a
+    retry under a fresh run_id reproduces the uninterrupted totals."""
+    import patito_spark.plans.runner as runner_module
+
+    rows = [(0, 1), (0, 7), (1, 2), (1, 2), (1, None), (2, 1), (3, 7), (3, None)]
+    df = spark.createDataFrame(rows, "p int, u int")
+    truth = _dup_counts(
+        ValidationRunner(
+            _Unique, "p", checkpoint_dir=str(tmp_path / "full")
+        ).run(df).violations
+    )
+    ckpt = str(tmp_path / "ckpt")
+    runner = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt)
+    runner.run(df.filter(F.col("p") < 2), run_id="r1")
+    finished = sorted(runner._stored_verdicts(spark)[0])
+
+    def fail(tagged):
+        raise RuntimeError("charge failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(runner_module, "_charge", fail)
+        with pytest.raises(RuntimeError, match="charge failed"):
+            runner.run(df, run_id="r2")
+    assert sorted(runner._stored_verdicts(spark)[0]) == finished
+    written = spark.read.parquet(f"{ckpt}/unique_keys").filter(F.col("run_id") == "r2")
+    assert {r["partition"] for r in written.collect()} == {"2", "3"}
+
+    with pytest.raises(ValueError, match="'r2'"):
+        runner.run(df, run_id="r2")
+    retry = runner.run(df, run_id="r3")
+    assert sorted(v["partition"] for v in retry.verdicts) == ["2", "3"]
+    persisted = runner.report(spark).filter(F.col("column") == "u").collect()
+    assert _dup_counts([r.asDict() for r in persisted]) == truth
+
+
+def test_runner_releases_its_materialized_partials(spark, tmp_path, monkeypatch):
+    """The partials a call materializes for its write and its charge hold
+    executor storage only while the call runs: no persisted RDD outlives
+    ``run()``, after a first call, a resume, or a failing branch."""
+    import patito_spark.plans.runner as runner_module
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    df = spark.createDataFrame([(0, 1), (1, 1), (2, 5), (2, 5)], "p int, u int")
+    runner = ValidationRunner(_Unique, "p", checkpoint_dir=str(tmp_path / "ckpt"))
+    runner.run(df.filter(F.col("p") < 2))
+    assert persisted() == before
+    runner.run(df)
+    assert persisted() == before
+    ValidationRunner(_Unique, "p").run(df)
+    assert persisted() == before
+
+    def fail(*args):
+        raise RuntimeError("branch failed")
+
+    failing = [
+        (runner_module, "_charge"),
+        (ValidationRunner, "_persist_unique_partials"),
+        (runner_module, "_aggregate"),
+    ]
+    for owner, name in failing:
+        runner = ValidationRunner(_Unique, "p", checkpoint_dir=str(tmp_path / name))
+        with monkeypatch.context() as m:
+            m.setattr(owner, name, fail)
+            with pytest.raises(RuntimeError, match="branch failed"):
+                runner.run(df)
+        assert persisted() == before, name
+
+
+def test_runner_rerun_of_finished_checkpoint_reads_no_partials(spark, tmp_path):
+    """A re-run with nothing pending reads the verdict store and nothing
+    else: no stored partials, since no charge can change."""
+    df = _partitioned_source(spark, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    ValidationRunner(_Unique, "p", checkpoint_dir=ckpt).run(df)
+    sc = spark.sparkContext
+    sc.setJobGroup("runner-rerun-reads", "re-run of a finished checkpoint")
+    try:
+        again = ValidationRunner(_Unique, "p", checkpoint_dir=ckpt).run(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again.verdicts == [] and len(again.skipped_partitions) == 8
+    verdict_rows = spark.read.parquet(f"{ckpt}/verdicts").count()
+    assert _input_records(spark, "runner-rerun-reads") <= verdict_rows
+
+
 def _write_legacy_unique_store(spark, runner):
     """A pre-``unique_keys`` partials store: md5-hex key hashes."""
     legacy = spark.createDataFrame(

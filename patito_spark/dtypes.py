@@ -85,12 +85,14 @@ _STRING_ALIASES: dict[str, T.DataType] = {
     "uint64": T.DecimalType(20, 0),
 }
 
-#: For an explicit unsigned dtype string, the synthesized [min, max] bounds.
-UNSIGNED_BOUNDS: dict[str, tuple[int, int]] = {
+#: For an explicit unsigned dtype string, the synthesized [min, max] bounds;
+#: uint64's maximum is a Decimal, as a Python int past 2^63 - 1 is no Spark
+#: literal.
+UNSIGNED_BOUNDS: dict[str, tuple] = {
     "uint8": (0, 2**8 - 1),
     "uint16": (0, 2**16 - 1),
     "uint32": (0, 2**32 - 1),
-    "uint64": (0, 2**64 - 1),
+    "uint64": (0, decimal.Decimal(2**64 - 1)),
 }
 
 

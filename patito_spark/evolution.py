@@ -12,8 +12,8 @@ breaking ones:
 - **retyped** columns outside Spark's lossless widening lattice
   (byte→short→int→long, float→double, int→long, etc.);
 - **tightened nullability** (Optional → required);
-- **tightened constraints** (bounds narrowed, new pattern/enum/unique —
-  previously-valid rows may now fail).
+- **tightened constraints** (bounds narrowed, new pattern/enum/unique or
+  custom constraint — previously-valid rows may now fail).
 
 Loosening (widening a bound, making a column Optional, dropping a
 constraint) is reported but not breaking.  Pure metadata — no Spark
@@ -52,11 +52,21 @@ _CONSTRAINT_FIELDS = (
     "max_length",
     "allowed_values",
     "unique",
+    "constraints",
 )
 
 
 def _is_widening(old: T.DataType, new: T.DataType) -> bool:
     return (type(old), type(new)) in _WIDENINGS
+
+
+def _comparable(spec, field: str):
+    """*spec*'s *field*; custom constraints as their serialized forms, since
+    ``==`` on an ``Expr`` builds an ``Expr``."""
+    value = getattr(spec, field)
+    if field == "constraints" and value is not None:
+        return tuple(c.serialize() for c in value)
+    return value
 
 
 def _tightened(field: str, old, new) -> bool:
@@ -73,6 +83,8 @@ def _tightened(field: str, old, new) -> bool:
         return new < old  # lowered upper bound
     if field == "allowed_values":
         return not set(new) >= set(old)  # domain shrank
+    if field == "constraints":
+        return not set(new) <= set(old)  # a constraint added or changed
     return True  # pattern/const/multiple_of changed → assume tighter
 
 
@@ -128,7 +140,7 @@ def diff_models(old: type, new: type) -> dict:
         changed = []
         tightened = False
         for field in _CONSTRAINT_FIELDS:
-            ov, nv = getattr(ospec, field), getattr(nspec, field)
+            ov, nv = _comparable(ospec, field), _comparable(nspec, field)
             if ov != nv:
                 changed.append(field)
                 tightened = tightened or _tightened(field, ov, nv)

@@ -764,14 +764,8 @@ def simhash(text_col: Column, bits: int = SIMHASH_BITS) -> Column:
     )
 
 
-def hamming_distance(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:
-    xor = a.bitwiseXOR(b)
-    if hasattr(F, "bit_count"):
-        return F.bit_count(xor)
-    result = F.lit(0)
-    for i in range(bits):  # pragma: no cover - pre-3.5 fallback
-        result = result + F.shiftright(xor, i).bitwiseAND(F.lit(1)).cast("int")
-    return result
+def hamming_distance(a: Column, b: Column) -> Column:
+    return F.bit_count(a.bitwiseXOR(b))
 
 
 def _simhash_banded(

@@ -28,8 +28,7 @@ def _micros(df: DataFrame, col: str) -> Column:
     dtype = df.schema[col].dataType
     if isinstance(dtype, T.TimestampType):
         return F.unix_micros(F.col(col))
-    ntz = getattr(T, "TimestampNTZType", None)
-    if ntz is not None and isinstance(dtype, ntz):
+    if isinstance(dtype, T.TimestampNTZType):
         epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
         return F.timestamp_diff("MICROSECOND", epoch, F.col(col))
     return (F.col(col) * 1_000_000).cast("long")

@@ -70,7 +70,7 @@ def column_profile(
                 F.mean(col).alias(f"{c}__mean"),
                 F.stddev(col).alias(f"{c}__stddev"),
             ]
-        if hll_sketch and hasattr(F, "hll_sketch_agg") and not isinstance(
+        if hll_sketch and not isinstance(
             df.schema[c].dataType,
             (T.DoubleType, T.FloatType, T.BooleanType, T.TimestampType,
              T.TimestampNTZType, T.DateType),

@@ -142,15 +142,13 @@ def Field(
     )
 
 
-_BOUND_KEYS = ("ge", "gt", "le", "lt", "multiple_of", "const")
-
-
 class ColumnSpec:
     """Fully-resolved column: dtype + valid set + nullability + all checks."""
 
     __slots__ = (
         "name",
         "annotation",
+        "info",
         "dtype",
         "valid_dtypes",
         "nullable",
@@ -174,43 +172,28 @@ class ColumnSpec:
         "alias_choices",
         "alias_path",
         "model",
-        "declared_dtype",
     )
 
     def __init__(self, name: str, annotation: Any, info: FieldInfo) -> None:
         self.name = name
         self.annotation = annotation
+        #: the ``Field()`` as declared: model derivation resolves it again,
+        #: so a declared dtype stays the only valid one (even when it equals
+        #: the annotation's default) and an unsigned alias keeps its widening
+        self.info = info
         resolved: ResolvedType = resolve_annotation(annotation)
         self.nullable = resolved.nullable
         self.item_nullable = resolved.item_nullable
-        self.allowed_values = resolved.allowed_values
-        self.default = info.default
-        self.unique = info.unique
-        self.allow_missing = info.allow_missing
-        for key in _BOUND_KEYS:
-            setattr(self, key, getattr(info, key))
-        self.pattern = info.pattern
-        self.min_length = info.min_length
-        self.max_length = info.max_length
-        if info.allowed is not None:
-            self.allowed_values = list(info.allowed)
+        for slot in FieldInfo.__slots__:
+            if slot not in ("dtype", "allowed", "constraints"):
+                setattr(self, slot, getattr(info, slot))
+        self.allowed_values = (
+            resolved.allowed_values if info.allowed is None else list(info.allowed)
+        )
         cons = info.constraints
-        if cons is None:
-            self.constraints = None
-        elif isinstance(cons, Expr):
-            self.constraints = [cons]
-        else:
-            self.constraints = list(cons)
-        self.derived_from = info.derived_from
-        self.alias = info.alias
-        self.alias_choices = info.alias_choices
-        self.alias_path = info.alias_path
+        self.constraints = [cons] if isinstance(cons, Expr) else list(cons or ()) or None
         # nested model (struct) recursion target, if any
         self.model = _nested_model(annotation)
-        #: the column's ``Field(dtype=...)`` as declared, None when it
-        #: declared none: a declared dtype is the only valid one — even when
-        #: it equals the annotation's default
-        self.declared_dtype = info.dtype
 
         if info.dtype is not None:
             explicit = parse_dtype(info.dtype)
@@ -248,38 +231,11 @@ class ColumnSpec:
             "name": self.name,
             "dtype": self.dtype.json(),
             "nullable": self.nullable,
-            "unique": self.unique,
-            "allow_missing": self.allow_missing,
         }
-        if self.declared_dtype is not None:
-            d["explicit_dtype"] = True
-        for key in (
-            "ge",
-            "gt",
-            "le",
-            "lt",
-            "multiple_of",
-            "const",
-            "pattern",
-            "min_length",
-            "max_length",
-            "allowed_values",
-            "alias",
-            "alias_choices",
-        ):
-            value = getattr(self, key)
-            if value is not None:
-                d[key] = _json_safe(value) if key in _BOUND_KEYS else value
-        if not isinstance(self.default, _Missing):
-            d["default"] = _json_safe(self.default)
-        if self.constraints:
-            d["constraints"] = [c.to_dict() for c in self.constraints]
-        if self.derived_from is not None:
-            d["derived_from"] = (
-                self.derived_from
-                if isinstance(self.derived_from, str)
-                else {"expr": self.derived_from.to_dict()}
-            )
+        for key, slot, encode, _ in _SPEC_KEYS:
+            value = self.info.dtype if slot == "dtype" else getattr(self, key)
+            if value is not (MISSING if slot == "default" else None):
+                d[key] = encode(value)
         if self.model is not None:
             # struct / list-of-struct: the sub-model's own checks travel too
             d["model"] = _spec_dict(self.model)
@@ -364,9 +320,7 @@ class ColumnSpec:
         elif isinstance(dtype, T.BooleanType):
             if not isinstance(value, bool):
                 errors.append((None, ColumnDTypeError("Input should be a valid boolean")))
-        elif isinstance(dtype, T.TimestampType) or (
-            hasattr(T, "TimestampNTZType") and isinstance(dtype, T.TimestampNTZType)
-        ):
+        elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
             if not isinstance(value, dt.datetime):
                 errors.append((None, ColumnDTypeError("Input should be a valid datetime")))
         elif isinstance(dtype, T.DateType):
@@ -446,14 +400,95 @@ class ColumnSpec:
             return value
 
 
-def _json_safe(v: Any) -> Any:
-    if isinstance(v, (dt.datetime, dt.date, dt.time)):
-        return v.isoformat()
-    if isinstance(v, dt.timedelta):
-        return v.total_seconds()
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
+def _encode_value(value: Any) -> Any:
+    """JSON form of a bound, ``const``, ``default`` or allowed value;
+    ``_decode_value`` inverts it by the column's Spark type.  A timedelta
+    is its seconds (exact to the microsecond below about 70 years)."""
+    if isinstance(value, (list, tuple)):
+        return [_encode_value(v) for v in value]
+    if isinstance(value, (dt.date, dt.time)):  # datetime is a date
+        return value.isoformat()
+    if isinstance(value, dt.timedelta):
+        return value.total_seconds()
+    if isinstance(value, bytes):
+        return value.hex()
+    if isinstance(value, decimal.Decimal):
+        return str(value)
+    return value
+
+
+#: Spark type of a column (or list item) → (JSON type, parser) of
+#: ``_encode_value``'s output for its values
+_DECODERS = {
+    T.DateType: (str, dt.date.fromisoformat),
+    T.TimestampType: (str, dt.datetime.fromisoformat),
+    T.TimestampNTZType: (str, dt.datetime.fromisoformat),
+    T.DayTimeIntervalType: ((int, float), lambda s: dt.timedelta(seconds=s)),
+    T.BinaryType: (str, bytes.fromhex),
+    T.DecimalType: (str, decimal.Decimal),
+}
+
+
+def _decode_value(value: Any, dtype: T.DataType) -> Any:
+    if isinstance(value, list):  # allowed values, or a list column's default
+        item = dtype.elementType if isinstance(dtype, T.ArrayType) else dtype
+        return [_decode_value(v, item) for v in value]
+    while isinstance(dtype, T.ArrayType):  # a bound on a list's items
+        dtype = dtype.elementType
+    kind, parse = _DECODERS.get(type(dtype), (None, None))
+    return parse(value) if kind and isinstance(value, kind) else value
+
+
+def _plain(value: Any, dtype: Any = None) -> Any:
+    return value
+
+
+_VALUE = (_encode_value, _decode_value)
+
+#: The serialized keys of a column after ``name``, ``dtype`` and
+#: ``nullable``, in their JSON order: ``(key, FieldInfo slot, encode,
+#: decode)``.  ``to_dict`` writes the ColumnSpec attribute *key* (the
+#: declared dtype for ``explicit_dtype``) unless it is unset;
+#: ``_model_from_dict`` passes every key present back as ``Field(slot=...)``,
+#: ``decode`` getting the column's dtype.  A ``Field`` kwarg missing here
+#: does not survive ``spec_json``.
+_SPEC_KEYS = (
+    ("unique", "unique", _plain, _plain),
+    ("allow_missing", "allow_missing", _plain, _plain),
+    ("explicit_dtype", "dtype", lambda v: True, lambda v, dtype: dtype),
+    ("ge", "ge", *_VALUE),
+    ("gt", "gt", *_VALUE),
+    ("le", "le", *_VALUE),
+    ("lt", "lt", *_VALUE),
+    ("multiple_of", "multiple_of", *_VALUE),
+    ("const", "const", *_VALUE),
+    ("pattern", "pattern", _plain, _plain),
+    ("min_length", "min_length", _plain, _plain),
+    ("max_length", "max_length", _plain, _plain),
+    ("allowed_values", "allowed", *_VALUE),
+    ("alias", "alias", _plain, _plain),
+    # a tuple choice is an alias path
+    (
+        "alias_choices",
+        "alias_choices",
+        _plain,
+        lambda v, dtype: [tuple(c) if isinstance(c, list) else c for c in v],
+    ),
+    ("alias_path", "alias_path", _plain, lambda v, dtype: tuple(v)),
+    ("default", "default", *_VALUE),
+    (
+        "constraints",
+        "constraints",
+        lambda v: [c.to_dict() for c in v],
+        lambda v, dtype: [Expr.from_dict(c) for c in v],
+    ),
+    (
+        "derived_from",
+        "derived_from",
+        lambda v: v if isinstance(v, str) else {"expr": v.to_dict()},
+        lambda v, dtype: Expr.from_dict(v["expr"]) if isinstance(v, dict) else v,
+    ),
+)
 
 
 def _spec_dict(model: type) -> dict:
@@ -869,37 +904,17 @@ class Model(metaclass=ModelMetaclass):
 
 def _spec_as_field(spec: ColumnSpec, force_nullable: bool = False) -> tuple:
     """ColumnSpec → (annotation, FieldInfo) for model derivation
-    (≈ ``_derive_field``, patito ``pydantic.py:1219-1246``)."""
-    annotation = spec.annotation
-    if force_nullable and not spec.nullable:
-        annotation = Optional[annotation]
-    info = FieldInfo(
-        spec.default if not force_nullable else (
-            spec.default if not isinstance(spec.default, _Missing) else None
-        ),
-        # the declared value, not the parsed one: an undeclared dtype stays
-        # undeclared (the default would narrow an int column to {LongType}),
-        # and an unsigned alias keeps its widening past the annotation
-        dtype=spec.declared_dtype,
-        unique=spec.unique,
-        allow_missing=spec.allow_missing,
-        ge=spec.ge,
-        gt=spec.gt,
-        le=spec.le,
-        lt=spec.lt,
-        multiple_of=spec.multiple_of,
-        const=spec.const,
-        pattern=spec.pattern,
-        min_length=spec.min_length,
-        max_length=spec.max_length,
-        allowed=spec.allowed_values,
-        constraints=list(spec.constraints) if spec.constraints else None,
-        derived_from=spec.derived_from,
-        alias=spec.alias,
-        alias_choices=spec.alias_choices,
-        alias_path=spec.alias_path,
-    )
-    return (annotation, info)
+    (≈ ``_derive_field``, patito ``pydantic.py:1219-1246``): the column's
+    own ``Field()``, so the derived column resolves as the original did."""
+    annotation, info = spec.annotation, spec.info
+    if force_nullable:
+        if not spec.nullable:
+            annotation = Optional[annotation]
+        if info.default is MISSING:
+            info = FieldInfo(
+                **{**{s: getattr(info, s) for s in FieldInfo.__slots__}, "default": None}
+            )
+    return annotation, info
 
 
 def _derive_model(name: str, fields: dict) -> type:
@@ -921,11 +936,9 @@ def model_from_spec_json(payload: str) -> type:
     original class definition.  The reference proves the same property for
     polars expressions (``column_info.py:131-149``).
     """
-    import json as _json
-
     try:
-        data = _json.loads(payload)
-    except _json.JSONDecodeError as exc:
+        data = json.loads(payload)
+    except json.JSONDecodeError as exc:
         raise ValueError(
             f"model_from_spec_json expects the JSON produced by "
             f"Model.spec_json(); got invalid JSON: {exc}"
@@ -940,71 +953,22 @@ def model_from_spec_json(payload: str) -> type:
 
 
 def _model_from_dict(data: dict) -> type:
-    import datetime as _dt
-
     fields: dict[str, tuple] = {}
-    for col_spec in data["columns"]:
-        dtype = T._parse_datatype_json_string(col_spec["dtype"])  # type: ignore[attr-defined]
-        nested = col_spec.get("model")
+    for column in data["columns"]:
+        dtype = T._parse_datatype_json_string(column["dtype"])  # type: ignore[attr-defined]
+        nested = column.get("model")
         nested = _model_from_dict(nested) if nested else None
         annotation = _annotation_for_spark_type(dtype, nested)
-        if col_spec.get("nullable"):
+        if column.get("nullable"):
             annotation = Optional[annotation]
-        constraints = None
-        if col_spec.get("constraints"):
-            constraints = [Expr.from_dict(c) for c in col_spec["constraints"]]
-        derived = col_spec.get("derived_from")
-        if isinstance(derived, dict):
-            derived = Expr.from_dict(derived["expr"])
-        values = {key: col_spec.get(key) for key in _BOUND_KEYS}
-        values["default"] = col_spec.get("default", MISSING)
-        # date and timestamp values were serialized as ISO strings
-        if isinstance(dtype, T.DateType):
-            parse = _dt.date.fromisoformat
-        elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-            parse = _dt.datetime.fromisoformat
-        else:
-            parse = None
-        if parse is not None:
-            values = {
-                k: parse(v) if isinstance(v, str) else v for k, v in values.items()
-            }
-        # an undeclared dtype is the annotation's default: passing it back
-        # as explicit would narrow e.g. an int column to {LongType}
         info = FieldInfo(
-            values["default"],
-            dtype=(
-                dtype
-                if col_spec.get("explicit_dtype")
-                and nested is None
-                and not isinstance(dtype, T.StructType)
-                else None
-            ),
-            unique=col_spec.get("unique", False),
-            allow_missing=col_spec.get("allow_missing", False),
-            ge=values["ge"],
-            gt=values["gt"],
-            le=values["le"],
-            lt=values["lt"],
-            multiple_of=values["multiple_of"],
-            const=values["const"],
-            pattern=col_spec.get("pattern"),
-            min_length=col_spec.get("min_length"),
-            max_length=col_spec.get("max_length"),
-            allowed=col_spec.get("allowed_values"),
-            constraints=constraints,
-            derived_from=derived,
-            alias=col_spec.get("alias"),
-            alias_choices=col_spec.get("alias_choices"),
+            **{
+                slot: decode(column[key], dtype)
+                for key, slot, _, decode in _SPEC_KEYS
+                if key in column
+            }
         )
-        try:
-            ColumnSpec(col_spec["name"], annotation, info)
-        except ValueError:
-            # e.g. uint64 → DecimalType: the serialized dtype widened past
-            # the annotation's valid set; keep the annotation, drop the
-            # explicit dtype (bounds were serialized separately)
-            info.dtype = None
-        fields[col_spec["name"]] = (annotation, info)
+        fields[column["name"]] = (annotation, info)
     return _derive_model(data.get("model", "DeserializedModel"), fields)
 
 
@@ -1014,12 +978,12 @@ def _annotation_for_spark_type(
     """Annotation for *dtype*; its struct (at any list depth) becomes
     *nested* when the spec carried the sub-model, else a check-free
     ``NestedStruct``."""
-    import datetime as _dt
-
     if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         return int
-    if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
         return float
+    if isinstance(dtype, T.DecimalType):
+        return decimal.Decimal
     if isinstance(dtype, T.BooleanType):
         return bool
     if isinstance(dtype, T.StringType):
@@ -1027,16 +991,21 @@ def _annotation_for_spark_type(
     if isinstance(dtype, T.BinaryType):
         return bytes
     if isinstance(dtype, T.DateType):
-        return _dt.date
+        return dt.date
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return _dt.datetime
+        return dt.datetime
     if isinstance(dtype, T.DayTimeIntervalType):
-        return _dt.timedelta
+        return dt.timedelta
     if isinstance(dtype, T.ArrayType):
         inner = _annotation_for_spark_type(dtype.elementType, nested)
         if dtype.containsNull:
             inner = Optional[inner]
         return list[inner]
+    if isinstance(dtype, T.MapType):
+        return dict[
+            _annotation_for_spark_type(dtype.keyType),
+            _annotation_for_spark_type(dtype.valueType),
+        ]
     if isinstance(dtype, T.StructType):
         if nested is not None:
             return nested

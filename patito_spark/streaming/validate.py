@@ -15,8 +15,9 @@ predicates the batch aggregate executor counts.
   violation), but the valid branch never builds the array and the
   quarantine branch builds it only for the rows it keeps.  Both columns
   are built once per (model, schema).
-- ``quarantine_split`` — the valid and quarantine frames of the batch
-  routers (``sources.io.write_validated`` and the ingest model gate).
+- ``quarantine_split`` — the valid and quarantine frames of every
+  router: ``validate_stream``, ``sources.io.write_validated`` and the
+  ingest model gate.
 - ``windowed_violation_counts`` — event-time windowed counts per check name
   with a watermark for late data, one row per window.
 
@@ -102,13 +103,13 @@ def validate_stream(
 ):
     """Split a stream into valid/invalid flows.
 
-    Returns ``(valid_df, invalid_df)`` streaming frames; when
-    ``quarantine_path`` is given, starts an append sink for the invalid
-    side (caller starts their own sink for the valid side).
+    Returns ``(valid_df, invalid_df)`` streaming frames, split as the batch
+    routers split (``quarantine_split``): the invalid side carries
+    ``_violations`` and ``_spec_hash``.  When ``quarantine_path`` is given,
+    also starts an append sink for the invalid side and returns its query
+    third (caller starts their own sink for the valid side).
     """
-    flagged = flag_violations(stream, model)
-    valid = flagged.filter(F.col("_valid")).drop("_valid", "_violations")
-    invalid = flagged.filter(~F.col("_valid"))
+    valid, invalid, _ = quarantine_split(stream, model)
     if quarantine_path:
         query = (
             invalid.writeStream.format("parquet")

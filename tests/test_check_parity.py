@@ -8,6 +8,7 @@ same executor keyed by partition), ``flag_violations`` and
 """
 
 import datetime as dt
+import decimal
 import json
 from typing import Literal, Optional
 
@@ -16,9 +17,10 @@ from pyspark.sql import functions as F
 
 import patito_spark as pt
 from patito_spark import jobs
+from patito_spark.errors import get_exc_type
 from patito_spark.plans.checks import find_errors
 from patito_spark.plans.runner import ValidationRunner
-from patito_spark.spec import model_from_spec_json
+from patito_spark.spec import ColumnSpec, FieldInfo, model_from_spec_json
 from patito_spark.streaming.validate import flag_violations, windowed_violation_counts
 
 
@@ -445,6 +447,156 @@ def test_jobs_main_checks_nested_fields(spark, tmp_path, capsys):
     }
     assert out["passed"] is False
     assert out["violations"] == sum(getattr(e.exc, "count", 1) for e in errors)
+
+
+class Leaf(pt.Model):
+    price: decimal.Decimal = pt.Field(ge=decimal.Decimal("0.01"))
+    note: Optional[str] = None
+
+
+class Everything(pt.Model):
+    """Every ``Field`` kwarg, the scalar annotations, each declared unsigned
+    alias and every value the spec JSON encodes (bytes, decimal, temporal)."""
+
+    i: int = pt.Field(dtype="int32", ge=-5, lt=100, multiple_of=5, unique=True)
+    u8: int = pt.Field(dtype="uint8")
+    u16: int = pt.Field(dtype="uint16", le=1000)
+    u32: Optional[int] = pt.Field(None, dtype="uint32")
+    u64: int = pt.Field(dtype="uint64", gt=0)
+    f: float = pt.Field(0.5, gt=0.0, le=1.0)
+    dec: decimal.Decimal = pt.Field(
+        decimal.Decimal("2.25"), ge=decimal.Decimal("-1.5"), lt=decimal.Decimal("1E+3")
+    )
+    s: str = pt.Field(
+        pattern=r"^[a-z]+$",
+        min_length=1,
+        max_length=8,
+        alias="S",
+        alias_choices=["s_alt", ("s_arr", 1)],
+        alias_path=("s_list", 0),
+    )
+    raw: bytes = pt.Field(const=b"\x00ab")
+    flag: bool = pt.Field(True, allow_missing=True)
+    day: dt.date = pt.Field(dt.date(2020, 6, 1), ge=dt.date(2020, 1, 1))
+    ts: dt.datetime = pt.Field(
+        gt=dt.datetime(2020, 1, 1, 12, 30), le=dt.datetime(2030, 1, 1, 0, 0, 0, 250)
+    )
+    span: dt.timedelta = pt.Field(
+        dt.timedelta(hours=1),
+        ge=dt.timedelta(0),
+        lt=dt.timedelta(days=3, microseconds=7),
+    )
+    tags: list[Optional[str]] = pt.Field([], allowed=["a", "b"])
+    days: list[dt.date] = pt.Field([dt.date(2021, 1, 1)], ge=dt.date(2020, 1, 1))
+    kind: Literal["x", "y"] = "x"
+    counts: dict[str, int]
+    maybe: Optional[float] = pt.Field(
+        constraints=[pt.field > 0, pt.field.sum() < 100]
+    )
+    twice: int = pt.Field(derived_from=2 * pt.col("i"))
+    copy: Optional[str] = pt.Field(derived_from="s")
+    leaf: Leaf
+    leaves: Optional[list[Leaf]]
+
+
+def _typed(value):
+    if isinstance(value, (list, tuple)):
+        return type(value), [_typed(v) for v in value]
+    return type(value), value
+
+
+def _slots(spec: ColumnSpec) -> dict:
+    """Every resolved slot of *spec* with its type; expressions by their
+    serialized form (``==`` on an ``Expr`` builds an ``Expr``), a
+    sub-model by its columns' slots."""
+    out = {}
+    for slot in ColumnSpec.__slots__:
+        if slot in ("annotation", "info"):
+            continue  # as declared: a dtype alias comes back as its DataType
+        value = getattr(spec, slot)
+        if slot == "model" and value is not None:
+            value = {name: _slots(s) for name, s in value.specs.items()}
+        elif slot == "constraints" and value is not None:
+            value = [c.serialize() for c in value]
+        elif isinstance(value, pt.Expr):
+            value = value.serialize()
+        out[slot] = _typed(value)
+    return out
+
+
+def test_spec_json_is_an_exact_inverse():
+    """``model_from_spec_json(M.spec_json())`` resolves every column as ``M``
+    does, and ``spec_json`` is a fixed point.  The model declares every
+    ``Field`` kwarg, so one the codec leaves out fails here."""
+    unset = FieldInfo()
+    declared = {
+        slot
+        for spec in [*Everything.specs.values(), *Leaf.specs.values()]
+        for slot in FieldInfo.__slots__
+        if getattr(spec.info, slot) is not getattr(unset, slot)
+    }
+    assert declared == set(FieldInfo.__slots__)
+    resolved_as = {"allowed": "allowed_values"}
+    assert {resolved_as.get(s, s) for s in FieldInfo.__slots__} <= set(
+        ColumnSpec.__slots__
+    )
+
+    rebuilt = model_from_spec_json(Everything.spec_json())
+    assert rebuilt.spec_json() == Everything.spec_json()
+    assert rebuilt.columns == Everything.columns
+    # derivation (select, rename, ...) resolves each column's Field() again
+    for model in (rebuilt, rebuilt.rename({}), Everything.select(Everything.columns)):
+        for name, spec in Everything.specs.items():
+            assert _slots(model.specs[name]) == _slots(spec), name
+
+
+class Exact(pt.Model):
+    p: int
+    dec: decimal.Decimal = pt.Field(ge=decimal.Decimal("0"))
+    n: int = pt.Field(dtype="uint64")
+    span: dt.timedelta = pt.Field(ge=dt.timedelta(0), lt=dt.timedelta(days=1))
+
+
+def test_jobs_main_matches_find_errors_on_decimal_unsigned_interval(spark, tmp_path):
+    """The model ``jobs.main`` rebuilds from a spec file stores, per
+    partition, exactly the violations ``find_errors`` reports with the
+    Python model: decimal columns stay decimal (no dtype errors), uint64's
+    range holds past 2^63 and timedelta bounds stay intervals."""
+    df = spark.createDataFrame(
+        [
+            (0, decimal.Decimal("1.5"), decimal.Decimal(5), dt.timedelta(hours=1)),
+            (0, decimal.Decimal("-1.5"), decimal.Decimal(5), dt.timedelta(days=2)),
+            (1, decimal.Decimal("2.5"), decimal.Decimal(-1), dt.timedelta(hours=-1)),
+            (1, decimal.Decimal("0.5"), decimal.Decimal(2**64), dt.timedelta(0)),
+        ],
+        "p bigint, dec decimal(10,2), n decimal(20,0), span interval day to second",
+    )
+    spec = tmp_path / "spec.json"
+    spec.write_text(Exact.spec_json())
+    data = str(tmp_path / "input")
+    df.write.parquet(data)
+    ckpt = str(tmp_path / "ckpt")
+    assert jobs.main(
+        ["--spec", str(spec), "--input", data, "--partition-col", "p",
+         "--checkpoint-dir", ckpt]
+    ) == 0
+
+    keys = ("partition", "column", "error_type", "message", "violation_count")
+    stored = sorted(
+        tuple(r[k] for k in keys)
+        for r in spark.read.parquet(f"{ckpt}/violations").collect()
+    )
+    table = spark.read.parquet(data)
+    want = sorted(
+        (str(p), e.loc_tuple()[0], get_exc_type(type(e.exc)), str(e.exc),
+         int(getattr(e.exc, "count", 1)))
+        for p in (0, 1)
+        for e in find_errors(table.where(F.col("p") == p), Exact)
+    )
+    assert stored == want
+    assert [(r[0], r[1], r[4]) for r in want] == [
+        ("0", "dec", 1), ("0", "span", 1), ("1", "n", 2), ("1", "span", 1),
+    ]
 
 
 # ---------------------------------------------------------------------------

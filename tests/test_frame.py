@@ -1,5 +1,6 @@
 """Model-aware frame operators, mirroring reference tests/test_polars.py."""
 
+import decimal
 from typing import Optional
 
 import pytest
@@ -43,6 +44,14 @@ def test_get_untyped_row(spark):
     assert type(untyped).__name__ == "UntypedRow"
     with pytest.raises(pt.MultipleRowsReturned, match=r"DataFrame\.get\(\) yielded 2 rows\."):
         df.get(pt.col("product_id") < 3)
+    # a decimal cell keeps its exact value: the row model types it Decimal
+    priced = pt.DataFrame(
+        spark.createDataFrame(
+            [(1, decimal.Decimal("9.99"))], "product_id long, price decimal(10,2)"
+        )
+    )
+    price = priced.get().price
+    assert isinstance(price, decimal.Decimal) and price == decimal.Decimal("9.99")
 
 
 # -- derive (≈ test_polars.py:353-484) -----------------------------------------

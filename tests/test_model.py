@@ -461,6 +461,9 @@ def test_diff_models_classifies_breaking_changes():
         b: Optional[str]
         c: float = pt.Field(ge=0.0)
         gone: int
+        x: int
+        y: int = pt.Field(constraints=pt.field < 9)
+        z: int = pt.Field(constraints=[pt.field > 0, pt.field < 9])
 
     class New(pt.Model):
         a: int  # unchanged
@@ -468,6 +471,9 @@ def test_diff_models_classifies_breaking_changes():
         c: float = pt.Field(ge=10.0)  # raised lower bound → breaking
         extra_req: int  # added non-nullable, no default → breaking
         extra_opt: Optional[str]  # added nullable → fine
+        x: int = pt.Field(constraints=pt.field > 0)  # new constraint → breaking
+        y: int = pt.Field(constraints=pt.field < 8)  # changed constraint → breaking
+        z: int = pt.Field(constraints=pt.field > 0)  # one dropped → fine
 
     d = pt.diff_models(Old, New)
     assert d["breaking"] is True
@@ -478,8 +484,14 @@ def test_diff_models_classifies_breaking_changes():
     assert d["removed"] == [{"column": "gone", "breaking": True}]
     (nul,) = d["nullability"]
     assert (nul["column"], nul["breaking"]) == ("b", True)
-    (con,) = d["constraints"]
-    assert con["column"] == "c" and con["breaking"] is True and con["changed"] == ["ge"]
+    assert {
+        con["column"]: (con["changed"], con["breaking"]) for con in d["constraints"]
+    } == {
+        "c": (["ge"], True),
+        "x": (["constraints"], True),
+        "y": (["constraints"], True),
+        "z": (["constraints"], False),
+    }
 
 
 def test_diff_models_widening_and_loosening_not_breaking():

@@ -250,11 +250,12 @@ def test_write_validated_quarantine_split(spark, tmp_path):
 
 
 def test_write_validated_and_ingest_quarantine_agree(spark, tmp_path):
-    """The batch sink and the streaming ingest gate quarantine one batch
-    under one model identically: same columns in the same order, same
-    rows, same ``_violations`` and ``_spec_hash``."""
+    """The batch sink, the streaming ingest gate and the ``validate_stream``
+    sink quarantine one batch under one model identically: same columns in
+    the same order, same rows, same ``_violations`` and ``_spec_hash``."""
     from patito_spark.sources.io import write_validated
     from patito_spark.streaming.ingest import _make_batch_processor, read_quarantine
+    from patito_spark.streaming.validate import validate_stream
 
     class Page(pt.Model):
         doc_id: int
@@ -276,14 +277,30 @@ def test_write_validated_and_ingest_quarantine_agree(spark, tmp_path):
     _make_batch_processor(
         root, "doc_id", "text", dict(num_hashes=8, bands=4, shingle_n=3), model=Page
     )(batch, 0)
+    source = str(tmp_path / "source")
+    batch.write.parquet(source)
+    stream_sink = str(tmp_path / "stream_quarantine")
+    _, _, query = validate_stream(
+        spark.readStream.schema(batch.schema).parquet(source),
+        Page,
+        quarantine_path=stream_sink,
+        checkpoint_dir=str(tmp_path / "stream_ckpt"),
+    )
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
     batch_side = spark.read.parquet(sink)
     ingest_side = read_quarantine(spark, root)
-    assert batch_side.columns == ingest_side.columns == [
+    stream_side = spark.read.parquet(stream_sink)
+    assert batch_side.columns == ingest_side.columns == stream_side.columns == [
         "doc_id", "text", "lang", "n_chars", "_violations", "_spec_hash",
     ]
 
-    assert sorted(map(tuple, batch_side.collect())) == sorted(
-        map(tuple, ingest_side.collect())
+    assert (
+        sorted(map(tuple, batch_side.collect()))
+        == sorted(map(tuple, ingest_side.collect()))
+        == sorted(map(tuple, stream_side.collect()))
     )
     assert [r["_violations"] for r in batch_side.orderBy("doc_id").collect()] == [
         ["lang__enum"], ["n_chars__bound0"], ["lang__enum", "n_chars__bound0"],

@@ -17,6 +17,10 @@ Spark divergences from polars (documented, with synthesized checks):
   and the domain check carries the semantics (reference ``utils.py:123-125``);
 - ``Duration`` → ``DayTimeIntervalType``; naive vs aware datetime →
   ``TimestampNTZType`` vs ``TimestampType``.
+
+The value codec at the end writes the values a spec or an expression
+carries (bounds, defaults, allowed values, literals) as JSON and reads them
+back by Spark type.
 """
 
 from __future__ import annotations
@@ -297,3 +301,85 @@ def _types_equivalent(a: T.DataType, b: T.DataType) -> bool:
         # tz-awareness matters: exact class match
         return type(a) is type(b)
     return a == b
+
+
+# ---------------------------------------------------------------------------
+# value codec: the JSON form of a column's bound, const, default or allowed
+# values, and of an expression literal
+# ---------------------------------------------------------------------------
+
+
+def _encode_value(value: Any) -> Any:
+    """JSON form of a bound, ``const``, ``default``, allowed value or
+    expression literal; ``_decode_value`` inverts it by the Spark type.  A
+    timedelta is its seconds (exact to the microsecond below about 70
+    years)."""
+    if isinstance(value, (list, tuple)):
+        return [_encode_value(v) for v in value]
+    if isinstance(value, (dt.date, dt.time)):  # datetime is a date
+        return value.isoformat()
+    if isinstance(value, dt.timedelta):
+        return value.total_seconds()
+    if isinstance(value, bytes):
+        return value.hex()
+    if isinstance(value, decimal.Decimal):
+        return str(value)
+    return value
+
+
+#: Spark type of a column (or list item) → (Python type, JSON type, parser):
+#: ``_encode_value`` writes a value of the Python type as the JSON type, and
+#: the parser reads it back
+_DECODERS: dict = {
+    T.DateType: (dt.date, str, dt.date.fromisoformat),
+    T.TimestampType: (dt.datetime, str, dt.datetime.fromisoformat),
+    T.TimestampNTZType: (dt.datetime, str, dt.datetime.fromisoformat),
+    T.DayTimeIntervalType: (
+        dt.timedelta,
+        (int, float),
+        lambda s: dt.timedelta(seconds=s),
+    ),
+    T.BinaryType: (bytes, str, bytes.fromhex),
+    T.DecimalType: (decimal.Decimal, str, decimal.Decimal),
+}
+if hasattr(T, "TimeType"):  # pyspark >= 4.1
+    _DECODERS[T.TimeType] = (dt.time, str, dt.time.fromisoformat)
+
+
+def _decode_value(value: Any, dtype: T.DataType) -> Any:
+    if isinstance(value, list):  # allowed values, or a list column's default
+        item = dtype.elementType if isinstance(dtype, T.ArrayType) else dtype
+        return [_decode_value(v, item) for v in value]
+    while isinstance(dtype, T.ArrayType):  # a bound on a list's items
+        dtype = dtype.elementType
+    _, kind, parse = _DECODERS.get(type(dtype), (None, None, None))
+    return parse(value) if kind and isinstance(value, kind) else value
+
+
+#: Python type → name of the Spark type whose decoder restores its values
+#: (the first row wins: a datetime literal is a ``timestamp``), and back
+_LITERAL_TAGS = {
+    py: cls.typeName() for cls, (py, _, _) in reversed(_DECODERS.items())
+}
+_TAGGED_TYPES = {cls.typeName(): cls for cls in _DECODERS}
+
+
+def _encode_literal(value: Any) -> dict:
+    """``{"v": <JSON form>}`` of an expression literal (a value, or the list
+    of an ``is_in``).  An expression carries no column type, so a value JSON
+    cannot hold is tagged ``"t"`` with the Spark type that decodes it."""
+    items = value if isinstance(value, (list, tuple)) else [value]
+    tags = {  # the nearest tagged class (a pandas Timestamp is a datetime)
+        next((_LITERAL_TAGS[c] for c in type(v).__mro__ if c in _LITERAL_TAGS), None)
+        for v in items
+    } - {None}
+    if len(tags) > 1:
+        raise TypeError(f"A literal mixes values of the types {sorted(tags)}")
+    encoded = {"v": _encode_value(value)}
+    return {**encoded, "t": tags.pop()} if tags else encoded
+
+
+def _decode_literal(arg: dict) -> Any:
+    if "t" not in arg:
+        return arg["v"]
+    return _decode_value(arg["v"], _TAGGED_TYPES[arg["t"]]())

@@ -93,9 +93,10 @@ def diff_models(old: type, new: type) -> dict:
 
     Returns ``{added, removed, retyped, nullability, constraints,
     breaking}`` where each entry lists per-column dicts with a
-    ``breaking`` flag, and the top-level ``breaking`` is their OR.
+    ``breaking`` flag, and the top-level ``breaking`` is their OR.  A
+    struct (or list-of-struct) column's sub-model is compared too, its
+    columns named ``<column>.<field>``.
     """
-    os_, ns_ = old.__column_specs__, new.__column_specs__
     report: dict = {
         "added": [],
         "removed": [],
@@ -103,26 +104,36 @@ def diff_models(old: type, new: type) -> dict:
         "nullability": [],
         "constraints": [],
     }
+    _diff_columns(report, old.__column_specs__, new.__column_specs__, "")
+    report["breaking"] = any(
+        entry["breaking"] for bucket in report.values() for entry in bucket
+        if isinstance(entry, dict)
+    )
+    return report
+
+
+def _diff_columns(report: dict, os_: dict, ns_: dict, prefix: str) -> None:
     for name, spec in ns_.items():
         if name not in os_:
             report["added"].append(
                 {
-                    "column": name,
+                    "column": prefix + name,
                     "nullable": spec.nullable,
                     "breaking": not spec.nullable and spec.default is MISSING,
                 }
             )
     for name in os_:
         if name not in ns_:
-            report["removed"].append({"column": name, "breaking": True})
+            report["removed"].append({"column": prefix + name, "breaking": True})
     for name, nspec in ns_.items():
         ospec = os_.get(name)
         if ospec is None:
             continue
+        column = prefix + name
         if nspec.dtype.simpleString() != ospec.dtype.simpleString():
             report["retyped"].append(
                 {
-                    "column": name,
+                    "column": column,
                     "old": ospec.dtype.simpleString(),
                     "new": nspec.dtype.simpleString(),
                     "breaking": not _is_widening(ospec.dtype, nspec.dtype),
@@ -131,7 +142,7 @@ def diff_models(old: type, new: type) -> dict:
         if nspec.nullable != ospec.nullable:
             report["nullability"].append(
                 {
-                    "column": name,
+                    "column": column,
                     "old": ospec.nullable,
                     "new": nspec.nullable,
                     "breaking": not nspec.nullable,  # required-ward = breaking
@@ -146,10 +157,12 @@ def diff_models(old: type, new: type) -> dict:
                 tightened = tightened or _tightened(field, ov, nv)
         if changed:
             report["constraints"].append(
-                {"column": name, "changed": changed, "breaking": tightened}
+                {"column": column, "changed": changed, "breaking": tightened}
             )
-    report["breaking"] = any(
-        entry["breaking"] for bucket in report.values() for entry in bucket
-        if isinstance(entry, dict)
-    )
-    return report
+        if ospec.model is not None and nspec.model is not None:
+            _diff_columns(
+                report,
+                ospec.model.__column_specs__,
+                nspec.model.__column_specs__,
+                f"{column}.",
+            )

@@ -29,10 +29,10 @@ def example_value(spec: ColumnSpec) -> Any:
         return spec.default
     if spec.nullable:
         return None
-    if spec.allowed_values:
-        return spec.allowed_values[0]
-
     dtype = spec.dtype
+    if spec.allowed_values:
+        first = spec.allowed_values[0]
+        return [first] if isinstance(dtype, T.ArrayType) else first
     if isinstance(dtype, T.ArrayType):
         inner = _scalar_example(dtype.elementType, spec)
         return [inner]

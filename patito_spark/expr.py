@@ -16,34 +16,87 @@ in this small DSL instead: a pure-Python tree that
   constraints like ``field.sum() == 1`` can be routed into the single-pass
   aggregation job, and
 - round-trips to JSON so a full model spec is a shippable artifact.
+
+Every op is one row of ``_OPS``: compiling applies the row's builder to the
+node's arguments, each ``Expr`` argument compiled and every other argument
+passed as written; a non-``Expr`` argument serializes through the spec's
+value codec (``dtypes._encode_literal``).
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any, Optional
+import operator
+from typing import Any, Callable, NamedTuple, Optional
 
-# Aggregate op names: an Expr containing any of these is evaluated inside the
-# single-pass .agg() job instead of as a per-row predicate.
-_AGG_OPS = frozenset(
-    {"sum", "count", "mean", "min", "max", "n_unique", "first", "stddev"}
-)
+from pyspark.sql import functions as F
 
-_BINARY_OPS = {
-    "add": "+",
-    "sub": "-",
-    "mul": "*",
-    "truediv": "/",
-    "mod": "%",
-    "eq": "==",
-    "ne": "!=",
-    "lt": "<",
-    "le": "<=",
-    "gt": ">",
-    "ge": ">=",
-    "and": "&",
-    "or": "|",
+from .dtypes import _decode_literal, _encode_literal
+
+
+class _Op(NamedTuple):
+    #: compiled arguments → ``Column``
+    build: Callable
+    #: the infix symbol ``repr`` writes between the two operands
+    symbol: Optional[str] = None
+    #: an aggregate is evaluated inside the single-pass ``.agg()`` job
+    #: instead of as a per-row predicate
+    agg: bool = False
+
+
+_OPS = {
+    "col": _Op(F.col),  # `to_column` compiles it with its resolver
+    "lit": _Op(F.lit),
+    "add": _Op(operator.add, "+"),
+    "sub": _Op(operator.sub, "-"),
+    "mul": _Op(operator.mul, "*"),
+    "truediv": _Op(operator.truediv, "/"),
+    "mod": _Op(operator.mod, "%"),
+    "eq": _Op(operator.eq, "=="),
+    "ne": _Op(operator.ne, "!="),
+    "lt": _Op(operator.lt, "<"),
+    "le": _Op(operator.le, "<="),
+    "gt": _Op(operator.gt, ">"),
+    "ge": _Op(operator.ge, ">="),
+    "and": _Op(operator.and_, "&"),
+    "or": _Op(operator.or_, "|"),
+    "not": _Op(operator.invert),
+    "neg": _Op(operator.neg),
+    "alias": _Op(lambda c, name: c.alias(name)),
+    "cast": _Op(lambda c, dtype: c.cast(dtype)),
+    "is_null": _Op(lambda c: c.isNull()),
+    "is_not_null": _Op(lambda c: c.isNotNull()),
+    "isin": _Op(lambda c, values: c.isin(*values)),
+    "rlike": _Op(lambda c, pattern: c.rlike(pattern)),
+    "starts_with": _Op(lambda c, prefix: c.startswith(prefix)),
+    "ends_with": _Op(lambda c, suffix: c.endswith(suffix)),
+    "contains": _Op(lambda c, p, literal: c.contains(p) if literal else c.rlike(p)),
+    "lower": _Op(F.lower),
+    "upper": _Op(F.upper),
+    "trim": _Op(F.trim),
+    "fill_null": _Op(lambda c, value: F.coalesce(c, F.lit(value))),
+    "char_length": _Op(F.char_length),
+    "abs": _Op(F.abs),
+    "floor": _Op(F.floor),
+    "round": _Op(F.round),
+    "getfield": _Op(lambda c, name: c.getField(name)),
+    "sum": _Op(F.sum, agg=True),
+    "count": _Op(F.count, agg=True),
+    "mean": _Op(F.mean, agg=True),
+    "min": _Op(F.min, agg=True),
+    "max": _Op(F.max, agg=True),
+    "n_unique": _Op(F.count_distinct, agg=True),
+    "first": _Op(F.first, agg=True),
+    "stddev": _Op(F.stddev, agg=True),
 }
+
+
+def _binary(op: str, reverse: bool = False) -> Callable:
+    def method(self: "Expr", other: Any) -> "Expr":
+        other = other if isinstance(other, Expr) else Expr("lit", other)
+        return Expr(op, other, self) if reverse else Expr(op, self, other)
+
+    return method
 
 
 class Expr:
@@ -52,86 +105,28 @@ class Expr:
     __slots__ = ("op", "args")
 
     def __init__(self, op: str, *args: Any) -> None:
+        if op not in _OPS:
+            raise ValueError(f"Unknown expression op: {op!r}")
         object.__setattr__(self, "op", op)
         object.__setattr__(self, "args", tuple(args))
 
     def __setattr__(self, *a: Any) -> None:  # pragma: no cover
         raise AttributeError("Expr is immutable")
 
-    # -- construction helpers -------------------------------------------------
-    @staticmethod
-    def _wrap(value: Any) -> "Expr":
-        return value if isinstance(value, Expr) else Expr("lit", value)
-
-    def _bin(self, op: str, other: Any, reverse: bool = False) -> "Expr":
-        other = Expr._wrap(other)
-        return Expr(op, other, self) if reverse else Expr(op, self, other)
-
-    # arithmetic
-    def __add__(self, o: Any) -> "Expr":
-        return self._bin("add", o)
-
-    def __radd__(self, o: Any) -> "Expr":
-        return self._bin("add", o, True)
-
-    def __sub__(self, o: Any) -> "Expr":
-        return self._bin("sub", o)
-
-    def __rsub__(self, o: Any) -> "Expr":
-        return self._bin("sub", o, True)
-
-    def __mul__(self, o: Any) -> "Expr":
-        return self._bin("mul", o)
-
-    def __rmul__(self, o: Any) -> "Expr":
-        return self._bin("mul", o, True)
-
-    def __truediv__(self, o: Any) -> "Expr":
-        return self._bin("truediv", o)
-
-    def __rtruediv__(self, o: Any) -> "Expr":
-        return self._bin("truediv", o, True)
-
-    def __mod__(self, o: Any) -> "Expr":
-        return self._bin("mod", o)
-
-    def __rmod__(self, o: Any) -> "Expr":
-        return self._bin("mod", o, True)
+    # arithmetic, comparison and boolean operators
+    __add__, __radd__ = _binary("add"), _binary("add", True)
+    __sub__, __rsub__ = _binary("sub"), _binary("sub", True)
+    __mul__, __rmul__ = _binary("mul"), _binary("mul", True)
+    __truediv__, __rtruediv__ = _binary("truediv"), _binary("truediv", True)
+    __mod__, __rmod__ = _binary("mod"), _binary("mod", True)
+    __eq__, __ne__ = _binary("eq"), _binary("ne")  # type: ignore[assignment]
+    __lt__, __le__ = _binary("lt"), _binary("le")
+    __gt__, __ge__ = _binary("gt"), _binary("ge")
+    __and__, __rand__ = _binary("and"), _binary("and", True)
+    __or__, __ror__ = _binary("or"), _binary("or", True)
 
     def __neg__(self) -> "Expr":
         return Expr("neg", self)
-
-    # comparison
-    def __eq__(self, o: Any) -> "Expr":  # type: ignore[override]
-        return self._bin("eq", o)
-
-    def __ne__(self, o: Any) -> "Expr":  # type: ignore[override]
-        return self._bin("ne", o)
-
-    def __lt__(self, o: Any) -> "Expr":
-        return self._bin("lt", o)
-
-    def __le__(self, o: Any) -> "Expr":
-        return self._bin("le", o)
-
-    def __gt__(self, o: Any) -> "Expr":
-        return self._bin("gt", o)
-
-    def __ge__(self, o: Any) -> "Expr":
-        return self._bin("ge", o)
-
-    # boolean
-    def __and__(self, o: Any) -> "Expr":
-        return self._bin("and", o)
-
-    def __rand__(self, o: Any) -> "Expr":
-        return self._bin("and", o, True)
-
-    def __or__(self, o: Any) -> "Expr":
-        return self._bin("or", o)
-
-    def __ror__(self, o: Any) -> "Expr":
-        return self._bin("or", o, True)
 
     def __invert__(self) -> "Expr":
         return Expr("not", self)
@@ -224,49 +219,24 @@ class Expr:
         return Expr("stddev", self)
 
     # -- introspection ---------------------------------------------------------
+    def _children(self) -> list:
+        return [a for a in self.args if isinstance(a, Expr)]
+
     def references(self) -> frozenset:
         """Names of all columns this expression reads (≈ polars ``root_names``)."""
-        out: set = set()
-        _collect_refs(self, out)
-        return frozenset(out)
+        if self.op == "col":
+            return frozenset(self.args[:1])
+        return frozenset().union(*(a.references() for a in self._children()))
 
     def is_aggregate(self) -> bool:
-        if self.op in _AGG_OPS:
-            return True
-        return any(a.is_aggregate() for a in self.args if isinstance(a, Expr))
+        return _OPS[self.op].agg or any(a.is_aggregate() for a in self._children())
 
-    def substitute(self, mapping: dict) -> "Expr":
-        """Return a copy with ``col(name)`` nodes renamed via *mapping*.
-
-        Used to bind the ``"_"`` self-alias to the field's actual column
-        (reference semantics at ``validators.py:385-389``).
-        """
-        if self.op == "col":
-            name = self.args[0]
-            return Expr("col", mapping.get(name, name))
-        return Expr(
-            self.op,
-            *(
-                a.substitute(mapping) if isinstance(a, Expr) else a
-                for a in self.args
-            ),
-        )
-
-    def substitute_values(self, mapping: dict) -> "Expr":
-        """Replace ``col(name)`` nodes with literal values via *mapping*.
-
-        Used to splice pre-computed aggregate scalars back into a mixed
-        aggregate/row constraint for the verification pass.
-        """
-        if self.op == "col" and self.args[0] in mapping:
-            return Expr("lit", mapping[self.args[0]])
-        return Expr(
-            self.op,
-            *(
-                a.substitute_values(mapping) if isinstance(a, Expr) else a
-                for a in self.args
-            ),
-        )
+    def reads_rows(self) -> bool:
+        """True if this expression reads a column outside every aggregate
+        subtree: an aggregate constraint that does is a mixed one."""
+        if _OPS[self.op].agg:
+            return False
+        return self.op == "col" or any(a.reads_rows() for a in self._children())
 
     def extract_aggregates(self, acc: dict) -> "Expr":
         """Replace each maximal aggregate subtree with a placeholder column.
@@ -278,7 +248,7 @@ class Expr:
         broadcast of aggregates over filters (reference test at
         ``tests/test_validators.py:886-894``).
         """
-        if self.op in _AGG_OPS:
+        if _OPS[self.op].agg:
             placeholder = f"__aggph{len(acc)}"
             acc[placeholder] = self
             return Expr("col", placeholder)
@@ -294,23 +264,27 @@ class Expr:
     def to_column(self, resolve=None):
         """Compile to a native ``pyspark.sql.Column``; *resolve* maps each
         referenced column name to its Column (default ``F.col``)."""
-        from pyspark.sql import functions as F
-
-        return _compile(self, F, resolve or F.col)
+        resolve = resolve or F.col
+        build = resolve if self.op == "col" else _OPS[self.op].build
+        return build(
+            *(a.to_column(resolve) if isinstance(a, Expr) else a for a in self.args)
+        )
 
     # -- serialization ----------------------------------------------------------
     def to_dict(self) -> dict:
         return {
             "op": self.op,
             "args": [
-                a.to_dict() if isinstance(a, Expr) else {"v": a} for a in self.args
+                a.to_dict() if isinstance(a, Expr) else _encode_literal(a)
+                for a in self.args
             ],
         }
 
     @staticmethod
     def from_dict(d: dict) -> "Expr":
         args = [
-            Expr.from_dict(a) if "op" in a else a["v"] for a in d.get("args", [])
+            Expr.from_dict(a) if "op" in a else _decode_literal(a)
+            for a in d.get("args", [])
         ]
         return Expr(d["op"], *args)
 
@@ -322,110 +296,10 @@ class Expr:
         return Expr.from_dict(json.loads(s))
 
     def __repr__(self) -> str:
-        if self.op == "col":
-            return f"col({self.args[0]!r})"
-        if self.op == "lit":
-            return f"lit({self.args[0]!r})"
-        if self.op in _BINARY_OPS:
-            return f"({self.args[0]!r} {_BINARY_OPS[self.op]} {self.args[1]!r})"
+        symbol = _OPS[self.op].symbol
+        if symbol:
+            return f"({self.args[0]!r} {symbol} {self.args[1]!r})"
         return f"{self.op}({', '.join(map(repr, self.args))})"
-
-
-def _collect_refs(e: Expr, out: set) -> None:
-    if e.op == "col":
-        out.add(e.args[0])
-        return
-    for a in e.args:
-        if isinstance(a, Expr):
-            _collect_refs(a, out)
-
-
-def _compile(e: Expr, F, resolve):
-    op = e.op
-    if op == "col":
-        return resolve(e.args[0])
-    if op == "lit":
-        return F.lit(e.args[0])
-    if op in _BINARY_OPS:
-        left = _compile(e.args[0], F, resolve)
-        right = _compile(e.args[1], F, resolve)
-        return {
-            "add": lambda a, b: a + b,
-            "sub": lambda a, b: a - b,
-            "mul": lambda a, b: a * b,
-            "truediv": lambda a, b: a / b,
-            "mod": lambda a, b: a % b,
-            "eq": lambda a, b: a == b,
-            "ne": lambda a, b: a != b,
-            "lt": lambda a, b: a < b,
-            "le": lambda a, b: a <= b,
-            "gt": lambda a, b: a > b,
-            "ge": lambda a, b: a >= b,
-            "and": lambda a, b: a & b,
-            "or": lambda a, b: a | b,
-        }[op](left, right)
-    child = (
-        _compile(e.args[0], F, resolve)
-        if e.args and isinstance(e.args[0], Expr)
-        else None
-    )
-    if op == "not":
-        return ~child
-    if op == "neg":
-        return -child
-    if op == "alias":
-        return child.alias(e.args[1])
-    if op == "cast":
-        return child.cast(e.args[1])
-    if op == "is_null":
-        return child.isNull()
-    if op == "is_not_null":
-        return child.isNotNull()
-    if op == "isin":
-        return child.isin(*e.args[1])
-    if op == "rlike":
-        return child.rlike(e.args[1])
-    if op == "starts_with":
-        return child.startswith(e.args[1])
-    if op == "ends_with":
-        return child.endswith(e.args[1])
-    if op == "contains":
-        return child.contains(e.args[1]) if e.args[2] else child.rlike(e.args[1])
-    if op == "lower":
-        return F.lower(child)
-    if op == "upper":
-        return F.upper(child)
-    if op == "trim":
-        return F.trim(child)
-    if op == "fill_null":
-        return F.coalesce(child, F.lit(e.args[1]))
-    if op == "char_length":
-        return F.char_length(child)
-    if op == "abs":
-        return F.abs(child)
-    if op == "floor":
-        return F.floor(child)
-    if op == "round":
-        return F.round(child, e.args[1])
-    if op == "getfield":
-        return child.getField(e.args[1])
-    if op == "sum":
-        return F.sum(child)
-    if op == "count":
-        return F.count(child)
-    if op == "mean":
-        return F.mean(child)
-    if op == "min":
-        return F.min(child)
-    if op == "max":
-        return F.max(child)
-    if op == "n_unique":
-        return F.count_distinct(child)
-    if op == "first":
-        return F.first(child)
-    if op == "stddev":
-        return F.stddev(child)
-    raise ValueError(f"Unknown expression op: {op!r}")
 
 
 def col(name: str) -> Expr:

@@ -81,7 +81,6 @@ from ..errors import (
     RowValueError,
     SuperfluousColumnsError,
 )
-from ..expr import Expr
 
 #: Upper bound on distinct impermissible enum values shipped to the driver.
 #: The reference reports the full set (validators.py:436); at web scale an
@@ -538,8 +537,8 @@ def _compile_column(
 
         row = [c for c in spec.constraints if not c.is_aggregate()]
         agg_full = [c for c in spec.constraints if c.is_aggregate()]
-        pure_agg = [c for c in agg_full if not _has_row_refs_outside_agg(c)]
-        mixed = [c for c in agg_full if _has_row_refs_outside_agg(c)]
+        pure_agg = [c for c in agg_full if not c.reads_rows()]
+        mixed = [c for c in agg_full if c.reads_rows()]
 
         terms = {"total": F.count(F.lit(1))}
         for i, c in enumerate(pure_agg):
@@ -639,19 +638,6 @@ def _dtype_error(df_type: T.DataType, loc: str) -> tuple:
 
 def _any_false(exprs: list, resolve: Callable[[str], Column]) -> Column:
     return reduce(lambda a, b: a | b, [~e.to_column(resolve) for e in exprs])
-
-
-def _has_row_refs_outside_agg(expr: Expr) -> bool:
-    """True if *expr* reads a column outside of any aggregate subtree."""
-    from ..expr import _AGG_OPS
-
-    if expr.op in _AGG_OPS:
-        return False
-    if expr.op == "col":
-        return True
-    return any(
-        _has_row_refs_outside_agg(a) for a in expr.args if isinstance(a, Expr)
-    )
 
 
 def _join_loc(prefix: str, name: str) -> str:

@@ -24,7 +24,10 @@ from pyspark.sql import types as T
 
 from .dtypes import (
     UNSIGNED_BOUNDS,
+    _DECODERS,
     ResolvedType,
+    _decode_value,
+    _encode_value,
     dtype_in_valid_set,
     parse_dtype,
     resolve_annotation,
@@ -336,7 +339,9 @@ class ColumnSpec:
                 coerced = list(value)
                 if self.model is not None:
                     coerced = [
-                        self._validate_nested(item, errors, sub_loc=str(i))
+                        item
+                        if item is None
+                        else self._validate_nested(item, errors, sub_loc=str(i))
                         for i, item in enumerate(coerced)
                     ]
         elif isinstance(dtype, T.StructType) and self.model is not None:
@@ -351,10 +356,20 @@ class ColumnSpec:
         def _rv(msg: str) -> None:
             errors.append((None, RowValueError(msg)))
 
-        if self.allowed_values is not None and coerced not in self.allowed_values:
-            opts = [repr(v) for v in self.allowed_values]
-            joined = opts[0] if len(opts) == 1 else ", ".join(opts[:-1]) + " or " + opts[-1]
-            _rv(f"Input should be {joined}")
+        def _allowed(item: Any, sub_loc: Optional[str]) -> None:
+            if self.allowed_values is not None and item not in self.allowed_values:
+                opts = [repr(v) for v in self.allowed_values]
+                joined = opts[0] if len(opts) == 1 else ", ".join(opts[:-1]) + " or " + opts[-1]
+                errors.append((sub_loc, RowValueError(f"Input should be {joined}")))
+
+        if isinstance(dtype, T.ArrayType):  # item rules apply to each item
+            for i, item in enumerate(coerced):
+                if item is not None:
+                    _allowed(item, str(i))
+                elif not self.item_nullable:
+                    errors.append((str(i), MissingValuesError("Input should not be None")))
+        else:
+            _allowed(coerced, None)
         if self.const is not None and coerced != self.const:
             _rv(f"Input should be {self.const!r}")
         if self.ge is not None and not coerced >= self.ge:
@@ -398,45 +413,6 @@ class ColumnSpec:
                 path = inner if sub_loc is None else f"{sub_loc}.{inner}"
                 errors.append((path, wrapper.exc))
             return value
-
-
-def _encode_value(value: Any) -> Any:
-    """JSON form of a bound, ``const``, ``default`` or allowed value;
-    ``_decode_value`` inverts it by the column's Spark type.  A timedelta
-    is its seconds (exact to the microsecond below about 70 years)."""
-    if isinstance(value, (list, tuple)):
-        return [_encode_value(v) for v in value]
-    if isinstance(value, (dt.date, dt.time)):  # datetime is a date
-        return value.isoformat()
-    if isinstance(value, dt.timedelta):
-        return value.total_seconds()
-    if isinstance(value, bytes):
-        return value.hex()
-    if isinstance(value, decimal.Decimal):
-        return str(value)
-    return value
-
-
-#: Spark type of a column (or list item) → (JSON type, parser) of
-#: ``_encode_value``'s output for its values
-_DECODERS = {
-    T.DateType: (str, dt.date.fromisoformat),
-    T.TimestampType: (str, dt.datetime.fromisoformat),
-    T.TimestampNTZType: (str, dt.datetime.fromisoformat),
-    T.DayTimeIntervalType: ((int, float), lambda s: dt.timedelta(seconds=s)),
-    T.BinaryType: (str, bytes.fromhex),
-    T.DecimalType: (str, decimal.Decimal),
-}
-
-
-def _decode_value(value: Any, dtype: T.DataType) -> Any:
-    if isinstance(value, list):  # allowed values, or a list column's default
-        item = dtype.elementType if isinstance(dtype, T.ArrayType) else dtype
-        return [_decode_value(v, item) for v in value]
-    while isinstance(dtype, T.ArrayType):  # a bound on a list's items
-        dtype = dtype.elementType
-    kind, parse = _DECODERS.get(type(dtype), (None, None))
-    return parse(value) if kind and isinstance(value, kind) else value
 
 
 def _plain(value: Any, dtype: Any = None) -> Any:
@@ -982,20 +958,12 @@ def _annotation_for_spark_type(
         return int
     if isinstance(dtype, (T.FloatType, T.DoubleType)):
         return float
-    if isinstance(dtype, T.DecimalType):
-        return decimal.Decimal
     if isinstance(dtype, T.BooleanType):
         return bool
     if isinstance(dtype, T.StringType):
         return str
-    if isinstance(dtype, T.BinaryType):
-        return bytes
-    if isinstance(dtype, T.DateType):
-        return dt.date
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return dt.datetime
-    if isinstance(dtype, T.DayTimeIntervalType):
-        return dt.timedelta
+    if type(dtype) in _DECODERS:  # decimal, binary and the temporal types
+        return _DECODERS[type(dtype)][0]
     if isinstance(dtype, T.ArrayType):
         inner = _annotation_for_spark_type(dtype.elementType, nested)
         if dtype.containsNull:

@@ -138,12 +138,11 @@ def windowed_violation_counts(
     batch runner's per-partition violation rows.
     """
     preds = row_flags(model, stream.schema)
-    aggs = [
-        F.sum(pred.cast("long")).alias(name) for name, pred in preds.items()
-    ] or [F.count(F.lit(1)).alias("rows")]
-    windowed = (
+    return (
         stream.withWatermark(time_col, watermark)
         .groupBy(F.window(time_col, window).alias("w"))
-        .agg(F.count(F.lit(1)).alias("rows"), *aggs)
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            *(F.sum(pred.cast("long")).alias(name) for name, pred in preds.items()),
+        )
     )
-    return windowed

@@ -20,6 +20,7 @@ from patito_spark import jobs
 from patito_spark.errors import get_exc_type
 from patito_spark.plans.checks import find_errors
 from patito_spark.plans.runner import ValidationRunner
+from patito_spark.sources import write_validated
 from patito_spark.spec import ColumnSpec, FieldInfo, model_from_spec_json
 from patito_spark.streaming.validate import flag_violations, windowed_violation_counts
 
@@ -486,6 +487,7 @@ class Everything(pt.Model):
         ge=dt.timedelta(0),
         lt=dt.timedelta(days=3, microseconds=7),
     )
+    at: dt.time = pt.Field(dt.time(9, 30), ge=dt.time(8, 0, 0, 5))
     tags: list[Optional[str]] = pt.Field([], allowed=["a", "b"])
     days: list[dt.date] = pt.Field([dt.date(2021, 1, 1)], ge=dt.date(2020, 1, 1))
     kind: Literal["x", "y"] = "x"
@@ -596,6 +598,104 @@ def test_jobs_main_matches_find_errors_on_decimal_unsigned_interval(spark, tmp_p
     assert stored == want
     assert [(r[0], r[1], r[4]) for r in want] == [
         ("0", "dec", 1), ("0", "span", 1), ("1", "n", 2), ("1", "span", 1),
+    ]
+
+
+class Literals(pt.Model):
+    """Custom constraints, ``derived_from``, ``is_in`` and ``fill_null``
+    holding literals JSON cannot hold as is."""
+
+    p: int
+    day: dt.date = pt.Field(constraints=pt.field >= dt.date(2020, 1, 1))
+    ts: Optional[dt.datetime] = pt.Field(
+        constraints=pt.field.fill_null(dt.datetime(2021, 1, 1))
+        < dt.datetime(2030, 1, 1, 0, 0, 0, 250)
+    )
+    span: dt.timedelta = pt.Field(constraints=pt.field < dt.timedelta(days=1))
+    raw: bytes = pt.Field(constraints=pt.field.is_in([b"\x00", b"\x01"]))
+    amount: Optional[decimal.Decimal] = pt.Field(
+        dtype="decimal(10,2)",
+        constraints=pt.field.fill_null(decimal.Decimal("0")) <= decimal.Decimal("9.99"),
+    )
+    amount_or_half: decimal.Decimal = pt.Field(
+        dtype="decimal(10,2)",
+        derived_from=pt.col("amount").fill_null(decimal.Decimal("0.5")),
+    )
+
+
+def test_expr_literals_survive_the_spec_and_every_router(spark, tmp_path):
+    """A model whose expressions hold date, datetime, timedelta, bytes and
+    Decimal literals ships as a spec and routes rows: the rebuilt model
+    carries every expression unchanged, ``write_validated`` quarantines the
+    rows ``flag_violations`` flags, and ``jobs.main`` stores what
+    ``find_errors`` reports with the Python model."""
+    spec_json = Literals.spec_json()
+    rebuilt = model_from_spec_json(spec_json)
+    assert rebuilt.spec_json() == spec_json
+    for name, spec in Literals.specs.items():
+        got = rebuilt.specs[name]
+        assert [c.serialize() for c in got.constraints or ()] == [
+            c.serialize() for c in spec.constraints or ()
+        ], name
+        if spec.derived_from is not None:
+            assert got.derived_from.serialize() == spec.derived_from.serialize()
+
+    day, d = dt.date, decimal.Decimal
+    df = spark.createDataFrame(
+        [
+            (0, day(2020, 6, 1), None, dt.timedelta(hours=1), b"\x00", d("1.00"), d("1.00")),
+            (0, day(2019, 12, 31), dt.datetime(2031, 1, 1), dt.timedelta(days=2),
+             b"\x02", d("10.00"), d("10.00")),
+            (1, day(2021, 1, 1), dt.datetime(2022, 1, 1), dt.timedelta(0), b"\x01",
+             None, d("0.50")),
+            (1, day(2020, 1, 1), None, dt.timedelta(days=1), b"\x01", d("9.99"), d("9.99")),
+        ],
+        "p bigint, day date, ts timestamp, span interval day to second, raw binary, "
+        "amount decimal(10,2), amount_or_half decimal(10,2)",
+    )
+    flagged = {
+        (r["p"], r["day"]): sorted(r["_violations"])
+        for r in flag_violations(df, Literals).where(~F.col("_valid")).collect()
+    }
+    assert flagged == {
+        (0, day(2019, 12, 31)): [
+            "amount__constraint", "day__constraint", "raw__constraint",
+            "span__constraint", "ts__constraint",
+        ],
+        (1, day(2020, 1, 1)): ["span__constraint"],
+    }
+    counts = write_validated(
+        df, Literals, str(tmp_path / "good"), str(tmp_path / "bad")
+    )
+    assert counts == {"written": 2, "quarantined": 2}
+    quarantined = spark.read.parquet(str(tmp_path / "bad")).collect()
+    assert {(r["p"], r["day"]): sorted(r["_violations"]) for r in quarantined} == flagged
+
+    spec = tmp_path / "spec.json"
+    spec.write_text(spec_json)
+    data = str(tmp_path / "input")
+    df.write.parquet(data)
+    ckpt = str(tmp_path / "ckpt")
+    assert jobs.main(
+        ["--spec", str(spec), "--input", data, "--partition-col", "p",
+         "--checkpoint-dir", ckpt]
+    ) == 0
+    keys = ("partition", "column", "error_type", "message", "violation_count")
+    stored = sorted(
+        tuple(r[k] for k in keys)
+        for r in spark.read.parquet(f"{ckpt}/violations").collect()
+    )
+    table = spark.read.parquet(data)
+    want = sorted(
+        (str(p), e.loc_tuple()[0], get_exc_type(type(e.exc)), str(e.exc),
+         int(getattr(e.exc, "count", 1)))
+        for p in (0, 1)
+        for e in find_errors(table.where(F.col("p") == p), Literals)
+    )
+    assert stored == want
+    assert [(r[0], r[1]) for r in want] == [
+        ("0", "amount"), ("0", "day"), ("0", "raw"), ("0", "span"), ("0", "ts"),
+        ("1", "span"),
     ]
 
 

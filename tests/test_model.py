@@ -340,6 +340,38 @@ def test_instance_validation_nested_struct():
     assert exc_info.value.errors()[0]["loc"] == ("inner.x",)
 
 
+class Tagged(pt.Model):
+    tags: list[Literal["a", "b"]]
+    ys: list[int]
+    zs: list[Optional[int]]
+
+
+def test_instance_validation_applies_item_rules_to_each_item():
+    # a list's allowed values and item nullability hold per item, reported
+    # at <field>.<i> (pydantic's loc `tags.0`)
+    ok = Tagged(tags=["a", "b"], ys=[1], zs=[None, 2])
+    assert ok.tags == ["a", "b"]
+    with pytest.raises(pt.DataFrameValidationError) as exc_info:
+        Tagged(tags=["a", "c"], ys=[1, None], zs=[None])
+    assert [(e["loc"], e["msg"]) for e in exc_info.value.errors()] == [
+        (("tags.1",), "Input should be 'a' or 'b'"),
+        (("ys.1",), "Input should not be None"),
+    ]
+
+
+def test_list_enum_examples_and_rows_validate(spark):
+    assert Tagged.example_value("tags") == ["a"]
+    ex = Tagged.example()
+    assert Tagged(**ex.model_dump()) == ex
+    df = Tagged.examples(spark=spark)
+    Tagged.validate(df.as_spark())
+    assert df.get().tags == ["a"]
+    row = df.as_spark().collect()[0]
+    assert Tagged.from_row(row, validate=True).tags == ["a"]
+    (model,) = list(df.iter_models(validate_model=True))
+    assert model.tags == ["a"]
+
+
 def test_construct_skips_validation():
     p = Product._construct(
         {"product_id": 1, "temperature_zone": "oven", "demand": 9.0, "name": "X"}
@@ -492,6 +524,35 @@ def test_diff_models_classifies_breaking_changes():
         "y": (["constraints"], True),
         "z": (["constraints"], False),
     }
+
+    # a change inside a struct's sub-model is classified like a flat one
+    class OldSub(pt.Model):
+        a: int = pt.Field(ge=0)
+        b: Optional[int] = pt.Field(le=9)
+
+    class NewSub(pt.Model):
+        a: int = pt.Field(ge=5)  # raised lower bound → breaking
+        b: Optional[int] = pt.Field(le=10)  # loosened → fine
+
+    class OldNested(pt.Model):
+        s: OldSub
+        items: list[OldSub]
+
+    class NewNested(pt.Model):
+        s: NewSub
+        items: list[NewSub]
+
+    d = pt.diff_models(OldNested, NewNested)
+    assert d["breaking"] is True
+    assert {
+        con["column"]: (con["changed"], con["breaking"]) for con in d["constraints"]
+    } == {
+        "s.a": (["ge"], True),
+        "s.b": (["le"], False),
+        "items.a": (["ge"], True),
+        "items.b": (["le"], False),
+    }
+    assert d["retyped"] == d["added"] == d["removed"] == d["nullability"] == []
 
 
 def test_diff_models_widening_and_loosening_not_breaking():

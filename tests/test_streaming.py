@@ -2,6 +2,7 @@
 
 import datetime as dt
 import tempfile
+from typing import Optional
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,6 +54,15 @@ def test_windowed_violation_counts(spark):
     assert row["value__bound0"] == 1
     assert row["kind__enum"] == 1
     assert row["value__null"] == 1
+
+    class Free(pt.Model):  # no row checks: the counts are the row count alone
+        ts: Optional[dt.datetime]
+        value: Optional[int]
+        kind: Optional[str]
+
+    free = windowed_violation_counts(_batch(spark), Free, "ts")
+    assert free.columns == ["w", "rows"]
+    assert [r["rows"] for r in free.collect()] == [5]
 
 
 def test_validate_stream_quarantine(spark, tmp_path):

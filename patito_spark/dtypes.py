@@ -18,9 +18,10 @@ Spark divergences from polars (documented, with synthesized checks):
 - ``Duration`` → ``DayTimeIntervalType``; naive vs aware datetime →
   ``TimestampNTZType`` vs ``TimestampType``.
 
-The value codec at the end writes the values a spec or an expression
-carries (bounds, defaults, allowed values, literals) as JSON and reads them
-back by Spark type.
+The table at the end holds, per Spark type, its Python values: the value
+codec that writes what a spec or an expression carries (bounds, defaults,
+allowed values, literals) as JSON and reads it back, and the type check and
+lax coercion of instance validation.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import enum
 import re
 import types
 import typing
-from typing import Any, Optional, Union
+from typing import Any, Callable, NamedTuple, Optional, Union
 
 from pyspark.sql import types as T
 
@@ -327,23 +328,86 @@ def _encode_value(value: Any) -> Any:
     return value
 
 
-#: Spark type of a column (or list item) → (Python type, JSON type, parser):
-#: ``_encode_value`` writes a value of the Python type as the JSON type, and
-#: the parser reads it back
+class _ValueType(NamedTuple):
+    """A Spark type's values in Python.  ``py`` is the annotation type and
+    ``name`` pydantic's name for it.  ``_encode_value`` writes a value as
+    the JSON type ``json`` and ``parse`` reads it back (``json`` is None
+    where JSON holds the value as is).  Instance validation accepts a value
+    of ``py`` or of the ``lax`` types that is none of the ``rejects`` (a
+    bool is no number, a datetime no date), and ``coerce`` converts it
+    (pydantic's lax mode; it raises ``ValueError`` with pydantic's message)."""
+
+    py: type
+    name: str
+    json: Any = None
+    parse: Optional[Callable] = None
+    lax: tuple = ()
+    rejects: tuple = ()
+    coerce: Optional[Callable] = None
+
+
+def _to_int(value: Any) -> int:
+    if isinstance(value, float) and not value.is_integer():
+        raise ValueError(
+            "Input should be a valid integer, got a number with a fractional part"
+        )
+    try:
+        return int(value)
+    except ValueError:
+        raise ValueError(
+            "Input should be a valid integer, unable to parse string as an integer"
+        ) from None
+
+
+def _to_number(parse: Callable) -> Callable:
+    def coerce(value: Any) -> Any:
+        try:  # a float becomes the Decimal of its repr, not of its binary value
+            return parse(str(value) if isinstance(value, float) else value)
+        except (ValueError, ArithmeticError):
+            raise ValueError(
+                "Input should be a valid number, unable to parse string as a number"
+            ) from None
+
+    return coerce
+
+
+#: Spark type of a column (or list item) → its ``_ValueType``: one row per
+#: type for the value codec, the annotation of a rebuilt spec and the
+#: instance type check
 _DECODERS: dict = {
-    T.DateType: (dt.date, str, dt.date.fromisoformat),
-    T.TimestampType: (dt.datetime, str, dt.datetime.fromisoformat),
-    T.TimestampNTZType: (dt.datetime, str, dt.datetime.fromisoformat),
-    T.DayTimeIntervalType: (
-        dt.timedelta,
-        (int, float),
-        lambda s: dt.timedelta(seconds=s),
+    **dict.fromkeys(
+        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
+        _ValueType(int, "integer", lax=(float, str), rejects=(bool,), coerce=_to_int),
     ),
-    T.BinaryType: (bytes, str, bytes.fromhex),
-    T.DecimalType: (decimal.Decimal, str, decimal.Decimal),
+    **dict.fromkeys(
+        (T.FloatType, T.DoubleType),
+        _ValueType(
+            float, "number", lax=(int, str, decimal.Decimal), rejects=(bool,),
+            coerce=_to_number(float),
+        ),
+    ),
+    T.BooleanType: _ValueType(bool, "boolean"),
+    T.StringType: _ValueType(str, "string"),
+    T.DateType: _ValueType(
+        dt.date, "date", str, dt.date.fromisoformat, rejects=(dt.datetime,)
+    ),
+    **dict.fromkeys(
+        (T.TimestampType, T.TimestampNTZType),
+        _ValueType(dt.datetime, "datetime", str, dt.datetime.fromisoformat),
+    ),
+    T.DayTimeIntervalType: _ValueType(
+        dt.timedelta, "timedelta", (int, float), lambda s: dt.timedelta(seconds=s)
+    ),
+    T.BinaryType: _ValueType(bytes, "bytes", str, bytes.fromhex, lax=(bytearray,)),
+    T.DecimalType: _ValueType(
+        decimal.Decimal, "number", str, decimal.Decimal, lax=(int, float, str),
+        rejects=(bool,), coerce=_to_number(decimal.Decimal),
+    ),
+    T.ArrayType: _ValueType(list, "list", lax=(tuple,), coerce=list),
+    T.MapType: _ValueType(dict, "dictionary"),
 }
 if hasattr(T, "TimeType"):  # pyspark >= 4.1
-    _DECODERS[T.TimeType] = (dt.time, str, dt.time.fromisoformat)
+    _DECODERS[T.TimeType] = _ValueType(dt.time, "time", str, dt.time.fromisoformat)
 
 
 def _decode_value(value: Any, dtype: T.DataType) -> Any:
@@ -352,16 +416,15 @@ def _decode_value(value: Any, dtype: T.DataType) -> Any:
         return [_decode_value(v, item) for v in value]
     while isinstance(dtype, T.ArrayType):  # a bound on a list's items
         dtype = dtype.elementType
-    _, kind, parse = _DECODERS.get(type(dtype), (None, None, None))
-    return parse(value) if kind and isinstance(value, kind) else value
+    row = _DECODERS.get(type(dtype))
+    return row.parse(value) if row and row.json and isinstance(value, row.json) else value
 
 
-#: Python type → name of the Spark type whose decoder restores its values
-#: (the first row wins: a datetime literal is a ``timestamp``), and back
-_LITERAL_TAGS = {
-    py: cls.typeName() for cls, (py, _, _) in reversed(_DECODERS.items())
-}
-_TAGGED_TYPES = {cls.typeName(): cls for cls in _DECODERS}
+#: name of each Spark type whose row parses a JSON form → the type, and
+#: back from the Python type (the first row wins: a datetime literal is a
+#: ``timestamp``)
+_TAGGED_TYPES = {cls.typeName(): cls for cls, row in _DECODERS.items() if row.json}
+_LITERAL_TAGS = {_DECODERS[cls].py: tag for tag, cls in reversed(_TAGGED_TYPES.items())}
 
 
 def _encode_literal(value: Any) -> dict:

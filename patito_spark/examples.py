@@ -3,7 +3,8 @@
 ≈ reference ``src/patito/pydantic.py:498-884``: one valid value per field
 derived from the spec (const → const; default → default; optional → None;
 enum → first value; numerics bound-aware; strings honour min/max length;
-temporals get epoch-ish values; nested models recurse; arrays wrap one item).
+temporals get epoch-ish values; nested models recurse; arrays repeat one item
+as often as their min/max length asks, once by default).
 ``examples()`` builds a Spark DataFrame where unspecified unique columns are
 filled with a 1-based sequence (reference ``pl.first().cum_count()``,
 ``pydantic.py:864-867``) — here ``spark.range`` + native Columns, fully
@@ -30,12 +31,15 @@ def example_value(spec: ColumnSpec) -> Any:
     if spec.nullable:
         return None
     dtype = spec.dtype
+    if isinstance(dtype, T.ArrayType):  # a length counts the list's items
+        n = spec.min_length or 1
+        if spec.max_length is not None:
+            n = min(n, spec.max_length)
+        if spec.allowed_values:
+            return [spec.allowed_values[0]] * n
+        return [_scalar_example(dtype.elementType, spec)] * n
     if spec.allowed_values:
-        first = spec.allowed_values[0]
-        return [first] if isinstance(dtype, T.ArrayType) else first
-    if isinstance(dtype, T.ArrayType):
-        inner = _scalar_example(dtype.elementType, spec)
-        return [inner]
+        return spec.allowed_values[0]
     if isinstance(dtype, T.StructType) and spec.model is not None:
         return spec.model.example().model_dump()
     return _scalar_example(dtype, spec)

@@ -56,7 +56,8 @@ codegen end to end, zero Python UDFs.  Check semantics mirror the reference
 exactly (see SURVEY §7.3): duplicate counts include every member of a
 duplicate group; bound-violation counts sum per check (a row can count
 twice); nulls never fail bounds/constraints; ``pattern`` is regex *search*;
-lengths are characters.
+a string's lengths count characters, a list's its items, and every other
+value rule on a list column holds per item.
 """
 
 from __future__ import annotations
@@ -81,6 +82,7 @@ from ..errors import (
     RowValueError,
     SuperfluousColumnsError,
 )
+from ..spec import _RULES, _Rule
 
 #: Upper bound on distinct impermissible enum values shipped to the driver.
 #: The reference reports the full set (validators.py:436); at web scale an
@@ -501,32 +503,24 @@ def _compile_column(
     if not dtype_ok:
         return  # type-sensitive checks below would fail analysis
 
-    # --- V10 bounds / value rules (validators.py:331-376) --------------------
-    checks: list[Column] = []
-    if spec.le is not None:
-        checks.append(col <= F.lit(spec.le))
-    if spec.lt is not None:
-        checks.append(col < F.lit(spec.lt))
-    if spec.ge is not None:
-        checks.append(col >= F.lit(spec.ge))
-    if spec.gt is not None:
-        checks.append(col > F.lit(spec.gt))
-    if spec.multiple_of is not None:
-        checks.append((col == 0) | ((col % F.lit(spec.multiple_of)) == 0))
-    if spec.const is not None:
-        checks.append(col == F.lit(spec.const))
-    if spec.pattern is not None:
-        # regex *search* semantics, like polars str.contains (validators.py:340)
-        checks.append(col.rlike(spec.pattern))
-    if spec.min_length is not None:
-        checks.append(F.char_length(col) >= spec.min_length)
-    if spec.max_length is not None:
-        checks.append(F.char_length(col) <= spec.max_length)
-    if checks:
-        # one flag and one term per check; counts SUM across checks (a row
-        # failing two bounds counts twice — reference validators.py:358-366);
-        # a null check (null input) never fails
-        preds = {f"bound{i}": ~F.coalesce(c, F.lit(True)) for i, c in enumerate(checks)}
+    # --- V10 value rules (validators.py:331-376): one flag and one term per
+    # row of the rule table; counts SUM across rules (a row failing two
+    # rules counts twice — reference validators.py:358-366); a null value
+    # never fails.  On a list a rule with a list form checks the list, and
+    # every other rule flags a row with any failing item.
+    preds: dict = {}
+    for rule in _RULES:
+        v = getattr(spec, rule.slot)
+        if v is None:
+            continue
+        if not isinstance(df_type, T.ArrayType):
+            failed = _fails(rule.column(col, v))
+        elif rule.list_column is not None:
+            failed = _fails(rule.list_column(col, v))
+        else:
+            failed = F.coalesce(F.exists(col, _item_fails(rule, v)), F.lit(False))
+        preds[f"bound{len(preds)}"] = failed
+    if preds:
         add("bound", **_counted("bound", col_loc, preds))
 
     # --- V11 custom constraints (validators.py:378-402) ----------------------
@@ -577,6 +571,17 @@ def _compile_column(
             mixed=violated,
             render=_constraint_render(col_loc, len(pure_agg)),
         )
+
+
+def _fails(check: Column) -> Column:
+    """A rule's violation flag: a NULL check (null input) never fails."""
+    return ~F.coalesce(check, F.lit(True))
+
+
+def _item_fails(rule: _Rule, v: Any) -> Callable[[Column], Column]:
+    """Lambda body of ``exists(list, item -> failed)`` for an item rule (a
+    factory: Spark HOF lambdas take no default-arg captures)."""
+    return lambda item: _fails(rule.column(item, v))
 
 
 def _compile_element(

@@ -242,7 +242,8 @@ def write_validated(
     check flags the row when any element violates).  ``_violations`` holds
     their names, ``<loc>__null | __list_null | __bound<i> | __enum |
     __constraint``, with ``loc`` dotted for nested fields
-    (``items.price__bound0``).  Dataset checks — uniqueness, aggregate and
+    (``items.price__bound0``); on a list column ``__bound<i>`` marks a row
+    with any failing item (a length rule: the list's size).  Dataset checks — uniqueness, aggregate and
     mixed aggregate/row constraints, schema errors — need the full
     validate()/runner path; they are not expressible as a per-row filter.
 

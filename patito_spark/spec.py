@@ -15,11 +15,11 @@ patito ``pydantic.py:886-1163`` — pure metadata, no data movement.
 
 from __future__ import annotations
 
-import datetime as dt
-import decimal
 import json
-from typing import Any, Optional, Union
+import re
+from typing import Any, Callable, NamedTuple, Optional, Union
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dtypes import (
@@ -120,7 +120,8 @@ def Field(
 
     ``pattern`` uses regex *search* semantics, not full match (reference
     ``validators.py:340``); ``min_length``/``max_length`` count characters,
-    not bytes (``validators.py:341-342``).
+    not bytes (``validators.py:341-342``).  On a list column the lengths
+    count its items and every other value rule holds for each item.
     """
     return FieldInfo(
         default,
@@ -254,144 +255,70 @@ class ColumnSpec:
         Driver-side per-field validation for model-instance construction.
         The reference constructs instances through pydantic, so wrong-typed
         or out-of-bounds values raise there (``polars.py:846-850``,
-        ``tests/test_polars.py``); this mirrors pydantic v2's lax mode:
-        int/float/str cross-coercion where lossless, bool never coerced to
-        int, fractional floats never truncated to int.
+        ``tests/test_polars.py``); this mirrors pydantic v2's lax mode
+        (the type rows of ``dtypes._DECODERS``) and applies the value rules
+        of ``_RULES``, the rows the check compiler compiles.  A list column
+        goes through the per-item loop at ``<field>.<i>``; a scalar is its
+        own single item.
 
         Returns ``(coerced_value, errors)`` where each error is a
         ``(sub_loc or None, exception)`` pair — sub_loc is a dotted path
-        inside nested struct / list-of-struct fields.
+        inside list items and nested struct / list-of-struct fields.
         """
-        from .errors import ColumnDTypeError, MissingValuesError, RowValueError
+        from .errors import MissingValuesError, RowValueError
 
         errors: list = []
-        if value is None:
-            if not self.nullable:
-                errors.append((None, MissingValuesError("Input should not be None")))
-            return None, errors
-
-        dtype = self.dtype
-        coerced = value
-        # -- type coercion -----------------------------------------------------
-        if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            if isinstance(value, bool) or not isinstance(value, (int, float, str)):
-                errors.append((None, ColumnDTypeError("Input should be a valid integer")))
-            elif isinstance(value, float):
-                if value.is_integer():
-                    coerced = int(value)
-                else:
-                    errors.append((None, ColumnDTypeError(
-                        "Input should be a valid integer, got a number with a fractional part"
-                    )))
-            elif isinstance(value, str):
-                try:
-                    coerced = int(value)
-                except ValueError:
-                    errors.append((None, ColumnDTypeError(
-                        "Input should be a valid integer, unable to parse string as an integer"
-                    )))
-        elif isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
-            # pydantic v2 lax mode accepts decimal.Decimal for numeric
-            # fields; DecimalType values keep Decimal precision (no float
-            # round-trip)
-            if isinstance(value, bool) or not isinstance(
-                value, (int, float, str, decimal.Decimal)
-            ):
-                errors.append((None, ColumnDTypeError("Input should be a valid number")))
-            elif isinstance(value, str):
-                try:
-                    coerced = (
-                        decimal.Decimal(value)
-                        if isinstance(dtype, T.DecimalType)
-                        else float(value)
-                    )
-                except (ValueError, decimal.InvalidOperation):
-                    errors.append((None, ColumnDTypeError(
-                        "Input should be a valid number, unable to parse string as a number"
-                    )))
-            elif isinstance(dtype, T.DecimalType):
-                coerced = (
-                    value
-                    if isinstance(value, decimal.Decimal)
-                    else decimal.Decimal(str(value))
-                )
+        rules = [(r, v) for r in _RULES if (v := getattr(self, r.slot)) is not None]
+        is_list = isinstance(self.dtype, T.ArrayType) and value is not None
+        if is_list:
+            value = self._typed(value, self.dtype, None, errors)
+            if errors:
+                return value, errors
+            for rule, v in rules:  # a length checks the list itself
+                if rule.list_column and not rule.check(value, v):
+                    msg = rule.list_message.format(v=v, s="s" * (v != 1), n=len(value))
+                    errors.append((None, RowValueError(msg)))
+            rules = [(r, v) for r, v in rules if not r.list_column]
+        item_type = self.dtype.elementType if is_list else self.dtype
+        nullable = self.item_nullable if is_list else self.nullable
+        coerced = []
+        for i, item in enumerate(value if is_list else [value]):
+            loc, failed = (str(i) if is_list else None), len(errors)
+            if item is None:
+                if not nullable:
+                    errors.append((loc, MissingValuesError("Input should not be None")))
             else:
-                coerced = float(value)
-        elif isinstance(dtype, T.StringType):
-            if not isinstance(value, str):
-                errors.append((None, ColumnDTypeError("Input should be a valid string")))
-        elif isinstance(dtype, T.BooleanType):
-            if not isinstance(value, bool):
-                errors.append((None, ColumnDTypeError("Input should be a valid boolean")))
-        elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-            if not isinstance(value, dt.datetime):
-                errors.append((None, ColumnDTypeError("Input should be a valid datetime")))
-        elif isinstance(dtype, T.DateType):
-            if isinstance(value, dt.datetime) or not isinstance(value, dt.date):
-                errors.append((None, ColumnDTypeError("Input should be a valid date")))
-        elif isinstance(dtype, T.BinaryType):
-            if not isinstance(value, (bytes, bytearray)):
-                errors.append((None, ColumnDTypeError("Input should be a valid bytes")))
-        elif isinstance(dtype, T.ArrayType):
-            if not isinstance(value, (list, tuple)):
-                errors.append((None, ColumnDTypeError("Input should be a valid list")))
-            else:
-                coerced = list(value)
-                if self.model is not None:
-                    coerced = [
-                        item
-                        if item is None
-                        else self._validate_nested(item, errors, sub_loc=str(i))
-                        for i, item in enumerate(coerced)
-                    ]
-        elif isinstance(dtype, T.StructType) and self.model is not None:
-            coerced = self._validate_nested(value, errors, sub_loc=None)
-        elif isinstance(dtype, T.MapType):
-            if not isinstance(value, dict):
-                errors.append((None, ColumnDTypeError("Input should be a valid dictionary")))
-        if errors:
-            return coerced, errors
-
-        # -- constraints (same semantics as the df-level compiler) --------------
-        def _rv(msg: str) -> None:
-            errors.append((None, RowValueError(msg)))
-
-        def _allowed(item: Any, sub_loc: Optional[str]) -> None:
-            if self.allowed_values is not None and item not in self.allowed_values:
-                opts = [repr(v) for v in self.allowed_values]
+                item = self._typed(item, item_type, loc, errors)
+            coerced.append(item)
+            if item is None or len(errors) > failed:
+                continue
+            allowed = self.allowed_values
+            if allowed is not None and item not in allowed:
+                opts = [repr(a) for a in allowed]
                 joined = opts[0] if len(opts) == 1 else ", ".join(opts[:-1]) + " or " + opts[-1]
-                errors.append((sub_loc, RowValueError(f"Input should be {joined}")))
+                errors.append((loc, RowValueError(f"Input should be {joined}")))
+            for rule, v in rules:
+                if not rule.check(item, v):
+                    errors.append((loc, RowValueError(rule.message.format(v=v))))
+        return (coerced if is_list else coerced[0]), errors
 
-        if isinstance(dtype, T.ArrayType):  # item rules apply to each item
-            for i, item in enumerate(coerced):
-                if item is not None:
-                    _allowed(item, str(i))
-                elif not self.item_nullable:
-                    errors.append((str(i), MissingValuesError("Input should not be None")))
-        else:
-            _allowed(coerced, None)
-        if self.const is not None and coerced != self.const:
-            _rv(f"Input should be {self.const!r}")
-        if self.ge is not None and not coerced >= self.ge:
-            _rv(f"Input should be greater than or equal to {self.ge}")
-        if self.gt is not None and not coerced > self.gt:
-            _rv(f"Input should be greater than {self.gt}")
-        if self.le is not None and not coerced <= self.le:
-            _rv(f"Input should be less than or equal to {self.le}")
-        if self.lt is not None and not coerced < self.lt:
-            _rv(f"Input should be less than {self.lt}")
-        if self.multiple_of is not None and coerced % self.multiple_of != 0:
-            _rv(f"Input should be a multiple of {self.multiple_of}")
-        if isinstance(coerced, str):
-            import re as _re
+    def _typed(self, value: Any, dtype: T.DataType, loc: Optional[str], errors: list) -> Any:
+        """*value* coerced to *dtype* by its ``_DECODERS`` row (a struct
+        through the nested model), or as is with an error at *loc*."""
+        from .errors import ColumnDTypeError
 
-            if self.pattern is not None and not _re.search(self.pattern, coerced):
-                _rv(f"String should match pattern '{self.pattern}'")
-            if self.min_length is not None and len(coerced) < self.min_length:
-                _rv(f"String should have at least {self.min_length} characters")
-            if self.max_length is not None and len(coerced) > self.max_length:
-                _rv(f"String should have at most {self.max_length} characters")
-        return coerced, errors
+        if isinstance(dtype, T.StructType) and self.model is not None:
+            return self._validate_nested(value, errors, loc)
+        row = _DECODERS.get(type(dtype))
+        if row is None:
+            return value
+        try:
+            if not isinstance(value, (row.py, *row.lax)) or isinstance(value, row.rejects):
+                raise ValueError(f"Input should be a valid {row.name}")
+            return value if row.coerce is None else row.coerce(value)
+        except ValueError as exc:
+            errors.append((loc, ColumnDTypeError(str(exc))))
+            return value
 
     def _validate_nested(self, value: Any, errors: list, sub_loc: Optional[str]) -> Any:
         """Construct (and thereby validate) a nested model value; sub-errors
@@ -464,6 +391,54 @@ _SPEC_KEYS = (
         lambda v: v if isinstance(v, str) else {"expr": v.to_dict()},
         lambda v, dtype: Expr.from_dict(v["expr"]) if isinstance(v, dict) else v,
     ),
+)
+
+
+class _Rule(NamedTuple):
+    """A value rule: the ``ColumnSpec`` slot holding its value ``v``, the
+    Spark predicate ``(col, v) -> Column``, the Python one ``(x, v) ->
+    bool`` (each true when the value passes) and pydantic's message.  On a
+    list column a rule with a list form (a length) checks the list with
+    ``list_column`` and ``check``; every other rule checks each item."""
+
+    slot: str
+    column: Callable
+    check: Callable
+    message: str
+    list_column: Optional[Callable] = None
+    list_message: str = ""
+
+
+#: The value rules in the order the check compiler numbers their row flags
+#: (``<loc>__bound<i>``, ``le`` first).  ``pattern`` is regex *search*, like
+#: polars ``str.contains`` (reference ``validators.py:340``); a string's
+#: lengths count characters.
+_RULES = (
+    _Rule("le", lambda c, v: c <= F.lit(v), lambda x, v: x <= v,
+          "Input should be less than or equal to {v}"),
+    _Rule("lt", lambda c, v: c < F.lit(v), lambda x, v: x < v,
+          "Input should be less than {v}"),
+    _Rule("ge", lambda c, v: c >= F.lit(v), lambda x, v: x >= v,
+          "Input should be greater than or equal to {v}"),
+    _Rule("gt", lambda c, v: c > F.lit(v), lambda x, v: x > v,
+          "Input should be greater than {v}"),
+    _Rule("multiple_of", lambda c, v: (c == 0) | ((c % F.lit(v)) == 0),
+          lambda x, v: x % v == 0, "Input should be a multiple of {v}"),
+    _Rule("const", lambda c, v: c == F.lit(v), lambda x, v: x == v,
+          "Input should be {v!r}"),
+    _Rule("pattern", lambda c, v: c.rlike(v),
+          lambda x, v: not isinstance(x, str) or re.search(v, x) is not None,
+          "String should match pattern '{v}'"),
+    _Rule("min_length", lambda c, v: F.char_length(c) >= v,
+          lambda x, v: not isinstance(x, (str, list)) or len(x) >= v,
+          "String should have at least {v} characters",
+          lambda c, v: F.array_size(c) >= v,
+          "List should have at least {v} item{s} after validation, not {n}"),
+    _Rule("max_length", lambda c, v: F.char_length(c) <= v,
+          lambda x, v: not isinstance(x, (str, list)) or len(x) <= v,
+          "String should have at most {v} characters",
+          lambda c, v: F.array_size(c) <= v,
+          "List should have at most {v} item{s} after validation, not {n}"),
 )
 
 
@@ -954,16 +929,6 @@ def _annotation_for_spark_type(
     """Annotation for *dtype*; its struct (at any list depth) becomes
     *nested* when the spec carried the sub-model, else a check-free
     ``NestedStruct``."""
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return int
-    if isinstance(dtype, (T.FloatType, T.DoubleType)):
-        return float
-    if isinstance(dtype, T.BooleanType):
-        return bool
-    if isinstance(dtype, T.StringType):
-        return str
-    if type(dtype) in _DECODERS:  # decimal, binary and the temporal types
-        return _DECODERS[type(dtype)][0]
     if isinstance(dtype, T.ArrayType):
         inner = _annotation_for_spark_type(dtype.elementType, nested)
         if dtype.containsNull:
@@ -987,4 +952,6 @@ def _annotation_for_spark_type(
             for f in dtype.fields
         }
         return _derive_model("NestedStruct", fields)
+    if type(dtype) in _DECODERS:
+        return _DECODERS[type(dtype)].py
     raise TypeError(f"No annotation mapping for Spark type {dtype}")

@@ -24,7 +24,9 @@ predicates the batch aggregate executor counts.
 Check names are ``<loc>__null``, ``__list_null``, ``__bound<i>``,
 ``__enum`` and ``__constraint``; ``loc`` is dotted for nested-struct and
 list-of-struct fields (``items.price__bound0``: some element of ``items``
-violates).  Uniqueness, aggregate and mixed aggregate/row constraints and
+violates).  ``__bound<i>`` numbers the value rules a column declares in
+the order of ``spec._RULES`` (``le`` first); on a list column it marks a
+row with any failing item (a length rule: the list's size).  Uniqueness, aggregate and mixed aggregate/row constraints and
 schema-level errors have no row form and are deliberately excluded: exact
 global uniqueness over an unbounded stream is unbounded state.  Use
 ``dropDuplicatesWithinWatermark`` upstream or the batch runner over closed

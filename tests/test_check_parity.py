@@ -243,6 +243,105 @@ def test_row_flags_match_find_errors(spark, planted):
     assert flagged.filter(~F.col("_valid")).count() == sum(flag_counts.values())
 
 
+class Rules(pt.Model):
+    """Every value rule on the scalar types it compiles against."""
+
+    i: int = pt.Field(le=10, lt=11, ge=-5, gt=-6, multiple_of=5, const=5)
+    i32: int = pt.Field(dtype="int32", ge=0, le=100)
+    u8: int = pt.Field(dtype="uint8")
+    f: float = pt.Field(ge=0.5, lt=1e3, multiple_of=0.25)
+    dec: decimal.Decimal = pt.Field(
+        ge=decimal.Decimal("-1.5"),
+        lt=decimal.Decimal("1E+3"),
+        multiple_of=decimal.Decimal("0.5"),
+    )
+    u64: int = pt.Field(dtype="uint64")
+    day: dt.date = pt.Field(ge=dt.date(2020, 1, 1), lt=dt.date(2030, 1, 1))
+    ts: dt.datetime = pt.Field(
+        gt=dt.datetime(2020, 1, 1, 12, 30), le=dt.datetime(2030, 1, 1, 0, 0, 0, 250)
+    )
+    span: dt.timedelta = pt.Field(
+        ge=dt.timedelta(0), lt=dt.timedelta(days=3, microseconds=7)
+    )
+    raw: bytes = pt.Field(const=b"\x00ab")
+    s: str = pt.Field(pattern=r"^[a-z]+$", min_length=1, max_length=8)
+    c: str = pt.Field(const="x", le="z")
+
+
+#: each rule flag of ``Rules`` → ``str(Column)`` as compiled before the rule
+#: table (a bytes literal prints a JVM identity hash after ``[B@``)
+RULE_GOLDEN = [
+    ("i__bound0", "Column<'!(coalesce(<=(i, 10), true))'>"),
+    ("i__bound1", "Column<'!(coalesce(<(i, 11), true))'>"),
+    ("i__bound2", "Column<'!(coalesce(>=(i, -5), true))'>"),
+    ("i__bound3", "Column<'!(coalesce(>(i, -6), true))'>"),
+    ("i__bound4", "Column<'!(coalesce(or(=(i, 0), =(%(i, 5), 0)), true))'>"),
+    ("i__bound5", "Column<'!(coalesce(=(i, 5), true))'>"),
+    ("i32__bound0", "Column<'!(coalesce(<=(i32, 100), true))'>"),
+    ("i32__bound1", "Column<'!(coalesce(>=(i32, 0), true))'>"),
+    ("u8__bound0", "Column<'!(coalesce(<=(u8, 255), true))'>"),
+    ("u8__bound1", "Column<'!(coalesce(>=(u8, 0), true))'>"),
+    ("f__bound0", "Column<'!(coalesce(<(f, 1000.0), true))'>"),
+    ("f__bound1", "Column<'!(coalesce(>=(f, 0.5), true))'>"),
+    ("f__bound2", "Column<'!(coalesce(or(=(f, 0), =(%(f, 0.25), 0)), true))'>"),
+    ("dec__bound0", "Column<'!(coalesce(<(dec, 1E+3), true))'>"),
+    ("dec__bound1", "Column<'!(coalesce(>=(dec, -1.5), true))'>"),
+    ("dec__bound2", "Column<'!(coalesce(or(=(dec, 0), =(%(dec, 0.5), 0)), true))'>"),
+    ("u64__bound0", "Column<'!(coalesce(<=(u64, 18446744073709551615), true))'>"),
+    ("u64__bound1", "Column<'!(coalesce(>=(u64, 0), true))'>"),
+    ("day__bound0", "Column<'!(coalesce(<(day, 2030-01-01), true))'>"),
+    ("day__bound1", "Column<'!(coalesce(>=(day, 2020-01-01), true))'>"),
+    ("ts__bound0", "Column<'!(coalesce(<=(ts, 2030-01-01 00:00:00.00025), true))'>"),
+    ("ts__bound1", "Column<'!(coalesce(>(ts, 2020-01-01 12:30:00.0), true))'>"),
+    ("span__bound0", "Column<'!(coalesce(<(span, PT72H0.000007S), true))'>"),
+    ("span__bound1", "Column<'!(coalesce(>=(span, PT0S), true))'>"),
+    ("raw__bound0", "Column<'!(coalesce(=(raw, [B@), true))'>"),
+    ("s__bound0", "Column<'!(coalesce(rlike(s, '^[a-z]+$'), true))'>"),
+    ("s__bound1", "Column<'!(coalesce(>=(char_length(s), 1), true))'>"),
+    ("s__bound2", "Column<'!(coalesce(<=(char_length(s), 8), true))'>"),
+    ("c__bound0", "Column<'!(coalesce(<=(c, 'z'), true))'>"),
+    ("c__bound1", "Column<'!(coalesce(=(c, 'x'), true))'>"),
+]
+
+#: every row flag of ``WebPage`` (names, order and Columns)
+WEBPAGE_GOLDEN = [
+    ("url__null", "Column<'isNull(url)'>"),
+    ("url__bound0", "Column<'!(coalesce(rlike(url, '^https?://'), true))'>"),
+    ("warc_ts__null", "Column<'isNull(warc_ts)'>"),
+    ("warc_ts__bound0", "Column<'!(coalesce(<=(warc_ts, 2030-01-01 00:00:00.0), true))'>"),
+    ("warc_ts__bound1", "Column<'!(coalesce(>=(warc_ts, 1996-01-01 00:00:00.0), true))'>"),
+    ("lang__null", "Column<'isNull(lang)'>"),
+    (
+        "lang__enum",
+        "Column<'coalesce(!(in(lang, 'en', 'de', 'fr', 'es', 'zh', 'ru', 'ja', "
+        "'pt', 'it', 'nl', 'other')), false)'>",
+    ),
+]
+
+
+def test_every_rule_compiles_to_its_golden_column(spark):
+    """Each row of the rule table compiles every scalar column to the
+    Column it compiled to before the table, numbered in the same order."""
+    import re
+
+    from patito_spark.plans.checks import row_flags
+    from patito_spark.spec import _RULES
+    from patito_spark.testing import WebPage
+
+    declared = {
+        r.slot for s in Rules.specs.values() for r in _RULES if getattr(s, r.slot) is not None
+    }
+    assert declared == {r.slot for r in _RULES}
+    got = [
+        (name, re.sub(r"\[B@[0-9a-f]+", "[B@", str(c)))
+        for name, c in row_flags(Rules, Rules.spark_schema()).items()
+        if "__bound" in name
+    ]
+    assert got == RULE_GOLDEN
+    webpage = row_flags(WebPage, WebPage.spark_schema()).items()
+    assert [(name, str(c)) for name, c in webpage] == WEBPAGE_GOLDEN
+
+
 class Flat(pt.Model):
     p: int
     v: float = pt.Field(ge=0.0, constraints=pt.field - pt.field.mean() < 5.0)
@@ -557,21 +656,32 @@ class Exact(pt.Model):
     dec: decimal.Decimal = pt.Field(ge=decimal.Decimal("0"))
     n: int = pt.Field(dtype="uint64")
     span: dt.timedelta = pt.Field(ge=dt.timedelta(0), lt=dt.timedelta(days=1))
+    days: list[dt.date] = pt.Field(ge=dt.date(2020, 1, 1))
+    xs: list[int] = pt.Field(min_length=1)
 
 
 def test_jobs_main_matches_find_errors_on_decimal_unsigned_interval(spark, tmp_path):
     """The model ``jobs.main`` rebuilds from a spec file stores, per
     partition, exactly the violations ``find_errors`` reports with the
     Python model: decimal columns stay decimal (no dtype errors), uint64's
-    range holds past 2^63 and timedelta bounds stay intervals."""
+    range holds past 2^63, timedelta bounds stay intervals, a bound on a
+    list holds for each item (a row counts once when any item fails) and a
+    length on a list measures the list.  ``flag_violations`` flags exactly
+    the columns where ``Exact(**row)`` raises."""
+    day = dt.date
     df = spark.createDataFrame(
         [
-            (0, decimal.Decimal("1.5"), decimal.Decimal(5), dt.timedelta(hours=1)),
-            (0, decimal.Decimal("-1.5"), decimal.Decimal(5), dt.timedelta(days=2)),
-            (1, decimal.Decimal("2.5"), decimal.Decimal(-1), dt.timedelta(hours=-1)),
-            (1, decimal.Decimal("0.5"), decimal.Decimal(2**64), dt.timedelta(0)),
+            (0, decimal.Decimal("1.5"), decimal.Decimal(5), dt.timedelta(hours=1),
+             [day(2021, 1, 1)], [1]),
+            (0, decimal.Decimal("-1.5"), decimal.Decimal(5), dt.timedelta(days=2),
+             [day(2019, 12, 31), day(2021, 1, 1)], [1]),
+            (1, decimal.Decimal("2.5"), decimal.Decimal(-1), dt.timedelta(hours=-1),
+             [], []),
+            (1, decimal.Decimal("0.5"), decimal.Decimal(2**64), dt.timedelta(0),
+             [day(2018, 1, 1), day(2019, 1, 1)], [2, 3]),
         ],
-        "p bigint, dec decimal(10,2), n decimal(20,0), span interval day to second",
+        "p bigint, dec decimal(10,2), n decimal(20,0), span interval day to second, "
+        "days array<date>, xs array<bigint>",
     )
     spec = tmp_path / "spec.json"
     spec.write_text(Exact.spec_json())
@@ -597,7 +707,24 @@ def test_jobs_main_matches_find_errors_on_decimal_unsigned_interval(spark, tmp_p
     )
     assert stored == want
     assert [(r[0], r[1], r[4]) for r in want] == [
-        ("0", "dec", 1), ("0", "span", 1), ("1", "n", 2), ("1", "span", 1),
+        ("0", "days", 1), ("0", "dec", 1), ("0", "span", 1),
+        ("1", "days", 1), ("1", "n", 2), ("1", "span", 1), ("1", "xs", 1),
+    ]
+
+    flagged = []
+    for r in flag_violations(df, Exact).collect():
+        try:
+            Exact(**{n: r[n] for n in Exact.columns})
+            raised = set()
+        except pt.DataFrameValidationError as exc:
+            raised = {e["loc"][0].split(".")[0] for e in exc.errors()}
+        assert {n.split("__")[0] for n in r["_violations"]} == raised, r
+        flagged.append(sorted(r["_violations"]))
+    assert flagged == [
+        [],
+        ["days__bound0", "dec__bound0", "span__bound0"],
+        ["n__bound1", "span__bound1", "xs__bound0"],
+        ["days__bound0", "n__bound0"],
     ]
 
 

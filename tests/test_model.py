@@ -297,6 +297,34 @@ def test_instance_validation_types():
     with pytest.raises(pt.DataFrameValidationError):
         Product(product_id=True, temperature_zone="dry", demand=0.1, name="ok")
 
+    class Timed(pt.Model):
+        span: dt.timedelta
+        bounded: dt.timedelta = pt.Field(ge=dt.timedelta(0))
+        at: dt.time
+        xs: list[int]
+
+    # every dtype checks its values, a bounded one before comparing them;
+    # list items are checked and coerced one by one at <field>.<i>
+    with pytest.raises(pt.DataFrameValidationError) as exc_info:
+        Timed(span="abc", bounded="abc", at="abc", xs=["a", 1.5])
+    assert [(e["loc"], e["type"], e["msg"]) for e in exc_info.value.errors()] == [
+        (("span",), "type_error.columndtype", "Input should be a valid timedelta"),
+        (("bounded",), "type_error.columndtype", "Input should be a valid timedelta"),
+        (("at",), "type_error.columndtype", "Input should be a valid time"),
+        (
+            ("xs.0",),
+            "type_error.columndtype",
+            "Input should be a valid integer, unable to parse string as an integer",
+        ),
+        (
+            ("xs.1",),
+            "type_error.columndtype",
+            "Input should be a valid integer, got a number with a fractional part",
+        ),
+    ]
+    ok = Timed(span=dt.timedelta(1), bounded=dt.timedelta(0), at=dt.time(9), xs=[1.0, "2"])
+    assert ok.xs == [1, 2]
+
 
 def test_instance_validation_accepts_decimal():
     # pydantic v2 lax mode accepts decimal.Decimal for numeric fields; a
@@ -357,6 +385,32 @@ def test_instance_validation_applies_item_rules_to_each_item():
         (("tags.1",), "Input should be 'a' or 'b'"),
         (("ys.1",), "Input should not be None"),
     ]
+
+    # a bound on a list holds per item; a length measures the list
+    class Dated(pt.Model):
+        days: list[dt.date] = pt.Field(ge=dt.date(2020, 1, 1))
+        xs: list[int] = pt.Field(min_length=1, max_length=2)
+
+    ok = Dated(days=[dt.date(2020, 1, 1), dt.date(2021, 1, 1)], xs=[1, 2])
+    assert ok.days == [dt.date(2020, 1, 1), dt.date(2021, 1, 1)]
+    for xs, msg in [
+        ([], "List should have at least 1 item after validation, not 0"),
+        ([1, 2, 3], "List should have at most 2 items after validation, not 3"),
+    ]:
+        with pytest.raises(pt.DataFrameValidationError) as exc_info:
+            Dated(days=[dt.date(2021, 1, 1), dt.date(2019, 1, 1)], xs=xs)
+        assert [(e["loc"], e["msg"]) for e in exc_info.value.errors()] == [
+            (("days.1",), "Input should be greater than or equal to 2020-01-01"),
+            (("xs",), msg),
+        ]
+
+    class Long(pt.Model):  # a list's example holds as many items as its lengths ask
+        tags: list[str] = pt.Field(min_length=2, max_length=3)
+        kinds: list[Literal["a"]] = pt.Field(min_length=3)
+
+    ex = Long.example()
+    assert (len(ex.tags), ex.kinds) == (2, ["a", "a", "a"])
+    assert Long(**ex.model_dump()) == ex
 
 
 def test_list_enum_examples_and_rows_validate(spark):

@@ -66,11 +66,11 @@ orphans is refused, since they would be indistinguishable from its own.
 A checkpoint that still holds the legacy md5-hex ``unique_partials`` store
 is refused before anything is written, so the two formats never mix.
 
-Checkpoint storage is a parquet directory triple (``verdicts/``,
-``violations/``, ``unique_keys/``) written with append, or the
-``<checkpoint_table>_{verdicts,violations,unique_keys}`` catalog tables
-written through ``sources.io.write_report_table`` — under an Iceberg
-catalog those appends are snapshot commits.
+Checkpoint storage is one store root of ``sources/store.py``:
+``checkpoint_dir=`` names a directory whose ``verdicts/``, ``violations/``
+and ``unique_keys/`` parquet stores are appended to, ``checkpoint_table=``
+the catalog tables ``<checkpoint_table>_{verdicts,violations,unique_keys}``
+(under an Iceberg catalog those appends are snapshot commits).
 """
 
 from __future__ import annotations
@@ -87,6 +87,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import get_exc_type
+from ..sources.store import TABLE_SCHEME, open_store
 from .checks import (
     _aggregate,
     _concurrently,
@@ -159,13 +160,6 @@ VIOLATION_SCHEMA = T.StructType(
     ]
 )
 
-_STORE_SCHEMAS = {
-    "verdicts": VERDICT_SCHEMA,
-    "violations": VIOLATION_SCHEMA,
-    _UNIQUE_STORE: UNIQUE_KEYS_SCHEMA,
-}
-
-
 class RunResult:
     def __init__(
         self,
@@ -223,65 +217,31 @@ class ValidationRunner:
             )
         self.checkpoint_dir = checkpoint_dir
         #: catalog checkpoint (the north rule persists verdicts + lineage to
-        #: a checkpoint TABLE): verdicts land in <name>_verdicts and
-        #: violations in <name>_violations via the V2 writer — real Iceberg
-        #: snapshot commits under an Iceberg catalog
+        #: a checkpoint TABLE): <name>_verdicts, <name>_violations and
+        #: <name>_unique_keys
         self.checkpoint_table = checkpoint_table
+        root = TABLE_SCHEME + checkpoint_table if checkpoint_table else checkpoint_dir
+        #: the checkpoint's stores; None without a checkpoint
+        self._store = open_store(root) if root else None
 
     # -- checkpoint I/O --------------------------------------------------------
-    def _location(self, store: str) -> Optional[str]:
-        """The catalog table or directory that holds *store*."""
-        if self.checkpoint_table:
-            return f"{self.checkpoint_table}_{store}"
-        if self.checkpoint_dir:
-            return f"{self.checkpoint_dir}/{store}"
-        return None
-
-    def _exists(self, spark: SparkSession, store: str) -> bool:
-        """Whether *store* was ever written: a catalog lookup, or an
-        ``exists`` on the Hadoop FileSystem — no Spark job either way."""
-        location = self._location(store)
-        if location is None:
-            return False
-        if self.checkpoint_table:
-            return spark.catalog.tableExists(location)
-        path = spark._jvm.org.apache.hadoop.fs.Path(location)
-        fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        return fs.exists(path)
-
-    def _read(self, spark: SparkSession, store: str) -> Optional[DataFrame]:
-        """One checkpoint store (``verdicts``, ``violations`` or
-        ``unique_keys``); None before its first write.  A directory store
-        is read with its known schema, so no schema-inference job runs."""
-        if not self._exists(spark, store):
-            return None
-        if self.checkpoint_table:
-            return spark.table(self._location(store))
-        return spark.read.schema(_STORE_SCHEMAS[store]).parquet(
-            self._location(store)
-        )
-
-    def _stored(self, spark: SparkSession, store: str) -> DataFrame:
-        """:meth:`_read`, raising while *store* has never been written."""
-        df = self._read(spark, store)
+    def _stored(self, spark: SparkSession, store: str, schema) -> DataFrame:
+        """One checkpoint store, raising while it has never been written."""
+        df = self._store.read(spark, store, schema) if self._store else None
         if df is None:
             raise AnalysisException(f"nothing written to the {store} store yet")
         return df
 
     def _append(self, df: DataFrame, store: str) -> None:
-        if self.checkpoint_table:
-            from ..sources.io import write_report_table
-
-            write_report_table(df, self._location(store))
-        elif self.checkpoint_dir:
-            df.write.mode("append").parquet(self._location(store))
+        if self._store is not None:
+            self._store.append(df, store)
 
     def _stored_verdicts(self, spark: SparkSession) -> tuple:
         """``(keys, passed)``: the ``(partition, run_id)`` of every persisted
         verdict, and whether every one of them passed.  The verdict store's
         one read per call (one row per finished partition), deduplicated on
         the driver — a ``distinct`` would cost a shuffle."""
-        verdicts = self._read(spark, "verdicts")
+        verdicts = self._store.read(spark, "verdicts", VERDICT_SCHEMA)
         if verdicts is None:
             return [], True
         rows = verdicts.select("partition", "run_id", "passed").collect()
@@ -294,10 +254,10 @@ class ValidationRunner:
         """The runner never mixes key-store formats: a checkpoint that still
         holds the legacy md5-hex partials store is refused before anything
         is written.  An existence check only, no Spark job."""
-        if self._exists(spark, _LEGACY_UNIQUE_STORE):
+        if self._store.exists(spark, _LEGACY_UNIQUE_STORE):
             raise ValueError(
                 f"checkpoint holds a legacy {_LEGACY_UNIQUE_STORE!r} store "
-                f"({self._location(_LEGACY_UNIQUE_STORE)}) that this runner "
+                f"({self._store.location(_LEGACY_UNIQUE_STORE)}) that this runner "
                 "can no longer read. Start a fresh checkpoint."
             )
 
@@ -308,7 +268,7 @@ class ValidationRunner:
         by a call that died before its verdicts): this call's own partials
         would share their (partition, run_id) trust key, and both copies
         would be trusted once the verdicts land."""
-        stored = self._read(spark, _UNIQUE_STORE)
+        stored = self._store.read(spark, _UNIQUE_STORE, UNIQUE_KEYS_SCHEMA)
         if stored is None:
             return
         finished = {p for p, r in verdict_keys if r == run_id}
@@ -326,7 +286,7 @@ class ValidationRunner:
         """*schema_rows* minus those an earlier run stored (same column,
         error type and message): one read of the violations store."""
         key = ("column", "error_type", "message")
-        stored = self._read(spark, "violations")
+        stored = self._store.read(spark, "violations", VIOLATION_SCHEMA)
         if stored is None:
             return schema_rows
         stored = stored.filter(F.col("partition") == "*").select(*key)
@@ -362,7 +322,11 @@ class ValidationRunner:
         """
         from ..sources.io import driver_frame
 
-        stored = self._read(spark, _UNIQUE_STORE) if verdict_keys else None
+        stored = (
+            self._store.read(spark, _UNIQUE_STORE, UNIQUE_KEYS_SCHEMA)
+            if verdict_keys
+            else None
+        )
         if stored is None:
             return None
         keys = driver_frame(
@@ -384,7 +348,7 @@ class ValidationRunner:
     def _persist(
         self, spark: SparkSession, verdicts: list, violations: list
     ) -> None:
-        if not (self.checkpoint_dir or self.checkpoint_table):
+        if self._store is None:
             return
         from ..sources.io import driver_frame
 
@@ -416,15 +380,18 @@ class ValidationRunner:
         run_id = run_id or uuid.uuid4().hex[:12]
         t0 = time.time()
         model = self.model
-        checkpointed = bool(self.checkpoint_dir or self.checkpoint_table)
-        self._refuse_legacy_store(spark)
+        checkpointed = self._store is not None
+        if checkpointed:
+            self._refuse_legacy_store(spark)
 
         if where is not None:
             df = df.filter(where)
         df = _transform_df(df, model)
         part = F.col(self.partition_name).cast("string")
 
-        verdict_keys, stored_passed = self._stored_verdicts(spark)
+        verdict_keys, stored_passed = (
+            self._stored_verdicts(spark) if checkpointed else ([], True)
+        )
         finished = {p for p, _ in verdict_keys}
         if finished:
             df = df.filter(_outside(part, finished))
@@ -563,10 +530,10 @@ class ValidationRunner:
 
     def report(self, spark: SparkSession) -> DataFrame:
         """The persisted violations table for this checkpoint."""
-        return self._stored(spark, "violations")
+        return self._stored(spark, "violations", VIOLATION_SCHEMA)
 
     def verdicts(self, spark: SparkSession) -> DataFrame:
-        return self._stored(spark, "verdicts")
+        return self._stored(spark, "verdicts", VERDICT_SCHEMA)
 
 
 def _violation_row(partition, err, run_id: str) -> dict:

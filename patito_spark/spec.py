@@ -119,9 +119,12 @@ def Field(
     """Declare column metadata (≈ patito ``pt.Field``, ``pydantic.py:1328-1345``).
 
     ``pattern`` uses regex *search* semantics, not full match (reference
-    ``validators.py:340``); ``min_length``/``max_length`` count characters,
-    not bytes (``validators.py:341-342``).  On a list column the lengths
-    count its items and every other value rule holds for each item.
+    ``validators.py:340``); ``min_length``/``max_length`` count a string's
+    characters, not bytes (``validators.py:341-342``), and a bytes value's
+    bytes.  On a list column the lengths count its items and every other
+    value rule holds for each item.  ``pattern`` on a column that holds no
+    strings, or a length on one that is no string, bytes or list, raises a
+    ``TypeError`` when the model is defined.
     """
     return FieldInfo(
         default,
@@ -228,6 +231,14 @@ class ColumnSpec:
         else:
             self.dtype = resolved.default
             self.valid_dtypes = resolved.valid
+        is_list = isinstance(self.dtype, T.ArrayType)
+        for rule in _RULES:
+            on = self.dtype.elementType if is_list and not rule.list_column else self.dtype
+            unfit = rule.types and not isinstance(on, rule.types)
+            if unfit and getattr(self, rule.slot) is not None:
+                raise TypeError(
+                    f"{rule.slot} does not apply to column {name!r} of type {on.simpleString()}"
+                )
 
     # -- serialization --------------------------------------------------------
     def to_dict(self) -> dict:
@@ -281,6 +292,9 @@ class ColumnSpec:
             rules = [(r, v) for r, v in rules if not r.list_column]
         item_type = self.dtype.elementType if is_list else self.dtype
         nullable = self.item_nullable if is_list else self.nullable
+        # each rule value in the item type, as pydantic converts a constraint
+        # (a float multiple_of of a Decimal column checks as a Decimal)
+        rules = [(r, v, self._typed(v, item_type, None, [])) for r, v in rules]
         coerced = []
         for i, item in enumerate(value if is_list else [value]):
             loc, failed = (str(i) if is_list else None), len(errors)
@@ -297,9 +311,11 @@ class ColumnSpec:
                 opts = [repr(a) for a in allowed]
                 joined = opts[0] if len(opts) == 1 else ", ".join(opts[:-1]) + " or " + opts[-1]
                 errors.append((loc, RowValueError(f"Input should be {joined}")))
-            for rule, v in rules:
-                if not rule.check(item, v):
-                    errors.append((loc, RowValueError(rule.message.format(v=v))))
+            for rule, v, typed in rules:
+                if not rule.check(item, typed):
+                    sized = isinstance(item, (bytes, bytearray)) and rule.bytes_message
+                    msg = sized or rule.message
+                    errors.append((loc, RowValueError(msg.format(v=v, s="s" * (v != 1)))))
         return (coerced if is_list else coerced[0]), errors
 
     def _typed(self, value: Any, dtype: T.DataType, loc: Optional[str], errors: list) -> Any:
@@ -397,9 +413,12 @@ _SPEC_KEYS = (
 class _Rule(NamedTuple):
     """A value rule: the ``ColumnSpec`` slot holding its value ``v``, the
     Spark predicate ``(col, v) -> Column``, the Python one ``(x, v) ->
-    bool`` (each true when the value passes) and pydantic's message.  On a
-    list column a rule with a list form (a length) checks the list with
-    ``list_column`` and ``check``; every other rule checks each item."""
+    bool`` (each true when the value passes) and pydantic's message (for a
+    bytes value ``bytes_message``, where it differs).  On a list column a
+    rule with a list form (a length) checks the list with ``list_column``
+    and ``check``; every other rule checks each item.  A model that sets a
+    rule on a column (a list's items, but for a list form) of no type in
+    ``types`` is refused when defined; pydantic refuses it on validation."""
 
     slot: str
     column: Callable
@@ -407,12 +426,18 @@ class _Rule(NamedTuple):
     message: str
     list_column: Optional[Callable] = None
     list_message: str = ""
+    bytes_message: str = ""
+    types: tuple = ()
+
+
+#: what a length measures (Spark's ``char_length`` of a binary counts bytes)
+_SIZED = (T.StringType, T.BinaryType, T.ArrayType)
 
 
 #: The value rules in the order the check compiler numbers their row flags
 #: (``<loc>__bound<i>``, ``le`` first).  ``pattern`` is regex *search*, like
 #: polars ``str.contains`` (reference ``validators.py:340``); a string's
-#: lengths count characters.
+#: lengths count characters, a bytes value's its bytes.
 _RULES = (
     _Rule("le", lambda c, v: c <= F.lit(v), lambda x, v: x <= v,
           "Input should be less than or equal to {v}"),
@@ -427,18 +452,20 @@ _RULES = (
     _Rule("const", lambda c, v: c == F.lit(v), lambda x, v: x == v,
           "Input should be {v!r}"),
     _Rule("pattern", lambda c, v: c.rlike(v),
-          lambda x, v: not isinstance(x, str) or re.search(v, x) is not None,
-          "String should match pattern '{v}'"),
+          lambda x, v: re.search(v, x) is not None,
+          "String should match pattern '{v}'", types=(T.StringType,)),
     _Rule("min_length", lambda c, v: F.char_length(c) >= v,
-          lambda x, v: not isinstance(x, (str, list)) or len(x) >= v,
+          lambda x, v: len(x) >= v,
           "String should have at least {v} characters",
           lambda c, v: F.array_size(c) >= v,
-          "List should have at least {v} item{s} after validation, not {n}"),
+          "List should have at least {v} item{s} after validation, not {n}",
+          "Data should have at least {v} byte{s}", _SIZED),
     _Rule("max_length", lambda c, v: F.char_length(c) <= v,
-          lambda x, v: not isinstance(x, (str, list)) or len(x) <= v,
+          lambda x, v: len(x) <= v,
           "String should have at most {v} characters",
           lambda c, v: F.array_size(c) <= v,
-          "List should have at most {v} item{s} after validation, not {n}"),
+          "List should have at most {v} item{s} after validation, not {n}",
+          "Data should have at most {v} byte{s}", _SIZED),
 )
 
 

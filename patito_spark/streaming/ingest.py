@@ -22,38 +22,28 @@ calling the processor twice with the same batch id in the tests.
 
 Two store backends, one protocol
 --------------------------------
-``store_root`` selects the backend:
-
-* **Directories** (default): a filesystem root — bare local path or any
-  ``file:/`` / ``hdfs://`` / ``s3a://`` URI the session's Hadoop
-  configuration can open (all I/O goes through the Hadoop ``FileSystem``
-  API).  Batch *n* writes ``<root>/<store>/batch-<n>``; compaction folds
-  committed slots into a ``compacted-<id>`` base.
-* **Catalog tables**: ``store_root="table:<prefix>"`` — each store is a
-  catalog table ``<prefix>_<store>`` partitioned by ``_ingest_batch_id``,
-  and the per-batch slot is a PARTITION: the delta write is a dynamic
-  partition overwrite (`partitionOverwriteMode=dynamic`), the canonical
-  replay-safe exactly-once idiom for ``foreachBatch`` sinks.  On an
-  Iceberg / Delta catalog the same writes are transactional commits and
-  ``k < n`` reads are snapshot-consistent partition-pruned scans; the
-  session catalog (V1 parquet tables) demonstrates identical mechanics
-  in tests, with the format supplying the atomicity in production.
+``store_root`` is a store root of ``sources/store.py``, which makes the one
+decision between its two backends: a filesystem root (bare path or any
+``file:/`` / ``hdfs://`` / ``s3a://`` URI, through the Hadoop
+``FileSystem`` API), where batch *n* writes ``<root>/<store>/batch-<n>``,
+or ``table:<prefix>``, where each store is a catalog table
+``<prefix>_<store>`` partitioned by ``_ingest_batch_id`` and the per-batch
+slot is a PARTITION written by dynamic partition overwrite, the canonical
+replay-safe exactly-once idiom for ``foreachBatch`` sinks.  On an Iceberg /
+Delta catalog the same writes are transactional commits and ``k < n``
+reads are snapshot-consistent partition-pruned scans.
 
 Store lifecycle at scale
 ------------------------
-Per-batch slots accumulate small files; :func:`compact_stores` runs
+Per-batch slots accumulate small files; :func:`compact_stores` folds them
 while the stream is stopped (it refuses to race a live query — the
 active-query marker + ``spark.streams.active`` check).  The NEWEST batch
-slot is never touched: Structured Streaming commits offsets in order, so
-every batch id strictly below the maximum is known-committed, but the
-maximum itself may be an uncommitted attempt the restarted stream will
-replay — folding it would make the replay read nothing (``k < n``
-excludes its own id) and double-count the batch.  Directory backend:
-committed slots fold into one ``compacted-<id>`` base (rename-live-
-then-delete; readers count only the highest base, so crash leftovers
-are inert and swept by the next run).  Table backend: committed
-partitions are rewritten in place with coalesced files (Iceberg's
-``rewrite_data_files`` is the production analogue).
+slot is never touched: every batch id strictly below the maximum is
+offset-committed, but the maximum itself may be an uncommitted attempt the
+restarted stream will replay — folding it would make the replay read
+nothing (``k < n`` excludes its own id) and double-count the batch.  How
+each backend folds, and why a crash mid-fold is harmless: the backends'
+``_fold`` in ``sources/store.py``.
 
 Re-crawl replacement (``replace_in_store``) is deliberately NOT wired
 into the hot streaming path — rewriting corpus-sized state per
@@ -66,10 +56,8 @@ from __future__ import annotations
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..sources.io import driver_frame
+from ..sources.store import Records, open_store
 
 __all__ = [
     "compact_stores",
@@ -84,252 +72,15 @@ _SIGNATURES = "signatures"
 _SURVIVORS = "survivors"
 _QUARANTINE = "quarantine"
 _STORES = (_FINGERPRINTS, _SIGNATURES, _SURVIVORS, _QUARANTINE)
-_SPECS_DIR = _QUARANTINE + "/_specs"
 _ACTIVE_MARKER = "_active_query"
 
-_TABLE_SCHEME = "table:"
-_BATCH_COL = "_ingest_batch_id"
-
-_META_SCHEMA = T.StructType(
-    [T.StructField("key", T.StringType()), T.StructField("value", T.StringType())]
-)
-_SPECS_SCHEMA = T.StructType(
-    [
-        T.StructField("spec_hash", T.StringType()),
-        T.StructField("spec_json", T.StringType()),
-    ]
-)
-
-
-def _is_table_root(store_root: str) -> bool:
-    return store_root.startswith(_TABLE_SCHEME)
-
-
-def _table_name(store_root: str, sub: str) -> str:
-    return f"{store_root[len(_TABLE_SCHEME):]}_{sub}"
-
-
-# ---------------------------------------------------------------------------
-# Directory backend: Hadoop FileSystem protocol
-# (local paths and file:/hdfs:/s3a: URIs alike)
-# ---------------------------------------------------------------------------
-
-
-def _hfs(spark: SparkSession, path_str: str):
-    """(FileSystem, Path) for *path_str* under the session's Hadoop conf."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, path
-
-
-def _join(dir_str: str, *names: str) -> str:
-    return "/".join([dir_str.rstrip("/"), *names])
-
-
-def _child_names(spark: SparkSession, dir_str: str) -> list:
-    fs, path = _hfs(spark, dir_str)
-    if not fs.exists(path):
-        return []
-    return sorted(st.getPath().getName() for st in fs.listStatus(path))
-
-
-def _write_text(spark: SparkSession, path_str: str, payload: str) -> None:
-    fs, path = _hfs(spark, path_str)
-    out = fs.create(path, True)
-    try:
-        out.write(bytearray(payload.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_text(spark: SparkSession, path_str: str) -> Optional[str]:
-    fs, path = _hfs(spark, path_str)
-    if not fs.exists(path):
-        return None
-    stream = fs.open(path)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-
-
-def _batch_dirs(
-    spark: SparkSession, store_dir: str, upto_batch_id: Optional[int] = None
-) -> list:
-    """``batch-<k>`` (k < upto) and ``compacted-<m>`` (m < upto) subdirs,
-    oldest first.  ``upto_batch_id=None`` lists everything.
-
-    Only the HIGHEST ``compacted-`` base counts, and a ``batch-<k>``
-    with ``k <= max compacted id`` is EXCLUDED: compaction folds every
-    older base and every committed batch dir into the new base and
-    renames it live BEFORE deleting the folded dirs, so any such dir is
-    a leftover from a crash between those two steps whose rows the base
-    already contains — counting it would double them.  ``compact_stores``
-    deletes leftovers on its next run."""
-    tagged = []
-    for name in _child_names(spark, store_dir):
-        for prefix in ("batch-", "compacted-"):
-            if name.startswith(prefix):
-                try:
-                    k = int(name[len(prefix):])
-                except ValueError:
-                    continue
-                tagged.append((prefix, k, name))
-    max_compacted = max(
-        (k for prefix, k, _ in tagged if prefix == "compacted-"), default=-1
-    )
-    return [
-        _join(store_dir, name)
-        for prefix, k, name in tagged
-        if not (prefix == "batch-" and k <= max_compacted)
-        and not (prefix == "compacted-" and k < max_compacted)
-        and (upto_batch_id is None or k < upto_batch_id)
-    ]
-
-
-def _read_store_dirs(
-    spark: SparkSession,
-    store_dir: str,
-    upto_batch_id: Optional[int],
-    merge_schema: bool = False,
-) -> Optional[DataFrame]:
-    dirs = [
-        d
-        for d in _batch_dirs(spark, store_dir, upto_batch_id)
-        # a replay attempt may have left an empty/partial dir; parquet
-        # read of a dir with no part files fails, so require one
-        if any(f.endswith(".parquet") for f in _child_names(spark, d))
-    ]
-    if not dirs:
-        return None
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*dirs)
-
-
-# ---------------------------------------------------------------------------
-# Table backend: one partitioned catalog table per store
-# ---------------------------------------------------------------------------
-
-
-def _table_batch_ids(spark: SparkSession, table: str) -> list:
-    """Sorted ``_ingest_batch_id`` partition values (metadata-only)."""
-    if not spark.catalog.tableExists(table):
-        return []
-    ids = []
-    for row in spark.sql(f"SHOW PARTITIONS {table}").collect():
-        part = row[0]  # '_ingest_batch_id=3'
-        if part.startswith(_BATCH_COL + "="):
-            ids.append(int(part.split("=", 1)[1]))
-    return sorted(ids)
-
-
-def _dynamic_overwrite(spark: SparkSession, df: DataFrame, table: str):
-    """``INSERT OVERWRITE`` replacing ONLY the partitions present in
-    *df*.  The mode must be set as the SESSION conf for the duration of
-    the write: ``insertInto`` does not forward ``DataFrameWriter``
-    options, and under the default ``static`` mode an overwrite
-    truncates the WHOLE table (measured: it wiped batch 0 when batch 1
-    landed).  Restored afterwards so other writers see their own
-    setting."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").insertInto(table)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def _write_delta_table(df: DataFrame, table: str, batch_id: int) -> None:
-    """Replay-safe slot write: dynamic overwrite of partition *batch_id*
-    only — re-running the same batch replaces its previous (possibly
-    partial) attempt and touches nothing else.  On Iceberg this is
-    ``writeTo(...).overwritePartitions()`` — one atomic commit.
-
-    The delta's plan usually READS the same store table it advances
-    (the increment anti-joins the batch against the store); the V1
-    session catalog refuses a self-referencing overwrite
-    (UNSUPPORTED_OVERWRITE), so the BATCH-sized delta is materialized
-    with ``localCheckpoint`` first — lineage cut, table read finished
-    before the write starts.  Iceberg's snapshot isolation makes this
-    unnecessary in production (the read pins the pre-write snapshot),
-    but the cut is cheap (O(batch), never O(corpus)) and keeps the
-    mechanics identical across backends."""
-    spark = df.sparkSession
-    out = df.withColumn(_BATCH_COL, F.lit(batch_id))
-    if not spark.catalog.tableExists(table):
-        out.write.partitionBy(_BATCH_COL).mode("overwrite").saveAsTable(table)
-        return
-    out = out.localCheckpoint(eager=True)
-    # schema evolution, the table twin of the dir backend's mergeSchema:
-    # a delta column the table lacks is ADDed (old partitions read NULL),
-    # a table column the delta lacks is null-filled — so a mid-stream
-    # page-schema or model evolution widens the store instead of breaking
-    # the positional insert
-    table_fields = {f.name: f for f in spark.table(table).schema.fields}
-    new_cols = [c for c in out.columns if c not in table_fields]
-    if new_cols:
-        fields = {f.name: f for f in out.schema.fields}
-        specs = ", ".join(
-            f"`{c}` {fields[c].dataType.simpleString()}" for c in new_cols
-        )
-        spark.sql(f"ALTER TABLE {table} ADD COLUMNS ({specs})")
-        table_fields = {f.name: f for f in spark.table(table).schema.fields}
-    for c, field in table_fields.items():
-        if c not in out.columns:
-            out = out.withColumn(c, F.lit(None).cast(field.dataType))
-    # insertInto is POSITIONAL: reorder to the table's column order
-    _dynamic_overwrite(spark, out.select(*table_fields), table)
-
-
-def _read_store_table(
-    spark: SparkSession, table: str, upto_batch_id: Optional[int]
-) -> Optional[DataFrame]:
-    ids = _table_batch_ids(spark, table)
-    if upto_batch_id is not None:
-        ids = [k for k in ids if k < upto_batch_id]
-    if not ids:
-        return None
-    df = spark.table(table)
-    if upto_batch_id is not None:
-        # partition-pruned scan: only slots below the replay horizon
-        df = df.filter(F.col(_BATCH_COL) < upto_batch_id)
-    return df.drop(_BATCH_COL)
-
-
-def _meta_put(spark: SparkSession, store_root: str, key: str, value: str):
-    table = _table_name(store_root, "meta")
-    row = {"key": key, "value": value}
-    if not spark.catalog.tableExists(table):
-        driver_frame(spark, [row], _META_SCHEMA).write.mode("overwrite").saveAsTable(
-            table
-        )
-        return
-    others = spark.table(table).filter(F.col("key") != key).collect()
-    driver_frame(
-        spark, [r.asDict() for r in others] + [row], _META_SCHEMA
-    ).write.mode("overwrite").insertInto(table, overwrite=True)
-
-
-def _meta_get(spark: SparkSession, store_root: str, key: str):
-    table = _table_name(store_root, "meta")
-    if not spark.catalog.tableExists(table):
-        return None
-    row = spark.table(table).filter(F.col("key") == key).first()
-    return row["value"] if row is not None else None
-
-
-# ---------------------------------------------------------------------------
-# Backend dispatch
-# ---------------------------------------------------------------------------
+#: the active-query marker: the file ``<root>/_active_query``, or a row of
+#: the ``<prefix>_meta`` table
+_MARKER = Records("", "", "meta", "key", "value")
+#: the content-addressed spec registry: ``quarantine/_specs/<hash>.json``
+#: files, or the ``<prefix>_specs`` table (the same hash maps to the same
+#: bytes, so a replayed put writes nothing)
+_SPECS = Records(_QUARANTINE + "/_specs", ".json", "specs", "spec_hash", "spec_json")
 
 
 def _read_store(
@@ -338,66 +89,18 @@ def _read_store(
     sub: str,
     upto_batch_id: Optional[int],
 ) -> Optional[DataFrame]:
-    if _is_table_root(store_root):
-        return _read_store_table(
-            spark, _table_name(store_root, sub), upto_batch_id
-        )
-    return _read_store_dirs(
-        spark,
-        _join(store_root, sub),
-        upto_batch_id,
-        # dir quarantines may mix pre-lineage batches (no _spec_hash)
-        merge_schema=(sub == _QUARANTINE),
+    # dir quarantines may mix pre-lineage batches (no _spec_hash)
+    return open_store(store_root).read_slots(
+        spark, sub, upto_batch_id, merge_schema=(sub == _QUARANTINE)
     )
 
 
-def _write_delta(
-    df: DataFrame, store_root: str, sub: str, batch_id: int
-) -> None:
-    if _is_table_root(store_root):
-        _write_delta_table(df, _table_name(store_root, sub), batch_id)
-    else:
-        df.write.mode("overwrite").parquet(
-            _join(store_root, sub, f"batch-{batch_id}")
-        )
-
-
-def _spec_put(
-    spark: SparkSession, store_root: str, spec_hash: str, payload: str
-) -> None:
-    """Content-addressed spec registry: idempotent under replay (the
-    same hash maps to the same bytes; duplicates are deduped on read)."""
-    if _is_table_root(store_root):
-        table = _table_name(store_root, "specs")
-        rows = driver_frame(
-            spark, [{"spec_hash": spec_hash, "spec_json": payload}], _SPECS_SCHEMA
-        )
-        if not spark.catalog.tableExists(table):
-            rows.write.mode("overwrite").saveAsTable(table)
-        elif (
-            spark.table(table)
-            .filter(F.col("spec_hash") == spec_hash)
-            .first()
-            is None
-        ):
-            rows.write.mode("append").insertInto(table)
-        return
-    spec_file = _join(store_root, _SPECS_DIR, f"{spec_hash}.json")
-    if _read_text(spark, spec_file) is None:
-        _write_text(spark, spec_file, payload)
-
-
 def _marker_put(spark: SparkSession, store_root: str, query_id: str) -> None:
-    if _is_table_root(store_root):
-        _meta_put(spark, store_root, _ACTIVE_MARKER, query_id)
-    else:
-        _write_text(spark, _join(store_root, _ACTIVE_MARKER), query_id)
+    open_store(store_root).put_record(spark, _MARKER, _ACTIVE_MARKER, query_id)
 
 
-def _marker_get(spark: SparkSession, store_root: str):
-    if _is_table_root(store_root):
-        return _meta_get(spark, store_root, _ACTIVE_MARKER)
-    return _read_text(spark, _join(store_root, _ACTIVE_MARKER))
+def _marker_get(spark: SparkSession, store_root: str) -> Optional[str]:
+    return open_store(store_root).get_record(spark, _MARKER, _ACTIVE_MARKER)
 
 
 # ---------------------------------------------------------------------------
@@ -415,6 +118,8 @@ def _make_batch_processor(
     """The ``foreachBatch`` body, factored out so tests can drive it
     directly (including replaying a batch id to pin idempotence)."""
 
+    store = open_store(store_root)
+
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
 
@@ -431,8 +136,8 @@ def _make_batch_processor(
             from .validate import quarantine_split
 
             batch_df, quarantine, spec_hash = quarantine_split(batch_df, model)
-            _spec_put(spark, store_root, spec_hash, model.spec_json())
-            _write_delta(quarantine, store_root, _QUARANTINE, batch_id)
+            store.put_record(spark, _SPECS, spec_hash, model.spec_json())
+            store.write_slot(quarantine, _QUARANTINE, batch_id)
         fp_store = _read_store(spark, store_root, _FINGERPRINTS, batch_id)
         sig_store = _read_store(spark, store_root, _SIGNATURES, batch_id)
         survivors, fp_delta, sig_delta = prepare_training_increment(
@@ -448,7 +153,7 @@ def _make_batch_processor(
             (_FINGERPRINTS, fp_delta),
             (_SIGNATURES, sig_delta),
         ):
-            _write_delta(df, store_root, sub, batch_id)
+            store.write_slot(df, sub, batch_id)
 
     return _process
 
@@ -545,22 +250,7 @@ def read_quarantine_specs(spark: SparkSession, store_root: str) -> dict:
     quarantined a row under *store_root* — feed the JSON to
     ``patito_spark.spec.model_from_spec_json`` (or ``evolution.py``'s
     ``diff_models``) to attribute violations across model evolution."""
-    if _is_table_root(store_root):
-        table = _table_name(store_root, "specs")
-        if not spark.catalog.tableExists(table):
-            return {}
-        return {
-            r["spec_hash"]: r["spec_json"]
-            for r in spark.table(table).collect()
-        }
-    specs_dir = _join(store_root, _SPECS_DIR)
-    out = {}
-    for name in _child_names(spark, specs_dir):
-        if name.endswith(".json"):
-            out[name[: -len(".json")]] = _read_text(
-                spark, _join(specs_dir, name)
-            )
-    return out
+    return open_store(store_root).read_records(spark, _SPECS)
 
 
 def _assert_stream_stopped(spark: SparkSession, store_root: str) -> None:
@@ -582,110 +272,6 @@ def _assert_stream_stopped(spark: SparkSession, store_root: str) -> None:
         )
 
 
-def _compact_dirs(spark: SparkSession, store_root: str) -> dict:
-    # the newest batch id ANYWHERE under the root is the one id that may
-    # not be offset-committed yet; every id strictly below it is
-    # committed (Structured Streaming commits batches in order)
-    newest = -1
-    for sub in _STORES:
-        for d in _batch_dirs(spark, _join(store_root, sub)):
-            name = d.rsplit("/", 1)[1]
-            if name.startswith("batch-"):
-                newest = max(newest, int(name.split("-", 1)[1]))
-    folded = {}
-    for sub in _STORES:
-        store_dir = _join(store_root, sub)
-        fs_pre, _ = _hfs(spark, store_dir)
-        PathCls = spark._jvm.org.apache.hadoop.fs.Path
-        live = {d.rsplit("/", 1)[1] for d in _batch_dirs(spark, store_dir)}
-        for name in _child_names(spark, store_dir):
-            # leftovers of a crashed previous compaction: batch dirs the
-            # read rule already ignores (id <= max compacted id) and
-            # orphaned _compacting tmp dirs
-            prefix = next(
-                (
-                    p
-                    for p in ("batch-", "compacted-", "_compacting-")
-                    if name.startswith(p)
-                ),
-                None,
-            )
-            if prefix is None or name in live:
-                continue
-            try:
-                int(name[len(prefix):])
-            except ValueError:
-                continue
-            fs_pre.delete(PathCls(_join(store_dir, name)), True)
-        dirs = [
-            d
-            for d in _batch_dirs(spark, store_dir)
-            if d.rsplit("/", 1)[1] != f"batch-{newest}"
-        ]
-        if len(dirs) < 2:
-            folded[sub] = 0
-            continue
-        max_id = max(int(d.rsplit("-", 1)[1]) for d in dirs)
-        reader = spark.read
-        if sub == _QUARANTINE:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*dirs)
-        fs, _ = _hfs(spark, store_dir)
-        Path = spark._jvm.org.apache.hadoop.fs.Path
-        tmp = _join(store_dir, f"_compacting-{max_id}")
-        final = _join(store_dir, f"compacted-{max_id}")
-        df.write.mode("overwrite").parquet(tmp)
-        # rename FIRST (Hadoop rename returns False instead of raising —
-        # check it), delete the folded dirs only once the base is live:
-        # a crash between the two leaves leftovers the read rule ignores
-        # (see _batch_dirs) and this function sweeps next time — never a
-        # data hole, never a double count.
-        if not fs.rename(Path(tmp), Path(final)):
-            raise IOError(
-                f"compact_stores: rename {tmp} -> {final} failed; "
-                "folded directories left untouched"
-            )
-        for d in dirs:
-            fs.delete(Path(d), True)
-        folded[sub] = len(dirs)
-    return folded
-
-
-def _compact_tables(spark: SparkSession, store_root: str) -> dict:
-    """Rewrite committed partitions in place with coalesced files (one
-    task per batch id → ~one file per slot).  Ids and read rules are
-    untouched, so the rewrite is replay-transparent; a crash mid-write
-    of a partition is the table format's problem on Iceberg/Delta
-    (atomic commit) — the V1 session catalog demonstrates mechanics
-    only.  The newest batch partition is never rewritten."""
-    newest = -1
-    for sub in _STORES:
-        ids = _table_batch_ids(spark, _table_name(store_root, sub))
-        if ids:
-            newest = max(newest, ids[-1])
-    folded = {}
-    for sub in _STORES:
-        table = _table_name(store_root, sub)
-        ids = [k for k in _table_batch_ids(spark, table) if k < newest]
-        if len(ids) < 2:
-            folded[sub] = 0
-            continue
-        cols = spark.table(table).columns
-        # self-referencing overwrite: V1 needs the read finished before
-        # the write (localCheckpoint, disk-backed on executors); on
-        # Iceberg use rewrite_data_files instead — snapshot-isolated,
-        # no materialization
-        folded_df = (
-            spark.table(table)
-            .filter(F.col(_BATCH_COL) < newest)
-            .repartition(len(ids), F.col(_BATCH_COL))
-            .localCheckpoint(eager=True)
-        )
-        _dynamic_overwrite(spark, folded_df.select(*cols), table)
-        folded[sub] = len(ids)
-    return folded
-
-
 def compact_stores(spark: SparkSession, store_root: str) -> dict:
     """Compact per-batch store slots (run while the stream is STOPPED —
     refuses otherwise).  Never touches the newest batch slot (see module
@@ -693,6 +279,6 @@ def compact_stores(spark: SparkSession, store_root: str) -> dict:
     replay must still see the pre-batch store state).  Returns
     ``{store: n_slots_folded}``."""
     _assert_stream_stopped(spark, store_root)
-    if _is_table_root(store_root):
-        return _compact_tables(spark, store_root)
-    return _compact_dirs(spark, store_root)
+    return open_store(store_root).compact_slots(
+        spark, _STORES, merge_schema=(_QUARANTINE,)
+    )

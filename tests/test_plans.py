@@ -402,3 +402,38 @@ def test_library_has_no_orphans():
         "library code only tests reach (delete it, or add it to ALLOWED "
         f"with a reason): {orphans}"
     )
+
+
+#: the store-backend calls only ``sources/store.py`` makes: the Hadoop
+#: FileSystem, the catalog lookup and the partition protocol of the slot stores
+STORE_BACKEND_CALLS = (
+    "getFileSystem",
+    "catalog.tableExists",
+    "SHOW PARTITIONS",
+    "partitionOverwriteMode",
+)
+
+
+def test_store_backends_live_in_one_module():
+    """No module under ``plans/`` or ``streaming/`` decides between a
+    directory and a catalog table itself: the runner checkpoint and the
+    ingest stores reach both backends only through ``sources/store.py``."""
+    pkg = os.path.join(os.path.dirname(entrymod.__file__), "patito_spark")
+    found = []
+    for sub in ("plans", "streaming"):
+        for path in glob.glob(os.path.join(pkg, sub, "*.py")):
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Attribute):
+                    text = ast.unparse(node)
+                elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    text = node.value
+                else:
+                    continue
+                found += [
+                    f"{os.path.relpath(path, pkg)}:{node.lineno}: {call}"
+                    for call in STORE_BACKEND_CALLS
+                    if call in text
+                ]
+    assert not found, f"store backend calls outside sources/store.py: {found}"

@@ -1,7 +1,7 @@
 """Differential test of the value rules across the two validation paths.
 
-Hypothesis draws a model (int, float, decimal, str, date, datetime and
-timedelta columns, lists of these, ``Optional`` or not, with drawn bounds,
+Hypothesis draws a model (int, float, decimal, str, bytes, date, datetime
+and timedelta columns, lists of these, ``Optional`` or not, with drawn bounds,
 ``multiple_of``, ``const``, allowed values, patterns and lengths) and a
 small driver-built frame.  The Spark row flags of ``flag_violations`` must
 fall on exactly the columns where ``Model(**row)`` raises, row by row, and
@@ -13,6 +13,7 @@ import datetime as dt
 import decimal
 from typing import Optional
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
@@ -40,6 +41,11 @@ _KINDS = {
         st.sampled_from([_D("0.25"), _D("0.5"), _D("1.5")]),
     ),
     str: (T.StringType(), st.text("ab1", max_size=4), None),
+    bytes: (
+        T.BinaryType(),
+        st.lists(st.sampled_from([0x00, 0x61, 0xFF]), max_size=4).map(bytes),
+        None,
+    ),
     dt.date: (
         T.DateType(),
         st.integers(-3, 3).map(lambda i: _DAY + dt.timedelta(days=i)),
@@ -75,7 +81,7 @@ def _columns(draw):
         rules["multiple_of"] = _sometimes(draw, multiples)
     if kind is str:
         rules["pattern"] = _sometimes(draw, st.sampled_from(["^a", "b$", "1", "^$", "a.b"]))
-    if kind is str or is_list:
+    if kind in (str, bytes) or is_list:
         rules["min_length"] = _sometimes(draw, st.integers(0, 3))
         rules["max_length"] = _sometimes(draw, st.integers(0, 4))
     annotation = Optional[kind] if item_optional else kind
@@ -175,3 +181,57 @@ def test_row_flags_fall_where_instances_raise(spark, case):
                 bad |= {x for x in items if x is not None and x not in spec.allowed_values}
         want = len(bad) + (has_null and not spec.nullable)
         assert counts.get((name, "enum"), 0) == want, name
+
+
+def test_bytes_lengths_count_bytes_on_both_paths(spark):
+    """A length rule on a bytes column counts bytes: Spark's
+    ``char_length(binary)`` and the instance check agree, with pydantic's
+    message."""
+
+    class M(pt.Model):
+        raw: bytes = pt.Field(min_length=2, max_length=3)
+
+    rows = [{"raw": b"a"}, {"raw": b"ab"}, {"raw": b"\xff\xff\xff\xff"}]
+    df = driver_frame(spark, rows, T.StructType([T.StructField("raw", T.BinaryType())]))
+    flagged = [list(r["_violations"]) for r in flag_violations(df, M).collect()]
+    assert flagged == [["raw__bound0"], [], ["raw__bound1"]]
+    assert [str(e.exc) for e in find_errors(df, M)] == ["2 rows with out of bound values."]
+    messages = []
+    for row in rows:
+        try:
+            M(**row)
+        except pt.DataFrameValidationError as exc:
+            messages += [e["msg"] for e in exc.errors()]
+    assert messages == [
+        "Data should have at least 2 bytes",
+        "Data should have at most 3 bytes",
+    ]
+
+
+def test_rules_a_column_type_cannot_take_are_refused():
+    """``pattern`` holds only for strings and a length only for strings,
+    bytes and lists: any other column type is refused when the model is
+    defined, naming the column and the rule."""
+    for annotation, rule in [
+        (int, {"pattern": "^1"}),
+        (list[int], {"pattern": "^1"}),
+        (int, {"min_length": 1}),
+        (float, {"max_length": 2}),
+        (dt.date, {"min_length": 1}),
+    ]:
+        name = next(iter(rule))
+        with pytest.raises(TypeError, match=f"{name} does not apply to column 'n'"):
+            type("Bad", (pt.Model,), {"__annotations__": {"n": annotation}, "n": pt.Field(**rule)})
+
+
+def test_float_multiple_of_on_a_decimal_column(spark):
+    """A float ``multiple_of`` checks a Decimal value in the column's type:
+    the instance verdicts fall on the rows ``find_errors`` counts."""
+
+    class M(pt.Model):
+        dec: decimal.Decimal = pt.Field(multiple_of=0.5)
+
+    rows = [{"dec": _D("1.5")}, {"dec": _D("1.2")}]
+    df = driver_frame(spark, rows, T.StructType([T.StructField("dec", T.DecimalType(10, 1))]))
+    assert [str(e.exc) for e in find_errors(df, M)] == ["1 row with out of bound values."]
+    assert [bool(_raised(M, row)) for row in rows] == [False, True]

@@ -11,7 +11,8 @@ breaking ones:
 - **removed** columns (downstream readers lose them);
 - **retyped** columns outside Spark's lossless widening lattice
   (byte→short→int→long, float→double, int→long, etc.);
-- **tightened nullability** (Optional → required);
+- **tightened nullability** (Optional → required), of a column or of a
+  list's items at any depth (``list[Optional[int]]`` → ``list[int]``);
 - **tightened constraints** (bounds narrowed, new pattern/enum/unique or
   custom constraint — previously-valid rows may now fail).
 
@@ -24,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+from .dtypes import resolve_annotation
 from .spec import MISSING
 
 #: lossless widenings Spark casts implicitly without data change
@@ -69,6 +71,16 @@ def _comparable(spec, field: str):
     return value
 
 
+def _item_nullability(spec) -> list:
+    """Whether items may be null, per list depth of *spec*'s annotation
+    (``[]`` for a column that is not a list)."""
+    dtype, nullable = resolve_annotation(spec.annotation).default, []
+    while isinstance(dtype, T.ArrayType):
+        nullable.append(dtype.containsNull)
+        dtype = dtype.elementType
+    return nullable
+
+
 def _tightened(field: str, old, new) -> bool:
     """True when the new constraint can fail rows the old one accepted."""
     if old == new:
@@ -94,8 +106,10 @@ def diff_models(old: type, new: type) -> dict:
     Returns ``{added, removed, retyped, nullability, constraints,
     breaking}`` where each entry lists per-column dicts with a
     ``breaking`` flag, and the top-level ``breaking`` is their OR.  A
-    struct (or list-of-struct) column's sub-model is compared too, its
-    columns named ``<column>.<field>``.
+    ``nullability`` entry with an ``items`` depth is about a list's items
+    (1: the list's items, 2: their items, ...).  A struct (or
+    list-of-struct) column's sub-model is compared too, its columns named
+    ``<column>.<field>``.
     """
     report: dict = {
         "added": [],
@@ -148,6 +162,18 @@ def _diff_columns(report: dict, os_: dict, ns_: dict, prefix: str) -> None:
                     "breaking": not nspec.nullable,  # required-ward = breaking
                 }
             )
+        depths = zip(_item_nullability(ospec), _item_nullability(nspec))
+        for depth, (old_items, new_items) in enumerate(depths, 1):
+            if old_items != new_items:
+                report["nullability"].append(
+                    {
+                        "column": column,
+                        "items": depth,
+                        "old": old_items,
+                        "new": new_items,
+                        "breaking": not new_items,
+                    }
+                )
         changed = []
         tightened = False
         for field in _CONSTRAINT_FIELDS:

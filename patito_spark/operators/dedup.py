@@ -26,6 +26,7 @@ Everything is native Column algebra; shuffles touch only (hash, id) pairs.
 
 from __future__ import annotations
 
+import hashlib
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import MINHASH_SLICES as _MINHASH_SLICES_TAG
 from ..functions.hashing import md5_long
 from ..functions.text import doc_fingerprint, tokens
-from ..functions.vectors import cosine_similarity
+from ..functions.vectors import cosine_similarity, dot_product
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
@@ -892,7 +893,7 @@ def _hyperplane_hashed(
     # deterministic hyperplane components in [-1, 1)
     hyper = [
         [
-            ((int.from_bytes(__import__("hashlib").md5(f"plane{p}dim{i}".encode()).digest()[:4], "big") % 2000) - 1000)
+            ((int.from_bytes(hashlib.md5(f"plane{p}dim{i}".encode()).digest()[:4], "big") % 2000) - 1000)
             / 1000.0
             for i in range(dim)
         ]
@@ -905,12 +906,7 @@ def _hyperplane_hashed(
         # re-analyzes this tree on every fresh plan and the unrolled form
         # was planes×dim ≈ 10³ nodes (r9: build 0.7 → 0.1 s; identical
         # double values, so buckets and the SQL-twin parity are unchanged)
-        plane_col = F.lit(plane)
-        dot = F.aggregate(
-            F.zip_with(vec, plane_col, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        dot = dot_product(vec, F.lit(plane))
         bucket = bucket + F.when(dot >= 0, F.shiftleft(F.lit(1).cast("bigint"), p)).otherwise(F.lit(0))
     return df.select(F.col(id_col).alias("_id"), vec.alias("_v"), bucket.alias("_b"))
 

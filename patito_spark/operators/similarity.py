@@ -1,6 +1,9 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
-Three tiers:
+Four top-k tiers, one scorer and one ranker: every tier emits
+``(probe_id, neighbor_id, <score>)`` rows and ranks them with
+:func:`_top_k`; the three native-Column tiers score with :func:`_scored`
+(norms materialized once per row, zero-guarded cosine, rounded to 6 dp).
 
 - ``topk_brute_force`` — exact cosine top-k via a broadcast probe join +
   window rank.  Native Columns; the baseline every ANN variant is measured
@@ -16,18 +19,21 @@ Three tiers:
   nearest of C deterministic centroids at index time; a probe searches only
   the ``nprobe`` nearest centroid buckets.  Trades recall for a
   1/(C/nprobe) scan reduction.
+- ``topk_quantized`` — the brute-force join over int8-quantized vectors:
+  integer dot products and norms, 4x smaller vectors on disk and shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.vectors import cosine_similarity
+from ..functions.vectors import cosine_similarity, dot_product, l2_norm
+from ..sources.io import driver_frame
 from .dedup import _materialize
 
 #: Probe frames are collected to the driver (the probe matrix ships in the
@@ -37,6 +43,14 @@ from .dedup import _materialize
 #: driver limit, far above any sane probe batch.  Raise via the
 #: ``max_probes`` parameter (and chunk the probe set) for wider fan-outs.
 DEFAULT_MAX_PROBES = 4096
+
+#: ivf_topk's driver-built probe rows: one per (probe, searched bucket)
+_PROBE_BUCKETS = (
+    T.StructType()
+    .add("probe_id", T.LongType())
+    .add("_centroid", T.IntegerType())
+    .add("_pvec", T.ArrayType(T.DoubleType()))
+)
 
 
 def _collect_probes(probes: DataFrame, cols: list, max_probes: int) -> list:
@@ -48,6 +62,51 @@ def _collect_probes(probes: DataFrame, cols: list, max_probes: int) -> list:
             "max_probes consciously) instead of passing a corpus"
         )
     return rows
+
+
+def _unit_rows(vectors):
+    """*vectors* as a float64 matrix with every row scaled to unit L2 norm
+    (an all-zero row stays zero)."""
+    import numpy as np  # noqa: PLC0415
+
+    m = np.asarray(vectors, dtype="float64")
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def _scored(
+    corpus: DataFrame,
+    probes: DataFrame,
+    norm: Callable[[Column], Column],
+    dot: Callable[[Column, Column], Column],
+    score: str,
+    on: Optional[str] = None,
+) -> DataFrame:
+    """``(probe_id, neighbor_id, <score>)``: the cosine of each corpus row
+    ``(neighbor_id, _cvec)`` with each broadcast probe row
+    ``(probe_id, _pvec)`` (only the pairs that agree *on* a column, when
+    given), ``round(dot / (n_c·n_p), 6)`` and 0.0 when either norm is 0.
+
+    Each side's norm is materialized ONCE per row below the join: Catalyst
+    does not CSE across HOF lambdas, so an inline norm in both the guard
+    and the division would re-run its aggregate per (probe, corpus) PAIR.
+    """
+    c = _materialize(corpus, _cnorm=norm(F.col("_cvec")))
+    p = F.broadcast(_materialize(probes, _pnorm=norm(F.col("_pvec"))))
+    denom = F.col("_cnorm") * F.col("_pnorm")
+    cosine = F.when(denom > 0, dot(F.col("_cvec"), F.col("_pvec")) / denom)
+    return (c.crossJoin(p) if on is None else c.join(p, on)).select(
+        "probe_id",
+        "neighbor_id",
+        F.round(cosine.otherwise(F.lit(0.0)), 6).alias(score),
+    )
+
+
+def _top_k(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """*scored* plus ``rank``, its best *k* rows per ``probe_id``: the one
+    rank window, ties broken by neighbor id for full determinism."""
+    w = Window.partitionBy("probe_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w))
+    return ranked.filter(F.col("rank") <= k)
 
 
 def topk_brute_force(
@@ -64,46 +123,18 @@ def topk_brute_force(
     on the (small) |corpus|×|probes| similarity rows after a probe-key
     repartition.  Ties broken by neighbor id for full determinism.
     """
-    from ..functions.vectors import dot_product, l2_norm
-
-    # Materialize each norm ONCE per vector BELOW the crossJoin (same
-    # rationale as topk_quantized): an inline cosine_similarity re-runs
-    # both l2 aggregates per (probe, corpus) PAIR — and twice each, since
-    # the `when` guard and the division don't CSE across HOF lambdas.
-    # Identical doubles: same aggregates over the same values, only
-    # evaluated once per row instead of once per pair.
-    p = F.broadcast(
-        _materialize(
-            probes.select(
-                F.col(probe_id_col).alias("probe_id"),
-                F.col(vec_col).alias("_pvec"),
-            ),
-            _pnorm=l2_norm(F.col("_pvec")),
-        )
-    )
-    c = _materialize(
+    sims = _scored(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
         ),
-        _cnorm=l2_norm(F.col("_cvec")),
+        probes.select(
+            F.col(probe_id_col).alias("probe_id"), F.col(vec_col).alias("_pvec")
+        ),
+        l2_norm,
+        dot_product,
+        "cosine",
     )
-    denom = F.col("_cnorm") * F.col("_pnorm")
-    sims = c.crossJoin(p).select(
-        "probe_id",
-        "neighbor_id",
-        F.round(
-            F.when(
-                denom > 0, dot_product(F.col("_cvec"), F.col("_pvec")) / denom
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return sims.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(sims, "cosine", k)
 
 
 def topk_blockwise(
@@ -128,25 +159,14 @@ def topk_blockwise(
 
     probe_rows = _collect_probes(probes, [probe_id_col, vec_col], max_probes)
     probe_ids = [r[0] for r in probe_rows]
-    pm = np.asarray([r[1] for r in probe_rows], dtype="float64")
-    pm = pm / np.maximum(np.linalg.norm(pm, axis=1, keepdims=True), 1e-12)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("probe_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    pm = _unit_rows([r[1] for r in probe_rows])
 
     def _block(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            sims = m @ pm.T  # (batch, probes)
+            sims = _unit_rows(np.stack(pdf[vec_col].to_numpy())) @ pm.T
             local_k = min(k, sims.shape[0])
             # batch-local top-k per probe (argpartition → exact order later)
             top = np.argpartition(-sims, local_k - 1, axis=0)[:local_k]
@@ -159,13 +179,10 @@ def topk_blockwise(
             }
             yield pd.DataFrame(rows)
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(_block, out_schema)
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    partial = corpus.select(id_col, vec_col).mapInPandas(
+        _block, "probe_id long, neighbor_id long, cosine double"
     )
-    return partial.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(partial, "cosine", k)
 
 
 def _kmeans_centroids(vectors: list, k: int, iters: int) -> list:
@@ -179,8 +196,7 @@ def _kmeans_centroids(vectors: list, k: int, iters: int) -> list:
     """
     import numpy as np  # noqa: PLC0415
 
-    X = np.asarray(vectors, dtype="float64")
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit_rows(vectors)
     C = X[:k].copy()
     for _ in range(iters):
         assign = np.argmax(X @ C.T, axis=1)
@@ -275,53 +291,28 @@ def ivf_topk(
     """
     import numpy as np  # noqa: PLC0415
 
-    cm = np.asarray([c[1] for c in centroids], dtype="float64")
-    cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-    probe_rows = _collect_probes(probes, [probe_id_col, vec_col], max_probes)
-    assignments = []
-    for r in probe_rows:
-        v = np.asarray(r[1], dtype="float64")
-        v = v / max(np.linalg.norm(v), 1e-12)
-        top = np.argsort(-(cm @ v))[:nprobe]
-        for cid in top:
-            assignments.append((r[0], int(cid), [float(x) for x in r[1]]))
-    from ..functions.vectors import dot_product, l2_norm
-
-    spark = indexed.sparkSession
-    # norms materialized once per row BELOW the join (same rationale as
-    # topk_brute_force / topk_quantized; bit-identical doubles — the same
-    # sequential aggregate, evaluated per vector instead of per pair, so
-    # the probe norm comes from Spark too, not numpy with its pairwise
-    # summation order)
-    probe_buckets = F.broadcast(
-        _materialize(
-            spark.createDataFrame(
-                assignments, f"probe_id long, _centroid int, _pvec array<double>"
-            ),
-            _pnorm=l2_norm(F.col("_pvec")),
-        )
+    cm = _unit_rows([c[1] for c in centroids])
+    rows = _collect_probes(probes, [probe_id_col, vec_col], max_probes)
+    # a probe's own norm scales all its centroid scores alike: the bucket
+    # order needs only the unit centroids
+    buckets = [
+        {"probe_id": pid, "_centroid": int(cid), "_pvec": list(map(float, vec))}
+        for pid, vec in rows
+        for cid in np.argsort(-(cm @ np.asarray(vec, dtype="float64")))[:nprobe]
+    ]
+    sims = _scored(
+        indexed.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).cast("array<double>").alias("_cvec"),
+            "_centroid",
+        ),
+        driver_frame(indexed.sparkSession, buckets, _PROBE_BUCKETS),
+        l2_norm,
+        dot_product,
+        "cosine",
+        on="_centroid",
     )
-    cand = _materialize(
-        indexed.withColumn("_cvec", F.col(vec_col).cast("array<double>")),
-        _cnorm=l2_norm(F.col("_cvec")),
-    )
-    denom = F.col("_cnorm") * F.col("_pnorm")
-    joined = cand.join(probe_buckets, "_centroid").select(
-        "probe_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            F.when(
-                denom > 0, dot_product(F.col("_cvec"), F.col("_pvec")) / denom
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return joined.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(sims, "cosine", k)
 
 
 def quantize_embeddings(
@@ -374,57 +365,24 @@ def topk_quantized(
     use it as the cheap first pass and rescore the top candidates with
     ``topk_brute_force`` semantics when exactness matters.
     """
-    qc = quantize_embeddings(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
-        vec_col,
-    )
-    qp = quantize_embeddings(
-        probes.select(F.col(probe_id_col).alias("probe_id"), F.col(vec_col)),
-        vec_col,
-    )
-    def _inorm(col: str):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(col, lambda x: (x * x).cast("long")),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).cast("double")
+    def quantized(df: DataFrame, id_: str, key: str, vec: str) -> DataFrame:
+        q = quantize_embeddings(df.select(F.col(id_).alias(key), vec_col), vec_col)
+        return q.select(key, F.col("q").alias(vec))
+
+    def idot(a: Column, b: Column) -> Column:
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc + x,
         )
 
-    # Materialize each norm ONCE per vector before the crossJoin — Catalyst
-    # does not CSE across HOF lambdas, so an inline _inorm in both the
-    # `when` guard and the product would re-run the aggregate up to 3x per
-    # (probe, corpus) PAIR instead of once per row.
-    c = _materialize(
-        qc.select("neighbor_id", F.col("q").alias("_cq")),
-        _cnorm=_inorm("_cq"),
+    # exact integer sums: the norm is sqrt(idot(v, v)), and a zero-norm
+    # vector has idot 0, so the shared guard's 0.0 is the exact value
+    sims = _scored(
+        quantized(corpus, id_col, "neighbor_id", "_cvec"),
+        quantized(probes, probe_id_col, "probe_id", "_pvec"),
+        lambda v: F.sqrt(idot(v, v).cast("double")),
+        idot,
+        "qcosine",
     )
-    p = F.broadcast(
-        _materialize(
-            qp.select("probe_id", F.col("q").alias("_pq")),
-            _pnorm=_inorm("_pq"),
-        )
-    )
-    idot = F.aggregate(
-        F.zip_with("_cq", "_pq", lambda a, b: (a * b).cast("long")),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-    sims = c.crossJoin(p).select(
-        "probe_id",
-        "neighbor_id",
-        F.round(
-            idot / F.when(
-                (F.col("_cnorm") > 0) & (F.col("_pnorm") > 0),
-                F.col("_cnorm") * F.col("_pnorm"),
-            ).otherwise(F.lit(float("inf"))),
-            6,
-        ).alias("qcosine"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("qcosine").desc(), F.col("neighbor_id").asc()
-    )
-    return sims.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(sims, "qcosine", k)

@@ -787,12 +787,11 @@ def _enum_sample_values(
 def row_flags(model: type, schema: T.StructType) -> dict:
     """Row-flag name → per-row violation predicate of every record with a
     row form (for the columns of *model* present in *schema*), built once
-    per (model, schema)."""
+    per (model, schema) from the plan ``find_errors`` compiles: the column
+    options only add or drop schema-level errors, which have no row form."""
 
     def build() -> dict:
-        plan = compile_checks(
-            model, schema, allow_missing_columns=True, allow_superfluous_columns=True
-        )
+        plan = compile_checks(model, schema)
         return _scope_flags(plan, plan.root)
 
     return dict(_memoized(("row_flags", model, schema.json()), build))

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.io import driver_frame
+
 DEFAULT_HISTOGRAM_BUCKETS = 16
 
 
@@ -214,9 +216,10 @@ def discrete_percentiles_by_group(
     w = Window.partitionBy("_g").orderBy("_v")
     cum = counts.withColumn("_cum", F.sum("_c").over(w))
     totals = counts.groupBy("_g").agg(F.sum("_c").alias("n"))
-    spark = df.sparkSession
-    probs_df = spark.createDataFrame(
-        [(float(p),) for p in probs], "p double"
+    probs_df = driver_frame(
+        df.sparkSession,
+        [{"p": float(p)} for p in probs],
+        T.StructType([T.StructField("p", T.DoubleType())]),
     )
     hits = (
         cum.join(totals, "_g")

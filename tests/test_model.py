@@ -609,6 +609,49 @@ def test_diff_models_classifies_breaking_changes():
     assert d["retyped"] == d["added"] == d["removed"] == d["nullability"] == []
 
 
+def test_diff_models_list_items_becoming_required_break():
+    # the new model flags every row holding a null item (<col>__list_null),
+    # so items turning required is a breaking nullability change
+    class Old(pt.Model):
+        tags: list[Optional[int]]
+        grid: list[list[Optional[int]]]
+        loose: list[int]
+
+    class New(pt.Model):
+        tags: list[int]
+        grid: list[list[int]]
+        loose: list[Optional[int]]
+
+    d = pt.diff_models(Old, New)
+    assert d["breaking"] is True
+    assert d["nullability"] == [
+        {"column": "tags", "items": 1, "old": True, "new": False, "breaking": True},
+        {"column": "grid", "items": 2, "old": True, "new": False, "breaking": True},
+        {"column": "loose", "items": 1, "old": False, "new": True, "breaking": False},
+    ]
+    assert d["retyped"] == d["constraints"] == []
+
+    # inside a list-of-struct sub-model, too
+    class OldRow(pt.Model):
+        xs: Optional[list[Optional[str]]]
+
+    class NewRow(pt.Model):
+        xs: Optional[list[str]]
+
+    class OldNested(pt.Model):
+        rows: list[OldRow]
+
+    class NewNested(pt.Model):
+        rows: list[NewRow]
+
+    d = pt.diff_models(OldNested, NewNested)
+    assert d["breaking"] is True
+    assert d["nullability"] == [
+        {"column": "rows.xs", "items": 1, "old": True, "new": False, "breaking": True}
+    ]
+    assert pt.diff_models(NewNested, OldNested)["breaking"] is False
+
+
 def test_diff_models_widening_and_loosening_not_breaking():
     class Old(pt.Model):
         n: int = pt.Field(dtype="int", le=100)

@@ -728,6 +728,39 @@ def test_ivf_topk_recall(spark, embeddings):
     assert len(got & truth) / len(truth) >= 0.9
 
 
+def test_zero_embedding_scores_zero_in_every_topk(spark, embeddings):
+    """An all-zero corpus vector scores 0.0 (never NaN) and is ranked, not
+    dropped, by every top-k tier; IVF searches every bucket here."""
+    from patito_spark.operators.similarity import topk_quantized
+
+    emb = embeddings.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    dim = len(emb.first()["embedding"])
+    zero = spark.createDataFrame(
+        [(10**9, [0.0] * dim)], "vec_id long, embedding array<double>"
+    )
+    corpus = emb.unionByName(zero)
+    probes = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    n = corpus.count()
+    indexed, centroids = build_ivf_index(corpus, n_centroids=4, strategy="first")
+    tiers = {
+        "brute_force": (topk_brute_force(corpus, probes, k=n), "cosine"),
+        "blockwise": (topk_blockwise(corpus, probes, k=n), "cosine"),
+        "quantized": (topk_quantized(corpus, probes, k=n), "qcosine"),
+        "ivf": (
+            ivf_topk(indexed, centroids, probes, k=n, nprobe=len(centroids)),
+            "cosine",
+        ),
+    }
+    for name, (top, score) in tiers.items():
+        rows = top.filter(F.col("neighbor_id") == 10**9).collect()
+        assert sorted(r["probe_id"] for r in rows) == [0, 1], name
+        assert [r[score] for r in rows] == [0.0, 0.0], name
+
+
 def test_ivf_kmeans_deterministic(spark, embeddings):
     _, c1 = build_ivf_index(embeddings, n_centroids=8)
     _, c2 = build_ivf_index(embeddings, n_centroids=8)
